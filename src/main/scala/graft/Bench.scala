@@ -42,7 +42,7 @@ object Bench {
         try {
           (0 until reps).map { _ =>
             val t0 = System.nanoTime()
-            fn(spark, sfDir).count()
+            exec.Exec.scoped(fn(spark, sfDir).count())
             (System.nanoTime() - t0) / 1e9
           }.sorted
         } catch {

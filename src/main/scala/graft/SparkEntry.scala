@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec.{materialize, sequentialSumByKey}
 import graft.functions.{Normalize, TextAnalysis, Urls}
 import graft.operators.{AsOfJoin, Bq, Classify, Curation, Dedup, Enrich, Events, Importance, IntervalJoin, Layout, Mixture, Pack, Perplexity, Pq, PromptTemplates, Shard, Similarity, Skew, Snapshot, Sq, Warehouse}
 import graft.sources.BibSources
@@ -3227,7 +3228,7 @@ object SparkEntry {
         .select(col("label"), col("vec_id"),
           size(col("embedding")).as("dim"),
           Similarity.norm(col("embedding")).as("nrm"))
-      Similarity.sequentialSumByKey(cells, Seq("label"), "vec_id", "nrm",
+      sequentialSumByKey(cells, Seq("label"), "vec_id", "nrm",
           extraAggs = Seq(
             min(col("dim")).as("dim_min"), max(col("dim")).as("dim_max"),
             min(col("nrm")).as("norm_min"),
@@ -4391,7 +4392,7 @@ object SparkEntry {
                                      dir: String)
       : org.apache.spark.sql.DataFrame = {
     val d = Tables.documents(s, dir)
-    val scored = Dedup.materialize(
+    val scored = materialize(
       Perplexity.perplexityScores(d, col("doc_id"), col("text"),
           col("source") === "src0")
         .join(d.select("doc_id", "lang"), Seq("doc_id")))

@@ -23,7 +23,9 @@ object Verify {
       .foreach { case (name, fn) =>
       // NonFatal: one broken query shouldn't kill the dump loop, but a
       // fatal error (OOM) must propagate, not mislabel later queries
-      try {
+      // scoped: the checkpoints behind a lazily returned result are
+      // released once the write has run
+      try exec.Exec.scoped {
         val df = fn(spark, sfDir)
         // Gate hygiene: the driver's comparer sorts every output column
         // and cannot order array/map/struct cells — an oracle-checked

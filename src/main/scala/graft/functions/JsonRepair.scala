@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
-
 /** F16 — the reference's 4-stage JSON repair ladder for LLM responses
   * (`llm_api.py:23-86`):
   *
@@ -14,10 +10,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *   plus defaults for any still-missing field (`llm_api.py:24-27`).
   *
   * Implemented as one deterministic Scala function (unit-testable, total —
-  * never throws) exposed both as a plain function and as a Spark UDF that
-  * returns a struct of the requested fields. A UDF is acceptable here per
-  * SURVEY.md §4.2: `from_json` covers only stage 1, and the ladder runs
-  * once per LLM response (the X2 stage is network-bound, not CPU-bound).
+  * never throws) that the X2 extraction stage calls per response. Plain
+  * Scala is acceptable here per SURVEY.md §4.2: `from_json` covers only
+  * stage 1, and the ladder runs once per LLM response (the X2 stage is
+  * network-bound, not CPU-bound).
   */
 object JsonRepair {
 
@@ -112,30 +108,5 @@ object JsonRepair {
           dflt + (fields.head -> unfenced)
         else dflt
     }
-  }
-
-  /** Spark UDF form: string column → array<string> of field values in
-    * `fields` order (a typed UDF — the untyped Row/schema variant is
-    * disallowed since Spark 3). Use `withRepairedFields` to splat into one
-    * column per field, the reference's `main.py:326-335` shape. */
-  def repairUdf(fields: Seq[String],
-                defaults: Map[String, String] = Map.empty): Column => Column = {
-    val fn = udf((text: String) => {
-      val m = repair(text, fields, defaults)
-      fields.map(m).toArray
-    })
-    (c: Column) => fn(c)
-  }
-
-  /** Apply the ladder to `textCol` and add one output column per field. */
-  def withRepairedFields(df: org.apache.spark.sql.DataFrame, textCol: Column,
-                         fields: Seq[String],
-                         defaults: Map[String, String] = Map.empty)
-      : org.apache.spark.sql.DataFrame = {
-    val arr = repairUdf(fields, defaults)(textCol)
-    val withArr = df.withColumn("__repaired", arr)
-    fields.zipWithIndex.foldLeft(withArr) { case (d, (f, i)) =>
-      d.withColumn(f, element_at(col("__repaired"), i + 1))
-    }.drop("__repaired")
   }
 }

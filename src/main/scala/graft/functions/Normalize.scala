@@ -13,15 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Normalize {
 
-  /** F1 — multi-valued cell to scalar: first element of an array column
-    * (reference keeps the first list element: `main.py:68-71`,
-    * `parsers_manager.py:226-230`). */
-  def arrayFirst(c: Column): Column = element_at(c, 1)
-
-  /** F1/F9/F10 — array flattened to a comma-joined string
-    * (`parsers_manager.py:173-194,198-230`). */
-  def arrayJoined(c: Column, sep: String = ", "): Column = array_join(c, sep)
-
   /** F2 — strip " [doi]" / " [pii]" markers EVERYWHERE, not just at the
     * end: the reference's `clean_doi` (`main.py:74-75`) is a replace-all,
     * and PubMed LID values like "S123 [pii], 10.1016/x [doi]" carry an

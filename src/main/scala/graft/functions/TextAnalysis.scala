@@ -3,6 +3,9 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec.{materialize, scoped, sequentialSumByKey,
+  workParallelism}
+
 /** Text-analysis functions for training-data pipelines (BASELINE.json
   * extensions): token counting, quality scoring, language-ID heuristic,
   * content fingerprinting. All pure Catalyst expressions — codegen'd,
@@ -82,7 +85,7 @@ object TextAnalysis {
     * term never pair. */
   def tfidfCosineTopK(docs: org.apache.spark.sql.DataFrame, id: Column,
                       text: Column, k: Int, maxDf: Long = 1000L)
-      : org.apache.spark.sql.DataFrame = {
+      : org.apache.spark.sql.DataFrame = scoped {
     import org.apache.spark.sql.expressions.Window
     require(k > 0, s"tfidfCosineTopK: k=$k")
     require(maxDf >= 1, s"tfidfCosineTopK: maxDf=$maxDf")
@@ -93,9 +96,8 @@ object TextAnalysis {
     // materialized: the weighted-postings frame feeds norms AND both
     // sides of the posting self-join — unmaterialized, the corpus
     // scan + tokenize + df-window subtree runs once per consumer (the
-    // windowCooccur lesson; storage intentionally survives to back the
-    // lazy result)
-    val w = graft.operators.Dedup.materialize(tf
+    // windowCooccur lesson; it escapes with the lazy result)
+    val w = materialize(tf
       .withColumn("df", count(lit(1)).over(Window.partitionBy("tok")))
       .where(col("df") <= maxDf)
       .withColumn("w", col("tf").cast("double") / col("df"))
@@ -107,14 +109,14 @@ object TextAnalysis {
     // fans out per shared token, which AQE's byte-based sizing cannot
     // see — the pair generation and fold ran on ONE coalesced task
     // (1.5 s of q_text_simdocs' 2.3 s at sf0.1, r12; guide §2.5)
-    val norms = graft.operators.Similarity.sequentialSumByKey(
+    val norms = sequentialSumByKey(
         w.select(col("doc_id"), col("tok"),
           (col("w") * col("w")).as("w2")),
         Seq("doc_id"), "tok", "w2")
       .select(col("doc_id"), sqrt(col("__sum")).as("nrm"))
     val wp = w.repartition(
-      graft.operators.Dedup.workParallelism(w.sparkSession), col("tok"))
-    val dots = graft.operators.Similarity.sequentialSumByKey(
+      workParallelism(w.sparkSession), col("tok"))
+    val dots = sequentialSumByKey(
         wp.as("tx")
           .join(wp.as("ty"), col("tx.tok") === col("ty.tok")
             && col("tx.doc_id") < col("ty.doc_id"))

@@ -754,7 +754,18 @@ case class PqDecodeF32(child: Expression, codebook: Array[Array[Array[Double]]])
   * with duplicates this counts min-multiplicity matches where
   * array_intersect would dedupe, so callers with non-set inputs must
   * dedupe first. Null input array → null, matching size(null)'s
-  * behavior under the callers' non-null frames. */
+  * behavior under the callers' non-null frames.
+  *
+  * Min-multiplicity contract and the oracle: the verify frames are
+  * distinct over shingle STRINGS, not over their xxhash64 values, so
+  * two shingles of one document that collide in 64 bits put a
+  * duplicate long into one array. This count then counts the value
+  * min(multiplicity in a, multiplicity in b) times, where the DuckDB
+  * oracle's set intersection counts it once, and the pair's Jaccard
+  * shifts. The chance is about n²/2^65 per
+  * document of n shingles (~3e-14 at n = 1000); the oracle keeps set
+  * semantics and accepts that residue rather than mirror a multiset
+  * intersect. */
 case class IntersectCountLong(left: Expression, right: Expression)
     extends BinaryExpression {
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec.{advance, materialize, scoped}
+
 /** Byte-pair-encoding merge training (Sennrich et al. 2016) — the
   * trainable half of the token-counting surface (SURVEY.md §2.11
   * text-analysis family: `TextAnalysis.tokenCount` counts by a fixed
@@ -81,10 +83,10 @@ object Bpe {
     * rank order. Stops early when no adjacent pair remains (every word
     * fully merged). */
   def train(docs: DataFrame, textCol: Column, numMerges: Int)
-      : Array[(String, String)] = {
+      : Array[(String, String)] = scoped {
     require(numMerges >= 0, s"Bpe.train: numMerges=$numMerges")
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var vocab = Dedup.materialize(
+    var vocab = materialize(
       wordFreqs(docs, textCol)
         .select(charSymbols(col("word")).as("symbols"), col("freq")))
     var m = 0
@@ -97,15 +99,12 @@ object Bpe {
       else {
         val (l, r) = (top.head.getString(0), top.head.getString(1))
         merges += ((l, r))
-        val next = Dedup.materialize(
+        vocab = advance(vocab,
           vocab.select(mergeFold(col("symbols"), l, r).as("symbols"),
             col("freq")))
-        Dedup.releaseMaterialized(vocab)
-        vocab = next
         m += 1
       }
     }
-    Dedup.releaseMaterialized(vocab)
     merges.toArray
   }
 

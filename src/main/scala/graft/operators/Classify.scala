@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec.{advance, materialize, scoped, sequentialSumByKey,
+  spread}
+
 /** Trainable linear quality classifier over an embedding column — the
   * mechanism behind fasttext-style document-quality scoring in
   * large-scale training-data pipelines (score every document, keep the
@@ -38,7 +41,7 @@ object Classify {
     * Returns the (dim+1) weights, bias last. */
   def perceptronTrain(df: DataFrame, idCol: String, embCol: String,
                       positive: Column, epochs: Int, lr: Double = 1.0,
-                      deterministic: Boolean = false): Array[Double] = {
+                      deterministic: Boolean = false): Array[Double] = scoped {
     require(epochs >= 0, s"perceptronTrain: epochs=$epochs")
     val dim = Similarity.probeDim(
       df.where(Similarity.wellFormed(col(embCol))), embCol) + 1
@@ -56,8 +59,8 @@ object Classify {
     // + spread exchange `epochs` times (r12: 8 recomputations measured
     // as ~2-3 s of the classify-tier queries at sf0.1); the epoch loop
     // reads the checkpointed training slice instead
-    val base = Dedup.materialize(
-      Dedup.spread(df.where(Similarity.wellFormed(col(embCol)) &&
+    val base = materialize(
+      spread(df.where(Similarity.wellFormed(col(embCol)) &&
         size(col(embCol)) === dim - 1)
       .select(col(idCol).as("id"),
         concat(col(embCol), array(lit(1.0f))).as("a"),
@@ -65,7 +68,6 @@ object Classify {
     var w = new Array[Double](dim)
     val spark = df.sparkSession
     import spark.implicits._
-    try {
     for (_ <- 0 until epochs) {
       // weights ride a broadcast ONE-ROW frame, not a typed literal: the
       // literal form re-generated (and re-compiled) the epoch stage's
@@ -83,17 +85,13 @@ object Classify {
           (col("y") * col("x").cast("double")).as("v"))
       val agg =
         if (deterministic)
-          Similarity.sequentialSumByKey(cells, Seq("i"), "id", "v")
+          sequentialSumByKey(cells, Seq("i"), "id", "v")
             .select(col("i"), col("__sum").as("g"))
         else cells.groupBy("i").agg(sum(col("v")).as("g"))
       val g = agg.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
       w = w.zipWithIndex.map { case (wi, i) => wi + lr * g.getOrElse(i, 0.0) }
     }
     w
-    // finally, not post-loop (r12 ADVICE): an exception in an epoch's
-    // collect would otherwise leak the checkpoint — reliable-checkpoint
-    // files are never deleted for the app lifetime
-    } finally Dedup.releaseMaterialized(base)
   }
 
   /** Score every row with trained weights: margin = w · (x ++ 1.0).
@@ -178,11 +176,11 @@ object Classify {
     * to net zero stays as an explicit row); margins are unaffected. */
   def textPerceptronTrain(docs: DataFrame, idCol: String, textCol: String,
                           positive: Column, epochs: Int,
-                          n: Int = 2, buckets: Int = 4096): DataFrame = {
+                          n: Int = 2, buckets: Int = 4096): DataFrame = scoped {
     require(epochs >= 0, s"textPerceptronTrain: epochs=$epochs")
-    val feats = Dedup.materialize(
+    val feats = materialize(
       textFeatures(docs, idCol, textCol, n, buckets))
-    val labels = Dedup.materialize(docs.select(col(idCol).as("doc_id"),
+    val labels = materialize(docs.select(col(idCol).as("doc_id"),
       when(positive, 1L).otherwise(-1L).as("y")))
     var weights = emptyWeights(docs.sparkSession)
     var e = 0
@@ -192,17 +190,13 @@ object Classify {
         .select("doc_id", "y")
       val grad = feats.join(mis, Seq("doc_id"))
         .groupBy("bucket").agg(sum(col("y") * col("cnt")).as("g"))
-      val next = Dedup.materialize(
+      weights = advance(weights,
         weights.join(grad, Seq("bucket"), "full_outer")
           .select(col("bucket"),
             (coalesce(col("w"), lit(0L)) + coalesce(col("g"), lit(0L)))
               .as("w")))
-      Dedup.releaseMaterialized(weights)
-      weights = next
       e += 1
     }
-    Dedup.releaseMaterialized(feats)
-    Dedup.releaseMaterialized(labels)
     weights
   }
 
@@ -249,7 +243,7 @@ object Classify {
     * recall, f1). `predicted` = score > threshold, matching
     * `perceptronScore`. */
   def evaluateBinary(scored: DataFrame, label: Column, score: Column,
-                     threshold: Double = 0.0): DataFrame = {
+                     threshold: Double = 0.0): DataFrame = scoped {
     // the group frame materializes FIRST: the two-phase prefix reads it
     // three times (quantile splits, bucket totals, cumulative pass) and
     // each read must hit the distinct-score-sized checkpoint, not
@@ -260,7 +254,7 @@ object Classify {
     // be ONE group — which is also the right AUC tie semantics.
     // Null LABELS are excluded like null scores: an unlabeled row is not
     // a negative.
-    val grp = Dedup.materialize(scored
+    val grp = materialize(scored
       .where(score.isNotNull && label.isNotNull)
       .select(score.cast("double").as("s"),
         when(label, 1L).otherwise(0L).as("ip"))
@@ -295,12 +289,10 @@ object Classify {
           nullif((lit(2L) * col("tp") + col("fp") + col("fn"))
             .cast("double"), lit(0.0))).as("f1"))
     // the one output row is computed EAGERLY so the distinct-score
-    // checkpoint can be RELEASED (the operator already runs eager jobs
-    // — splits/totals passes — so laziness was never real); without the
-    // release a threshold-tuning loop leaks one corpus-scale checkpoint
-    // per call for the application lifetime
+    // checkpoint is released on return (the operator already runs eager
+    // jobs — splits/totals passes — so laziness was never real); a lazy
+    // result would pin one corpus-scale checkpoint per call
     val row = out.head()
-    Dedup.releaseMaterialized(grp)
     scored.sparkSession.createDataFrame(
       java.util.Collections.singletonList(row), out.schema)
   }
@@ -389,7 +381,7 @@ object Classify {
   def boostedStumpsTrain(df: DataFrame, label: Column,
                          features: Seq[(String, Column)], rounds: Int,
                          lrDen: Int = 2, scale: Long = 1000000000L,
-                         maxBins: Int = 256): Seq[Stump] = {
+                         maxBins: Int = 256): Seq[Stump] = scoped {
     require(features.nonEmpty, "boostedStumpsTrain: need features")
     require(rounds >= 1 && rounds <= 20,
       s"boostedStumpsTrain: rounds=$rounds")
@@ -417,84 +409,80 @@ object Classify {
     // integer domain HALF_UP — the same rounding the overflow guard
     // above uses. Labels are carried at 6-decimal precision (the
     // repo-wide dec6 money/measure convention).
-    var cur = Dedup.materialize(df
+    var cur = materialize(df
       .select(features.map { case (n, c) => c.cast("long").as(n) } :+
         (label.cast("decimal(38,6)") * lit(scale))
           .cast("decimal(38,0)").cast("long").as("__r"): _*)
       .where(col("__r").isNotNull &&
         fcols.map(col(_).isNotNull).reduce(_ && _)))
     val model = scala.collection.mutable.ArrayBuffer.empty[Stump]
-    try {
-      for (t <- 1 to rounds) {
-        // ALL features' bin stats in ONE data pass (r12): the former
-        // per-feature groupBy+collect re-aggregated the full residual
-        // frame once per feature per round (features × rounds scans);
-        // melting (feature, bin, __r) through one generator costs one
-        // explode with map-side partial aggregation and collects the
-        // same bounded ≤ features × maxBins rows. Driver-side candidate
-        // evaluation then walks features in declaration order and bins
-        // ascending — the exact order (and tiebreak) of the former loop.
-        val statRows = cur.select(explode(array(fcols.map(fn =>
-            struct(lit(fn).as("f"), col(fn).as("bin"),
-              col("__r").as("r"))): _*)).as("m"))
-          .groupBy(col("m.f").as("f"), col("m.bin").as("bin"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("m.r").cast("decimal(38,0)")).as("s"))
-          .collect()
-        val byFeature = statRows.groupBy(_.getString(0))
-        var best: Option[Stump] = None
-        for (fn <- fcols) {
-          val unsorted = byFeature.getOrElse(fn, Array.empty[Row])
-          // the training frame filters null feature cells, so a null
-          // bin here means that filter regressed — fail loudly rather
-          // than NPE inside sortBy (r12 ADVICE)
-          unsorted.foreach(r => require(!r.isNullAt(1),
-            s"boostedStumpsTrain: feature $fn produced a null bin — " +
-              "bin it upstream"))
-          val rows = unsorted.sortBy(_.getLong(1))
-          require(rows.length <= maxBins,
-            s"boostedStumpsTrain: feature $fn has ${rows.length} " +
-              s"bins > maxBins=$maxBins — bin it upstream")
-          val nTot = rows.map(_.getLong(2)).sum
-          val sTot = rows.map(r => BigInt(r.getDecimal(3).toBigInteger))
-            .sum
-          var nL = 0L; var sL = BigInt(0)
-          // candidate thresholds: every bin except the last (a split
-          // keeping everything left is no split)
-          for (k <- 0 until rows.length - 1) {
-            nL += rows(k).getLong(2)
-            sL += BigInt(rows(k).getDecimal(3).toBigInteger)
-            val nR = nTot - nL; val sR = sTot - sL
-            if (nL > 0 && nR > 0) {
-              // the oracle's exact expression tree: casts of exact
-              // decimals, then (sl*sl)/nl + (sr*sr)/nr
-              val slD = sL.toDouble; val srD = sR.toDouble
-              val gain = (slD * slD) / nL.toDouble +
-                (srD * srD) / nR.toDouble
-              // strict > ≡ the oracle's (gain DESC, feature order,
-              // thr ASC) row_number: first maximum wins
-              if (best.forall(b => gain > b.gain)) {
-                val d = BigInt(lrDen) * nL
-                val lf = ((sL - sL.mod(d)) / d).toLong
-                val dr = BigInt(lrDen) * nR
-                val rf = ((sR - sR.mod(dr)) / dr).toLong
-                best = Some(Stump(t, fn, rows(k).getLong(1), lf, rf,
-                  gain))
-              }
+    for (t <- 1 to rounds) {
+      // ALL features' bin stats in ONE data pass (r12): the former
+      // per-feature groupBy+collect re-aggregated the full residual
+      // frame once per feature per round (features × rounds scans);
+      // melting (feature, bin, __r) through one generator costs one
+      // explode with map-side partial aggregation and collects the
+      // same bounded ≤ features × maxBins rows. Driver-side candidate
+      // evaluation then walks features in declaration order and bins
+      // ascending — the exact order (and tiebreak) of the former loop.
+      val statRows = cur.select(explode(array(fcols.map(fn =>
+          struct(lit(fn).as("f"), col(fn).as("bin"),
+            col("__r").as("r"))): _*)).as("m"))
+        .groupBy(col("m.f").as("f"), col("m.bin").as("bin"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("m.r").cast("decimal(38,0)")).as("s"))
+        .collect()
+      val byFeature = statRows.groupBy(_.getString(0))
+      var best: Option[Stump] = None
+      for (fn <- fcols) {
+        val unsorted = byFeature.getOrElse(fn, Array.empty[Row])
+        // the training frame filters null feature cells, so a null
+        // bin here means that filter regressed — fail loudly rather
+        // than NPE inside sortBy (r12 ADVICE)
+        unsorted.foreach(r => require(!r.isNullAt(1),
+          s"boostedStumpsTrain: feature $fn produced a null bin — " +
+            "bin it upstream"))
+        val rows = unsorted.sortBy(_.getLong(1))
+        require(rows.length <= maxBins,
+          s"boostedStumpsTrain: feature $fn has ${rows.length} " +
+            s"bins > maxBins=$maxBins — bin it upstream")
+        val nTot = rows.map(_.getLong(2)).sum
+        val sTot = rows.map(r => BigInt(r.getDecimal(3).toBigInteger))
+          .sum
+        var nL = 0L; var sL = BigInt(0)
+        // candidate thresholds: every bin except the last (a split
+        // keeping everything left is no split)
+        for (k <- 0 until rows.length - 1) {
+          nL += rows(k).getLong(2)
+          sL += BigInt(rows(k).getDecimal(3).toBigInteger)
+          val nR = nTot - nL; val sR = sTot - sL
+          if (nL > 0 && nR > 0) {
+            // the oracle's exact expression tree: casts of exact
+            // decimals, then (sl*sl)/nl + (sr*sr)/nr
+            val slD = sL.toDouble; val srD = sR.toDouble
+            val gain = (slD * slD) / nL.toDouble +
+              (srD * srD) / nR.toDouble
+            // strict > ≡ the oracle's (gain DESC, feature order,
+            // thr ASC) row_number: first maximum wins
+            if (best.forall(b => gain > b.gain)) {
+              val d = BigInt(lrDen) * nL
+              val lf = ((sL - sL.mod(d)) / d).toLong
+              val dr = BigInt(lrDen) * nR
+              val rf = ((sR - sR.mod(dr)) / dr).toLong
+              best = Some(Stump(t, fn, rows(k).getLong(1), lf, rf,
+                gain))
             }
           }
         }
-        val b = best.getOrElse(throw new IllegalArgumentException(
-          s"boostedStumpsTrain: round $t found no valid split — every " +
-            "feature is single-bin"))
-        model += b
-        val nxt = Dedup.materialize(cur.withColumn("__r",
-          col("__r") - when(col(b.feature) <= b.thr, lit(b.leafLeft))
-            .otherwise(lit(b.leafRight))))
-        Dedup.releaseMaterialized(cur)
-        cur = nxt
       }
-    } finally Dedup.releaseMaterialized(cur)
+      val b = best.getOrElse(throw new IllegalArgumentException(
+        s"boostedStumpsTrain: round $t found no valid split — every " +
+          "feature is single-bin"))
+      model += b
+      cur = advance(cur, cur.withColumn("__r",
+        col("__r") - when(col(b.feature) <= b.thr, lit(b.leafLeft))
+          .otherwise(lit(b.leafRight))))
+    }
     model.toSeq
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec.{materialize, scoped, spreadBy}
 import graft.functions.TextAnalysis
 
 /** Sliding-window token co-occurrence + association scoring — the counting
@@ -51,7 +52,7 @@ object Cooccur {
 
   /** Positioned token stream (id, pos, word) — one row per token. */
   private def postings(docs: DataFrame, id: Column, text: Column): DataFrame =
-    Dedup.spreadBy(docs.select(id.as("id"), text.as("text")), col("id"))
+    spreadBy(docs.select(id.as("id"), text.as("text")), col("id"))
       .select(col("id"),
         posexplode(split(TextAnalysis.normText(col("text")), " "))
           .as(Seq("pos", "word")))
@@ -62,7 +63,7 @@ object Cooccur {
     * pmi_ratio — w1 <= w2 lexically.
     */
   def windowCooccur(docs: DataFrame, id: Column, text: Column,
-                    window: Int = 2, minCount: Long = 1L): DataFrame = {
+                    window: Int = 2, minCount: Long = 1L): DataFrame = scoped {
     require(window >= 1, s"windowCooccur: window=$window must be >= 1")
     val toks = postings(docs, id, text)
     val ordered = Window.partitionBy("id").orderBy("pos")
@@ -75,10 +76,9 @@ object Cooccur {
     // re-run the corpus scan + window pass — measured 4 parquet scans /
     // 4 WindowExecs in the unmaterialized plan (Spark only reuses
     // exchanges inside one action). The pair table is vocabulary²-bounded
-    // and count-collapsed, orders of magnitude below the corpus; its
-    // blocks are released when the caller drops the result (same
-    // lifetime posture as the other materialize sites).
-    val pairs = Dedup.materialize(nbrs
+    // and count-collapsed, orders of magnitude below the corpus; it
+    // escapes to the caller's scope with the lazy result.
+    val pairs = materialize(nbrs
       .select(col("word"), explode(col("nbrs")).as("nbr"))
       .where(col("nbr").isNotNull)
       .select(least(col("word"), col("nbr")).as("w1"),
@@ -106,8 +106,4 @@ object Cooccur {
       .select(col("w1"), col("w2"), col("n_pair"), col("n_w1"), col("n_w2"),
         col("n_slots"), ratio.as("pmi_ratio"))
   }
-
-  /** Natural-log PMI over a `windowCooccur` row — convenience for callers
-    * who want nats rather than the engine-exact ratio. */
-  def pmiCol: Column = log(col("pmi_ratio"))
 }

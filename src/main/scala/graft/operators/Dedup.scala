@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec.{advance, materialize, release, scoped, spread,
+  spreadBy, workParallelism}
 import graft.functions.Normalize
 
 /** Deduplication operators.
@@ -392,26 +394,26 @@ object Dedup {
           .where(col("ingest_batch") < lit(batchId))
           .groupBy("span").agg(sum(col("n_docs")).as("n_docs"))
     // ONE batch span-count pass feeds the probe and the index write
-    val spans = materialize(
-      spanGrid(batch.where(id.isNotNull), id, text, chunkWords))
-    val batchCounts = materialize(spans
-      .select(col("span"), col("doc_id"))
-      .dropDuplicates("span", "doc_id")
-      .groupBy("span").agg(count(lit(1)).as("n_docs")))
-    val rebuilt = boilerplateMarked(spans, batchCounts, idxCounts,
-        minDocs, bc)
-      .groupBy("doc_id")
-      .agg(array_join(transform(
-          array_sort(collect_list(when(!col("__rm"),
-            struct(col("span_idx"), col("span"))))),
-          s => s.getField("span")), " ").as("text_deduped"))
-    val admitted = materialize(
-      batch.select(id.as("doc_id"))
-        .join(rebuilt, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("text_deduped"), lit("")).as("text_deduped"))
-        .where(col("text_deduped") =!= ""))
-    try {
+    scoped {
+      val spans = materialize(
+        spanGrid(batch.where(id.isNotNull), id, text, chunkWords))
+      val batchCounts = materialize(spans
+        .select(col("span"), col("doc_id"))
+        .dropDuplicates("span", "doc_id")
+        .groupBy("span").agg(count(lit(1)).as("n_docs")))
+      val rebuilt = boilerplateMarked(spans, batchCounts, idxCounts,
+          minDocs, bc)
+        .groupBy("doc_id")
+        .agg(array_join(transform(
+            array_sort(collect_list(when(!col("__rm"),
+              struct(col("span_idx"), col("span"))))),
+            s => s.getField("span")), " ").as("text_deduped"))
+      val admitted = materialize(
+        batch.select(id.as("doc_id"))
+          .join(rebuilt, Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            coalesce(col("text_deduped"), lit("")).as("text_deduped"))
+          .where(col("text_deduped") =!= ""))
       if (!admitted.isEmpty || !batchCounts.isEmpty) {
         def dyn(df: DataFrame) = df.withColumn("ingest_batch", lit(batchId))
           .write.mode("overwrite")
@@ -430,10 +432,6 @@ object Dedup {
           fs.create(marker, false).close()
         }
       }
-    } finally {
-      releaseMaterialized(admitted)
-      releaseMaterialized(batchCounts)
-      releaseMaterialized(spans)
     }
   }
 
@@ -835,17 +833,17 @@ object Dedup {
     // novelty check — pinned so the three consumers (and the writes,
     // whose lineage reads the windows/ parquet being overwritten) never
     // recompute it (the [[curationGateBatch]] pinning argument)
-    val withH = materialize(
-      passagePostings(batch, id, text, windowWords, strideWords))
-    val wins = withH.where(col("h").isNotNull)
-      .select(col("doc_id"), col("pos").as("st"), col("h"))
-    val batchH = wins.select("h").distinct()
-    val hitH = idxH.join(bc(batchH), Seq("h"), "left_semi")
-    val deduped = passageReassemble(batch, id, withH,
-      coveredPositions(wins, hitH, windowWords, bc))
-    val admitted = materialize(deduped.where(col("text_deduped") =!= ""))
-    val novel = materialize(batchH.join(bc(hitH), Seq("h"), "left_anti"))
-    try {
+    scoped {
+      val withH = materialize(
+        passagePostings(batch, id, text, windowWords, strideWords))
+      val wins = withH.where(col("h").isNotNull)
+        .select(col("doc_id"), col("pos").as("st"), col("h"))
+      val batchH = wins.select("h").distinct()
+      val hitH = idxH.join(bc(batchH), Seq("h"), "left_semi")
+      val deduped = passageReassemble(batch, id, withH,
+        coveredPositions(wins, hitH, windowWords, bc))
+      val admitted = materialize(deduped.where(col("text_deduped") =!= ""))
+      val novel = materialize(batchH.join(bc(hitH), Seq("h"), "left_anti"))
       if (!admitted.isEmpty || !novel.isEmpty) {
         def dyn(df: DataFrame) = df.withColumn("ingest_batch", lit(batchId))
           .write.mode("overwrite")
@@ -865,10 +863,6 @@ object Dedup {
           fs.create(marker, false).close()
         }
       }
-    } finally {
-      releaseMaterialized(admitted)
-      releaseMaterialized(novel)
-      releaseMaterialized(withH)
     }
   }
 
@@ -900,7 +894,7 @@ object Dedup {
     * the deleted files.
     */
   def compactSetIndex(spark: SparkSession, path: String,
-                      keyCols: Seq[String], upToBatch: Long): Unit = {
+                      keyCols: Seq[String], upToBatch: Long): Unit = scoped {
     val all = spark.read.parquet(path)
     require(all.columns.contains("ingest_batch"),
       s"compactSetIndex: $path is not epoch-partitioned")
@@ -913,25 +907,23 @@ object Dedup {
     val keys = materialize(
       all.where(col("ingest_batch") <= upToBatch)
         .select(keyCols.map(col): _*).distinct())
-    try {
-      if (!keys.isEmpty) {
-        keys.withColumn("ingest_batch", lit(-1L))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
-          .parquet(path)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.listStatus(new org.apache.hadoop.fs.Path(path))
-          .filter { st =>
-            val n = st.getPath.getName
-            n.startsWith("ingest_batch=") &&
-              n.stripPrefix("ingest_batch=").toLongOption
-                .exists(b => b >= 0 && b <= upToBatch)
-          }
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-    } finally releaseMaterialized(keys)
+    if (!keys.isEmpty) {
+      keys.withColumn("ingest_batch", lit(-1L))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("ingest_batch")
+        .parquet(path)
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.listStatus(new org.apache.hadoop.fs.Path(path))
+        .filter { st =>
+          val n = st.getPath.getName
+          n.startsWith("ingest_batch=") &&
+            n.stripPrefix("ingest_batch=").toLongOption
+              .exists(b => b >= 0 && b <= upToBatch)
+        }
+        .foreach(st => fs.delete(st.getPath, true))
+    }
   }
 
   private def requirePassageMeta(spark: SparkSession, path: String,
@@ -951,55 +943,6 @@ object Dedup {
     */
   def normalizeText(text: Column): Column =
     lower(trim(regexp_replace(text, "\\s+", " ")))
-
-  /** Spread rows across all cores BEFORE per-row-expensive expressions
-    * (shingling, token explode, signature hashing). Small corpora arrive
-    * as 1-2 parquet splits, which would serialize the whole CPU-bound
-    * stage on one task; the round-robin shuffle of the skinny (id, text)
-    * projection is orders of magnitude cheaper than the work it unlocks.
-    * On a real cluster with thousands of input splits this is a no-op
-    * cost-wise (one extra narrow-ish exchange of the projected columns).
-    */
-  private[operators] def spread(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-  /** Partition count for the explicitly-pinned exchanges that feed
-    * heavy per-row work (interpreted sort-folds, per-token windows,
-    * within-group pair fan-out): the session's shuffle parallelism
-    * TIMES `spark.graft.workTaskFactor` (default 1 — i.e. exactly the
-    * session's shuffle parallelism, the r12 shape).
-    *
-    * The factor exists because exactly-one-task-per-core leaves zero
-    * straggler slack (guide §2.6) and puts every concurrent task's
-    * fold state (collect_list buffers, window sort runs) in execution
-    * memory at once (guide §5) — on a busy multi-tenant cluster a
-    * deployment should raise it to 2-4 for these stages. The LOCAL
-    * default stays 1: an interleaved A/B at sf0.1 local[32] with the
-    * heap pinned (r13: factor 4 vs 1, two runs each, alternating)
-    * measured factor 4 strictly slower on every family query
-    * (totals 42.8/38.8 s vs 27.9/30.4 s) — per-task work at this
-    * corpus size is milliseconds, so extra tasks are pure scheduling
-    * overhead, and the r12 32-core anti-scaling traced to the
-    * unpinned-heap GC pathology (see build.sbt/-Xms), not to the
-    * missing slack. Results are factor-independent: every consumer is
-    * keyed, and per-key fold order is placement-independent. */
-  private[graft] def workParallelism(
-      spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.get("spark.sql.shuffle.partitions").toInt *
-      spark.conf.get("spark.graft.workTaskFactor", "1").toInt
-
-  /** Keyed spread for the posting builders: one explicit-count hash
-    * exchange on the document key, placed BEFORE the heavy
-    * normalize/split/explode projection. Downstream per-document windows
-    * and aggregates reuse the partitioning (hash(id) satisfies every
-    * ClusteredDistribution keyed on id), so no second exchange appears —
-    * and because the count is explicit, AQE cannot coalesce the stage
-    * that does the real per-token work down to 2-3 tasks based on the
-    * (small) upstream text bytes (r12: the shingle windows of a 5k-doc
-    * corpus ran on 3 AQE-coalesced tasks, ~4 s of the dedup family's
-    * wall; guide §2.5 — size on output work, not input bytes). */
-  private[operators] def spreadBy(df: DataFrame, key: Column): DataFrame =
-    df.repartition(workParallelism(df.sparkSession), key)
 
   /** Distinct w-shingles from an ALREADY-MATERIALIZED words-array column.
     *
@@ -1270,22 +1213,6 @@ object Dedup {
         col("n_matched").cast("double") / col("n_sh").cast("double"))
   }
 
-  /** MinHash signature as an expression: k independent permutations
-    * approximated by `xxhash64(base, seed_i)` minima over the 64-bit BASE
-    * hash of each shingle (shingles are hashed to longs once; re-seeding
-    * the 8-byte long per permutation is ~4x cheaper than re-hashing the
-    * shingle string k times, and the per-pair min-collision statistics are
-    * unchanged — distinct shingles map to distinct bases up to 2^-64).
-    * Expression form for ad-hoc use over an ALREADY-HASHED shingle array
-    * (`shingleFrame`'s `sh`); the LSH operator computes the same minima
-    * relationally (explode → k codegen'd MIN aggregates) because k
-    * interpreted transform-lambdas per row don't codegen and the array
-    * column would be re-inlined at every use site. */
-  def minhashSignature(sh: Column, k: Int): Column =
-    array((0 until k).map { seed =>
-      array_min(transform(sh, s => xxhash64(s, lit(seed))))
-    }: _*)
-
   /** MinHash + LSH banding near-dup detection with exact verification.
     *
     * Pipeline: shingle → k-minhash signature → split into `bands` bands of
@@ -1339,9 +1266,7 @@ object Dedup {
     * permutations re-seed the base long (2 xxhash64 rounds each) instead
     * of re-hashing the ~25-byte string k times — same minima statistics
     * (distinct shingles -> distinct bases up to 2^-64), ~4x less hash
-    * work in the single hottest projection of the pipeline, and
-    * value-identical to `minhashSignature` over `shingleFrame`'s hashed
-    * arrays.
+    * work in the single hottest projection of the pipeline.
     *
     * Band rows carry ONLY (id, band_idx, band_hash): the shingle arrays
     * are the bulk of the bytes and must not ride through the all-to-all
@@ -1504,7 +1429,7 @@ object Dedup {
     *    batch retry.
     *  - `Reliable`: `checkpoint` to the session checkpoint dir — survives
     *    executor loss; requires `setCheckpointDir`. Checkpoint files are
-    *    deleted after the writes (see `releaseMaterialized`).
+    *    deleted after the writes (see `Exec.release`).
     *  - `CollectIds`: collect the admitted IDS (bounded by the BATCH, not
     *    the corpus) to the driver and re-derive the admitted rows from the
     *    raw batch via a broadcast semi-join. Zero pinned executor state —
@@ -1605,40 +1530,40 @@ object Dedup {
       }
     val pairs = minhashLshPairs(afterCorpus, id, text, threshold, w, k,
       bands)
-    val keep = nearDupSurvivors(afterCorpus, id, pairs)
-      .where(col("survivor_id") === col("doc_id"))
-      .select(col("doc_id").as("__keep_id"))
-    // Pin the admitted set before writing it three times: its lineage
-    // reads the very bands/shingles parquet the writes below overwrite,
-    // so an unpinned recompute could see mutated input (see
-    // `AdmittedPinning` for the mode trade-offs). Checkpoint-style pins
-    // are released in the finally — localCheckpoint blocks otherwise
-    // leak per microbatch for the stream's lifetime, and reliable
-    // checkpoint files for the application's.
-    val admittedRaw = afterCorpus.join(keep, id === col("__keep_id"),
-      "left_semi")
-    val (admitted, pinnedFrame) = pinning match {
-      case AdmittedPinning.CollectIds =>
-        val keptIds = admittedRaw.select(id.as("__keep_id")).distinct()
-        val keptRows = keptIds.collect() // bounded by the batch
-        val keptDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(keptRows.toIndexedSeq),
-          keptIds.schema)
-        // re-derive admitted rows from the RAW batch: this lineage reads
-        // only the streaming source, never the index being overwritten
-        (batch.join(broadcast(keptDf), id === col("__keep_id"),
-          "left_semi"), None)
-      case AdmittedPinning.Local =>
-        val m = admittedRaw.localCheckpoint(); (m, Some(m))
-      case AdmittedPinning.Reliable =>
-        require(spark.sparkContext.getCheckpointDir.isDefined,
-          "AdmittedPinning.Reliable requires " +
-            "spark.sparkContext.setCheckpointDir(...)")
-        val m = admittedRaw.checkpoint(); (m, Some(m))
-      case AdmittedPinning.Auto =>
-        val m = materialize(admittedRaw); (m, Some(m))
-    }
-    try {
+    scoped {
+      val keep = nearDupSurvivors(afterCorpus, id, pairs)
+        .where(col("survivor_id") === col("doc_id"))
+        .select(col("doc_id").as("__keep_id"))
+      // Pin the admitted set before writing it three times: its lineage
+      // reads the very bands/shingles parquet the writes below overwrite,
+      // so an unpinned recompute could see mutated input (see
+      // `AdmittedPinning` for the mode trade-offs). Checkpoint-style pins,
+      // and the components behind `keep`, are released when the scope
+      // ends — localCheckpoint blocks otherwise leak per microbatch for
+      // the stream's lifetime, and reliable checkpoint files for the
+      // application's.
+      val admittedRaw = afterCorpus.join(keep, id === col("__keep_id"),
+        "left_semi")
+      val admitted = pinning match {
+        case AdmittedPinning.CollectIds =>
+          val keptIds = admittedRaw.select(id.as("__keep_id")).distinct()
+          val keptRows = keptIds.collect() // bounded by the batch
+          val keptDf = spark.createDataFrame(
+            spark.sparkContext.parallelize(keptRows.toIndexedSeq),
+            keptIds.schema)
+          // re-derive admitted rows from the RAW batch: this lineage reads
+          // only the streaming source, never the index being overwritten
+          batch.join(broadcast(keptDf), id === col("__keep_id"),
+            "left_semi")
+        case AdmittedPinning.Local =>
+          materialize(admittedRaw, reliable = false)
+        case AdmittedPinning.Reliable =>
+          require(spark.sparkContext.getCheckpointDir.isDefined,
+            "AdmittedPinning.Reliable requires " +
+              "spark.sparkContext.setCheckpointDir(...)")
+          materialize(admittedRaw, reliable = true)
+        case AdmittedPinning.Auto => materialize(admittedRaw)
+      }
       if (!admitted.isEmpty) {
         // per-write option, not a session-conf flip: concurrent writers
         // on the same session keep their own overwrite semantics
@@ -1665,7 +1590,7 @@ object Dedup {
           fs.create(metaCommitted, false).close()
         }
       }
-    } finally pinnedFrame.foreach(releaseMaterialized)
+    }
   }
 
   /** One microbatch of the continuous CURATION gate — the exact-dedup
@@ -1734,11 +1659,11 @@ object Dedup {
       else gated.join(
         spark.read.parquet(s"$indexPath/fps").select(col("fp").as("__seen")),
         col("__fp") === col("__seen"), "left_anti")
-    val admitted = materialize(fresh
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy("__fp").orderBy(col(idCol))))
-      .where(col("__rn") === 1).drop("__rn"))
-    try {
+    scoped {
+      val admitted = materialize(fresh
+        .withColumn("__rn", row_number().over(
+          Window.partitionBy("__fp").orderBy(col(idCol))))
+        .where(col("__rn") === 1).drop("__rn"))
       if (!admitted.isEmpty) {
         def dyn(df: DataFrame) = df.withColumn("ingest_batch", lit(batchId))
           .write.mode("overwrite")
@@ -1755,7 +1680,7 @@ object Dedup {
           fs.create(marker, false).close()
         }
       }
-    } finally releaseMaterialized(admitted)
+    }
   }
 
   /** 64-bit SimHash over the normalized token multiset: each token hashes
@@ -1879,47 +1804,8 @@ object Dedup {
     *
     * Output: (id, component) for every vertex present in `pairs`.
     */
-  /** Materialize an iteration frontier, cutting lineage. Uses a RELIABLE
-    * checkpoint when the session has a checkpoint dir (executor loss
-    * replays from storage — required on a real cluster, where a lost
-    * executor would otherwise kill the job because localCheckpoint blocks
-    * are unrecoverable); falls back to localCheckpoint for local runs. */
-  private[graft] def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = true)
-
-  /** Release the storage behind a `materialize`d frame once a later round
-    * supersedes it. `Dataset.unpersist` is NOT enough here: it only
-    * releases cacheManager-tracked `persist()` plans, while checkpoint
-    * storage lives on the underlying RDD — localCheckpoint blocks sit in
-    * the block manager until the RDD is GC'd and the ContextCleaner
-    * notices, and reliable-checkpoint FILES are never deleted for the
-    * application's lifetime. Both are real leaks in an iterate-many-rounds
-    * operator, so this reaches through the plan's `LogicalRDD` to the
-    * checkpointed RDD: unpersist its blocks and delete its checkpoint
-    * files (if reliable). No-op on frames that aren't materialized. */
-  private[graft] def releaseMaterialized(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.getCheckpointFile.foreach { p =>
-          val path = new org.apache.hadoop.fs.Path(p)
-          val fs = path.getFileSystem(
-            df.sparkSession.sparkContext.hadoopConfiguration)
-          fs.delete(path, true)
-        }
-        l.rdd.unpersist(blocking = false)
-      case other =>
-        // a frame that isn't a LogicalRDD was never materialize()d — if a
-        // Spark version bump changes the checkpoint plan shape, the storage
-        // leak this method fixes would quietly return. Be loud about it.
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"releaseMaterialized: plan is ${other.getClass.getSimpleName}, " +
-            "not LogicalRDD — checkpoint storage NOT released (plan shape " +
-            "changed?)")
-    }
-
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  def connectedComponents(pairs: DataFrame,
+                          maxIter: Int = 20): DataFrame = scoped {
     // symmetric edge list via a generator (a two-projection union would
     // evaluate the upstream pair DETECTOR twice — explode runs it once)
     val edges = materialize(pairs
@@ -1943,23 +1829,14 @@ object Dedup {
         .agg(min(col("component")).as("nbr_min"))
       // each round's result is materialized once: the next round (and
       // the convergence count) must not re-run the whole chain
-      val next = materialize(labels.join(neighborMin, Seq("id"))
+      frontier = advance(frontier, labels.join(neighborMin, Seq("id"))
         .select(col("id"), least(col("component"), col("nbr_min"))
           .as("component"),
           (col("nbr_min") < col("component")).as("changed")))
-      converged = next.where(col("changed")).limit(1).count() == 0
-      // previous frontier is superseded once `next` is eagerly
-      // materialized — release its checkpoint storage instead of pinning
-      // every round's snapshot (blocks and/or files) for the rest of the
-      // job; round 1 supersedes the initial frontier, not the edge list
-      releaseMaterialized(frontier)
-      frontier = next
-      labels = next.select("id", "component")
+      converged = frontier.where(col("changed")).limit(1).count() == 0
+      labels = frontier.select("id", "component")
       iter += 1
     }
-    // the edge list is only iterated over; once converged it is dead too.
-    // (`labels`' backing storage intentionally survives — it IS the result.)
-    releaseMaterialized(edges)
     // an unconverged exit would return silently-wrong labels (a cluster
     // could keep two survivors); diameter > maxIter means the corpus is
     // pathological for plain propagation — fail loudly instead
@@ -2003,7 +1880,7 @@ object Dedup {
     * plain propagation (maxIter=20) refuses.
     */
   def connectedComponentsStar(pairs: DataFrame,
-                              maxIter: Int = 50): DataFrame = {
+                              maxIter: Int = 50): DataFrame = scoped {
     // every vertex of the ORIGINAL pair list (before self-pair removal),
     // so the output contract matches `connectedComponents` exactly
     val vertices = materialize(pairs.select(
@@ -2065,7 +1942,7 @@ object Dedup {
         .agg(sum(col("h")).as("nh"), sum(col("l")).as("nl"))
         .where(col("nh") > 1 || (col("nh") > 0 && col("nl") > 0))
       converged = offenders.limit(1).count() == 0
-      releaseMaterialized(edges)
+      release(edges)
       edges = afterSmall
       iter += 1
     }
@@ -2073,8 +1950,8 @@ object Dedup {
       s"connectedComponentsStar: not converged after $maxIter rounds")
     // star forest: every hi points at its component min; roots (and any
     // vertex with no remaining edge, e.g. a self-pair-only vertex) label
-    // themselves. `edges`/`vertices` back this result lazily — their
-    // storage intentionally survives, like `connectedComponents`' labels.
+    // themselves. `edges`/`vertices` back this result lazily, so they
+    // escape the scope with it.
     vertices.as("vtx")
       .join(edges.select(col("hi").as("eid"), col("lo").as("component")),
         col("vtx.id") === col("eid"), "left")

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec.{materialize, scoped, workParallelism}
+
 /** Fuzzy record linkage / entity resolution: collapse name VARIANTS
   * ("Dr. Jane Doe" / "jane doe" / a typo'd form) of the same real-world
   * entity to one canonical id — the author-disambiguation layer a
@@ -94,7 +96,7 @@ object EntityResolution {
     val sized = preGuarded.getOrElse(recs.join(
       recs.groupBy("blk").agg(count(lit(1)).as("blk_n")), Seq("blk"))
       .where(col("blk_n") <= maxBlock))
-      .repartition(Dedup.workParallelism(recs.sparkSession), col("blk"))
+      .repartition(workParallelism(recs.sparkSession), col("blk"))
     val a = sized.select(col("blk"), col("id").as("id_a"),
       col("norm").as("norm_a")).as("era")
     val b = sized.select(col("blk"), col("id").as("id_b"),
@@ -446,10 +448,9 @@ object EntityResolution {
           indexPath, excludeEpoch = Some(epochId))
     // only linkable records are indexed (same as the batch build); the
     // lineage reads the partition tree the write below mutates, so the
-    // frame is pinned across the write and released in the finally
-    val admitted =
-      Dedup.materialize(linkable.join(assigned, Seq("id")))
-    try {
+    // frame is pinned across the write, and released after it
+    scoped {
+      val admitted = materialize(linkable.join(assigned, Seq("id")))
       if (!admitted.isEmpty) {
         writeRecordsPartition(admitted, epochId, indexPath)
         if (bootstrap) {
@@ -463,6 +464,6 @@ object EntityResolution {
           fs.create(marker, false).close()
         }
       }
-    } finally Dedup.releaseMaterialized(admitted)
+    }
   }
 }

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import Dedup.{materialize, releaseMaterialized}
+import graft.exec.Exec.{advance, materialize, scoped, sequentialSumByKey,
+  workParallelism}
 
 /** Entity-importance over an interaction graph: fixed-iteration PageRank
   * (Page, Brin, Motwani, Winograd 1999) with uniform teleport and full
@@ -41,7 +42,7 @@ object Graph {
     * them in as self-free dangling ids upstream if they must rank. */
   def pageRank(edges: DataFrame, src: Column, dst: Column,
                iters: Int = 5, damping: Double = 0.85,
-               deterministic: Boolean = false): DataFrame = {
+               deterministic: Boolean = false): DataFrame = scoped {
     require(iters >= 1, s"pageRank: iters=$iters must be >= 1")
     require(damping > 0 && damping < 1,
       s"pageRank: damping=$damping must be in (0, 1)")
@@ -72,16 +73,12 @@ object Graph {
       val summed = dstContributions(ranks, e, deterministic)
       // mirror the oracle's expression tree EXACTLY:
       // (1 - d)/n + d * (ct + dm/n)
-      val next = materialize(nodes.join(summed, Seq("id"), "left")
+      ranks = advance(ranks, nodes.join(summed, Seq("id"), "left")
         .crossJoin(broadcast(dmDf))
         .select(col("id"), col("outdeg"),
           (lit(1.0d - damping) / nD + lit(damping) *
             (coalesce(col("ct"), lit(0.0d)) + col("dm") / nD)).as("rank")))
-      releaseMaterialized(ranks)
-      ranks = next
     }
-    releaseMaterialized(e)
-    releaseMaterialized(nodes)
     ranks
   }
 
@@ -109,7 +106,7 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, src: Column, dst: Column,
                            sources: DataFrame, iters: Int = 5,
                            damping: Double = 0.85,
-                           deterministic: Boolean = false): DataFrame = {
+                           deterministic: Boolean = false): DataFrame = scoped {
     require(iters >= 1, s"personalizedPageRank: iters=$iters")
     require(damping > 0 && damping < 1,
       s"personalizedPageRank: damping=$damping")
@@ -141,17 +138,13 @@ object Graph {
       val dmDf = danglingMass(ranks, deterministic)
       val summed = dstContributions(ranks, e, deterministic)
       // mirrored by the oracle: (1 - d) * t + d * (ct + dm * t)
-      val next = materialize(nodes.join(summed, Seq("id"), "left")
+      ranks = advance(ranks, nodes.join(summed, Seq("id"), "left")
         .crossJoin(broadcast(dmDf))
         .select(col("id"), col("outdeg"), col("is_source"),
           (lit(1.0d - damping) * tele + lit(damping) *
             (coalesce(col("ct"), lit(0.0d)) + col("dm") * tele))
             .as("rank")))
-      releaseMaterialized(ranks)
-      ranks = next
     }
-    releaseMaterialized(e)
-    releaseMaterialized(nodes)
     ranks
   }
 
@@ -173,7 +166,7 @@ object Graph {
 
   /** Per-destination contribution sums Σ r(u)/outdeg(u), src-ordered
     * fold in repro mode — the other shared half of the walk round. The
-    * repro fold routes through [[Similarity.sequentialSumByKey]] (same
+    * repro fold routes through [[Exec.sequentialSumByKey]] (same
     * struct-sort-fold, value-identical) for its pinned keyed spread:
     * inlined here the interpreted fold sat on an AQE-coalesced
     * single-task stage every round (byte-blind sizing, guide §2.5). */
@@ -184,7 +177,7 @@ object Graph {
       .select(col("dst"), col("src"),
         (col("rank") / col("outdeg")).as("c"))
     if (deterministic)
-      Similarity.sequentialSumByKey(contribs, Seq("dst"), "src", "c")
+      sequentialSumByKey(contribs, Seq("dst"), "src", "c")
         .select(col("dst").as("id"), col("__sum").as("ct"))
     else contribs.groupBy(col("dst").as("id")).agg(sum(col("c")).as("ct"))
   }
@@ -209,7 +202,7 @@ object Graph {
     * map-side combine. Multi-edges collapse first.
     */
   def coCitation(edges: DataFrame, src: Column, dst: Column,
-                 maxSrcOutDegree: Long = 10000L): DataFrame = {
+                 maxSrcOutDegree: Long = 10000L): DataFrame = scoped {
     require(maxSrcOutDegree >= 2,
       s"coCitation: maxSrcOutDegree=$maxSrcOutDegree must be >= 2")
     // simple edges, materialized once: degree pass + both join sides
@@ -224,7 +217,7 @@ object Graph {
     // so the exchange computes once and is reused
     val kept = e.join(deg.where(col("outdeg") <= maxSrcOutDegree), "src")
       .select("src", "dst")
-      .repartition(Dedup.workParallelism(edges.sparkSession), col("src"))
+      .repartition(workParallelism(edges.sparkSession), col("src"))
     val dropped = deg.where(col("outdeg") > maxSrcOutDegree)
       .agg(coalesce(count(lit(1)), lit(0L)).as("n_dropped_sources"))
     val pairs = kept.as("a").join(kept.as("b"),
@@ -286,7 +279,7 @@ object Graph {
       .select(col(s"p.$uName").as(uName), col(s"p.$nName").as(nName))
 
   def labelPropagation(edges: DataFrame, src: Column, dst: Column,
-                       iters: Int): DataFrame = {
+                       iters: Int): DataFrame = scoped {
     require(iters >= 1, s"labelPropagation: iters=$iters must be >= 1")
     import org.apache.spark.sql.expressions.Window
     val sym = materialize(
@@ -298,20 +291,14 @@ object Graph {
     while (iter < iters) {
       val w = Window.partitionBy("v")
         .orderBy(col("c").desc, col("label").asc)
-      val next = materialize(sym
+      labels = advance(labels, sym
         .join(labels.select(col("v").as("n"), col("label")), Seq("n"))
         .groupBy(col("v"), col("label")).agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(w))
         .where(col("rn") === 1)
         .select(col("v"), col("label")))
-      releaseMaterialized(labels)
-      labels = next
       iter += 1
     }
-    // the final labels frame intentionally keeps its storage (it backs
-    // the lazy result, the connected-components convention); the edge
-    // frame is consumed and must not leak its checkpoint
-    releaseMaterialized(sym)
     labels.select(col("v").as("node"), col("label"))
   }
 
@@ -335,7 +322,7 @@ object Graph {
     * degree < 2).
     */
   def triangleCounts(edges: DataFrame, src: Column, dst: Column)
-      : DataFrame = {
+      : DataFrame = scoped {
     val und = materialize(edges
       .select(least(src, dst).as("a"), greatest(src, dst).as("b"))
       .where(col("a") =!= col("b")).distinct())
@@ -352,7 +339,6 @@ object Graph {
       .select(when(aFirst, col("a")).otherwise(col("b")).as("lo"),
         when(aFirst, col("b")).otherwise(col("a")).as("hi"),
         when(aFirst, col("db")).otherwise(col("da")).as("dhi")))
-    releaseMaterialized(und) // last consumer was oriented's build
     // canonical wedges (out-edge pairs ordered by the same global order)
     // + the closing edge, which — being between two order-larger nodes —
     // is necessarily oriented e1.hi → e2.hi if present
@@ -399,7 +385,7 @@ object Graph {
     * by diameter.
     */
   def kCore(edges: DataFrame, src: Column, dst: Column, k: Int,
-            rounds: Int): DataFrame = {
+            rounds: Int): DataFrame = scoped {
     require(k >= 1, s"kCore: k=$k must be >= 1")
     require(rounds >= 1, s"kCore: rounds=$rounds must be >= 1")
     var sym = materialize(
@@ -409,15 +395,11 @@ object Graph {
     while (r < rounds) {
       val keep = sym.groupBy("v").agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k).select("v")
-      val next = materialize(sym
+      sym = advance(sym, sym
         .join(keep, Seq("v"), "left_semi")
         .join(keep.select(col("v").as("n")), Seq("n"), "left_semi"))
-      releaseMaterialized(sym)
-      sym = next
       r += 1
     }
-    // final frame keeps its storage backing the lazy result (the
-    // family convention)
     sym.groupBy("v").agg(count(lit(1)).as("degree"))
       .select(col("v").as("node"), col("degree"))
   }
@@ -447,7 +429,7 @@ object Graph {
     * rounds. `directed = false` symmetrizes the edge list first.
     */
   def bfs(edges: DataFrame, src: Column, dst: Column, sources: DataFrame,
-          rounds: Int, directed: Boolean = true): DataFrame = {
+          rounds: Int, directed: Boolean = true): DataFrame = scoped {
     require(rounds >= 1, s"bfs: rounds=$rounds must be >= 1")
     require(sources.columns.length == 1,
       s"bfs: sources must be a single vertex-id column, got " +
@@ -470,13 +452,10 @@ object Graph {
       val reached = dist.where(col("dist") === r - 1)
         .join(e, col("v") === col("a"), "inner")
         .select(col("b").as("v"), lit(r).as("dist"))
-      val next = materialize(dist.unionByName(reached)
+      dist = advance(dist, dist.unionByName(reached)
         .groupBy("v").agg(min(col("dist")).as("dist")))
-      releaseMaterialized(dist)
-      dist = next
       r += 1
     }
-    releaseMaterialized(e)
     dist.select(col("v").as("node"), col("dist"))
   }
 
@@ -495,15 +474,18 @@ object Graph {
     * scale use 2-3 rounds, which is where HITS rankings stabilize.
     *
     * Scale shape: per round two edges⋈scores hash joins (keyed on the
-    * high-cardinality src / dst) + two per-node partial aggregates;
-    * score frames materialize per round and the superseded round is
-    * released — same discipline as `pageRank`, with the driver holding
-    * nothing but the two share denominators.
+    * high-cardinality src / dst) + two per-node partial aggregates.
+    * Hub frames materialize per round and the superseded round is
+    * released (the `pageRank` discipline); authority frames chain
+    * lazily into the same round's hub fold, and only the last round's
+    * authorities are materialized, because totals and readout read
+    * them again. The two share denominators ride one broadcast row,
+    * never collected.
     *
     * Output: (id, hub, auth, hub_share, auth_share) for every node.
     */
   def hits(edges: DataFrame, src: Column, dst: Column,
-           iters: Int = 2): DataFrame = {
+           iters: Int = 2): DataFrame = scoped {
     require(iters >= 1, s"hits: iters=$iters must be >= 1")
     val e = materialize(
       edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
@@ -532,26 +514,21 @@ object Graph {
       val hSum = e.join(aRef.select(col("id").as("dst"), col("a")),
           Seq("dst"))
         .groupBy(col("src").as("id")).agg(sum(col("a")).as("h"))
-      val nextH = materialize(nodes.join(hSum, Seq("id"), "left")
+      hubs = advance(hubs, nodes.join(hSum, Seq("id"), "left")
         .select(col("id"), coalesce(col("h"), lit(0L)).as("h")))
-      releaseMaterialized(hubs)
-      hubs = nextH
     }
     // share denominators: exact DECIMAL sums (a long total could
     // overflow even when every score fits), one correctly-rounded cast
     // to double each — not collected, one broadcast row
     val totals = hubs.agg(sum(col("h").cast("decimal(38,0)")).as("th"))
       .crossJoin(auths.agg(sum(col("a").cast("decimal(38,0)")).as("ta")))
-    val out = hubs.join(auths, Seq("id"))
+    hubs.join(auths, Seq("id"))
       .crossJoin(broadcast(totals))
       .select(col("id"), col("h").as("hub"), col("a").as("auth"),
         (col("h").cast("double") /
           nullif(col("th").cast("double"), lit(0.0))).as("hub_share"),
         (col("a").cast("double") /
           nullif(col("ta").cast("double"), lit(0.0))).as("auth_share"))
-    releaseMaterialized(e)
-    releaseMaterialized(nodes)
-    out
   }
 
   /** Link prediction over an undirected simple graph: score NON-edges by
@@ -599,7 +576,7 @@ object Graph {
     * resource_alloc, n_dropped_centers (a < b, (a,b) ∉ edges).
     */
   def linkPrediction(edges: DataFrame, src: Column, dst: Column,
-                     maxCenterDegree: Long = 10000L): DataFrame = {
+                     maxCenterDegree: Long = 10000L): DataFrame = scoped {
     require(maxCenterDegree >= 2,
       s"linkPrediction: maxCenterDegree=$maxCenterDegree must be >= 2")
     // canonical undirected simple edges (self-loops out, a < b)
@@ -615,7 +592,7 @@ object Graph {
     // explicit-count exchange pins the quadratic-per-center pair stage
     // AQE would otherwise size by input bytes (the coCitation fix, r13)
     val wedgeAdj = sym.join(keptCenters, Seq("w"))
-      .repartition(Dedup.workParallelism(edges.sparkSession), col("w"))
+      .repartition(workParallelism(edges.sparkSession), col("w"))
     val cand = wedgeAdj.as("l").join(wedgeAdj.as("r"),
         col("l.w") === col("r.w") && col("l.n") < col("r.n"))
       .groupBy(col("l.n").as("a"), col("r.n").as("b"))
@@ -674,7 +651,7 @@ object Graph {
     */
   def randomWalks(edges: DataFrame, src: Column, dst: Column,
                   walkLen: Int, walksPerNode: Int = 1,
-                  seed: String = "graft"): DataFrame = {
+                  seed: String = "graft"): DataFrame = scoped {
     require(walkLen >= 1, s"randomWalks: walkLen=$walkLen must be >= 1")
     require(walksPerNode >= 1,
       s"randomWalks: walksPerNode=$walksPerNode must be >= 1")
@@ -722,10 +699,8 @@ object Graph {
     }
     // ONE materialization: the finished corpus (same rows as the old
     // per-step-union shape — posexplode's pos IS the step index)
-    val acc = materialize(cur.select(col("start"), col("walk"),
+    materialize(cur.select(col("start"), col("walk"),
       posexplode(col("hist")).as(Seq("step", "node"))))
-    releaseMaterialized(adj)
-    acc
   }
 
   /** Skip-gram training pairs from a [[randomWalks]] corpus (the
@@ -787,7 +762,7 @@ object Graph {
   def randomWalksWeighted(edges: DataFrame, src: Column, dst: Column,
                           weight: Column, walkLen: Int,
                           walksPerNode: Int = 1, seed: String = "graft",
-                          bucketWidth: Long = 0L): DataFrame = {
+                          bucketWidth: Long = 0L): DataFrame = scoped {
     require(walkLen >= 1,
       s"randomWalksWeighted: walkLen=$walkLen must be >= 1")
     require(walksPerNode >= 1,
@@ -867,10 +842,8 @@ object Graph {
           concat(col("hist"), array(col("nbr"))).as("hist"),
           col("nbr").as("u"), col("nbr_total").as("cur_total"))
     }
-    val acc = materialize(cur.select(col("start"), col("walk"),
+    materialize(cur.select(col("start"), col("walk"),
       posexplode(col("hist")).as(Seq("step", "node"))))
-    releaseMaterialized(adjW)
-    acc
   }
 
   /** Word2vec-style negative sampling over a [[randomWalks]] corpus:
@@ -910,7 +883,7 @@ object Graph {
     */
   def negativeSamples(walks: DataFrame, negatives: Int,
                       seed: String = "graft", maxFreq: Long = 100000L,
-                      bucketWidth: Long = 0L): DataFrame = {
+                      bucketWidth: Long = 0L): DataFrame = scoped {
     require(negatives >= 1,
       s"negativeSamples: negatives=$negatives must be >= 1")
     require(maxFreq >= 1 && maxFreq <= 200000L,
@@ -918,9 +891,8 @@ object Graph {
         "(freq³ must stay below 2⁵³ for the exact-integer cube)")
     val spark = walks.sparkSession
     import spark.implicits._
-    val (cumPlan, total, vocabN, wt) = noiseTable(walks, maxFreq)
+    val (cumPlan, total, vocabN) = noiseTable(walks, maxFreq)
     val cum = materialize(cumPlan)
-    releaseMaterialized(wt) // cum owns the intervals now
     require(total < (1L << 48),
       s"negativeSamples: total noise weight $total exceeds the 12-hex " +
         "draw space; raise the draw width or lower maxFreq")
@@ -958,11 +930,10 @@ object Graph {
     * running-sum window after a hash exchange, ≤256 bucket
     * (weight, count) rows collected as the exclusive-prefix frame.
     * Integer sums make lo/hi bit-identical to a global-window build.
-    * Returns (cum plan, total weight, vocab size, the MATERIALIZED
-    * weight table the plan reads — release it once the plan is
-    * materialized). */
+    * Returns (cum plan, total weight, vocab size); the plan reads a
+    * weight table materialized into the caller's scope. */
   private[graft] def noiseTable(walks: DataFrame, maxFreq: Long)
-      : (DataFrame, Long, Long, DataFrame) = {
+      : (DataFrame, Long, Long) = {
     val spark = walks.sparkSession
     import spark.implicits._
     val f = least(col("freq"), lit(maxFreq)).cast("double")
@@ -1014,7 +985,7 @@ object Graph {
       .withColumn("hi", col("__cum_in") + col("__off"))
       .select(col("node"), (col("hi") - col("w")).as("lo"),
         (col("hi") - 1).as("hi_incl"))
-    (cum, total, vocabN, wt)
+    (cum, total, vocabN)
   }
 
   /** A tiny (walk = 0..walksPerNode−1) frame for the walk fan-out —

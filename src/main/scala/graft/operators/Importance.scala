@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec.{sequentialSumByKey, spreadBy}
+
 /** DSIR-shaped data selection via importance resampling (Xie et al.
   * 2023, "Data Selection for Language Models via Importance
   * Resampling"): score every raw document by how much more likely its
@@ -77,7 +79,7 @@ object Importance {
     require(buckets >= 2 && buckets <= 65536,
       s"hashedNgramCounts: buckets=$buckets out of [2,65536] — four md5 " +
         "hex digits drive the bucket draw; widen hexPrefix4 to raise it")
-    val posted = Dedup.spreadBy(docs.select(id.as("doc_id"),
+    val posted = spreadBy(docs.select(id.as("doc_id"),
         targetPred.as("__tgt"), text.as("__text")), col("doc_id"))
       .select(col("doc_id"), col("__tgt"),
         posexplode(split(graft.functions.TextAnalysis
@@ -140,7 +142,7 @@ object Importance {
       // struct-sort-fold, identical struct field order/comparator) for
       // its pinned keyed spread — the inline fold's state sat on
       // whatever AQE left of the upstream exchange (r13, guide §2.5/§5)
-      .transform(cells => Similarity.sequentialSumByKey(cells,
+      .transform(cells => sequentialSumByKey(cells,
         Seq("doc_id"), "bucket", "x",
         extraAggs = Seq(sum(col("cnt")).as("n_grams"))))
       .select(col("doc_id"), col("n_grams"), col("__sum").as("logw"))
@@ -270,7 +272,7 @@ object Importance {
       .select(col("doc_id"), col("bucket"),
         (col("cnt") * coalesce(col("llr"), lit(unseenLlr))).as("x"))
       // same fold, same order — routed for the pinned spread (r13)
-      .transform(cells => Similarity.sequentialSumByKey(cells,
+      .transform(cells => sequentialSumByKey(cells,
         Seq("doc_id"), "bucket", "x"))
       .select(col("doc_id"), col("__sum").as("logw"))
       .where(col("logw") >= minLogw)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec.{sequentialSumByKeyOrdered, spreadBy}
+
 /** CCNet-style language-model quality filtering (Wenzek et al. 2020):
   * fit a small LM to a clean reference slice, score every raw document
   * by its per-token perplexity under that model, and keep the
@@ -43,7 +45,7 @@ object Perplexity {
     * element (the CollapseProject inline-split trap). */
   private def bigramCounts(docs: DataFrame, id: Column,
                            text: Column): DataFrame = {
-    val posted = Dedup.spreadBy(docs.select(id.as("doc_id"),
+    val posted = spreadBy(docs.select(id.as("doc_id"),
         text.as("__text")), col("doc_id"))
       .select(col("doc_id"),
         posexplode(split(graft.functions.TextAnalysis
@@ -114,7 +116,7 @@ object Perplexity {
     // interpreted fold sat on whatever AQE's byte-blind sizing left of
     // the join's exchange, with every doc's bigram structs buffered in
     // however few tasks that was (r13; guide §2.5/§5)
-    Similarity.sequentialSumByKeyOrdered(cells, Seq("doc_id"),
+    sequentialSumByKeyOrdered(cells, Seq("doc_id"),
         Seq("w1", "w2"), "x",
         extraAggs = Seq(sum(col("cnt")).as("n_bigrams")))
       .select(col("doc_id"), col("n_bigrams"),

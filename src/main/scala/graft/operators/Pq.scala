@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec.{materialize, scoped}
+
 /** Product quantization (Jégou, Douze, Schmid 2011: "Product quantization
   * for nearest neighbor search") — the COMPRESSION tier of the ANN ladder
   * (brute → LSH → IVF → PQ): split each dim-d vector into `m` contiguous
@@ -211,31 +213,28 @@ object Pq {
                 nCentroids: Int, nProbe: Int, coarseIters: Int,
                 m: Int, ksub: Int, pqIters: Int,
                 idCol: String = "vec_id", embCol: String = "embedding",
-                deterministic: Boolean = false): DataFrame = {
+                deterministic: Boolean = false): DataFrame = scoped {
     val cents = Similarity.kMeansCentroids(corpus, nCentroids, coarseIters,
       idCol, embCol, deterministic)
-    // storage behind the materialized residual frame intentionally
-    // survives (the tfidf `w` precedent): the returned result is lazy
-    // over the index projection
-    val (index, cb, _) = buildIvfPqIndex(corpus, cents, m, ksub, pqIters,
+    // the materialized residual frame escapes with the lazy result,
+    // which reads the index projection
+    val (index, cb) = buildIvfPqIndex(corpus, cents, m, ksub, pqIters,
       idCol, embCol)
     adcSearch(index, probes, k, nProbe, cents, cb, idCol, embCol)
   }
 
   /** The IVF-PQ index frame (id, cluster, codes) plus its residual
-    * codebook, under the given coarse centroids. Third element: the
-    * MATERIALIZED (id, cluster, resid) base the index projects from —
-    * the codebook sample collect and the encode pass are separate
-    * actions, so a lazy frame would run the corpus scan + nearest-
-    * centroid assignment + residual arithmetic twice (r13; measured as
-    * one full extra corpus pass per probe build). Callers that finish
-    * with the index (the persist path) release it; query-shaped callers
-    * let the storage back the lazy result. */
+    * codebook, under the given coarse centroids. The index projects from
+    * a MATERIALIZED (id, cluster, resid) base, which joins the caller's
+    * scope — the codebook sample collect and the encode pass are
+    * separate actions, so a lazy frame would run the corpus scan +
+    * nearest-centroid assignment + residual arithmetic twice (r13;
+    * measured as one full extra corpus pass per probe build). */
   private def buildIvfPqIndex(corpus: DataFrame,
                               cents: Array[Array[Double]],
                               m: Int, ksub: Int, pqIters: Int,
                               idCol: String, embCol: String)
-      : (DataFrame, Codebook, DataFrame) = {
+      : (DataFrame, Codebook) = {
     val dim = cents.head.length
     val centLit = typedlit(cents.map(_.map(_.toFloat).toSeq).toSeq)
     // float residual: float(emb) - float(centroid), elementwise FloatType
@@ -243,7 +242,7 @@ object Pq {
     // double-rounding-safe form). The raw emb column is dropped before
     // the checkpoint — neither the codebook trainer (resid) nor the
     // encode pass (resid, cluster) reads it.
-    val assigned = Dedup.materialize(corpus
+    val assigned = materialize(corpus
       .select(col(idCol).as("id"), col(embCol).as("emb"))
       .where(wellFormedDim(col("emb"), dim))
       .select(col("id"), col("emb"),
@@ -257,7 +256,7 @@ object Pq {
     // the stored index shape: (id, cluster, codes) — emb/resid dropped
     (assigned.select(col("id"), col("cluster"),
       graft.functions.VectorExpressions.pqEncode(col("resid"), cb.cents)
-        .as("codes")), cb, assigned)
+        .as("codes")), cb)
   }
 
   /** ADC search over an IVF-PQ index frame (id, cluster, codes): probes
@@ -318,12 +317,12 @@ object Pq {
                         m: Int, ksub: Int, pqIters: Int,
                         idCol: String = "vec_id",
                         embCol: String = "embedding",
-                        deterministic: Boolean = false): Unit = {
+                        deterministic: Boolean = false): Unit = scoped {
     val spark = corpus.sparkSession
     import spark.implicits._
     val cents = Similarity.kMeansCentroids(corpus, nCentroids, coarseIters,
       idCol, embCol, deterministic)
-    val (index, cb, base) = buildIvfPqIndex(corpus, cents, m, ksub,
+    val (index, cb) = buildIvfPqIndex(corpus, cents, m, ksub,
       pqIters, idCol, embCol)
     // retract the OLD meta before any data overwrite (persistPcaModel
     // discipline): otherwise a crash mid-re-persist leaves new codes
@@ -331,9 +330,8 @@ object Pq {
     val metaDir = new org.apache.hadoop.fs.Path(s"$path/meta")
     val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(metaDir)) fs.delete(metaDir, true)
-    try index.write.mode("overwrite").partitionBy("cluster")
+    index.write.mode("overwrite").partitionBy("cluster")
       .parquet(s"$path/vectors")
-    finally Dedup.releaseMaterialized(base) // last consumer: that write
     cents.zipWithIndex.toSeq.map { case (c, j) => (j, c.toSeq) }
       .toDF("cluster", "cent")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec.{advance, materialize, release, scoped,
+  workParallelism}
+
 /** Item-item collaborative filtering over basket memberships — the
   * "customers who bought X also bought Y" tier (Linden, Smith & York 2003,
   * Amazon item-to-item CF; Sarwar et al. 2001 item-based CF). The
@@ -68,13 +71,13 @@ object Recommend {
     */
   def itemSimilarity(memberships: DataFrame, basket: Column, item: Column,
                      maxBasketSize: Long = 1000L,
-                     minCooc: Long = 1L): DataFrame = {
+                     minCooc: Long = 1L): DataFrame = scoped {
     require(maxBasketSize >= 2,
       s"itemSimilarity: maxBasketSize=$maxBasketSize must be >= 2")
     require(minCooc >= 1, s"itemSimilarity: minCooc=$minCooc must be >= 1")
     val m = memberships.select(basket.cast("long").as("b"),
       item.cast("long").as("i")).distinct()
-    val kept = Dedup.materialize(
+    val kept = materialize(
       m.withColumn("__sz", count(lit(1)).over(
           org.apache.spark.sql.expressions.Window.partitionBy("b")))
         .where(col("__sz") <= maxBasketSize)
@@ -150,9 +153,9 @@ object Recommend {
     * Output: user, item, score, n_links, rnk (1-based).
     */
   def recommendForUsers(userItems: DataFrame, user: Column, item: Column,
-                        neighbors: DataFrame, k: Int): DataFrame = {
+                        neighbors: DataFrame, k: Int): DataFrame = scoped {
     require(k >= 1, s"recommendForUsers: k=$k must be >= 1")
-    val ui = Dedup.materialize(
+    val ui = materialize(
       userItems.select(user.cast("long").as("u"),
         item.cast("long").as("i")).distinct())
     val votes = ui.join(
@@ -205,10 +208,10 @@ object Recommend {
     */
   def alsRank1(ratings: DataFrame, user: Column, item: Column,
                rating: Column, iters: Int, lambda: Double,
-               deterministic: Boolean = false): DataFrame = {
+               deterministic: Boolean = false): DataFrame = scoped {
     require(iters >= 1 && iters <= 20, s"alsRank1: iters=$iters")
     require(lambda > 0.0, s"alsRank1: lambda=$lambda must be > 0")
-    val base = Dedup.materialize(ratings
+    val base = materialize(ratings
       .select(user.cast("long").as("u"), item.cast("long").as("i"),
         rating.cast("long").as("r"))
       .where(col("u").isNotNull && col("i").isNotNull &&
@@ -224,7 +227,7 @@ object Recommend {
           // collect_list fold (the sequentialSumByKey posture, r13):
           // AQE's byte-based sizing otherwise coalesces the fold stage,
           // and exactly-cpus partitions would leave no straggler slack
-          j.repartition(Dedup.workParallelism(j.sparkSession), col(key))
+          j.repartition(workParallelism(j.sparkSession), col(key))
             .groupBy(key).agg(collect_list(struct(col(other),
               (col("r").cast("double") * col("f")).as("rv"),
               (col("f") * col("f")).as("ff"))).as("xs"))
@@ -240,20 +243,18 @@ object Recommend {
       agged.select(col(key),
         (col("num") / (lit(lambda) + col("den"))).as("f"))
     }
-    var v = Dedup.materialize(base.select("i").distinct()
+    var v = materialize(base.select("i").distinct()
       .withColumn("f", lit(1.0)))
     var u: DataFrame = null
     for (_ <- 1 to iters) {
       // materialize snapshots each round eagerly, so releasing the
       // SUPERSEDED round's storage never undercuts a pending plan; the
-      // final u/v/base stay pinned — the returned frame is lazy and
-      // still reads them
-      val nu = Dedup.materialize(solve("u", "i", v))
-      if (u != null) Dedup.releaseMaterialized(u)
+      // final u/v/base escape the scope — the returned frame is lazy
+      // and still reads them
+      val nu = materialize(solve("u", "i", v))
+      if (u != null) release(u)
       u = nu
-      val nv = Dedup.materialize(solve("i", "u", u))
-      Dedup.releaseMaterialized(v)
-      v = nv
+      v = advance(v, solve("i", "u", u))
     }
     base.join(u.withColumnRenamed("f", "u_factor"), Seq("u"))
       .join(v.withColumnRenamed("f", "i_factor"), Seq("i"))
@@ -292,10 +293,10 @@ object Recommend {
     */
   def alsRank2(ratings: DataFrame, user: Column, item: Column,
                rating: Column, iters: Int, lambda: Double,
-               deterministic: Boolean = false): DataFrame = {
+               deterministic: Boolean = false): DataFrame = scoped {
     require(iters >= 1 && iters <= 20, s"alsRank2: iters=$iters")
     require(lambda > 0.0, s"alsRank2: lambda=$lambda must be > 0")
-    val base = Dedup.materialize(ratings
+    val base = materialize(ratings
       .select(user.cast("long").as("u"), item.cast("long").as("i"),
         rating.cast("long").as("r"))
       .where(col("u").isNotNull && col("i").isNotNull &&
@@ -316,7 +317,7 @@ object Recommend {
             aggregate(array_sort(col("xs")), lit(0.0),
               (a, s) => a + s.getField(fld)).as(fld)
           // pinned keyed exchange before the fold — see alsRank1 (r13)
-          j.repartition(Dedup.workParallelism(j.sparkSession), col(key))
+          j.repartition(workParallelism(j.sparkSession), col(key))
             .groupBy(key).agg(collect_list(terms).as("xs"))
             .select(col(key), fold("b1"), fold("b2"), fold("s11"),
               fold("s12"), fold("s22"))
@@ -336,18 +337,16 @@ object Recommend {
         (((lam + col("s11")) * col("b2") - col("s12") * col("b1")) / det)
           .as("f2"))
     }
-    var v = Dedup.materialize(base.select("i").distinct()
+    var v = materialize(base.select("i").distinct()
       .select(col("i"), lit(1.0).as("f1"),
         ((conv(substring(md5(col("i").cast("string")), 1, 2), 16, 10)
           .cast("long") % 8 + 1).cast("double") / lit(8.0)).as("f2")))
     var u: DataFrame = null
     for (_ <- 1 to iters) {
-      val nu = Dedup.materialize(solve("u", "i", v))
-      if (u != null) Dedup.releaseMaterialized(u)
+      val nu = materialize(solve("u", "i", v))
+      if (u != null) release(u)
       u = nu
-      val nv = Dedup.materialize(solve("i", "u", u))
-      Dedup.releaseMaterialized(v)
-      v = nv
+      v = advance(v, solve("i", "u", u))
     }
     base
       .join(u.select(col("u"), col("f1").as("u1"), col("f2").as("u2")),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec.{materialize, scoped}
+
 /** Deterministic corpus shuffling + sharding — the "shuffle the corpus,
   * then cut it into training files" stage every pretraining pipeline runs
   * between curation and the trainer (the global random document order
@@ -566,7 +568,7 @@ object Shard {
     *
     * NULL groups, and NULL or NaN leading values, FAIL loudly (same
     * policy as [[scalableNtile]]). The input is scanned three times
-    * (splits, counts, final) — [[Dedup.materialize]] expensive
+    * (splits, counts, final) — [[Exec.materialize]] expensive
     * upstream frames first.
     *
     * Returns the input columns plus `out` (INT, 1..k). */
@@ -575,7 +577,7 @@ object Shard {
                            descending: Boolean = false, buckets: Int = 64,
                            maxGroups: Int = 65536,
                            windowFormMax: Int = defaultWindowFormMax)
-      : DataFrame = {
+      : DataFrame = scoped {
     require(k >= 1, s"scalableNtileByGroup: k=$k must be >= 1")
     require(buckets >= 1 && buckets <= 4096,
       s"scalableNtileByGroup: buckets=$buckets out of [1, 4096]")
@@ -620,7 +622,7 @@ object Shard {
     // pass 1: per-group split points (ONE aggregation; ≤groups rows),
     // materialized so the cardinality guard and the broadcast read the
     // same tiny checkpoint instead of re-running the sketch pass
-    val splitsDf = Dedup.materialize(
+    val splitsDf = materialize(
       if (buckets == 1) {
         // no sketch pass at buckets=1 — force one evaluation of the
         // guarded leading column anyway so null/NaN still fail loudly
@@ -655,7 +657,7 @@ object Shard {
       .agg(count(lit(1)).as("__nt_c"))
     val wOff = Window.partitionBy(col("__nt_g")).orderBy(col("__nt_b"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val offDf = Dedup.materialize(counts
+    val offDf = materialize(counts
       .withColumn("__nt_off", coalesce(sum("__nt_c").over(wOff), lit(0L)))
       .withColumn("__nt_n",
         sum("__nt_c").over(Window.partitionBy(col("__nt_g"))))
@@ -699,7 +701,7 @@ object Shard {
     * re-executes the upstream plan per phase of every later cut
     * (cut 3's sketch pass re-runs cut 1's window+join); this instead:
     *
-    *   1. materializes the guarded input ONCE ([[Dedup.materialize]]);
+    *   1. materializes the guarded input ONCE ([[Exec.materialize]]);
     *   2. draws ALL split sets in ONE multi-column `approxQuantile`
     *      pass;
     *   3. collects each cut's ≤`buckets`-row prefix frame from the
@@ -725,7 +727,7 @@ object Shard {
   def scalableNtileMulti(df: DataFrame, specs: Seq[NtileSpec],
                          buckets: Int = 64,
                          windowFormMax: Int = defaultWindowFormMax)
-      : DataFrame = {
+      : DataFrame = scoped {
     require(specs.nonEmpty, "scalableNtileMulti: no cut specs")
     require(specs.map(_.out).distinct.size == specs.size,
       "scalableNtileMulti: duplicate output column names")
@@ -756,61 +758,62 @@ object Shard {
       // pass, no grouping-sets count pass. Each output references its
       // spec's guarded cast image, so every guard fires inside the
       // window job.
-      return specs.zipWithIndex.foldLeft(work) { case (acc, (sp, i)) =>
+      specs.zipWithIndex.foldLeft(work) { case (acc, (sp, i)) =>
         acc.withColumn(sp.out, when(col(dCols(i)).isNotNull,
           ntile(sp.k).over(Window.orderBy(specOrd(sp): _*))).cast("int"))
       }.drop(dCols: _*)
-    }
-    val mat = Dedup.materialize(work)
-    val probs = (1 until buckets).map(_.toDouble / buckets).toArray
-    // one sketch pass for ALL metrics
-    val allSplits: Array[Array[Double]] =
-      if (buckets == 1) Array.fill(specs.size)(Array.empty[Double])
-      else mat.stat.approxQuantile(dCols.toArray, probs, 0.001)
-        .map(_.distinct.sorted)
-    val bucketExprs = specs.indices.map { i =>
-      allSplits(i).foldLeft(lit(0)) { (acc, s) =>
-        acc + when(lit(s) < col(dCols(i)), 1).otherwise(0) }
-    }
-    // all prefix frames in ONE scan of the checkpoint, BEFORE any
-    // window exists: GROUPING SETS ((b0),(b1),(b2),…) expands each row
-    // once per cut and partial aggregation collapses to ≤specs×buckets
-    // rows — at corpus scale this replaces one full scan PER CUT with
-    // a single one. Bucket columns are never null, so in the output a
-    // null b_j simply marks "this row counts cut i≠j".
-    val bCols = specs.indices.map(i => s"__nt_cb$i")
-    val withB = mat.select(bucketExprs.zipWithIndex.map {
-      case (e, i) => e.as(bCols(i)) }: _*)
-    val allCounts = withB.groupingSets(
-        specs.indices.map(i => Seq(col(bCols(i)))),
-        bCols.map(col): _*)
-      .agg(count(lit(1)).as("c"))
-      .collect() // ≤ specs × buckets rows — the prefix frames
-    val cuts = specs.zipWithIndex.map { case (sp, i) =>
-      val counts = allCounts
-        .filter(r => !r.isNullAt(i))
-        .map(r => (r.getInt(i), r.getLong(specs.size)))
-        .sortBy(_._1)
-      val n = counts.map(_._2).foldLeft(0L)(Math.addExact)
-      val offsets = {
-        var acc = 0L
-        counts.map { case (b, c) =>
-          val off = acc; acc += c; (b, off)
-        }.toSeq
+    } else {
+      val mat = materialize(work)
+      val probs = (1 until buckets).map(_.toDouble / buckets).toArray
+      // one sketch pass for ALL metrics
+      val allSplits: Array[Array[Double]] =
+        if (buckets == 1) Array.fill(specs.size)(Array.empty[Double])
+        else mat.stat.approxQuantile(dCols.toArray, probs, 0.001)
+          .map(_.distinct.sorted)
+      val bucketExprs = specs.indices.map { i =>
+        allSplits(i).foldLeft(lit(0)) { (acc, s) =>
+          acc + when(lit(s) < col(dCols(i)), 1).otherwise(0) }
       }
-      (sp, i, n, offsets)
+      // all prefix frames in ONE scan of the checkpoint, BEFORE any
+      // window exists: GROUPING SETS ((b0),(b1),(b2),…) expands each row
+      // once per cut and partial aggregation collapses to ≤specs×buckets
+      // rows — at corpus scale this replaces one full scan PER CUT with
+      // a single one. Bucket columns are never null, so in the output a
+      // null b_j simply marks "this row counts cut i≠j".
+      val bCols = specs.indices.map(i => s"__nt_cb$i")
+      val withB = mat.select(bucketExprs.zipWithIndex.map {
+        case (e, i) => e.as(bCols(i)) }: _*)
+      val allCounts = withB.groupingSets(
+          specs.indices.map(i => Seq(col(bCols(i)))),
+          bCols.map(col): _*)
+        .agg(count(lit(1)).as("c"))
+        .collect() // ≤ specs × buckets rows — the prefix frames
+      val cuts = specs.zipWithIndex.map { case (sp, i) =>
+        val counts = allCounts
+          .filter(r => !r.isNullAt(i))
+          .map(r => (r.getInt(i), r.getLong(specs.size)))
+          .sortBy(_._1)
+        val n = counts.map(_._2).foldLeft(0L)(Math.addExact)
+        val offsets = {
+          var acc = 0L
+          counts.map { case (b, c) =>
+            val off = acc; acc += c; (b, off)
+          }.toSeq
+        }
+        (sp, i, n, offsets)
+      }
+      val withTiles = cuts.foldLeft(mat) { case (acc, (sp, i, n, offsets)) =>
+        val b = s"__nt_b$i"; val off = s"__nt_off$i"; val r0 = s"__nt_r0$i"
+        val offDf = broadcast(offsets.toDF(b, off))
+        val inBucket = Window.partitionBy(col(b)).orderBy(specOrd(sp): _*)
+        acc.withColumn(b, bucketExprs(i))
+          .withColumn(r0, row_number().over(inBucket).cast("long") - 1L)
+          .join(offDf, Seq(b))
+          .withColumn(r0, col(r0) + col(off))
+          .withColumn(sp.out, tileFromRank(n, sp.k, r0).cast("int"))
+          .drop(b, off, r0)
+      }
+      withTiles.drop(dCols: _*)
     }
-    val withTiles = cuts.foldLeft(mat) { case (acc, (sp, i, n, offsets)) =>
-      val b = s"__nt_b$i"; val off = s"__nt_off$i"; val r0 = s"__nt_r0$i"
-      val offDf = broadcast(offsets.toDF(b, off))
-      val inBucket = Window.partitionBy(col(b)).orderBy(specOrd(sp): _*)
-      acc.withColumn(b, bucketExprs(i))
-        .withColumn(r0, row_number().over(inBucket).cast("long") - 1L)
-        .join(offDf, Seq(b))
-        .withColumn(r0, col(r0) + col(off))
-        .withColumn(sp.out, tileFromRank(n, sp.k, r0).cast("int"))
-        .drop(b, off, r0)
-    }
-    withTiles.drop(dCols: _*)
   }
 }

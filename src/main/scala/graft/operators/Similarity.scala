@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec.{materialize, scoped, sequentialSumByKey,
+  workParallelism}
+
 /** Embedding similarity search over `ARRAY<FLOAT>` columns.
   *
   * All arithmetic is done in double precision via higher-order functions
@@ -67,64 +70,6 @@ object Similarity {
     * rank-last / fail-gate semantics. */
   private[graft] def notNaN(cos: Column): Column =
     !coalesce(isnan(cos), lit(false))
-
-  /** Deterministic id-ordered sequential fold Σ value per key group —
-    * the bit-reproducibility-critical aggregation shared by the
-    * oracle/repro modes of `kMeansCentroids` and
-    * `Classify.perceptronTrain` (one definition so a future parity fix
-    * cannot drift between them): each group's (id, value) structs are
-    * collected, sorted by id, and summed in one ascending fold, matching
-    * a sequential engine's `list_sum(list(v ORDER BY id))` bit-for-bit.
-    * Holds each group's cells in memory — the repro modes' documented
-    * cost; scale paths use plain partial-agg sums. Returns the key
-    * columns plus (__sum, __count). */
-  private[graft] def sequentialSumByKey(cells: DataFrame,
-                                        keys: Seq[String],
-                                        idCol: String,
-                                        valCol: String,
-                                        extraAggs: Seq[Column] = Nil)
-      : DataFrame =
-    sequentialSumByKeyOrdered(cells, keys, Seq(idCol), valCol, extraAggs)
-
-  /** [[sequentialSumByKey]] with a COMPOSITE fold order: cells are
-    * sorted by the `orderCols` tuple (struct comparison — column by
-    * column ascending), matching a sequential engine's
-    * `list_sum(list(v ORDER BY c1, c2, ...))`. The single-column form
-    * above delegates here so there is exactly one fold definition. */
-  private[graft] def sequentialSumByKeyOrdered(cells: DataFrame,
-                                               keys: Seq[String],
-                                               orderCols: Seq[String],
-                                               valCol: String,
-                                               extraAggs: Seq[Column] = Nil)
-      : DataFrame = {
-    // the fold below is INTERPRETED per-row work that AQE cannot see in
-    // its byte-based sizing: without an explicit partition count the
-    // post-shuffle stage coalesces to one task and the whole per-key
-    // sort+fold serializes (measured ~230 ms/epoch on the perceptron's
-    // 26k cells vs ~30 ms spread, r12 — the entity-levenshtein lesson,
-    // guide §2.5). The keyed repartition pins Dedup.workParallelism
-    // (shuffle parallelism × slack factor — r13: exactly-one-task-per-
-    // core left no straggler slack and put every group's collect_list
-    // buffer in memory at once, see that scaladoc) and the groupBy
-    // reuses its partitioning, so no second exchange appears; per-key
-    // fold order (and thus every value) is
-    // partition-placement-independent.
-    val spreadCells = cells.repartition(
-      Dedup.workParallelism(cells.sparkSession), keys.map(col): _*)
-    val agged = spreadCells.groupBy(keys.map(col): _*)
-      .agg(collect_list(struct((orderCols :+ valCol).map(col): _*))
-          .as("__xs"),
-        count(lit(1)).as("__count") +: extraAggs: _*)
-    // caller-supplied extra aggregates (must be aliased) ride along in
-    // the same single-pass aggregation
-    val extraNames = agged.columns
-      .filterNot(c => keys.contains(c) || c == "__xs" || c == "__count")
-    agged.select(keys.map(col) ++ extraNames.map(col) :+
-      aggregate(array_sort(col("__xs")), lit(0.0),
-        (acc, s) => acc + s.getField(valCol).cast("double"))
-        .as("__sum") :+
-      col("__count"): _*)
-  }
 
   /** Vector dimension probed from the first row WITH a vector (driver-
     * side, one tiny job) — lets all-pairs operators unroll arithmetic
@@ -292,7 +237,7 @@ object Similarity {
                                iters: Int, idCol: String = "vec_id",
                                embCol: String = "embedding",
                                deterministic: Boolean = false,
-                               maxClusterSize: Long = 100000L): DataFrame = {
+                               maxClusterSize: Long = 100000L): DataFrame = scoped {
     require(kPos >= 0 && kNeg >= 0 && (kPos > 0 || kNeg > 0),
       s"contrastiveMineClustered: kPos=$kPos kNeg=$kNeg")
     require(maxClusterSize > 0,
@@ -301,10 +246,9 @@ object Similarity {
       deterministic)
     // materialized: the frame feeds the guard count AND both sides of
     // the self-join — unpinned, each would re-scan the corpus and
-    // re-run the k x dim assignment fold. The checkpoint blocks live
-    // until the returned plan is GC'd (the standard lazy-result cache
-    // contract; ContextCleaner reclaims them).
-    val assigned = Dedup.materialize(
+    // re-run the k x dim assignment fold. It escapes with the lazy
+    // result.
+    val assigned = materialize(
       emb.select(col(idCol).as("id"), col(embCol).as("emb"))
         .where(wellFormed(col("emb")))
         .select(col("id"), col("emb"), norm(col("emb")).as("nrm"),
@@ -453,7 +397,7 @@ object Similarity {
     val banded = slim.select(col("id"),
         posexplode(bucketsExpr(col("emb"), dim, nBits, nTables,
           seedBase = 2000)).as(Seq("table", "bucket")))
-      .repartition(Dedup.workParallelism(slim.sparkSession),
+      .repartition(workParallelism(slim.sparkSession),
         col("table"), col("bucket"))
     val cand = banded.as("a").join(banded.as("b"),
         col("a.table") === col("b.table") &&
@@ -1117,7 +1061,7 @@ object Similarity {
                   deterministic: Boolean = false,
                   tol: Double = 0.0,
                   seeding: KMeansSeeding = KMeansSeeding.HashOrder)
-      : KMeansResult = {
+      : KMeansResult = scoped {
     require(k > 0 && iters >= 0, s"kMeans: k=$k, iters=$iters")
     // dim-consistency is enforced BEFORE seeding: a dim-mismatched
     // vector picked as a seed would hand NearestCentroid a mixed-dim
@@ -1130,12 +1074,11 @@ object Similarity {
     // so a lazy frame re-runs the scan + well-formed filter once per
     // round (r13; the perceptronTrain r12 lesson — at cluster scale
     // this is `iters` full corpus re-reads for a frame that fits a
-    // checkpoint). Released in the finally: only driver-side centroid
+    // checkpoint). Released on return: only driver-side centroid
     // arrays leave this method.
-    val slim = Dedup.materialize(
+    val slim = materialize(
       emb.select(col(idCol).as("id"), col(embCol).as("emb"))
         .where(wellFormed(col("emb")) && size(col("emb")) === dim))
-    try {
     val seeds = seeding match {
       case KMeansSeeding.HashOrder =>
         slim.orderBy(md5(col("id").cast("string")), col("id")).limit(k)
@@ -1185,7 +1128,6 @@ object Similarity {
       r += 1
     }
     KMeansResult(cents, r)
-    } finally Dedup.releaseMaterialized(slim)
   }
 
   /** Greedy farthest-first seeds over a 4096-row hash-ordered sample
@@ -1720,17 +1662,17 @@ object Similarity {
       }
     val assigned = assignedFrame(afterCorpus, idCol, embCol, cents)
     val pairs = exactWithinClusterPairs(assigned, threshold)
-    val keep = Dedup.nearDupSurvivors(
-        afterCorpus.select(col(idCol)), col(idCol), pairs,
-        Dedup.connectedComponentsStar(_))
-      .where(col("survivor_id") === col("doc_id"))
-      .select(col("doc_id").as("__keep_id"))
-    // pin the admitted set before the write: its lineage reads the very
-    // vectors/ parquet the write below appends partitions to (same
-    // hazard and same release-in-finally as Dedup.ingestGateBatch)
-    val admitted = Dedup.materialize(
-      assigned.join(keep, col("id") === col("__keep_id"), "left_semi"))
-    try {
+    scoped {
+      val keep = Dedup.nearDupSurvivors(
+          afterCorpus.select(col(idCol)), col(idCol), pairs,
+          Dedup.connectedComponentsStar(_))
+        .where(col("survivor_id") === col("doc_id"))
+        .select(col("doc_id").as("__keep_id"))
+      // pin the admitted set before the write: its lineage reads the very
+      // vectors/ parquet the write below appends partitions to (same
+      // hazard and same scoped release as Dedup.ingestGateBatch)
+      val admitted = materialize(
+        assigned.join(keep, col("id") === col("__keep_id"), "left_semi"))
       if (!admitted.isEmpty) {
         admitted.withColumn("ingest_batch", lit(batchId))
           .write.mode("overwrite")
@@ -1748,7 +1690,7 @@ object Similarity {
           fs.create(marker, false).close()
         }
       }
-    } finally Dedup.releaseMaterialized(admitted)
+    }
   }
 
   /** EXACT embedding near-duplicate pairs: all pairs with cosine >=

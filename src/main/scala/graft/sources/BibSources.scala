@@ -244,8 +244,10 @@ object BibSources {
     * (`wos_parser.py:111-139`) is a thin driver retry around this. */
   def wosCsv(spark: SparkSession, path: String, sep: String = ",",
              encoding: String = "UTF-8"): DataFrame = {
+    // RFC 4180 quoting: a quote inside a quoted field is doubled ("");
+    // Spark's default escape is a backslash, which mangles those fields
     val raw = spark.read
-      .option("header", "true").option("sep", sep)
+      .option("header", "true").option("sep", sep).option("escape", "\"")
       .option("encoding", encoding).csv(path)
     wosNormalize(raw)
   }
@@ -292,7 +294,7 @@ object BibSources {
     } yield (enc, sep)
     dialects.view.map { case (enc, sep) =>
       val probe = spark.read.option("header", "true").option("sep", sep)
-        .option("encoding", enc).csv(path)
+        .option("escape", "\"").option("encoding", enc).csv(path)
       // >1 column AND no U+FFFD replacement chars: Spark's csv reader
       // substitutes silently where pandas would throw a UnicodeDecodeError
       // (the failure signal the reference's sniff loop relies on)

@@ -230,19 +230,6 @@ object EventStreams {
     }
   }
 
-  /** Start a windowed aggregate with the exactly-once sink: append-mode
-    * stream, checkpointed offsets, `windowSinkBatch` as the epoch body.
-    * The result table at `path` is a plain parquet table partitioned by
-    * window_start — readable mid-stream with partition pruning. */
-  def startWindowSink(aggregated: DataFrame, path: String,
-                      checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    aggregated.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(windowSinkBatch(path) _)
-      .start()
-
   /** CONTINUOUS ingestion dedup: wire a document stream through
     * `Dedup.ingestGateBatch` — every microbatch probes the persisted
     * corpus index, drops corpus near-dups and batch-internal near-dups,

@@ -66,6 +66,19 @@ class BibSourcesSpec extends SparkTestBase {
     assert(r.getAs[Seq[String]]("authors") === Seq("Müller, Hans"))
   }
 
+  test("S3 wos csv: RFC 4180 doubled quotes inside a quoted field") {
+    val f = java.nio.file.Files.createTempFile("graft_wos_quotes", ".csv")
+    java.nio.file.Files.writeString(f, "TI,AB,UT\n" +
+      "\"The \"\"quoted\"\" term, revisited\",\"An abstract\",\"WOS:1\"\n")
+    for (df <- Seq(BibSources.wosCsv(spark, f.toString),
+                   BibSources.wosCsvSniffed(spark, f.toString))) {
+      val r = df.head()
+      assert(r.getAs[String]("title") === "The \"quoted\" term, revisited")
+      assert(r.getAs[String]("abstract") === "An abstract")
+      assert(r.getAs[String]("wos_id") === "WOS:1")
+    }
+  }
+
   test("S5 sciencedirect: validity predicate + positional/regex extraction") {
     val df = BibSources.sciencedirect(spark, s"$fx/sciencedirect_sample.txt")
     assert(df.count() === 2) // invalid middle entry rejected

@@ -114,9 +114,7 @@ class EventsEnrichSpec extends SparkTestBase {
 
   test("reference medical.yaml shape loads and drives extraction (X3→X2)") {
     import graft.operators.PromptTemplates
-    val p = java.nio.file.Paths.get(
-      "/root/reference/src/config/prompts/medical.yaml")
-    assume(java.nio.file.Files.exists(p), "reference checkout not present")
+    val p = java.nio.file.Paths.get("fixtures/config/prompts/medical.yaml")
     val tpl = PromptTemplates.fromYaml(java.nio.file.Files.readString(p))
     assert(tpl.templateType === "medical")
     assert(tpl.fields === Seq("ai_summary", "research_purpose",

@@ -418,7 +418,7 @@ class GraphSpec extends SparkTestBase {
       .toDF("start", "walk", "step", "node")
     // the noise-table build BEFORE materialization (the output plan
     // would only show the checkpoint scan)
-    val (cumPlan, total, vocabN, _) = Graph.noiseTable(walks, 100000L)
+    val (cumPlan, total, vocabN) = Graph.noiseTable(walks, 100000L)
     assert((total, vocabN) === (3L, 2L))
     val plan = cumPlan.queryExecution.executedPlan.toString
     assert(!plan.contains("SinglePartition"),
