@@ -1,18 +1,12 @@
 package graft
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warmup so the first timed queries don't absorb JIT cost:
@@ -37,14 +31,24 @@ object Bench {
     require(selected.nonEmpty,
       s"SPARK_GRAFT_BENCH_ONLY matched no queries: ${only.getOrElse(Set())}")
     val allTimes = collection.mutable.LinkedHashMap[String, Seq[Double]]()
+    // generated classes compiled per rep, in rep order (file record only):
+    // reps after the first compile ~0 while the query's working set fits
+    // Spark's codegen cache (build.sbt)
+    val allCompiles = collection.mutable.LinkedHashMap[String, Seq[(Long, Double)]]()
     val results = selected.map { case (name, fn) =>
       val times =
         try {
-          (0 until reps).map { _ =>
+          val runs = (0 until reps).map { _ =>
+            val n0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+            val c0 = CodeGenerator.compileTime
             val t0 = System.nanoTime()
             exec.Exec.scoped(fn(spark, sfDir).count())
-            (System.nanoTime() - t0) / 1e9
-          }.sorted
+            ((System.nanoTime() - t0) / 1e9,
+              (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0,
+                (CodeGenerator.compileTime - c0) / 1e9))
+          }
+          allCompiles(name) = runs.map(_._2)
+          runs.map(_._1).sorted
         } catch {
           case NonFatal(e) =>
             System.err.println(s"BENCH FAILURE $name: $e")
@@ -103,8 +107,11 @@ object Bench {
     val repsJson = allTimes.map { case (k, ts) =>
       "\"" + k + "\":[" + ts.map(fmt).mkString(",") + "]"
     }.mkString("{", ",", "}")
+    def perRep(f: ((Long, Double)) => String): String = allCompiles.map { case (k, rs) =>
+      "\"" + k + "\":[" + rs.map(f).mkString(",") + "]"
+    }.mkString("{", ",", "}")
     val record =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"queries":$qs,"rep_times":$repsJson,"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"queries":$qs,"rep_times":$repsJson,"rep_compiles":${perRep(_._1.toString)},"rep_compile_s":${perRep(r => fmt(r._2))},"failed":$failedJson,"sf":"$sfDir"}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
       record + "\n")
     // ALSO append to the tracked history log so round-over-round

@@ -12,13 +12,6 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession =
+    Session.local(2).appName("graft-test").getOrCreate()
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,11 +11,7 @@ import org.apache.spark.sql.functions._
 object Prof {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.local(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = graft.Tables.documents(spark, dir)
     def t(name: String)(f: => Long): Unit = {

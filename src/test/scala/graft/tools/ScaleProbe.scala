@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only weak-scaling / adversarial probes for the near-dup and
@@ -31,11 +31,7 @@ object ScaleProbe {
     val which = if (args.isEmpty) Set("docs-weak", "emb-adversarial",
       "emb-weak") else args.toSet
     val dir = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.local(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def t(name: String)(f: => Long): Unit = {
       val t0 = System.nanoTime(); val n = f
