@@ -1030,7 +1030,7 @@ object SparkEntry {
     // THE reference dedup edge case (main.py:121): rows with null/empty
     // keys are ALWAYS kept — exercised with synthesized null/empty keys
     // (the documents corpus has none), which is also the 100 TB skew
-    // story: the hot null key never enters the window shuffle
+    // story: the hot null key is spread over the window by the tiebreak
     "q_dedup_priority_nullkeys" -> ((s, dir) => {
       val recs = bibRecords(s, dir)
         .withColumn("key",

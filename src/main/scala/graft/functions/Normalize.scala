@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Column-level normalization functions re-expressing the reference's
   * row-wise Python lambdas (SURVEY.md §2.8, F1–F15) as codegen'd Catalyst
-  * expressions — zero UDFs, so every one stays inside whole-stage codegen
+  * expressions — zero UDFs and no higher-order functions (those are
+  * `CodegenFallback`), so every one stays inside whole-stage codegen
   * and scales to 100 TB without serialization overhead.
   *
   * Reference behavior (cited in Scaladoc per function) is from
@@ -22,12 +23,12 @@ object Normalize {
     regexp_replace(c, "\\s*\\[(doi|pii)\\]", "")
 
   /** F3 — comma-disambiguation: if the value contains a comma, keep the
-    * component that starts with "10." (`main.py:87-95,127-137`). */
+    * first component that starts with "10." once trimmed
+    * (`main.py:87-95,127-137`). The regex skips spaces only, like Spark's
+    * `trim` (a tab-led component never counts). */
   def doiFromCommaList(c: Column): Column = {
-    val parts = split(c, ",")
-    val tens  = filter(parts, x => trim(x).startsWith("10."))
-    when(c.contains(",") && size(tens) > 0, trim(element_at(tens, 1)))
-      .otherwise(c)
+    val tens = regexp_extract(c, "(?:^|,) *(10\\.[^,]*)", 1)
+    when(c.contains(",") && tens =!= "", trim(tens)).otherwise(c)
   }
 
   /** F4 — strip the `https://doi.org/` or `doi:` prefix

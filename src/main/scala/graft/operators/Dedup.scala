@@ -23,27 +23,27 @@ object Dedup {
 
   /** Keep-first-per-key with priority (reference `main.py:101-166`).
     *
-    * Spark-first shape: `row_number()` over (key) ordered by (priority desc,
-    * tiebreak asc). The reference's pandas sort is non-stable so its tie
-    * order is unspecified (SURVEY.md §7.4.2); we fix a total order with an
-    * explicit tiebreak column.
+    * Spark-first shape: ONE `row_number()` window over one read of `df`,
+    * ordered by (priority desc, tiebreak asc). The reference's pandas sort
+    * is non-stable so its tie order is unspecified (SURVEY.md §7.4.2); we
+    * fix a total order with an explicit tiebreak column.
     *
-    * Scale: rows with null/empty keys are split off BEFORE the window
-    * shuffle — at 100 TB the null-DOI population is the single hottest key
-    * and would skew one reducer; exempting it (required by reference
-    * semantics anyway) removes the skew source entirely. The remaining
-    * window shuffle partitions by `key`, which is high-cardinality.
+    * Scale: at 100 TB the null/empty-key population is the single hottest
+    * key, so keyless rows are partitioned by the tiebreak instead (spread
+    * across reducers) and all kept (`main.py:121`), even when they share
+    * one. Trade: `|| keyless` is no rank limit, so Catalyst plans no
+    * partial `WindowGroupLimit` below the exchange; a keyed ∪ keyless
+    * union kept it but scanned and parsed `df` twice.
     */
   def priorityDedup(df: DataFrame, key: Column, priority: Column,
                     tiebreak: Column): DataFrame = {
-    val keyed   = df.where(key.isNotNull && key =!= "")
-    val keyless = df.where(key.isNull || key === "")
-    val w = Window.partitionBy(key).orderBy(priority.desc, tiebreak.asc)
-    keyed
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
+    val keyless = key.isNull || key === ""
+    val w = Window
+      .partitionBy(when(keyless, null).otherwise(key), when(keyless, tiebreak))
+      .orderBy(priority.desc, tiebreak.asc)
+    df.withColumn("__rn", row_number().over(w))
+      .where(col("__rn") === 1 || keyless)
       .drop("__rn")
-      .unionByName(keyless)
   }
 
   /** Exact dedup by normalized-content hash: one survivor (min id) per

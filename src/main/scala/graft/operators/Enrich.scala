@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -45,11 +46,17 @@ object Enrich {
   }
 
   /** X1 — journal-metrics enrichment.
-    * distinct(journal_norm) → mapPartitions(fetch) → broadcast left join.
+    * distinct(journal_norm) → mapPartitions(fetch) → broadcast left join,
+    * all in one plan (no RDD round trip re-reading `df`); one fetch per key.
     */
   def journalMetrics(df: DataFrame, journalCol: String,
                      client: MetricsClient): DataFrame = {
-    val spark = df.sparkSession
+    // journal_norm is a DOCUMENTED output column (the normalized join
+    // key downstream dedup/reporting reads); a pre-existing one would
+    // be silently clobbered, so refuse it loudly
+    require(!df.columns.contains("journal_norm"),
+      "journalMetrics: input already has a 'journal_norm' column — " +
+        "rename it upstream; the operator adds its own")
     val keyDf = df.select(lower(trim(col(journalCol))).as("journal_norm"))
       .where(col("journal_norm").isNotNull && col("journal_norm") =!= "")
       .distinct()
@@ -57,7 +64,7 @@ object Enrich {
       StructField("journal_norm", StringType),
       StructField("impact_factor", DoubleType),
       StructField("quartile", StringType)))
-    val metricsRdd = keyDf.rdd.mapPartitions { it =>
+    val metricsDim = keyDf.mapPartitions { it =>
       // per-partition client lifecycle lives here (HTTP pool, throttle);
       // the stub is pure so nothing to manage
       it.map { r =>
@@ -65,14 +72,7 @@ object Enrich {
         val (ifact, q) = client.fetch(j)
         Row(j, ifact, q)
       }
-    }
-    val metricsDim = spark.createDataFrame(metricsRdd, schema)
-    // journal_norm is a DOCUMENTED output column (the normalized join
-    // key downstream dedup/reporting reads); a pre-existing one would
-    // be silently clobbered, so refuse it loudly
-    require(!df.columns.contains("journal_norm"),
-      "journalMetrics: input already has a 'journal_norm' column — " +
-        "rename it upstream; the operator adds its own")
+    }(RowEncoder.encoderFor(schema))
     df.withColumn("journal_norm", lower(trim(col(journalCol))))
       .join(broadcast(metricsDim), Seq("journal_norm"), "left")
   }
@@ -169,8 +169,7 @@ object Enrich {
     val textIdx = df.schema.fieldIndex(textCol)
     val outSchema = StructType(df.schema.fields ++
       fields.map(f => StructField(f, StringType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
+    val enc = RowEncoder.encoderFor(outSchema)
     val dflt = fields.map(f => f -> defaults.getOrElse(f, "")).toMap
     df.mapPartitions { it =>
       // per-partition client lifecycle: a production impl opens its HTTP

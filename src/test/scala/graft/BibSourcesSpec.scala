@@ -141,6 +141,35 @@ class BibSourcesSpec extends SparkTestBase {
     }))
   }
 
+  test("a record split across input partitions parses as in one read: " +
+    "PubMed, WOS (LF and CRLF), ScienceDirect") {
+    val wosCrlf = java.nio.file.Files.createTempFile("graft_wos_crlf", ".txt")
+    java.nio.file.Files.writeString(wosCrlf, java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$fx/wos_sample.txt")).replace("\n", "\r\n"))
+    val inputs: Seq[(String, String => org.apache.spark.sql.DataFrame)] = Seq(
+      s"$fx/pubmed_sample.txt" -> (BibSources.pubmed(spark, _)),
+      s"$fx/wos_sample.txt" -> (BibSources.wos(spark, _)),
+      wosCrlf.toString -> (BibSources.wos(spark, _)),
+      s"$fx/sciencedirect_sample.txt" -> (BibSources.sciencedirect(spark, _)))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0001"))
+    val whole = inputs.map { case (p, read) => rows(read(p)) }
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "200")
+    try {
+      inputs.zip(whole).foreach { case ((p, read), want) =>
+        assert(BibSources.readRecords(spark, p, "\n").rdd.getNumPartitions > 1,
+          s"$p was not split")
+        assert(rows(read(p)) === want, s"$p parses differently when split")
+        assert(want.nonEmpty)
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("S6 dispatch routes .xlsx to the Excel carrier (S4)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_xlsx").toString
     graft.sources.Excel.writeXlsx(

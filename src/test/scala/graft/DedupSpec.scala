@@ -41,6 +41,64 @@ class DedupSpec extends SparkTestBase {
     assert(bad.count() === 0)
   }
 
+  test("priorityDedup property: the one-window form equals the keyed " +
+    "∪ keyless union on random frames (null/empty/repeated keys, " +
+    "repeated priorities and tiebreaks)") {
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.expressions.Window
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // the former two-branch formula, kept as the oracle
+    def oracle(df: DataFrame, key: Column, priority: Column,
+               tiebreak: Column): DataFrame = {
+      val keyed   = df.where(key.isNotNull && key =!= "")
+      val keyless = df.where(key.isNull || key === "")
+      val w = Window.partitionBy(key).orderBy(priority.desc, tiebreak.asc)
+      keyed.withColumn("__rn", row_number().over(w))
+        .where(col("__rn") === 1).drop("__rn")
+        .unionByName(keyless)
+    }
+    val rowGen = for {
+      k <- Gen.frequency(2 -> Gen.const(null: String), 2 -> Gen.const(""),
+        5 -> Gen.oneOf("10.1/a", "10.1/b", "10.1/c", " "))
+      p <- Gen.choose(0, 2)
+      t <- Gen.choose(0L, 3L)
+    } yield (k, p, t)
+    val frameGen = for {
+      n <- Gen.choose(0, 24)
+      rows <- Gen.listOfN(n, rowGen)
+    } yield rows.zipWithIndex.map { case ((k, p, t), i) => (i.toLong, k, p, t) }
+    // among rows tied on (key, priority, tiebreak) either formula may keep
+    // any one, so compare (key, priority, tiebreak) of every survivor and
+    // the full identity of the keyless survivors
+    def summary(df: DataFrame) = {
+      val rows = df.select("id", "doi", "prio", "tb")
+        .as[(Long, Option[String], Int, Long)].collect().toSeq
+      (rows.map { case (_, k, p, t) => (k, p, t) }.sorted,
+        rows.collect { case (id, k, _, _) if k.forall(_.isEmpty) => id }.sorted)
+    }
+    val prop = Prop.forAll(frameGen) { rows =>
+      val df = rows.toDF("id", "doi", "prio", "tb")
+      val args = (col("doi"), col("prio"), col("tb"))
+      val got = summary(Dedup.priorityDedup(df, args._1, args._2, args._3))
+      val want = summary(oracle(df, args._1, args._2, args._3))
+      got == want && want._2.size ==
+        rows.count { case (_, k, _, _) => k == null || k.isEmpty }
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(30), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("priorityDedup keeps every keyless row, duplicates sharing a " +
+    "tiebreak included") {
+    val df = Seq[(Long, String, Int, Long)](
+      (1L, null, 1, 7L), (2L, null, 1, 7L), (3L, "", 1, 7L), (4L, "", 2, 7L),
+      (5L, "10.1/a", 1, 7L), (6L, "10.1/a", 2, 7L)).toDF("id", "doi", "prio", "tb")
+    val out = Dedup.priorityDedup(df, col("doi"), col("prio"), col("tb"))
+      .select("id").as[Long].collect().sorted
+    assert(out === Seq(1L, 2L, 3L, 4L, 6L))
+  }
+
   test("exactDedup groups identical normalized text") {
     val docs = Seq(
       (1L, "Hello  World"),

@@ -25,6 +25,26 @@ class NormalizeSpec extends SparkTestBase {
     assert(doi1("a, b") === "a, b")
     // no comma -> untouched by F3
     assert(doi1("10.1/simple") === "10.1/simple")
+    // the first component that starts with 10. once space-trimmed; these
+    // expected values were taken from the former split + filter form
+    assert(doi1("a, b, 10.5/x") === "10.5/x")
+    assert(doi1("junk, 10.1/a, 10.2/b") === "10.1/a")
+    assert(doi1("junk,   10.5/y") === "10.5/y")
+    assert(doi1(" 10.3/lead, junk") === "10.3/lead")
+    assert(doi1("junk , 10.4/t ") === "10.4/t")
+    assert(doi1("junk,\t10.5/z") === "junk,\t10.5/z") // a tab is not trimmed
+    assert(doi1("junk, 210.5/x") === "junk, 210.5/x")
+    assert(doi1(null) === null)
+  }
+
+  test("normalizeDoi has no CodegenFallback node (stays in whole-stage " +
+    "codegen)") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    val plan = Seq("x").toDF("x")
+      .select(Normalize.normalizeDoi(col("x"))).queryExecution.analyzed
+    val fallbacks = plan.expressions.flatMap(_.collect {
+      case e: CodegenFallback => e.prettyName })
+    assert(fallbacks.isEmpty, s"fallback nodes: $fallbacks")
   }
 
   test("normalizeDoi strips prefixes and trailing punctuation, lowercases") {
