@@ -65,43 +65,17 @@ object Bench {
       name -> (if (times.isEmpty) Double.NaN else times(times.size / 2))
     }
     val ok = results.filter(!_._2.isNaN)
-    // 3-decimal (ms) precision keeps the whole JSON line under ~2 KB: the
-    // harness that collects this output only retains a bounded tail of stdout,
-    // and full-precision doubles for 60+ queries pushed the line past that
-    // window in round 4 (the line was truncated mid-number -> unparseable).
+    // 3-decimal (ms) precision for every printed and recorded time
     def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = ok.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val total = if (ok.nonEmpty) ok.values.sum else 0.0
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // headline keys LAST: the driver retains only a bounded tail of
-    // stdout, and with "value" leading a long line the truncation ate
-    // the headline every round (BENCH_r*.json "parsed: null"). With the
-    // per-query map first and value/failed last, any tail suffix of the
-    // line still carries the totals...
-    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","queries":$qs,"n_queries":${ok.size},"failed":$failedJson,"value":${fmt(total)}}""")
-    // The driver retains only a ~2000-char stdout TAIL, so the single
-    // per-query line above (~5.5 KB at 200+ queries) is always truncated
-    // mid-line and round-over-round per-query comparison came up empty
-    // (PERF_r12 per_query: {}). Re-emit the same medians as SHORT chunked
-    // lines (<1 KB each): whole lines survive tail capture, and ascending
-    // -time order puts the queries that dominate the total nearest the
-    // end, inside the guaranteed tail window. Purely additive — the full
-    // map above and the final summary line below are unchanged.
-    val byTime = ok.toSeq.sortBy(_._2)
-    val chunks = byTime.grouped(8).toSeq
-    chunks.zipWithIndex.foreach { case (c, i) =>
-      val body = c.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      println(s"""{"metric":"queries_chunk","i":${i + 1},"n":${chunks.size},"queries":$body}""")
-    }
-    // ...and a short FINAL summary line survives tail capture whole.
+    // one short summary line on stdout; the per-query medians and every
+    // rep live in the file record below
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${ok.size},"failed":$failedJson,"sf":"$sfDir"}""")
-    // The driver retains only a bounded TAIL of stdout, so the one-line
-    // summary above can be truncated away by later log noise. Write the
-    // UNTRUNCATED record (every rep per query, sorted ascending) to a
-    // file too, so round-over-round per-query comparison never depends
-    // on tail luck. Path override: SPARK_GRAFT_BENCH_OUT.
+    // the full record (every rep per query, sorted ascending). Path
+    // override: SPARK_GRAFT_BENCH_OUT.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "bench_full.json")
     val repsJson = allTimes.map { case (k, ts) =>

@@ -3057,7 +3057,7 @@ object SparkEntry {
     "q_embed_pca_served" -> ((s, dir) => {
       // per-invocation unique artifact dir: a path keyed on the data
       // dir alone would let two concurrent batteries over the same
-      // data race on the delete-marker/rewrite sequence and serve a
+      // data race on the retract/rewrite sequence and serve a
       // mid-rewrite artifact (result determinism is unaffected — the
       // model content is a pure function of the data)
       val path = java.nio.file.Files

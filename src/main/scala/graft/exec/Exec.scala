@@ -60,15 +60,10 @@ object Exec {
     * replays from storage — required on a real cluster, where a lost
     * executor would otherwise kill the job because localCheckpoint blocks
     * are unrecoverable); falls back to localCheckpoint for local runs. */
-  private[graft] def materialize(df: DataFrame): DataFrame =
-    materialize(df,
-      reliable = df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-
-  /** [[materialize]] with the checkpoint kind chosen by the caller. */
-  private[graft] def materialize(df: DataFrame, reliable: Boolean)
-      : DataFrame = {
+  private[graft] def materialize(df: DataFrame): DataFrame = {
     val m =
-      if (reliable) df.checkpoint(eager = true)
+      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+        df.checkpoint(eager = true)
       else df.localCheckpoint(eager = true)
     val scope = innermost.get
     if (scope != null) checkpointId(m).foreach(scope.frames(_) = m)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.Artifact
+
 /** Binary (1-bit-per-dimension) quantization — the 32× compression tier
   * of the ANN family, below `Sq`'s int8 (4×) and `Pq`'s codebooks:
   * bit i = [x_i ≥ 0], packed 32 dimensions per long word, searched by
@@ -132,11 +134,9 @@ object Bq {
   }
 
   /** Persist the BQ serving index: the packed words plus a dim meta row,
-    * meta RETRACTED FIRST and re-written LAST (the persistPcaModel
-    * discipline) — write-last alone only protects the FIRST persist; on
-    * a RE-persist the old meta would keep vouching while words/ is
-    * mid-overwrite, and a crash there leaves a readable-but-wrong
-    * mixed-generation index. The index holds ONLY the 32×
+    * committed by [[graft.exec.Artifact.persist]] (meta retracted first,
+    * so a crash mid-re-persist never leaves the old meta vouching for a
+    * half-rewritten words/). The index holds ONLY the 32×
     * form — the standard deployment splits the ANN index from a vector
     * fetch tier, which `probeBqIndex` takes as its `vectors` frame. */
   def persistBqIndex(corpus: DataFrame, path: String,
@@ -145,13 +145,10 @@ object Bq {
     val spark = corpus.sparkSession
     import spark.implicits._
     val dim = Similarity.probeDim(corpus, embCol)
-    val metaDir = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(metaDir)) fs.delete(metaDir, true)
-    encoded(corpus, dim, idCol, embCol)
-      .write.mode("overwrite").parquet(s"$path/words")
-    Seq(dim).toDF("dim").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/meta")
+    Artifact.persist(spark, path, Seq(dim).toDF("dim")) {
+      encoded(corpus, dim, idCol, embCol)
+        .write.mode("overwrite").parquet(s"$path/words")
+    }
   }
 
   /** Probe a persisted BQ index with a batch of query vectors: the
@@ -164,7 +161,7 @@ object Bq {
                    embCol: String = "embedding"): DataFrame = {
     require(k > 0 && rerank >= k, s"probeBqIndex: k=$k rerank=$rerank")
     val spark = batch.sparkSession
-    val dim = spark.read.parquet(s"$path/meta").head().getInt(0)
+    val dim = Artifact.readMeta(spark, path).getInt(0)
     val cWords = spark.read.parquet(s"$path/words")
       .select(col(idCol).as("nbr_id"), col("words").as("c_words"))
     search(cWords, probeSide(batch, dim, idCol, embCol),

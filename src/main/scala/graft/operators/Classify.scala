@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.Artifact
 import graft.exec.Exec.{advance, materialize, scoped, sequentialSumByKey,
   spread}
 
@@ -540,30 +541,23 @@ object Classify {
 
   /** Persist a trained stump model as the family's marker-committed
     * serving artifact — `model/` (one row per stump) and `meta/`
-    * (rounds, scale) with `meta/_GRAFT_COMMITTED` written LAST and,
-    * on re-persist, the OLD marker deleted FIRST (the
-    * persistPcaModel discipline): a crash mid-rewrite leaves the
-    * artifact unreadable, never mixed-generation. The model is
-    * integer literals end to end, so the parquet round trip is
-    * trivially exact. */
+    * (rounds, scale), committed by [[graft.exec.Artifact.persist]]: a
+    * crash mid-rewrite leaves the artifact unreadable, never
+    * mixed-generation. The model is integer literals end to end, so
+    * the parquet round trip is trivially exact. */
   def persistBoostModel(spark: org.apache.spark.sql.SparkSession,
                         model: Seq[Stump], path: String,
                         scale: Long): Unit = {
     require(model.nonEmpty, "persistBoostModel: empty model")
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$path/meta/_GRAFT_COMMITTED"), false)
-    model.map(s => (s.round, s.feature, s.thr, s.leafLeft, s.leafRight,
-        s.gain))
-      .toDF("round", "feature", "thr", "leaf_left", "leaf_right",
-        "gain")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/model")
-    Seq((model.length, scale)).toDF("rounds", "scale")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    fs.create(new org.apache.hadoop.fs.Path(
-      s"$path/meta/_GRAFT_COMMITTED"), false).close()
+    Artifact.persist(spark, path,
+        Seq((model.length, scale)).toDF("rounds", "scale")) {
+      model.map(s => (s.round, s.feature, s.thr, s.leafLeft, s.leafRight,
+          s.gain))
+        .toDF("round", "feature", "thr", "leaf_left", "leaf_right",
+          "gain")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/model")
+    }
   }
 
   /** Load a [[persistBoostModel]] artifact (refusing uncommitted or
@@ -571,12 +565,8 @@ object Classify {
     * training scale the scorer must reuse. */
   def readBoostModel(spark: org.apache.spark.sql.SparkSession,
                      path: String): (Seq[Stump], Long) = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(
-      s"$path/meta/_GRAFT_COMMITTED")),
-      s"boost model at $path has no commit marker — torn or absent")
-    val meta = spark.read.parquet(s"$path/meta").head()
+    Artifact.requireCommitted(spark, path, "boost model")
+    val meta = Artifact.readMeta(spark, path)
     val (rounds, scale) = (meta.getInt(0), meta.getLong(1))
     val model = spark.read.parquet(s"$path/model").orderBy("round")
       .collect().map(r => Stump(r.getInt(0), r.getString(1),

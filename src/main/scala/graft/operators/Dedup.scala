@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.Artifact
 import graft.exec.Exec.{advance, materialize, release, scoped, spread,
   spreadBy, workParallelism}
 import graft.functions.Normalize
@@ -200,10 +201,8 @@ object Dedup {
     * occurrence outranks a batch one), boilerplate hotness is a COUNT
     * threshold, so the index stores (span, n_docs) and the probe sums
     * corpus + batch counts against `minDocs`. Layout under `path`:
-    * `spans/` (span, n_docs), `meta/` (chunk_words, min_docs) — meta is
-    * RETRACTED FIRST on re-persist and written LAST (the persistPcaModel
-    * discipline), so a crash mid-re-persist can never leave old meta
-    * vouching for new spans. */
+    * `spans/` (span, n_docs), `meta/` (chunk_words, min_docs), committed
+    * by [[graft.exec.Artifact.persist]]. */
   def persistBoilerplateIndex(corpus: DataFrame, id: Column, text: Column,
                               path: String, chunkWords: Int,
                               minDocs: Int): Unit = {
@@ -211,15 +210,13 @@ object Dedup {
       s"persistBoilerplateIndex: chunkWords=$chunkWords, minDocs=$minDocs")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val metaDir = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(metaDir)) fs.delete(metaDir, true)
-    spanGrid(corpus.where(id.isNotNull), id, text, chunkWords)
-      .dropDuplicates("span", "doc_id")
-      .groupBy("span").agg(count(lit(1)).as("n_docs"))
-      .write.mode("overwrite").parquet(s"$path/spans")
-    Seq((chunkWords, minDocs)).toDF("chunk_words", "min_docs")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    Artifact.persist(spark, path,
+        Seq((chunkWords, minDocs)).toDF("chunk_words", "min_docs")) {
+      spanGrid(corpus.where(id.isNotNull), id, text, chunkWords)
+        .dropDuplicates("span", "doc_id")
+        .groupBy("span").agg(count(lit(1)).as("n_docs"))
+        .write.mode("overwrite").parquet(s"$path/spans")
+    }
   }
 
   /** Probe a [[persistBoilerplateIndex]] artifact with an ingestion
@@ -235,14 +232,13 @@ object Dedup {
     * broadcast into a semi-join over the index scan (the index is read
     * once, never shuffled); the batch-relevant corpus counts broadcast
     * back over the batch spans. Probe cost tracks the BATCH plus one
-    * index scan. `broadcastBatch = false` is the same
-    * too-big-to-broadcast dial as [[probePassageIndex]]. */
+    * index scan. */
   def probeBoilerplateIndex(batch: DataFrame, batchId: Column,
                             batchText: Column, path: String,
-                            chunkWords: Int, minDocs: Int,
-                            broadcastBatch: Boolean = true): DataFrame = {
+                            chunkWords: Int, minDocs: Int): DataFrame = {
     val spark = batch.sparkSession
-    requireBoilerplateMeta(spark, path, chunkWords, minDocs, "probe")
+    Artifact.requireMeta(spark, path, "boilerplate index",
+      "probe requested")("chunkWords" -> chunkWords, "minDocs" -> minDocs)
     // SUM per span on read: a flat persistBoilerplateIndex artifact has
     // one row per span (the sum is a no-op), but a gate-built index is
     // epoch-PARTITIONED and carries one row per (span, epoch) — joining
@@ -252,7 +248,7 @@ object Dedup {
     probeBoilerplateFrame(batch, batchId, batchText,
       spark.read.parquet(s"$path/spans")
         .groupBy("span").agg(sum(col("n_docs")).as("n_docs")),
-      chunkWords, minDocs, broadcastBatch)
+      chunkWords, minDocs)
   }
 
   /** The path-free probe core: `indexCounts` is the corpus per-span
@@ -263,17 +259,15 @@ object Dedup {
   private def probeBoilerplateFrame(batch: DataFrame, batchId: Column,
                                     batchText: Column,
                                     indexCounts: DataFrame,
-                                    chunkWords: Int, minDocs: Int,
-                                    broadcastBatch: Boolean): DataFrame = {
-    def bc(df: DataFrame): DataFrame =
-      if (broadcastBatch) broadcast(df) else df
+                                    chunkWords: Int, minDocs: Int)
+      : DataFrame = {
     val spans = spanGrid(batch.where(batchId.isNotNull), batchId,
       batchText, chunkWords)
     val batchCounts = spans.select(col("span"), col("doc_id"))
       .dropDuplicates("span", "doc_id")
       .groupBy("span").agg(count(lit(1)).as("n_docs"))
     val marked = boilerplateMarked(spans, batchCounts, indexCounts,
-      minDocs, bc)
+      minDocs)
     val rebuilt = marked.groupBy("doc_id")
       .agg(
         array_join(transform(
@@ -296,31 +290,20 @@ object Dedup {
     * distinct-doc count plus its corpus count reaches `minDocs`.
     * `spans` is a spanGrid frame, `batchCounts` its per-span
     * distinct-doc counts as (span, n_docs), `indexCounts` the corpus
-    * view (span, n_docs). Returns the marked span stream
-    * (doc_id, span_idx, span, __rm). */
+    * view (span, n_docs). The batch-bounded sides broadcast. Returns the
+    * marked span stream (doc_id, span_idx, span, __rm). */
   private def boilerplateMarked(spans: DataFrame, batchCounts: DataFrame,
-                                indexCounts: DataFrame, minDocs: Int,
-                                bc: DataFrame => DataFrame): DataFrame = {
+                                indexCounts: DataFrame,
+                                minDocs: Int): DataFrame = {
     val corpusCounts = indexCounts
-      .join(bc(batchCounts.select("span")), Seq("span"), "left_semi")
+      .join(broadcast(batchCounts.select("span")), Seq("span"), "left_semi")
     val hot = batchCounts.withColumnRenamed("n_docs", "__bn")
-      .join(bc(corpusCounts), Seq("span"), "left")
+      .join(broadcast(corpusCounts), Seq("span"), "left")
       .where(col("__bn") + coalesce(col("n_docs"), lit(0L)) >= minDocs)
       .select(col("span"), lit(true).as("__hot"))
-    spans.join(bc(hot), Seq("span"), "left")
+    spans.join(broadcast(hot), Seq("span"), "left")
       .select(col("doc_id"), col("span_idx"), col("span"),
         coalesce(col("__hot"), lit(false)).as("__rm"))
-  }
-
-  private def requireBoilerplateMeta(spark: SparkSession, path: String,
-                                     chunkWords: Int, minDocs: Int,
-                                     op: String): Unit = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val (mc, md) = (meta.getInt(0), meta.getInt(1))
-    require(mc == chunkWords && md == minDocs,
-      s"boilerplate index at $path was built with (chunkWords=$mc, " +
-        s"minDocs=$md) but $op requested (chunkWords=$chunkWords, " +
-        s"minDocs=$minDocs)")
   }
 
   /** One microbatch of the continuous BOILERPLATE gate — the
@@ -351,30 +334,17 @@ object Dedup {
   def boilerplateGateBatch(indexPath: String, corpusPath: String,
                            idCol: String = "doc_id",
                            textCol: String = "text",
-                           chunkWords: Int = 8, minDocs: Int = 4,
-                           broadcastBatch: Boolean = true)
+                           chunkWords: Int = 8, minDocs: Int = 4)
                           (batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     import spark.implicits._
-    val metaDir = new org.apache.hadoop.fs.Path(s"$indexPath/meta")
-    val marker =
-      new org.apache.hadoop.fs.Path(s"$indexPath/meta/_GRAFT_COMMITTED")
-    val spansDir = new org.apache.hadoop.fs.Path(s"$indexPath/spans")
-    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bootstrap = !fs.exists(marker)
+    val bootstrap = !Artifact.committed(spark, s"$indexPath/meta")
     if (!bootstrap)
-      requireBoilerplateMeta(spark, indexPath, chunkWords, minDocs, "gate")
-    // a FLAT spans/ layout is a persistBoilerplateIndex artifact —
-    // probe-only, refused in BOTH paths (the passage gate's argument)
-    if (fs.exists(spansDir))
-      require(!fs.listStatus(spansDir).exists(st =>
-          st.isFile && st.getPath.getName.endsWith(".parquet")),
-        s"boilerplate gate at $indexPath: spans/ is not " +
-          "epoch-partitioned (persistBoilerplateIndex artifact?) — use " +
-          "probeBoilerplateIndex for one-shot probes")
-    def bc(df: DataFrame): DataFrame =
-      if (broadcastBatch) broadcast(df) else df
+      Artifact.requireMeta(spark, indexPath, "boilerplate index",
+        "gate requested")("chunkWords" -> chunkWords, "minDocs" -> minDocs)
+    Artifact.requireEpochLayout(spark, s"$indexPath/spans",
+      "boilerplate gate", "probeBoilerplateIndex")
     val id = col(idCol)
     val text = col(textCol)
     // the index view, SUMMED over the STRICTLY-EARLIER epochs only —
@@ -402,7 +372,7 @@ object Dedup {
         .dropDuplicates("span", "doc_id")
         .groupBy("span").agg(count(lit(1)).as("n_docs")))
       val rebuilt = boilerplateMarked(spans, batchCounts, idxCounts,
-          minDocs, bc)
+          minDocs)
         .groupBy("doc_id")
         .agg(array_join(transform(
             array_sort(collect_list(when(!col("__rm"),
@@ -415,22 +385,14 @@ object Dedup {
             coalesce(col("text_deduped"), lit("")).as("text_deduped"))
           .where(col("text_deduped") =!= ""))
       if (!admitted.isEmpty || !batchCounts.isEmpty) {
-        def dyn(df: DataFrame) = df.withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
-        dyn(admitted).parquet(corpusPath)
+        Artifact.writeEpoch(admitted, batchId, corpusPath)
         // never create a schema-less empty spans/ dir (the passage
         // gate's bootstrap-deferral argument)
         if (!batchCounts.isEmpty)
-          dyn(batchCounts).parquet(s"$indexPath/spans")
-        if (bootstrap && !batchCounts.isEmpty) {
-          if (fs.exists(metaDir)) fs.delete(metaDir, true)
-          Seq((chunkWords, minDocs)).toDF("chunk_words", "min_docs")
-            .coalesce(1)
-            .write.mode("errorifexists").parquet(s"$indexPath/meta")
-          fs.create(marker, false).close()
-        }
+          Artifact.writeEpoch(batchCounts, batchId, s"$indexPath/spans")
+        if (bootstrap && !batchCounts.isEmpty)
+          Artifact.bootstrap(indexPath,
+            Seq((chunkWords, minDocs)).toDF("chunk_words", "min_docs"))
       }
     }
   }
@@ -627,18 +589,19 @@ object Dedup {
     * any corpus occurrence outranks every future batch occurrence),
     * `meta/` (window_words, stride_words -- probes validate against it,
     * because probing a w=6 index with w=8 windows would silently remove
-    * nothing).
+    * nothing), committed by [[graft.exec.Artifact.persist]].
     */
   def persistPassageIndex(corpus: DataFrame, id: Column, text: Column,
                           path: String, windowWords: Int,
                           strideWords: Int = 1): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    passagePostings(corpus, id, text, windowWords, strideWords)
-      .where(col("h").isNotNull).select("h").distinct()
-      .write.mode("overwrite").parquet(s"$path/windows")
-    Seq((windowWords, strideWords)).toDF("window_words", "stride_words")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    Artifact.persist(spark, path, Seq((windowWords, strideWords))
+        .toDF("window_words", "stride_words")) {
+      passagePostings(corpus, id, text, windowWords, strideWords)
+        .where(col("h").isNotNull).select("h").distinct()
+        .write.mode("overwrite").parquet(s"$path/windows")
+    }
   }
 
   /** Probe a [[persistPassageIndex]] artifact with an ingestion batch:
@@ -653,21 +616,18 @@ object Dedup {
     * batch's distinct window hashes broadcast into a semi-join over the
     * index scan, producing the batch-bounded hit set, which broadcasts
     * back over the batch windows; probe cost tracks the BATCH plus one
-    * index scan, the same argument as [[probePersistedIndex]]. For a
-    * batch too large to broadcast its window-hash set, pass
-    * `broadcastBatch = false` and the same joins run as shuffles keyed
-    * on the high-cardinality h (the [[probePersistedIndex]] dial).
+    * index scan, the same argument as [[probePersistedIndex]].
     */
   def probePassageIndex(batch: DataFrame, batchId: Column,
                         batchText: Column, path: String,
                         windowWords: Int,
-                        strideWords: Int = 1,
-                        broadcastBatch: Boolean = true): DataFrame = {
+                        strideWords: Int = 1): DataFrame = {
     val spark = batch.sparkSession
-    requirePassageMeta(spark, path, windowWords, strideWords, "probe")
+    requirePassageMeta(spark, path, windowWords, strideWords,
+      "probe requested")
     probePassageFrame(batch, batchId, batchText,
       spark.read.parquet(s"$path/windows").select("h"),
-      windowWords, strideWords, broadcastBatch)
+      windowWords, strideWords)
   }
 
   /** The path-free probe core: `indexH` is the corpus window-hash frame
@@ -676,28 +636,26 @@ object Dedup {
     * probes against its own crashed writes. */
   private def probePassageFrame(batch: DataFrame, batchId: Column,
                                 batchText: Column, indexH: DataFrame,
-                                windowWords: Int, strideWords: Int,
-                                broadcastBatch: Boolean): DataFrame = {
-    def bc(df: DataFrame): DataFrame =
-      if (broadcastBatch) broadcast(df) else df
+                                windowWords: Int,
+                                strideWords: Int): DataFrame = {
     val withH = passagePostings(batch, batchId, batchText,
       windowWords, strideWords)
     val wins = withH.where(col("h").isNotNull)
       .select(col("doc_id"), col("pos").as("st"), col("h"))
     val hitH = indexH
-      .join(bc(wins.select("h").distinct()), Seq("h"), "left_semi")
+      .join(broadcast(wins.select("h").distinct()), Seq("h"), "left_semi")
     passageReassemble(batch, batchId, withH,
-      coveredPositions(wins, hitH, windowWords, bc))
+      coveredPositions(wins, hitH, windowWords))
   }
 
   /** Covered (doc_id, pos) of a batch window stream `wins`
     * (doc_id, st, h) against the corpus hit set `hitH`: corpus-covered
     * windows plus within-batch re-quotes (first batch occurrence
-    * survives), expanded to word positions. */
+    * survives), expanded to word positions. `hitH` is batch-bounded and
+    * broadcasts. */
   private def coveredPositions(wins: DataFrame, hitH: DataFrame,
-                               windowWords: Int,
-                               bc: DataFrame => DataFrame): DataFrame = {
-    val corpusCovered = wins.join(bc(hitH), Seq("h"))
+                               windowWords: Int): DataFrame = {
+    val corpusCovered = wins.join(broadcast(hitH), Seq("h"))
       .select("doc_id", "st")
     val innerDup = wins
       .withColumn("__rn", row_number().over(
@@ -714,10 +672,10 @@ object Dedup {
   /** The batch window hashes NOT yet in `indexH` — the shared novelty
     * core of [[appendToPassageIndex]] and [[passageGateBatch]]. Both
     * joins are batch-bounded on the build side. */
-  private def novelWindows(batchH: DataFrame, indexH: DataFrame,
-                           bc: DataFrame => DataFrame): DataFrame = {
-    val hitH = indexH.join(bc(batchH), Seq("h"), "left_semi")
-    batchH.join(bc(hitH), Seq("h"), "left_anti")
+  private def novelWindows(batchH: DataFrame,
+                           indexH: DataFrame): DataFrame = {
+    val hitH = indexH.join(broadcast(batchH), Seq("h"), "left_semi")
+    batchH.join(broadcast(hitH), Seq("h"), "left_anti")
   }
 
   /** Fold an ingested batch into a [[persistPassageIndex]] artifact:
@@ -728,23 +686,18 @@ object Dedup {
     * SURVIVING batch's windows (post-[[probePassageIndex]]) in a
     * continuous gate, or the raw batch's to make future probes reject
     * re-quotes of text this batch introduced either way.
-    * `broadcastBatch = false` is the same too-big-to-broadcast dial as
-    * [[probePassageIndex]] — the probe-then-append cycle must work at
-    * one batch-size regime end to end.
     */
   def appendToPassageIndex(batch: DataFrame, batchId: Column,
                            batchText: Column, path: String,
                            windowWords: Int,
-                           strideWords: Int = 1,
-                           broadcastBatch: Boolean = true): Unit = {
+                           strideWords: Int = 1): Unit = {
     val spark = batch.sparkSession
-    requirePassageMeta(spark, path, windowWords, strideWords, "append")
-    def bc(df: DataFrame): DataFrame =
-      if (broadcastBatch) broadcast(df) else df
+    requirePassageMeta(spark, path, windowWords, strideWords,
+      "append requested")
     val batchH = passagePostings(batch, batchId, batchText,
         windowWords, strideWords)
       .where(col("h").isNotNull).select("h").distinct()
-    novelWindows(batchH, spark.read.parquet(s"$path/windows"), bc)
+    novelWindows(batchH, spark.read.parquet(s"$path/windows"))
       .write.mode("append").parquet(s"$path/windows")
   }
 
@@ -761,8 +714,8 @@ object Dedup {
     *      and the batch's NOVEL window hashes to the index, both
     *      partitioned by `ingest_batch = batchId` with dynamic
     *      overwrite;
-    *   3. bootstrap commits `meta/` (window/stride params) LAST behind
-    *      the `meta/_GRAFT_COMMITTED` marker — the [[ingestGateBatch]]
+    *   3. bootstrap commits `meta/` (window/stride params) LAST through
+    *      [[graft.exec.Artifact.bootstrap]] — the [[ingestGateBatch]]
     *      contract; params are validated on every later epoch. A
     *      bootstrap batch yielding NO windows (all docs sub-window)
     *      defers the commit: the index must never be born as an empty,
@@ -789,35 +742,19 @@ object Dedup {
     */
   def passageGateBatch(indexPath: String, corpusPath: String,
                        idCol: String = "doc_id", textCol: String = "text",
-                       windowWords: Int = 6, strideWords: Int = 1,
-                       broadcastBatch: Boolean = true)
+                       windowWords: Int = 6, strideWords: Int = 1)
                       (batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     import spark.implicits._
-    val metaDir = new org.apache.hadoop.fs.Path(s"$indexPath/meta")
-    val marker =
-      new org.apache.hadoop.fs.Path(s"$indexPath/meta/_GRAFT_COMMITTED")
-    val legacy = new org.apache.hadoop.fs.Path(s"$indexPath/meta/_SUCCESS")
-    val winDir = new org.apache.hadoop.fs.Path(s"$indexPath/windows")
-    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bootstrap = !(fs.exists(marker) || fs.exists(legacy))
+    val bootstrap = !Artifact.committedOrLegacy(spark, s"$indexPath/meta")
     if (!bootstrap)
-      requirePassageMeta(spark, indexPath, windowWords, strideWords, "gate")
-    // a FLAT windows/ layout (data files directly in the dir) is a
-    // persistPassageIndex artifact — probe-only, refused in BOTH paths:
-    // the non-bootstrap read would break on the missing partition
-    // column, and a bootstrap (reachable when the artifact's committer
-    // left no _SUCCESS) would otherwise silently destroy it
-    if (fs.exists(winDir))
-      require(!fs.listStatus(winDir).exists(st =>
-          st.isFile && st.getPath.getName.endsWith(".parquet")),
-        s"passage gate at $indexPath: windows/ is not " +
-          "epoch-partitioned (persistPassageIndex artifact?) — the " +
-          "gate requires its own gate-built layout; use " +
-          "probePassageIndex for one-shot probes")
-    def bc(df: DataFrame): DataFrame =
-      if (broadcastBatch) broadcast(df) else df
+      requirePassageMeta(spark, indexPath, windowWords, strideWords,
+        "gate requested")
+    // a flat windows/ layout would break the non-bootstrap read on the
+    // missing partition column, and a bootstrap would destroy it
+    Artifact.requireEpochLayout(spark, s"$indexPath/windows",
+      "passage gate", "probePassageIndex")
     val id = col(idCol)
     val text = col(textCol)
     // the self-excluded index view: every committed epoch EXCEPT this
@@ -839,29 +776,23 @@ object Dedup {
       val wins = withH.where(col("h").isNotNull)
         .select(col("doc_id"), col("pos").as("st"), col("h"))
       val batchH = wins.select("h").distinct()
-      val hitH = idxH.join(bc(batchH), Seq("h"), "left_semi")
+      val hitH = idxH.join(broadcast(batchH), Seq("h"), "left_semi")
       val deduped = passageReassemble(batch, id, withH,
-        coveredPositions(wins, hitH, windowWords, bc))
+        coveredPositions(wins, hitH, windowWords))
       val admitted = materialize(deduped.where(col("text_deduped") =!= ""))
-      val novel = materialize(batchH.join(bc(hitH), Seq("h"), "left_anti"))
+      val novel =
+        materialize(batchH.join(broadcast(hitH), Seq("h"), "left_anti"))
       if (!admitted.isEmpty || !novel.isEmpty) {
-        def dyn(df: DataFrame) = df.withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
-        dyn(admitted).parquet(corpusPath)
+        Artifact.writeEpoch(admitted, batchId, corpusPath)
         // an empty write would create a windows/ dir with no data files
         // — unreadable by every later epoch (schema inference fails), so
         // the dir is only ever created WITH its first novel partition,
         // and meta only commits once that exists
-        if (!novel.isEmpty) dyn(novel).parquet(s"$indexPath/windows")
-        if (bootstrap && !novel.isEmpty) {
-          if (fs.exists(metaDir)) fs.delete(metaDir, true)
-          Seq((windowWords, strideWords))
-            .toDF("window_words", "stride_words").coalesce(1)
-            .write.mode("errorifexists").parquet(s"$indexPath/meta")
-          fs.create(marker, false).close()
-        }
+        if (!novel.isEmpty)
+          Artifact.writeEpoch(novel, batchId, s"$indexPath/windows")
+        if (bootstrap && !novel.isEmpty)
+          Artifact.bootstrap(indexPath, Seq((windowWords, strideWords))
+            .toDF("window_words", "stride_words"))
       }
     }
   }
@@ -908,13 +839,8 @@ object Dedup {
       all.where(col("ingest_batch") <= upToBatch)
         .select(keyCols.map(col): _*).distinct())
     if (!keys.isEmpty) {
-      keys.withColumn("ingest_batch", lit(-1L))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(path)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Artifact.writeEpoch(keys, -1L, path)
+      val fs = Artifact.fs(spark, path)
       fs.listStatus(new org.apache.hadoop.fs.Path(path))
         .filter { st =>
           val n = st.getPath.getName
@@ -928,14 +854,9 @@ object Dedup {
 
   private def requirePassageMeta(spark: SparkSession, path: String,
                                  windowWords: Int, strideWords: Int,
-                                 op: String): Unit = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val (mw, ms) = (meta.getInt(0), meta.getInt(1))
-    require(mw == windowWords && ms == strideWords,
-      s"passage index at $path was built with (windowWords=$mw, " +
-        s"strideWords=$ms) but $op requested (windowWords=" +
-        s"$windowWords, strideWords=$strideWords)")
-  }
+                                 op: String): Unit =
+    Artifact.requireMeta(spark, path, "passage index", op)(
+      "windowWords" -> windowWords, "strideWords" -> strideWords)
 
   /** Whitespace-collapse + lowercase canonicalization used by every
     * text-dedup operator (equivalent logic in both Spark and the DuckDB
@@ -1301,11 +1222,10 @@ object Dedup {
     *
     * Scale: both sides go through the same MinHash band stage, but the
     * join is batch-bands × corpus-bands — candidate volume is
-    * O(|batch| × collisions), independent of |corpus|², and when the
-    * batch fits the broadcast threshold (`broadcastBatch`, default on —
-    * an ingestion increment is bounded by cadence) the corpus side
-    * streams through a shuffle-FREE broadcast-hash join: no all-to-all
-    * exchange of corpus band rows at all. Verification re-acquires
+    * O(|batch| × collisions), independent of |corpus|², and the batch
+    * side is broadcast (an ingestion increment is bounded by cadence),
+    * so the corpus side streams through a shuffle-FREE broadcast-hash
+    * join: no all-to-all exchange of corpus band rows at all. Verification re-acquires
     * shingle arrays per side, each frame joined exactly once (the
     * round-4 multi-join trap was the SAME frame embedded per side); the
     * batch frame is broadcast, so the only exchange left keys on
@@ -1319,14 +1239,14 @@ object Dedup {
                               batchText: Column, corpus: DataFrame,
                               corpusId: Column, corpusText: Column,
                               threshold: Double, w: Int = 3,
-                              k: Int = 128, bands: Int = 32,
-                              broadcastBatch: Boolean = true): DataFrame =
+                              k: Int = 128,
+                              bands: Int = 32): DataFrame =
     probeCorpus(
       minhashBands(batch, batchId, batchText, w, k, bands),
       minhashBands(corpus, corpusId, corpusText, w, k, bands),
       shingleFrame(batch, batchId, batchText, w),
       shingleFrame(corpus, corpusId, corpusText, w),
-      threshold, broadcastBatch)
+      threshold)
 
   /** The batch→corpus probe shared by the recompute
     * (`incrementalNearDupPairs`) and persisted-index
@@ -1335,11 +1255,8 @@ object Dedup {
     * carry (id, band_idx, band_hash); shingle frames carry (id, sh). */
   private def probeCorpus(bBands: DataFrame, cBands: DataFrame,
                           bShingles: DataFrame, cShingles: DataFrame,
-                          threshold: Double,
-                          broadcastBatch: Boolean): DataFrame = {
-    def bc(df: DataFrame): DataFrame =
-      if (broadcastBatch) broadcast(df) else df
-    val cand = bc(bBands).as("a").join(cBands.as("b"),
+                          threshold: Double): DataFrame = {
+    val cand = broadcast(bBands).as("a").join(cBands.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
         col("a.band_hash") === col("b.band_hash"))
       .select(col("a.id").as("batch_id"), col("b.id").as("corpus_id"))
@@ -1347,7 +1264,7 @@ object Dedup {
     val shB = bShingles.select(col("id").as("batch_id"), col("sh").as("sh_a"))
     val shC = cShingles.select(col("id").as("corpus_id"), col("sh").as("sh_b"))
     cand
-      .join(bc(shB), Seq("batch_id"))
+      .join(broadcast(shB), Seq("batch_id"))
       .join(shC, Seq("corpus_id"))
       .where(least(size(col("sh_a")), size(col("sh_b"))) >=
         lit(threshold) * greatest(size(col("sh_a")), size(col("sh_b"))))
@@ -1373,19 +1290,21 @@ object Dedup {
     * all-to-all rows), `shingles/` (id, sh — the verify payload),
     * `meta/` (w, k, bands: the signature parameters baked into the
     * data; probes validate against it, because probing k=128 bands with
-    * a k=64 index would silently return garbage recall). Appending a new
-    * ingest batch to the index is `mode("append")` on the same layout. */
+    * a k=64 index would silently return garbage recall), committed by
+    * [[graft.exec.Artifact.persist]]. Appending a new ingest batch to the
+    * index is `mode("append")` on the same layout. */
   def persistIndex(corpus: DataFrame, id: Column, text: Column,
                    path: String, w: Int = 3, k: Int = 128,
                    bands: Int = 32): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    minhashBands(corpus, id, text, w, k, bands)
-      .write.mode("overwrite").parquet(s"$path/bands")
-    shingleFrame(corpus, id, text, w)
-      .write.mode("overwrite").parquet(s"$path/shingles")
-    Seq((w, k, bands)).toDF("w", "k", "bands")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    Artifact.persist(spark, path,
+        Seq((w, k, bands)).toDF("w", "k", "bands")) {
+      minhashBands(corpus, id, text, w, k, bands)
+        .write.mode("overwrite").parquet(s"$path/bands")
+      shingleFrame(corpus, id, text, w)
+        .write.mode("overwrite").parquet(s"$path/shingles")
+    }
   }
 
   /** Probe a `persistIndex` artifact with a new ingestion batch: same
@@ -1396,53 +1315,16 @@ object Dedup {
   def probePersistedIndex(batch: DataFrame, batchId: Column,
                           batchText: Column, path: String,
                           threshold: Double, w: Int = 3, k: Int = 128,
-                          bands: Int = 32,
-                          broadcastBatch: Boolean = true): DataFrame = {
+                          bands: Int = 32): DataFrame = {
     val spark = batch.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val (mw, mk, mb) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    require(mw == w && mk == k && mb == bands,
-      s"persisted index at $path was built with (w=$mw, k=$mk, bands=$mb)" +
-        s" but probe requested (w=$w, k=$k, bands=$bands)")
+    Artifact.requireMeta(spark, path, "persisted index", "probe requested")(
+      "w" -> w, "k" -> k, "bands" -> bands)
     probeCorpus(
       minhashBands(batch, batchId, batchText, w, k, bands),
       spark.read.parquet(s"$path/bands"),
       shingleFrame(batch, batchId, batchText, w),
       spark.read.parquet(s"$path/shingles"),
-      threshold, broadcastBatch)
-  }
-
-  /** How `ingestGateBatch` pins the admitted set between computing it and
-    * writing it three times (corpus, bands, shingles). The pin exists
-    * because the admitted frame's lineage READS the very index parquet the
-    * writes mutate — an unpinned recompute mid-write could see its own
-    * half-written output. The modes trade recovery cost against storage:
-    *
-    *  - `Auto` (default): reliable checkpoint when the session has a
-    *    checkpoint dir, else `localCheckpoint`. Matches the session's own
-    *    durability posture.
-    *  - `Local`: `localCheckpoint` — cheapest, but the blocks live in
-    *    EXECUTOR storage and are non-recomputable: an executor loss
-    *    mid-epoch fails the epoch (recovery = streaming replay of the same
-    *    batchId, which is idempotent but re-pays the whole epoch). Wrong
-    *    choice on preemptible clusters, where every preemption becomes a
-    *    batch retry.
-    *  - `Reliable`: `checkpoint` to the session checkpoint dir — survives
-    *    executor loss; requires `setCheckpointDir`. Checkpoint files are
-    *    deleted after the writes (see `Exec.release`).
-    *  - `CollectIds`: collect the admitted IDS (bounded by the BATCH, not
-    *    the corpus) to the driver and re-derive the admitted rows from the
-    *    raw batch via a broadcast semi-join. Zero pinned executor state —
-    *    each write recomputes the batch scan + filter, whose lineage reads
-    *    only the SOURCE, never the index. The regime for aggressively
-    *    preempted executors when no durable checkpoint dir exists.
-    */
-  sealed trait AdmittedPinning
-  object AdmittedPinning {
-    case object Auto extends AdmittedPinning
-    case object Local extends AdmittedPinning
-    case object Reliable extends AdmittedPinning
-    case object CollectIds extends AdmittedPinning
+      threshold)
   }
 
   /** One microbatch of the CONTINUOUS ingestion dedup gate — the shape a
@@ -1469,57 +1351,29 @@ object Dedup {
     * epoch). First batch bootstraps the index (no probe).
     *
     * Crash safety is keyed on `meta/`: it is written ONCE, at bootstrap,
-    * and LAST (after corpus → bands → shingles). "Written" means
-    * COMMITTED — bootstrap detection checks an explicit
-    * `meta/_GRAFT_COMMITTED` marker created atomically AFTER the meta
-    * parquet write, not the directory and not (primarily) the
-    * committer's `_SUCCESS`, which disappears entirely under
-    * `mapreduce.fileoutputcommitter.marksuccessfuljobs=false` (common on
-    * object-store committers — keying on it there would re-bootstrap
-    * every epoch and silently stop deduplicating). A pre-marker legacy
-    * index carrying only `_SUCCESS` still reads as committed — the
-    * parquet job had fully committed when `_SUCCESS` appeared, and
-    * without the fallback an upgrade would silently re-bootstrap (and
-    * delete) every existing index. A crash BEFORE the meta parquet job
-    * commits makes the replay re-run the full bootstrap (deleting the
-    * partial `meta/`) and dynamic overwrite rewrites the partial
-    * partitions; a crash after the meta job commits but before the
-    * marker is treated as committed anyway — under the default
-    * committer the job left `_SUCCESS`, which the legacy fallback
-    * reads (and that is safe: every data write precedes the meta
-    * write, so a committed meta implies a complete bootstrap; only
-    * with `marksuccessfuljobs=false` does that crash window re-run
-    * the bootstrap, via the marker check). A crash in any later epoch never touches meta at all,
-    * and a replay of a FULLY committed epoch admits nothing (every batch
-    * doc self-matches the corpus), so no write path runs. The meta write
-    * itself uses `errorIfExists`, making the write-once contract
-    * self-enforcing: any future code path (or concurrent
-    * double-bootstrap) that tries to clobber a committed meta fails
-    * loudly instead of silently changing the index's signature
-    * parameters. */
+    * and LAST (after corpus → bands → shingles), through
+    * [[graft.exec.Artifact.bootstrap]], and bootstrap detection is
+    * [[graft.exec.Artifact.committedOrLegacy]] (the marker, or a
+    * pre-marker index's committer success file). A crash BEFORE the meta
+    * parquet job commits makes the replay re-run the full bootstrap and
+    * dynamic overwrite rewrites the partial partitions; a crash after
+    * the meta job commits but before the marker reads as committed under
+    * the default committer (safe: every data write precedes the meta
+    * write, so a committed meta implies a complete bootstrap). A crash in
+    * any later epoch never touches meta at all, and a replay of a FULLY
+    * committed epoch admits nothing (every batch doc self-matches the
+    * corpus), so no write path runs. */
   def ingestGateBatch(indexPath: String, corpusPath: String,
                       idCol: String = "doc_id", textCol: String = "text",
                       threshold: Double = 0.6, w: Int = 3, k: Int = 128,
-                      bands: Int = 32,
-                      pinning: AdmittedPinning = AdmittedPinning.Auto)
+                      bands: Int = 32)
                      (batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     import spark.implicits._
     val id = col(idCol)
     val text = col(textCol)
-    val metaDir = new org.apache.hadoop.fs.Path(s"$indexPath/meta")
-    val metaCommitted =
-      new org.apache.hadoop.fs.Path(s"$indexPath/meta/_GRAFT_COMMITTED")
-    // legacy committed form: indexes bootstrapped before the explicit
-    // marker existed carry only the committer's _SUCCESS — without this
-    // fallback an upgrade would silently re-bootstrap (and delete) every
-    // existing committed index
-    val metaLegacy =
-      new org.apache.hadoop.fs.Path(s"$indexPath/meta/_SUCCESS")
-    val fs = metaDir.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val bootstrap = !(fs.exists(metaCommitted) || fs.exists(metaLegacy))
+    val bootstrap = !Artifact.committedOrLegacy(spark, s"$indexPath/meta")
     val afterCorpus =
       if (bootstrap) batch
       else {
@@ -1536,59 +1390,24 @@ object Dedup {
         .select(col("doc_id").as("__keep_id"))
       // Pin the admitted set before writing it three times: its lineage
       // reads the very bands/shingles parquet the writes below overwrite,
-      // so an unpinned recompute could see mutated input (see
-      // `AdmittedPinning` for the mode trade-offs). Checkpoint-style pins,
-      // and the components behind `keep`, are released when the scope
-      // ends — localCheckpoint blocks otherwise leak per microbatch for
-      // the stream's lifetime, and reliable checkpoint files for the
+      // so an unpinned recompute could see mutated input. The pin is a
+      // reliable checkpoint when the session has a checkpoint dir (it
+      // survives executor loss), else a localCheckpoint; it and the
+      // components behind `keep` are released when the scope ends —
+      // localCheckpoint blocks otherwise leak per microbatch for the
+      // stream's lifetime, and reliable checkpoint files for the
       // application's.
-      val admittedRaw = afterCorpus.join(keep, id === col("__keep_id"),
-        "left_semi")
-      val admitted = pinning match {
-        case AdmittedPinning.CollectIds =>
-          val keptIds = admittedRaw.select(id.as("__keep_id")).distinct()
-          val keptRows = keptIds.collect() // bounded by the batch
-          val keptDf = spark.createDataFrame(
-            spark.sparkContext.parallelize(keptRows.toIndexedSeq),
-            keptIds.schema)
-          // re-derive admitted rows from the RAW batch: this lineage reads
-          // only the streaming source, never the index being overwritten
-          batch.join(broadcast(keptDf), id === col("__keep_id"),
-            "left_semi")
-        case AdmittedPinning.Local =>
-          materialize(admittedRaw, reliable = false)
-        case AdmittedPinning.Reliable =>
-          require(spark.sparkContext.getCheckpointDir.isDefined,
-            "AdmittedPinning.Reliable requires " +
-              "spark.sparkContext.setCheckpointDir(...)")
-          materialize(admittedRaw, reliable = true)
-        case AdmittedPinning.Auto => materialize(admittedRaw)
-      }
+      val admitted = materialize(
+        afterCorpus.join(keep, id === col("__keep_id"), "left_semi"))
       if (!admitted.isEmpty) {
-        // per-write option, not a session-conf flip: concurrent writers
-        // on the same session keep their own overwrite semantics
-        def dyn(df: DataFrame) = df.withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
-        dyn(admitted).parquet(corpusPath)
-        dyn(minhashBands(admitted, id, text, w, k, bands))
-          .parquet(s"$indexPath/bands")
-        dyn(shingleFrame(admitted, id, text, w))
-          .parquet(s"$indexPath/shingles")
-        if (bootstrap) {
-          // a crashed bootstrap can leave a partial (uncommitted) meta/
-          // behind — clear it; errorIfExists then guards the COMMITTED
-          // case, which is unreachable here by construction (committed
-          // meta ⇒ marker ⇒ bootstrap=false), so any hit is a real
-          // double-bootstrap bug surfacing loudly
-          if (fs.exists(metaDir)) fs.delete(metaDir, true)
-          Seq((w, k, bands)).toDF("w", "k", "bands").coalesce(1)
-            .write.mode("errorifexists").parquet(s"$indexPath/meta")
-          // explicit atomic commit marker, written LAST — independent of
-          // the committer's marksuccessfuljobs setting
-          fs.create(metaCommitted, false).close()
-        }
+        Artifact.writeEpoch(admitted, batchId, corpusPath)
+        Artifact.writeEpoch(minhashBands(admitted, id, text, w, k, bands),
+          batchId, s"$indexPath/bands")
+        Artifact.writeEpoch(shingleFrame(admitted, id, text, w),
+          batchId, s"$indexPath/shingles")
+        if (bootstrap)
+          Artifact.bootstrap(indexPath,
+            Seq((w, k, bands)).toDF("w", "k", "bands"))
       }
     }
   }
@@ -1610,16 +1429,14 @@ object Dedup {
     *      the index, partitioned by `ingest_batch` with dynamic
     *      overwrite — at-least-once replay × idempotent write =
     *      exactly-once corpus/index state, the `ingestGateBatch`
-    *      argument verbatim, including the `meta/_GRAFT_COMMITTED`
+    *      argument verbatim, including its [[graft.exec.Artifact]]
     *      bootstrap contract. Meta records the rule bounds, so a gate
     *      restarted with different bounds fails loudly instead of
     *      silently mixing two curation policies in one corpus.
     *
     * The admitted frame's lineage reads the fingerprint index the
     * writes mutate, so it is pinned (`materialize`) across the write
-    * pair and released in the finally — the `AdmittedPinning.Auto`
-    * posture; the minhash gate's other modes matter there because its
-    * pinned state is large, while here it is one gated batch. */
+    * pair and released when its scope ends, as in `ingestGateBatch`. */
   def curationGateBatch(indexPath: String, corpusPath: String,
                         idCol: String = "doc_id", textCol: String = "text",
                         minWords: Int = 20, maxWords: Int = 90,
@@ -1629,26 +1446,14 @@ object Dedup {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     import spark.implicits._
-    val metaDir = new org.apache.hadoop.fs.Path(s"$indexPath/meta")
-    val marker =
-      new org.apache.hadoop.fs.Path(s"$indexPath/meta/_GRAFT_COMMITTED")
-    val legacy = new org.apache.hadoop.fs.Path(s"$indexPath/meta/_SUCCESS")
-    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bootstrap = !(fs.exists(marker) || fs.exists(legacy))
-    if (!bootstrap) {
-      // 1-row driver read per microbatch — the same per-epoch cost
-      // probePersistedIndex pays for its parameter check; bounds are
-      // immutable once committed (errorIfExists), so this is pure
-      // validation, not state
-      val meta = spark.read.parquet(s"$indexPath/meta").head()
-      val (mw, mx, ml, mh) = (meta.getInt(0), meta.getInt(1),
-        meta.getDouble(2), meta.getDouble(3))
-      require(mw == minWords && mx == maxWords &&
-        ml == minAvgWordLen && mh == maxAvgWordLen,
-        s"persisted curation index at $indexPath was built with rule " +
-          s"bounds ($mw, $mx, $ml, $mh) but the gate requested " +
-          s"($minWords, $maxWords, $minAvgWordLen, $maxAvgWordLen)")
-    }
+    val bootstrap = !Artifact.committedOrLegacy(spark, s"$indexPath/meta")
+    // 1-row driver read per microbatch — the same per-epoch cost
+    // probePersistedIndex pays for its parameter check
+    if (!bootstrap)
+      Artifact.requireMeta(spark, indexPath, "persisted curation index",
+        "the gate requested")("minWords" -> minWords,
+        "maxWords" -> maxWords, "minAvgWordLen" -> minAvgWordLen,
+        "maxAvgWordLen" -> maxAvgWordLen)
     val ok = graft.functions.TextAnalysis.gopherFlags(col(textCol),
       minWords, maxWords, minAvgWordLen, maxAvgWordLen)
       .map(_._2).reduce(_ && _)
@@ -1665,29 +1470,17 @@ object Dedup {
           Window.partitionBy("__fp").orderBy(col(idCol))))
         .where(col("__rn") === 1).drop("__rn"))
       if (!admitted.isEmpty) {
-        def dyn(df: DataFrame) = df.withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
-        dyn(admitted.drop("__fp")).parquet(corpusPath)
-        dyn(admitted.select(col("__fp").as("fp"))).parquet(s"$indexPath/fps")
-        if (bootstrap) {
-          if (fs.exists(metaDir)) fs.delete(metaDir, true)
-          Seq((minWords, maxWords, minAvgWordLen, maxAvgWordLen))
-            .toDF("min_words", "max_words", "min_awl", "max_awl")
-            .coalesce(1)
-            .write.mode("errorifexists").parquet(s"$indexPath/meta")
-          fs.create(marker, false).close()
-        }
+        Artifact.writeEpoch(admitted.drop("__fp"), batchId, corpusPath)
+        Artifact.writeEpoch(admitted.select(col("__fp").as("fp")), batchId,
+          s"$indexPath/fps")
+        if (bootstrap)
+          Artifact.bootstrap(indexPath,
+            Seq((minWords, maxWords, minAvgWordLen, maxAvgWordLen))
+              .toDF("min_words", "max_words", "min_awl", "max_awl"))
       }
     }
   }
 
-  /** 64-bit SimHash over the normalized token multiset: each token hashes
-    * to 64 bits via xxhash64; bit b of the simhash = majority vote of token
-    * bits. Implemented as exploded token → per-(doc,bit) vote aggregation →
-    * bit reassembly, all shuffle-on-doc_id (no O(N²) anywhere).
-    */
   /** 64-bit SimHash over the normalized token multiset: bit b of the
     * simhash = majority vote of the tokens' xxhash64 bit b.
     *

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Artifact
 import graft.exec.Exec.{materialize, scoped, workParallelism}
 
 /** Fuzzy record linkage / entity resolution: collapse name VARIANTS
@@ -221,9 +222,8 @@ object EntityResolution {
     *    with its resolved entity (non-linkable records can never match
     *    a probe and are not stored);
     *  - `meta/`    — the match contract (max_dist_num, max_dist_den,
-    *    max_block, max_norm_len), written LAST (data before meta, so a
-    *    committed meta implies complete data), then the atomic
-    *    `meta/_GRAFT_COMMITTED` marker. Probes read the contract FROM
+    *    max_block, max_norm_len), committed by
+    *    [[graft.exec.Artifact.persist]]. Probes read the contract FROM
     *    meta, so build and probe can never gate differently.
     *
     * Later ingestion batches call [[probeEntityIndex]]: cost tracks the
@@ -233,7 +233,6 @@ object EntityResolution {
                          maxDistNum: Int = 1, maxDistDen: Int = 8,
                          maxBlock: Int = 1000): Unit = {
     val spark = records.sparkSession
-    import spark.implicits._
     val (_, linkable) = baseFrames(records, id, name, block)
     // loud refusal, not a torn artifact: an all-unlinkable corpus would
     // commit a records/ directory with no parquet data files, and every
@@ -260,8 +259,7 @@ object EntityResolution {
     // the epoch partitions under a fresh commit marker — refuse loudly
     // (the persistPcaModel "loud refusal, not a torn artifact" posture).
     val recDir = new org.apache.hadoop.fs.Path(s"$path/records")
-    val recFs =
-      recDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val recFs = Artifact.fs(spark, path)
     if (recFs.exists(recDir)) {
       val epochs = recFs.listStatus(recDir).map(_.getPath.getName)
         .filter(n => n.startsWith("ingest_batch=") &&
@@ -272,14 +270,18 @@ object EntityResolution {
           "leave their stale assignments under a fresh marker; delete " +
           "the index or build to a fresh path")
     }
-    writeRecordsPartition(linkable.join(resolved, Seq("id")), -1L, path)
+    Artifact.persist(spark, path, metaRow(spark, maxDistNum, maxDistDen,
+        maxBlock, maxLen)) {
+      writeRecordsPartition(linkable.join(resolved, Seq("id")), -1L, path)
+    }
+  }
+
+  private def metaRow(spark: org.apache.spark.sql.SparkSession,
+                      maxDistNum: Int, maxDistDen: Int, maxBlock: Int,
+                      maxLen: Int): DataFrame = {
+    import spark.implicits._
     Seq((maxDistNum, maxDistDen, maxBlock, maxLen))
       .toDF("max_dist_num", "max_dist_den", "max_block", "max_norm_len")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(new org.apache.hadoop.fs.Path(
-      s"$path/meta/_GRAFT_COMMITTED"), false).close()
   }
 
   /** The records/ partition write shared by build and gate: dynamic
@@ -287,14 +289,9 @@ object EntityResolution {
     * byte-identically and never touches committed ones. */
   private def writeRecordsPartition(assigned: DataFrame, epoch: Long,
                                     path: String): Unit =
-    assigned
+    Artifact.writeEpoch(assigned
       .select(col("id"), col("norm"), length(col("norm")).as("norm_len"),
-        col("blk"), col("entity_id"))
-      .withColumn("ingest_batch", lit(epoch))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch")
-      .parquet(s"$path/records")
+        col("blk"), col("entity_id")), epoch, s"$path/records")
 
   /** Probe a [[persistEntityIndex]] artifact with a new record batch:
     * assign every batch record an entity WITHOUT re-resolving the
@@ -330,7 +327,7 @@ object EntityResolution {
                        excludeEpoch: Option[Long] = None)
       : DataFrame = {
     val spark = batch.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val meta = Artifact.readMeta(spark, path)
     val (num, den, maxBlock) =
       (meta.getInt(0), meta.getInt(1), meta.getInt(2))
     val idxAll = spark.read.parquet(s"$path/records")
@@ -388,11 +385,11 @@ object EntityResolution {
     *
     *  - BOOTSTRAP (no commit marker): the first batch full-resolves
     *    among itself, lands under `records/ingest_batch=<epoch>`, then
-    *    meta (`errorIfExists`) + the atomic `meta/_GRAFT_COMMITTED`
-    *    marker — data before meta, so a committed meta implies complete
-    *    data, and a crash anywhere before the marker re-bootstraps
-    *    idempotently (dynamic partition overwrite rewrites the same
-    *    partition byte-identically).
+    *    meta and marker ([[graft.exec.Artifact.bootstrap]]) — data
+    *    before meta, so a committed meta implies complete data, and a
+    *    crash anywhere before the marker re-bootstraps idempotently
+    *    (dynamic partition overwrite rewrites the same partition
+    *    byte-identically).
     *  - EPOCHS: probe with the SELF-EXCLUDING index read
     *    (`excludeEpoch = epochId`) so a post-commit replay of epoch k
     *    assigns against exactly the pre-k index state and rewrites its
@@ -414,22 +411,11 @@ object EntityResolution {
                      (batch: DataFrame, epochId: Long): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    import spark.implicits._
-    val metaDir = new org.apache.hadoop.fs.Path(s"$indexPath/meta")
-    val marker =
-      new org.apache.hadoop.fs.Path(s"$indexPath/meta/_GRAFT_COMMITTED")
-    val legacy = new org.apache.hadoop.fs.Path(s"$indexPath/meta/_SUCCESS")
-    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bootstrap = !(fs.exists(marker) || fs.exists(legacy))
-    if (!bootstrap) {
-      val meta = spark.read.parquet(s"$indexPath/meta").head()
-      require(meta.getInt(0) == maxDistNum &&
-        meta.getInt(1) == maxDistDen && meta.getInt(2) == maxBlock,
-        s"persisted entity index at $indexPath was built with contract " +
-          s"(${meta.getInt(0)}/${meta.getInt(1)}, maxBlock " +
-          s"${meta.getInt(2)}) but the gate requested " +
-          s"($maxDistNum/$maxDistDen, maxBlock $maxBlock)")
-    }
+    val bootstrap = !Artifact.committedOrLegacy(spark, s"$indexPath/meta")
+    if (!bootstrap)
+      Artifact.requireMeta(spark, indexPath, "persisted entity index",
+        "the gate requested")("maxDistNum" -> maxDistNum,
+        "maxDistDen" -> maxDistDen, "maxBlock" -> maxBlock)
     // ONE baseFrames + ONE maxNormLen probe for the whole epoch: the
     // bootstrap path previously ran the normalize+max scan twice
     // (inside resolveEntities, then again for the meta row) over what
@@ -453,16 +439,9 @@ object EntityResolution {
       val admitted = materialize(linkable.join(assigned, Seq("id")))
       if (!admitted.isEmpty) {
         writeRecordsPartition(admitted, epochId, indexPath)
-        if (bootstrap) {
-          if (fs.exists(metaDir)) fs.delete(metaDir, true)
-          val maxLen = bootMaxLen.getOrElse(0)
-          Seq((maxDistNum, maxDistDen, maxBlock, maxLen))
-            .toDF("max_dist_num", "max_dist_den", "max_block",
-              "max_norm_len")
-            .coalesce(1)
-            .write.mode("errorifexists").parquet(s"$indexPath/meta")
-          fs.create(marker, false).close()
-        }
+        if (bootstrap)
+          Artifact.bootstrap(indexPath, metaRow(spark, maxDistNum,
+            maxDistDen, maxBlock, bootMaxLen.getOrElse(0)))
       }
     }
   }

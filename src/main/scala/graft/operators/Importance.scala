@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Artifact
 import graft.exec.Exec.{sequentialSumByKey, spreadBy}
 
 /** DSIR-shaped data selection via importance resampling (Xie et al.
@@ -219,29 +220,26 @@ object Importance {
   }
 
   /** Freeze the LLR model: `$path/llr` (bucket, llr) then `$path/meta`
-    * (n, buckets, raw_t, tgt_t) LAST — meta presence is the commit
-    * marker; the totals let the gate price UNSEEN buckets with the same
+    * (n, buckets, raw_t, tgt_t), committed by
+    * [[graft.exec.Artifact.persist]] — meta presence is what the gate
+    * checks; the totals let the gate price UNSEEN buckets with the same
     * add-1 mass: llr_unseen = ln(1/(tgt_t+B)) − ln(1/(raw_t+B)). */
   def persistLlrModel(docs: DataFrame, id: Column, text: Column,
                       targetPred: Column, path: String, n: Int = 2,
                       buckets: Int = 4096): Unit = {
-    // retract-then-overwrite (the persistEntityIndex discipline), NOT
-    // mode("error"): a crash between the llr and meta writes would
-    // otherwise wedge every rerun on the surviving llr/ directory —
-    // replays must self-heal. Meta absence still marks "uncommitted".
-    val spark = docs.sparkSession
-    val metaDir = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(metaDir)) fs.delete(metaDir, true)
-    llrModel(docs, id, text, targetPred, n, buckets)
-      .select("bucket", "llr").write.mode("overwrite")
-      .parquet(s"$path/llr")
-    // meta rides the light totals pass — re-selecting from the llr
-    // frame would re-run the heavy count lineage a second time
-    gramTotals(docs, id, text, targetPred, n)
-      .select(lit(n).as("n"), lit(buckets).as("buckets"),
-        col("raw_t"), col("tgt_t"))
-      .write.mode("overwrite").parquet(s"$path/meta")
+    // retract-then-overwrite, NOT mode("error"): a crash between the
+    // llr and meta writes would otherwise wedge every rerun on the
+    // surviving llr/ directory — replays must self-heal. Meta rides the
+    // light totals pass — re-selecting from the llr frame would re-run
+    // the heavy count lineage a second time.
+    Artifact.persist(docs.sparkSession, path,
+        gramTotals(docs, id, text, targetPred, n)
+          .select(lit(n).as("n"), lit(buckets).as("buckets"),
+            col("raw_t"), col("tgt_t"))) {
+      llrModel(docs, id, text, targetPred, n, buckets)
+        .select("bucket", "llr").write.mode("overwrite")
+        .parquet(s"$path/llr")
+    }
   }
 
   /** Continuous importance gate: score one microbatch against the
@@ -259,7 +257,7 @@ object Importance {
                          (batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    val meta = spark.read.parquet(s"$modelPath/meta").head()
+    val meta = Artifact.readMeta(spark, modelPath)
     val (n, buckets) = (meta.getAs[Int]("n"), meta.getAs[Int]("buckets"))
     val (rawT, tgtT) =
       (meta.getAs[Long]("raw_t"), meta.getAs[Long]("tgt_t"))
@@ -277,10 +275,6 @@ object Importance {
       .select(col("doc_id"), col("__sum").as("logw"))
       .where(col("logw") >= minLogw)
       .select(col("doc_id").as(idCol))
-    batch.join(keep, Seq(idCol))
-      .withColumn("ingest_batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch").parquet(outPath)
+    Artifact.writeEpoch(batch.join(keep, Seq(idCol)), batchId, outPath)
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Artifact
 import graft.exec.Exec.{sequentialSumByKeyOrdered, spreadBy}
 
 /** CCNet-style language-model quality filtering (Wenzek et al. 2020):
@@ -140,35 +141,33 @@ object Perplexity {
   // ---- persisted model + continuous gate -----------------------------------
 
   /** Fit the bigram model once and write it frozen: `$path/model`
-    * (w1, w2, c_big, c_ctx) then `$path/meta` (v) LAST — meta presence
-    * is the commit marker. A torn write leaves no meta: the next run
-    * retracts the orphaned model/ and refits (self-healing); a
-    * COMMITTED artifact is refused loudly instead of silently
-    * refitting. */
+    * (w1, w2, c_big, c_ctx) then `$path/meta` (v), committed by
+    * [[graft.exec.Artifact.persist]] — meta presence is what the gate
+    * checks. A torn write leaves no meta: the next run retracts the
+    * orphaned model/ and refits (self-healing); a COMMITTED artifact is
+    * refused loudly instead of silently refitting. */
   def persistModel(docs: DataFrame, id: Column, text: Column,
                    refPred: Column, path: String): Unit = {
-    // retract-then-overwrite when UNCOMMITTED (the persistLlrModel
-    // discipline): a crash between the model and meta writes would
-    // otherwise wedge every rerun on the surviving model/ directory —
-    // replays must self-heal. A COMMITTED artifact (meta present) still
-    // fails loudly rather than silently refitting.
+    // an UNCOMMITTED leftover is retracted and rewritten: a crash
+    // between the model and meta writes would otherwise wedge every
+    // rerun on the surviving model/ directory — replays must self-heal.
+    // A COMMITTED artifact (meta present) still fails loudly rather
+    // than silently refitting.
     val spark = docs.sparkSession
-    val metaDir = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val modelDir = new org.apache.hadoop.fs.Path(s"$path/model")
-    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(metaDir),
+    val fs = Artifact.fs(spark, path)
+    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/meta")),
       s"persistModel: a committed model already exists at $path — " +
         "remove it explicitly to refit")
-    if (fs.exists(modelDir)) fs.delete(modelDir, true)
-    val model = bigramModel(docs, id, text, refPred)
-    model.write.mode("error").parquet(s"$path/model")
     // v from the WRITTEN bytes, not the model lineage: re-aggregating
-    // `model` would re-run the whole reference explode a second time,
+    // the model would re-run the whole reference explode a second time,
     // and deriving meta from the committed file also ties it to
     // exactly what the gate will read
-    docs.sparkSession.read.parquet(s"$path/model")
-      .agg((countDistinct(col("w2")) + lit(1L)).as("v"))
-      .write.mode("error").parquet(s"$path/meta")
+    Artifact.persist(spark, path, spark.read.parquet(s"$path/model")
+        .agg((countDistinct(col("w2")) + lit(1L)).as("v"))) {
+      fs.delete(new org.apache.hadoop.fs.Path(s"$path/model"), true)
+      bigramModel(docs, id, text, refPred)
+        .write.mode("error").parquet(s"$path/model")
+    }
   }
 
   /** The continuous quality gate: score one microbatch of documents
@@ -195,10 +194,6 @@ object Perplexity {
         model, v)
       .where(col("ppl") <= maxPpl)
       .select(col("doc_id").as(idCol))
-    batch.join(keep, Seq(idCol))
-      .withColumn("ingest_batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch").parquet(outPath)
+    Artifact.writeEpoch(batch.join(keep, Seq(idCol)), batchId, outPath)
   }
 }

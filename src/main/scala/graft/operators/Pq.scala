@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Artifact
 import graft.exec.Exec.{materialize, scoped}
 
 /** Product quantization (Jégou, Douze, Schmid 2011: "Product quantization
@@ -310,7 +311,8 @@ object Pq {
     *    scanned is the d·4/m-compressed codes;
     *  - `coarse/`   — (cluster, cent): the routing quantizer;
     *  - `codebook/` — (sub, code, cent): the residual PQ codebook;
-    *  - `meta/`     — (dim, k, m, ksub), written LAST.
+    *  - `meta/`     — (dim, k, m, ksub), committed by
+    *    [[graft.exec.Artifact.persist]].
     */
   def persistIvfPqIndex(corpus: DataFrame, path: String,
                         nCentroids: Int, coarseIters: Int,
@@ -324,22 +326,20 @@ object Pq {
       idCol, embCol, deterministic)
     val (index, cb) = buildIvfPqIndex(corpus, cents, m, ksub,
       pqIters, idCol, embCol)
-    // retract the OLD meta before any data overwrite (persistPcaModel
-    // discipline): otherwise a crash mid-re-persist leaves new codes
-    // readable under the old codebook/centroids — silently wrong ADC
-    val metaDir = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(metaDir)) fs.delete(metaDir, true)
-    index.write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"$path/vectors")
-    cents.zipWithIndex.toSeq.map { case (c, j) => (j, c.toSeq) }
-      .toDF("cluster", "cent")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
-    (for (s <- cb.cents.indices; j <- cb.cents(s).indices)
-      yield (s, j, cb.cents(s)(j).toSeq)).toDF("sub", "code", "cent")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-    Seq((cb.dim, cents.length, cb.m, cb.ksub)).toDF("dim", "k", "m", "ksub")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    // retraction matters here: a crash mid-re-persist would otherwise
+    // leave new codes readable under the old codebook/centroids —
+    // silently wrong ADC
+    Artifact.persist(spark, path, Seq((cb.dim, cents.length, cb.m, cb.ksub))
+        .toDF("dim", "k", "m", "ksub")) {
+      index.write.mode("overwrite").partitionBy("cluster")
+        .parquet(s"$path/vectors")
+      cents.zipWithIndex.toSeq.map { case (c, j) => (j, c.toSeq) }
+        .toDF("cluster", "cent")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
+      (for (s <- cb.cents.indices; j <- cb.cents(s).indices)
+        yield (s, j, cb.cents(s)(j).toSeq)).toDF("sub", "code", "cent")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
+    }
   }
 
   /** Probe a persisted IVF-PQ index with a batch of query vectors: route
@@ -351,7 +351,7 @@ object Pq {
                       idCol: String = "vec_id",
                       embCol: String = "embedding"): DataFrame = {
     val spark = batch.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val meta = Artifact.readMeta(spark, path)
     val (mdim, mk, mm, mksub) =
       (meta.getInt(0), meta.getInt(1), meta.getInt(2), meta.getInt(3))
     val cents = spark.read.parquet(s"$path/coarse")

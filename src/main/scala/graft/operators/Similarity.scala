@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.Artifact
 import graft.exec.Exec.{materialize, scoped, sequentialSumByKey,
   workParallelism}
 
@@ -688,11 +689,9 @@ object Similarity {
 
   /** Persist a [[PcaModel]] as a write-once serving artifact —
     * `components/` (comp, pos, loading, eigenvalue), `mean/`
-    * (pos, m), `meta/` (k, dim, n) with the family's
-    * `meta/_GRAFT_COMMITTED` marker written LAST — and, on a
-    * re-persist, the OLD marker deleted FIRST — so a reader can never
-    * see a torn or mixed-generation model (the persistSemanticIndex
-    * discipline; the whole artifact is k·d + d + 3 values —
+    * (pos, m), `meta/` (k, dim, n), committed by
+    * [[graft.exec.Artifact.persist]] so a reader can never see a torn or
+    * mixed-generation model (the whole artifact is k·d + d + 3 values —
     * driver-sized). Fit once on the bounded train slice, apply per
     * ingest batch forever. */
   def persistPcaModel(emb: DataFrame, path: String, k: Int,
@@ -702,27 +701,16 @@ object Similarity {
     val spark = emb.sparkSession
     import spark.implicits._
     val m = pcaTrain(emb, k, powerIters, deterministic, idCol, embCol)
-    val fs0 = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // re-persist over an existing artifact: retract the OLD marker
-    // BEFORE touching any file — a crash mid-rewrite must leave the
-    // artifact unreadable (readPcaModel refuses), never a
-    // mixed-generation model the old marker still vouches for
-    fs0.delete(new org.apache.hadoop.fs.Path(
-      s"$path/meta/_GRAFT_COMMITTED"), false)
-    (for (c <- 0 until k; p <- 0 until m.dim)
-      yield (c + 1, p, m.components(c)(p), m.eigenvalues(c)))
-      .toDF("comp", "pos", "loading", "eigenvalue")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/components")
-    m.mean.zipWithIndex.map { case (v, p) => (p, v) }.toSeq
-      .toDF("pos", "m")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/mean")
-    Seq((k, m.dim, m.n)).toDF("k", "dim", "n")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(new org.apache.hadoop.fs.Path(
-      s"$path/meta/_GRAFT_COMMITTED"), false).close()
+    Artifact.persist(spark, path,
+        Seq((k, m.dim, m.n)).toDF("k", "dim", "n")) {
+      (for (c <- 0 until k; p <- 0 until m.dim)
+        yield (c + 1, p, m.components(c)(p), m.eigenvalues(c)))
+        .toDF("comp", "pos", "loading", "eigenvalue")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/components")
+      m.mean.zipWithIndex.map { case (v, p) => (p, v) }.toSeq
+        .toDF("pos", "m")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/mean")
+    }
     m
   }
 
@@ -731,12 +719,8 @@ object Similarity {
     * served projection equals the in-session one. */
   def readPcaModel(spark: org.apache.spark.sql.SparkSession,
                    path: String): PcaModel = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(
-      s"$path/meta/_GRAFT_COMMITTED")),
-      s"pca model at $path has no commit marker — torn or absent")
-    val meta = spark.read.parquet(s"$path/meta").head()
+    Artifact.requireCommitted(spark, path, "pca model")
+    val meta = Artifact.readMeta(spark, path)
     val (k, dim, n) = (meta.getInt(0), meta.getInt(1), meta.getLong(2))
     val mean = new Array[Double](dim)
     val meanRows = spark.read.parquet(s"$path/mean").collect()
@@ -1503,9 +1487,9 @@ object Similarity {
     *    gate pointed at a batch-built index keeps every file at ONE
     *    directory depth (mixed depths make the whole tree unreadable);
     *  - `centroids/` — (cluster, cent): the k×dim coarse quantizer;
-    *  - `meta/`     — (k, dim), written LAST (same commit-order
-    *    contract as the minhash index: data before meta, so a
-    *    committed meta implies complete data).
+    *  - `meta/`     — (k, dim), committed by
+    *    [[graft.exec.Artifact.persist]] with the same marker the gate
+    *    writes, so a gate pointed at this index reads it as committed.
     *
     * Every later ingestion batch probes with `probeSemanticIndex` —
     * assignment against the PERSISTED centroids, no re-training — so
@@ -1524,22 +1508,24 @@ object Similarity {
     import spark.implicits._
     val cents = kMeansCentroids(corpus, kClusters, iters, idCol, embCol,
       deterministic, tol, seeding)
-    assignedFrame(corpus, idCol, embCol, cents)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(s"$path/vectors")
+    Artifact.persist(spark, path,
+        Seq((cents.length, cents.head.length)).toDF("k", "dim")) {
+      assignedFrame(corpus, idCol, embCol, cents)
+        .withColumn("ingest_batch", lit(-1L))
+        .write.mode("overwrite").partitionBy("ingest_batch")
+        .parquet(s"$path/vectors")
+      writeCentroids(spark, cents, path)
+    }
+  }
+
+  /** The coarse quantizer as `centroids/` (cluster, cent). */
+  private def writeCentroids(spark: org.apache.spark.sql.SparkSession,
+                             cents: Array[Array[Double]],
+                             path: String): Unit = {
+    import spark.implicits._
     cents.zipWithIndex.toSeq.map { case (c, j) => (j, c.toSeq) }
       .toDF("cluster", "cent")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    Seq((cents.length, cents.head.length)).toDF("k", "dim")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    // the same commit marker the gate writes, so a gate pointed at this
-    // index reads it as committed on any committer (not just those that
-    // leave meta/_SUCCESS behind)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(new org.apache.hadoop.fs.Path(
-      s"$path/meta/_GRAFT_COMMITTED"), false).close()
   }
 
   /** (id, emb, nrm, cluster) under the given centroids — the persisted
@@ -1572,24 +1558,20 @@ object Similarity {
     * exactly the operator's batch-mode behavior. */
   def probeSemanticIndex(batch: DataFrame, path: String, threshold: Double,
                          idCol: String = "vec_id",
-                         embCol: String = "embedding",
-                         broadcastBatch: Boolean = true): DataFrame = {
+                         embCol: String = "embedding"): DataFrame = {
     val spark = batch.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val (mk, mdim) = (meta.getInt(0), meta.getInt(1))
     val cents = readSemanticCentroids(spark, path)
-    require(cents.length == mk,
-      s"semantic index at $path: meta says k=$mk but centroids/ has " +
-        s"${cents.length} rows — torn index")
-    probeDimOpt(batch, embCol).foreach(bd => require(bd == mdim,
-      s"semantic index at $path holds dim-$mdim vectors but the probe " +
-        s"batch is dim-$bd"))
+    // meta's k against the centroids/ rows (a mismatch is a torn
+    // index), its dim against the batch's
+    Artifact.requireMeta(spark, path, "semantic index",
+        "centroids/ and the probe batch give")(
+      ("k" -> cents.length) +:
+        probeDimOpt(batch, embCol).map("dim" -> _).toSeq: _*)
     val basn = assignedFrame(batch, idCol, embCol, cents)
       .select(col("id").as("batch_id"), col("emb").as("b_emb"),
         col("nrm").as("b_nrm"), col("cluster"))
-    val b = if (broadcastBatch) broadcast(basn) else basn
     spark.read.parquet(s"$path/vectors")
-      .join(b, Seq("cluster"))
+      .join(broadcast(basn), Seq("cluster"))
       .withColumn("cos",
         graft.functions.VectorExpressions.dotF32(col("emb"), col("b_emb")) /
           nullif(col("nrm") * col("b_nrm"), lit(0.0)))
@@ -1618,13 +1600,12 @@ object Similarity {
     *      idempotent write = exactly-once index state.
     *
     * Bootstrap (no committed `meta/`): train k-means ON the first
-    * batch, self-dedup it, write vectors → centroids → meta
-    * (`errorIfExists`) → the atomic `meta/_GRAFT_COMMITTED` marker,
-    * exactly the `Dedup.ingestGateBatch` crash contract: a crash
-    * before the meta job commits re-bootstraps on replay (partial
-    * `meta/` deleted, partial partitions dynamically overwritten); a
-    * crash after meta commit reads as committed (marker, or the
-    * default committer's `_SUCCESS` as the legacy fallback).
+    * batch, self-dedup it, write vectors → centroids → meta and marker
+    * ([[graft.exec.Artifact.bootstrap]]), exactly the
+    * `Dedup.ingestGateBatch` crash contract: a crash before the meta job
+    * commits re-bootstraps on replay (partial `meta/` deleted, partial
+    * partitions dynamically overwritten); a crash after meta commit
+    * reads as committed ([[graft.exec.Artifact.committedOrLegacy]]).
     *
     * Centroids are write-once: later epochs assign against the
     * bootstrap quantizer and never retrain — the production answer to
@@ -1643,13 +1624,7 @@ object Similarity {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaDir = new org.apache.hadoop.fs.Path(s"$indexPath/meta")
-    val marker =
-      new org.apache.hadoop.fs.Path(s"$indexPath/meta/_GRAFT_COMMITTED")
-    val legacy = new org.apache.hadoop.fs.Path(s"$indexPath/meta/_SUCCESS")
-    val bootstrap = !(fs.exists(marker) || fs.exists(legacy))
+    val bootstrap = !Artifact.committedOrLegacy(spark, s"$indexPath/meta")
     val cents =
       if (bootstrap) kMeansCentroids(batch, kClusters, iters, idCol, embCol)
       else readSemanticCentroids(spark, indexPath)
@@ -1674,20 +1649,11 @@ object Similarity {
       val admitted = materialize(
         assigned.join(keep, col("id") === col("__keep_id"), "left_semi"))
       if (!admitted.isEmpty) {
-        admitted.withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
-          .parquet(s"$indexPath/vectors")
+        Artifact.writeEpoch(admitted, batchId, s"$indexPath/vectors")
         if (bootstrap) {
-          cents.zipWithIndex.toSeq.map { case (c, j) => (j, c.toSeq) }
-            .toDF("cluster", "cent").coalesce(1)
-            .write.mode("overwrite").parquet(s"$indexPath/centroids")
-          if (fs.exists(metaDir)) fs.delete(metaDir, true)
-          Seq((cents.length, cents.head.length)).toDF("k", "dim")
-            .coalesce(1).write.mode("errorifexists")
-            .parquet(s"$indexPath/meta")
-          fs.create(marker, false).close()
+          writeCentroids(spark, cents, indexPath)
+          Artifact.bootstrap(indexPath,
+            Seq((cents.length, cents.head.length)).toDF("k", "dim"))
         }
       }
     }

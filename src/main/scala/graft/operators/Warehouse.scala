@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, NumericType, StringType, TimestampNTZType, TimestampType}
 
+import graft.exec.Artifact
+
 /** Warehouse-maintenance operators: the table-keeping half of a
   * continuously-ingesting pipeline — history tracking, spine completion,
   * profiling, expectation gates, incremental aggregate maintenance and
@@ -250,11 +252,7 @@ object Warehouse {
     // per-ingest maintenance job pays delta cost, not a full base
     // rescan+rewrite per call. The path identifies one (base range) —
     // changing the cutoff needs a fresh path (caller contract).
-    val basePath = new org.apache.hadoop.fs.Path(path)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed =
-      fs.exists(new org.apache.hadoop.fs.Path(basePath, "_SUCCESS"))
-    if (!committed)
+    if (!Artifact.committedOrLegacy(spark, path))
       dailyRollup(df.where(to_date(day) < cutoff), day, value)
         .write.mode("overwrite").parquet(path)
     val delta = dailyRollup(df.where(to_date(day) >= cutoff), day, value)
@@ -520,13 +518,13 @@ object Warehouse {
     * made safely replayable without a transactional table format.
     *
     * Layout: `tableDir/v=<epoch>/` holds the FULL snapshot as of that
-    * epoch, committed by a `_GRAFT_COMMITTED` marker inside the version
-    * directory, written LAST; `tableDir/meta/` records the key and
-    * payload columns once, at bootstrap, under the same
-    * marker-plus-errorIfExists write-once contract as the index gates
-    * (`Dedup.ingestGateBatch`) — later epochs READ the contract from
-    * meta and refuse a drifted caller, so two epochs can never fold
-    * with different keys.
+    * epoch, committed by a marker inside the version directory
+    * ([[graft.exec.Artifact.commit]]), written LAST; `tableDir/meta/`
+    * records the key and payload columns once, at bootstrap, under the
+    * same write-once contract as the index gates
+    * ([[graft.exec.Artifact.bootstrap]]) — later epochs READ the
+    * contract from meta and refuse a drifted caller, so two epochs can
+    * never fold with different keys.
     *
     * Exactly-once: the base of epoch N is the newest COMMITTED version
     * with v < N — a SELF-EXCLUDING read, so a replayed epoch (crash
@@ -557,25 +555,16 @@ object Warehouse {
     require(keyCols.nonEmpty && keyCols.forall(payloadCols.contains),
       s"cdcGateBatch: keyCols ${keyCols.mkString(",")} must be a subset " +
         s"of payloadCols ${payloadCols.mkString(",")}")
-    val metaCommitted =
-      new org.apache.hadoop.fs.Path(s"$tableDir/meta/_GRAFT_COMMITTED")
-    val metaDir = new org.apache.hadoop.fs.Path(s"$tableDir/meta")
-    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bootstrap = !fs.exists(metaCommitted)
-    val bootstrapEpoch = if (bootstrap) None else {
-      // the fold contract comes FROM meta: a caller whose keys/payload
-      // drifted from the bootstrap's fails loudly instead of silently
-      // merging a different table
-      val m = spark.read.parquet(s"$tableDir/meta").collect()(0)
-      val (mk, mp) = (m.getString(0), m.getString(1))
-      require(mk == keyCols.mkString(",") &&
-          mp == payloadCols.mkString(","),
-        s"cdcGateBatch: persisted contract (keys=$mk, payload=$mp) != " +
-          s"caller (keys=${keyCols.mkString(",")}, " +
-          s"payload=${payloadCols.mkString(",")})")
-      Some(metaBootstrapEpoch(m))
-    }
-    val baseV = replayBaseVersion(committedVersions(fs, tableDir),
+    val bootstrap = !Artifact.committed(spark, s"$tableDir/meta")
+    // the fold contract comes FROM meta: a caller whose keys/payload
+    // drifted from the bootstrap's fails loudly instead of silently
+    // merging a different table
+    val bootstrapEpoch = if (bootstrap) None else Some(metaBootstrapEpoch(
+      Artifact.requireMeta(spark, tableDir,
+        "cdcGateBatch: the persisted contract of the table",
+        "the caller gives")("keys" -> keyCols.mkString(","),
+        "payload" -> payloadCols.mkString(","))))
+    val baseV = replayBaseVersion(committedVersions(spark, tableDir),
       batchId, bootstrapEpoch, "cdcGateBatch")
     val base = baseV match {
       case Some(v) => spark.read.parquet(s"$tableDir/v=$v")
@@ -587,17 +576,12 @@ object Warehouse {
     val next = applyCdc(base, batch, keyCols, ord, tiebreak, op)
     val vDir = s"$tableDir/v=$batchId"
     next.write.mode("overwrite").parquet(vDir)
-    if (bootstrap) {
-      if (fs.exists(metaDir)) fs.delete(metaDir, true)
-      Seq((keyCols.mkString(","), payloadCols.mkString(","), batchId))
-        .toDF("key_cols", "payload_cols", "bootstrap_epoch").coalesce(1)
-        .write.mode("errorifexists").parquet(s"$tableDir/meta")
-      fs.create(metaCommitted, false).close()
-    }
+    if (bootstrap)
+      Artifact.bootstrap(tableDir,
+        Seq((keyCols.mkString(","), payloadCols.mkString(","), batchId))
+          .toDF("key_cols", "payload_cols", "bootstrap_epoch"))
     // marker LAST: the version is invisible until the snapshot is whole
-    fs.create(
-      new org.apache.hadoop.fs.Path(s"$vDir/_GRAFT_COMMITTED"), false)
-      .close()
+    Artifact.commit(spark, vDir)
   }
 
   /** The newest committed snapshot under a [[cdcGateBatch]] table — the
@@ -605,9 +589,7 @@ object Warehouse {
     * invisible). */
   def readSnapshot(spark: org.apache.spark.sql.SparkSession,
                    tableDir: String): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = committedVersions(fs, tableDir)
+    val vs = committedVersions(spark, tableDir)
     require(vs.nonEmpty, s"readSnapshot: no committed version in $tableDir")
     spark.read.parquet(s"$tableDir/v=${vs.max}")
   }
@@ -626,8 +608,8 @@ object Warehouse {
                        tableDir: String, keep: Int = 2): Seq[Long] = {
     require(keep >= 1, s"compactSnapshots: keep=$keep")
     val dir = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = committedVersions(fs, tableDir).sorted
+    val fs = Artifact.fs(spark, tableDir)
+    val committed = committedVersions(spark, tableDir).sorted
     if (committed.isEmpty) return Nil
     val cutoff = committed.takeRight(keep).head
     val all = fs.listStatus(dir).toSeq.map(_.getPath)
@@ -640,14 +622,14 @@ object Warehouse {
     drop
   }
 
-  private def committedVersions(fs: org.apache.hadoop.fs.FileSystem,
+  private def committedVersions(spark: org.apache.spark.sql.SparkSession,
                                 tableDir: String): Seq[Long] = {
+    val fs = Artifact.fs(spark, tableDir)
     val dir = new org.apache.hadoop.fs.Path(tableDir)
     if (!fs.exists(dir)) return Nil
     fs.listStatus(dir).toSeq.map(_.getPath)
       .filter(_.getName.startsWith("v="))
-      .filter(p => fs.exists(
-        new org.apache.hadoop.fs.Path(p, "_GRAFT_COMMITTED")))
+      .filter(p => Artifact.committed(spark, p.toString))
       .map(_.getName.stripPrefix("v=").toLong)
   }
 
@@ -716,20 +698,12 @@ object Warehouse {
     require(hexChars >= 2 && hexChars <= 3,
       s"uniquesGateBatch: hexChars=$hexChars out of [2, 3]")
     val m = 1 << (4 * hexChars)
-    val metaCommitted =
-      new org.apache.hadoop.fs.Path(s"$tableDir/meta/_GRAFT_COMMITTED")
-    val metaDir = new org.apache.hadoop.fs.Path(s"$tableDir/meta")
-    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bootstrap = !fs.exists(metaCommitted)
-    val bootstrapEpoch = if (bootstrap) None else {
-      val row = spark.read.parquet(s"$tableDir/meta").collect()(0)
-      require(row.getInt(0) == hexChars,
-        s"uniquesGateBatch: persisted hexChars=${row.getInt(0)} != " +
-          s"caller $hexChars — registers of different widths cannot " +
-          "merge")
-      Some(metaBootstrapEpoch(row))
-    }
-    val baseV = replayBaseVersion(committedVersions(fs, tableDir),
+    val bootstrap = !Artifact.committed(spark, s"$tableDir/meta")
+    // registers of different widths cannot merge
+    val bootstrapEpoch = if (bootstrap) None else Some(metaBootstrapEpoch(
+      Artifact.requireMeta(spark, tableDir, "uniquesGateBatch: table",
+        "the caller gives")("hexChars" -> hexChars)))
+    val baseV = replayBaseVersion(committedVersions(spark, tableDir),
       batchId, bootstrapEpoch, "uniquesGateBatch")
     val base = baseV match {
       case Some(v) => spark.read.parquet(s"$tableDir/v=$v")
@@ -756,16 +730,10 @@ object Warehouse {
           (x, y) => greatest(x, y)).as("sk"))
     val vDir = s"$tableDir/v=$batchId"
     next.write.mode("overwrite").parquet(vDir)
-    if (bootstrap) {
-      if (fs.exists(metaDir)) fs.delete(metaDir, true)
-      Seq((hexChars, batchId)).toDF("hex_chars", "bootstrap_epoch")
-        .coalesce(1)
-        .write.mode("errorifexists").parquet(s"$tableDir/meta")
-      fs.create(metaCommitted, false).close()
-    }
-    fs.create(
-      new org.apache.hadoop.fs.Path(s"$vDir/_GRAFT_COMMITTED"), false)
-      .close()
+    if (bootstrap)
+      Artifact.bootstrap(tableDir,
+        Seq((hexChars, batchId)).toDF("hex_chars", "bootstrap_epoch"))
+    Artifact.commit(spark, vDir)
   }
 
   /** Estimated distinct items over an inclusive [from, to] date range,
@@ -778,8 +746,7 @@ object Warehouse {
   def uniquesOverRange(spark: org.apache.spark.sql.SparkSession,
                        tableDir: String, from: String,
                        to: String): DataFrame = {
-    val hexChars = spark.read.parquet(s"$tableDir/meta")
-      .collect()(0).getInt(0)
+    val hexChars = Artifact.readMeta(spark, tableDir).getInt(0)
     val merged = readSnapshot(spark, tableDir)
       .where(col("day") >= lit(from).cast("date") &&
         col("day") <= lit(to).cast("date"))

@@ -221,13 +221,8 @@ object EventStreams {
     * double every replayed row; that is the failure mode this exists
     * to remove.) */
   def windowSinkBatch(path: String)(batch: DataFrame, batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      // per-write option, not a session-conf flip: a concurrent writer
-      // on the same session keeps its own overwrite semantics
-      batch.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("window_start").parquet(path)
-    }
+    if (!batch.isEmpty)
+      graft.exec.Artifact.overwritePartitions(batch, "window_start", path)
   }
 
   /** CONTINUOUS ingestion dedup: wire a document stream through
@@ -242,16 +237,13 @@ object EventStreams {
                            corpusPath: String, checkpoint: String,
                            idCol: String = "doc_id",
                            textCol: String = "text",
-                           threshold: Double = 0.6,
-                           pinning: graft.operators.Dedup.AdmittedPinning =
-                             graft.operators.Dedup.AdmittedPinning.Auto)
+                           threshold: Double = 0.6)
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch(graft.operators.Dedup.ingestGateBatch(
-        indexPath, corpusPath, idCol, textCol, threshold,
-        pinning = pinning) _)
+        indexPath, corpusPath, idCol, textCol, threshold) _)
       .start()
 
   /** Continuous CDC snapshot maintenance — `Warehouse.cdcGateBatch` per
@@ -381,15 +373,14 @@ object EventStreams {
   def startPassageGate(stream: DataFrame, indexPath: String,
                        corpusPath: String, checkpoint: String,
                        idCol: String = "doc_id", textCol: String = "text",
-                       windowWords: Int = 6, strideWords: Int = 1,
-                       broadcastBatch: Boolean = true)
+                       windowWords: Int = 6, strideWords: Int = 1)
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch(graft.operators.Dedup.passageGateBatch(
         indexPath, corpusPath, idCol, textCol, windowWords,
-        strideWords, broadcastBatch) _)
+        strideWords) _)
       .start()
 
   /** Continuous boilerplate-removal gate: every microbatch runs
@@ -402,15 +393,14 @@ object EventStreams {
                            corpusPath: String, checkpoint: String,
                            idCol: String = "doc_id",
                            textCol: String = "text",
-                           chunkWords: Int = 8, minDocs: Int = 4,
-                           broadcastBatch: Boolean = true)
+                           chunkWords: Int = 8, minDocs: Int = 4)
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch(graft.operators.Dedup.boilerplateGateBatch(
         indexPath, corpusPath, idCol, textCol, chunkWords,
-        minDocs, broadcastBatch) _)
+        minDocs) _)
       .start()
 
   /** Continuous entity resolution: every microbatch runs

@@ -396,35 +396,34 @@ class DedupSpec extends SparkTestBase {
       "a post-bootstrap epoch rewrote meta/ — write-once contract broken")
   }
 
-  test("ingest gate: Reliable and CollectIds pinning admit exactly what " +
-    "Local admits, and reliable checkpoint storage is released") {
+  test("ingest gate: admits the same set with and without a session " +
+    "checkpoint dir, and reliable checkpoint storage is released") {
     import org.apache.hadoop.fs.Path
-    def run(p: Dedup.AdmittedPinning, tag: String): Set[Long] = {
+    def run(tag: String): Set[Long] = {
       val d = java.nio.file.Files
         .createTempDirectory(s"graft_pin_$tag").toString
       val gate = Dedup.ingestGateBatch(s"$d/idx", s"$d/corpus",
-        threshold = 0.5, pinning = p) _
+        threshold = 0.5) _
       gate(gateEpoch0.toDF("doc_id", "text"), 0L)
       gate(gateEpoch1.toDF("doc_id", "text"), 1L)
       gateCorpusIds(s"$d/corpus")
     }
     val cpDir = java.nio.file.Files
       .createTempDirectory("graft_pin_cp").toString
+    // without a checkpoint dir the admitted set is pinned with a
+    // localCheckpoint, with one by a reliable checkpoint
+    val local = run("local")
     // the session is shared across suites and a set checkpoint dir flips
-    // Dedup.materialize (Auto pinning, connectedComponents) to reliable-
-    // checkpoint mode for every later test — restore the previous state
-    // (normally unset => null => None) in a finally
+    // Exec.materialize to reliable-checkpoint mode for every later test
+    // — restore the previous state (normally unset => null => None) in a
+    // finally
     val prevCpDir = spark.sparkContext.getCheckpointDir
     spark.sparkContext.setCheckpointDir(cpDir)
-    val (local, reliable, collected) =
-      try {
-        (run(Dedup.AdmittedPinning.Local, "local"),
-          run(Dedup.AdmittedPinning.Reliable, "reliable"),
-          run(Dedup.AdmittedPinning.CollectIds, "collect"))
-      } finally spark.sparkContext.setCheckpointDir(prevCpDir.orNull)
+    val reliable =
+      try run("reliable")
+      finally spark.sparkContext.setCheckpointDir(prevCpDir.orNull)
     assert(local === Set(1L, 2L, 11L))
     assert(reliable === local)
-    assert(collected === local)
     // the finally released every reliable checkpoint (files deleted):
     // leftover rdd-* dirs would accumulate per microbatch for the
     // application's lifetime on a real stream
@@ -653,13 +652,6 @@ class DedupSpec extends SparkTestBase {
     assert(probe(12L) === "")
     assert(probe(13L) === "shorty")
     assert(probe(14L) === "")
-    // the no-broadcast dial (batches too big to broadcast) is the same
-    // answer through shuffle joins
-    val probeNb = Dedup.probePassageIndex(batch, col("doc_id"),
-        col("text"), idx, windowWords = 3, strideWords = 1,
-        broadcastBatch = false)
-      .as[(Long, String)].collect().toMap
-    assert(probeNb === composed)
     // probing with different window params must fail, not silently no-op
     intercept[IllegalArgumentException] {
       Dedup.probePassageIndex(batch, col("doc_id"), col("text"), idx,

@@ -6,26 +6,41 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Checkpoint lifetimes have one owner: only `graft/exec/Exec.scala` may
-  * checkpoint a frame or release one, so an operator cannot pair the two
-  * by hand again, and the deleted task-factor option cannot return. */
+/** Checkpoint lifetimes and on-disk commits each have one owner: only
+  * `graft/exec/Exec.scala` may checkpoint a frame or release one, and
+  * only `graft/exec/Artifact.scala` may name a commit marker, a
+  * committer's success file, a dynamic-partition overwrite or a
+  * write-once meta mode, so an operator cannot hand-write either
+  * protocol again. Deleted options cannot return anywhere. */
 class ExecStructureSpec extends AnyFunSuite {
 
-  private val forbidden =
-    Seq("localCheckpoint(", ".checkpoint(", "releaseMaterialized",
-      "workTaskFactor")
+  /** owner file -> tokens no other main source may contain */
+  private val owned = Seq(
+    "graft/exec/Exec.scala" ->
+      Seq("localCheckpoint(", ".checkpoint(", "releaseMaterialized",
+        "workTaskFactor"),
+    "graft/exec/Artifact.scala" ->
+      Seq("_GRAFT_COMMITTED", "_SUCCESS", "partitionOverwriteMode",
+        "errorifexists"))
+
+  /** tokens of deleted options, forbidden in every main source */
+  private val deleted = Seq("broadcastBatch", "AdmittedPinning")
 
   test("checkpoint calls live only in graft.exec.Exec") {
     val root = Paths.get("src/main/scala")
-    val exec = root.resolve("graft/exec/Exec.scala")
-    assert(Files.isRegularFile(exec), s"run from the repo root: $exec")
+    val rules = owned.map { case (f, toks) => root.resolve(f) -> toks }
+    for ((owner, _) <- rules)
+      assert(Files.isRegularFile(owner), s"run from the repo root: $owner")
+    def forbidden(p: Path): Seq[String] =
+      deleted ++ rules.collect { case (o, toks) if o != p => toks }.flatten
     val stream = Files.walk(root)
     val hits =
       try stream.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala") && p != exec)
+        .filter(p => p.toString.endsWith(".scala"))
         .flatMap { (p: Path) =>
+          val toks = forbidden(p)
           Files.readAllLines(p).asScala.zipWithIndex.collect {
-            case (line, i) if forbidden.exists(line.contains) =>
+            case (line, i) if toks.exists(line.contains) =>
               s"$p:${i + 1}: ${line.trim}"
           }
         }.toList
