@@ -543,8 +543,8 @@ object SparkEntry {
     flagship(spark, "/root/testdata/sf0.001")
 
   /** The reference's relational core in one query (SURVEY.md §7.2 M0):
-    * scan → normalize key → priority dedup (A3) → stub-metrics broadcast
-    * enrichment (X1/J1) → grouped aggregate (A2). */
+    * scan → normalize key → priority dedup (A3) → stub-metrics keyed-memo
+    * enrichment (X1) → grouped aggregate (A2). */
   private def flagship(s: SparkSession, dir: String): DataFrame = {
     val deduped = Dedup.priorityDedup(
       bibRecords(s, dir), col("key"), col("priority"), col("doc_id"))

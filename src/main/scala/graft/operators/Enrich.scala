@@ -5,27 +5,28 @@ import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.exec.Exec
 import graft.functions.JsonRepair
 
 /** External-service operators (SURVEY.md §2.9) — the only parts of the
   * reference whose values come from outside the data:
   *
-  *   X1 journal-metrics enrichment (`journal_metrics.py`): distinct-key
-  *      fetch with throttle + memo cache, broadcast-joined back.
+  *   X1 journal-metrics enrichment (`journal_metrics.py`): one keyed
+  *      exchange on the journal, then a per-partition memo with throttle.
   *   X2 per-row LLM extraction (`llm_api.py`): per-abstract completion,
   *      bounded concurrency, retries, JSON-repair of the response.
   *
   * Spark design: clients are injected behind traits so the oracle path uses
-  * deterministic pure stubs (SURVEY.md §5.2.5); production impls would own
-  * an HTTP client per partition inside `mapPartitions` — per-partition
-  * lifecycle + token-bucket throttling is exactly what mapPartitions gives
-  * and UDFs don't.
+  * deterministic pure stubs (SURVEY.md §5.2.5); both operators are one
+  * typed `mapPartitions` that appends columns to each row, with state
+  * per partition (the memo; a production HTTP client's pool and token
+  * bucket) — the lifecycle a per-row UDF cannot give.
   *
-  * Scale: X1 hits the service once per DISTINCT key (semi-join reduction,
-  * same trick as the reference `main.py:369-371`), then broadcasts the tiny
-  * metrics dim back onto the fact table. X2 is a straight map over rows —
-  * throughput scales with partitions; throttling is per-partition
-  * token-bucket so cluster-wide rate = partitions × bucket rate.
+  * Scale: X1 hits the service once per DISTINCT key (the reference's
+  * module-level memo, `journal_metrics.py:37-39`) and reads its input
+  * once. X2 is a straight map over rows — throughput scales with
+  * partitions; throttling is per-partition token-bucket so cluster-wide
+  * rate = partitions × bucket rate.
   */
 object Enrich {
 
@@ -45,36 +46,32 @@ object Enrich {
     }
   }
 
-  /** X1 — journal-metrics enrichment.
-    * distinct(journal_norm) → mapPartitions(fetch) → broadcast left join,
-    * all in one plan (no RDD round trip re-reading `df`); one fetch per key.
-    */
+  /** X1 — journal-metrics enrichment. Output: `journal_norm` (trimmed,
+    * lowercased key), the input's columns, `impact_factor`, `quartile`.
+    * One hash exchange on the key with an explicit partition count
+    * (`Exec.spreadBy`, never AQE-coalesced) puts each key in one
+    * partition, whose memo fetches it on its first row: one fetch per
+    * distinct key per job, one read of `df`. Null/empty keys make no call
+    * and get null metrics. Trade: the rows shuffle once more (a hot
+    * journal's rows share a task); the next stage inherits the
+    * partitions. */
   def journalMetrics(df: DataFrame, journalCol: String,
                      client: MetricsClient): DataFrame = {
-    // journal_norm is a DOCUMENTED output column (the normalized join
-    // key downstream dedup/reporting reads); a pre-existing one would
+    // journal_norm is a DOCUMENTED output column (the normalized key
+    // downstream dedup/reporting reads); a pre-existing one would
     // be silently clobbered, so refuse it loudly
     require(!df.columns.contains("journal_norm"),
       "journalMetrics: input already has a 'journal_norm' column — " +
         "rename it upstream; the operator adds its own")
-    val keyDf = df.select(lower(trim(col(journalCol))).as("journal_norm"))
-      .where(col("journal_norm").isNotNull && col("journal_norm") =!= "")
-      .distinct()
-    val schema = StructType(Seq(
-      StructField("journal_norm", StringType),
-      StructField("impact_factor", DoubleType),
-      StructField("quartile", StringType)))
-    val metricsDim = keyDf.mapPartitions { it =>
-      // per-partition client lifecycle lives here (HTTP pool, throttle);
-      // the stub is pure so nothing to manage
-      it.map { r =>
-        val j = r.getString(0)
-        val (ifact, q) = client.fetch(j)
-        Row(j, ifact, q)
-      }
-    }(RowEncoder.encoderFor(schema))
-    df.withColumn("journal_norm", lower(trim(col(journalCol))))
-      .join(broadcast(metricsDim), Seq("journal_norm"), "left")
+    val keyed = Exec.spreadBy(df.select(
+      lower(trim(col(journalCol))).as("journal_norm"), col("*")), col("journal_norm"))
+    appendColumns(keyed, Seq(StructField("impact_factor", DoubleType),
+        StructField("quartile", StringType))) { () =>
+      val memo = new java.util.HashMap[String, Seq[Any]]
+      r => if (r.isNullAt(0) || r.getString(0).isEmpty) Seq(null, null)
+        else memo.computeIfAbsent(r.getString(0), { (j: String) =>
+          val (ifact, q) = client.fetch(j); Seq(ifact, q) })
+    }
   }
 
   /** Decorator adding the reference's production behaviors to any
@@ -82,8 +79,8 @@ object Enrich {
     * client, `journal_metrics.py:83-90`) and exponential-backoff retries
     * (`llm_api.py:178-201`). The bucket is @transient-lazy, so every
     * deserialized task copy owns its own — cluster-wide rate =
-    * concurrent tasks × ratePerSec; size the distinct-key frame's
-    * partitioning to the service budget. */
+    * `workParallelism` × ratePerSec (`spark.sql.shuffle.partitions`
+    * sizes X1's fetch stage). */
   class ThrottledRetryingClient(inner: MetricsClient,
                                 ratePerSec: Double = 2.0,
                                 maxRetries: Int = 3,
@@ -158,31 +155,31 @@ object Enrich {
                  defaults: Map[String, String] = Map.empty): DataFrame =
     extractFields(df, textCol, fields, defaults)(client.complete)
 
-  /** Shared X2 executor shape: mapPartitions with a per-partition client
-    * lifecycle, null/empty short-circuit to defaults, repair ladder on
-    * every response, one output string column per field. `call` is the
-    * only thing that varies between the plain and template-driven paths. */
+  /** Shared X2 shape: null/empty short-circuit to defaults, repair ladder
+    * on every response, one output string column per field. `call` is
+    * all that varies between the plain and template-driven paths. */
   private def extractFields(df: DataFrame, textCol: String,
                             fields: Seq[String],
                             defaults: Map[String, String])
                            (call: String => String): DataFrame = {
     val textIdx = df.schema.fieldIndex(textCol)
-    val outSchema = StructType(df.schema.fields ++
-      fields.map(f => StructField(f, StringType)))
-    val enc = RowEncoder.encoderFor(outSchema)
     val dflt = fields.map(f => f -> defaults.getOrElse(f, "")).toMap
-    df.mapPartitions { it =>
-      // per-partition client lifecycle: a production impl opens its HTTP
-      // pool here and closes it when the iterator drains; the injected
-      // stub is pure so there is nothing to manage
-      it.map { r =>
-        val text = if (r.isNullAt(textIdx)) null else r.getString(textIdx)
-        val m = if (text == null || text.trim.isEmpty) dflt
-        else JsonRepair.repair(call(text), fields, defaults)
-        Row.fromSeq(r.toSeq ++ fields.map(m))
-      }
-    }(enc)
+    appendColumns(df, fields.map(StructField(_, StringType))) { () => r =>
+      val text = if (r.isNullAt(textIdx)) null else r.getString(textIdx)
+      fields.map(if (text == null || text.trim.isEmpty) dflt
+        else JsonRepair.repair(call(text), fields, defaults))
+    }
   }
+
+  /** X1's and X2's executor: a typed `mapPartitions` (no action prunes
+    * it) appending `added` to every row. `perPartition` runs once per
+    * partition (X1's memo, a client's HTTP pool) and returns the values. */
+  private def appendColumns(df: DataFrame, added: Seq[StructField])
+                           (perPartition: () => Row => Seq[Any]): DataFrame =
+    df.mapPartitions { it =>
+      val values = perPartition()
+      it.map(r => Row.fromSeq(r.toSeq ++ values(r)))
+    }(RowEncoder.encoderFor(StructType(df.schema.fields ++ added)))
 
   /** X2 client in the shape real chat-completion APIs take: the full
     * role-tagged message list, not a bare abstract. The template-driven

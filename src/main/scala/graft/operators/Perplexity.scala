@@ -151,11 +151,11 @@ object Perplexity {
     // an UNCOMMITTED leftover is retracted and rewritten: a crash
     // between the model and meta writes would otherwise wedge every
     // rerun on the surviving model/ directory — replays must self-heal.
-    // A COMMITTED artifact (meta present) still fails loudly rather
-    // than silently refitting.
+    // A COMMITTED artifact (meta marker present) still fails loudly
+    // rather than silently refitting; a torn meta/ alone does not.
     val spark = docs.sparkSession
     val fs = Artifact.fs(spark, path)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/meta")),
+    require(!Artifact.committedOrLegacy(spark, s"$path/meta"),
       s"persistModel: a committed model already exists at $path — " +
         "remove it explicitly to refit")
     // v from the WRITTEN bytes, not the model lineage: re-aggregating

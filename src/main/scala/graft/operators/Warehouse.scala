@@ -252,9 +252,11 @@ object Warehouse {
     // per-ingest maintenance job pays delta cost, not a full base
     // rescan+rewrite per call. The path identifies one (base range) —
     // changing the cutoff needs a fresh path (caller contract).
-    if (!Artifact.committedOrLegacy(spark, path))
+    if (!Artifact.committedOrLegacy(spark, path)) {
       dailyRollup(df.where(to_date(day) < cutoff), day, value)
         .write.mode("overwrite").parquet(path)
+      Artifact.commit(spark, path)
+    }
     val delta = dailyRollup(df.where(to_date(day) >= cutoff), day, value)
     spark.read.parquet(path).unionByName(delta)
       .groupBy(col("day"))

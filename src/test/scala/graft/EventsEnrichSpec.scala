@@ -74,6 +74,51 @@ class EventsEnrichSpec extends SparkTestBase {
     assert(nullRow.head().isNullAt(0)) // left join: no metrics for null key
   }
 
+  test("journalMetrics property: one fetch per distinct non-empty key and " +
+    "the broadcast-join rows, under 1 and 7 shuffle partitions (X1)") {
+    import org.apache.spark.sql.DataFrame
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // the former distinct-key → fetch → broadcast left join, kept as the
+    // oracle
+    def oracle(df: DataFrame): DataFrame = {
+      val dim = df.select(lower(trim(col("journal"))).as("journal_norm"))
+        .where(col("journal_norm").isNotNull && col("journal_norm") =!= "")
+        .distinct().as[String]
+        .map { j => val (i, q) = Enrich.StubMetricsClient.fetch(j); (j, i, q) }
+        .toDF("journal_norm", "impact_factor", "quartile")
+      df.withColumn("journal_norm", lower(trim(col("journal"))))
+        .join(broadcast(dim), Seq("journal_norm"), "left")
+    }
+    val journal = Gen.oneOf(null: String, "", "  ", "Nature", " nature",
+      "NATURE  ", "Cell", "cell ", "Science")
+    val frameGen = for {
+      n <- Gen.choose(0, 40)
+      js <- Gen.listOfN(n, journal)
+    } yield js.zipWithIndex.map { case (j, i) => (i.toLong, j) }
+    def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.getAs[Long]("id"))
+    val prop = Prop.forAll(frameGen) { in =>
+      val df = in.toDF("id", "journal")
+      val keys = in.flatMap { case (_, j) => Option(j) }
+        .map(_.trim.toLowerCase(java.util.Locale.ROOT)).filter(_.nonEmpty)
+      CountingMetricsClient.calls.set(0)
+      val out = Enrich.journalMetrics(df, "journal", CountingMetricsClient)
+      val got = rows(out)
+      val want = oracle(df)
+      CountingMetricsClient.calls.get() == keys.distinct.size &&
+        out.schema.map(f => f.name -> f.dataType) ==
+          want.schema.map(f => f.name -> f.dataType) &&
+        got == rows(want)
+    }
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    try Seq("1", "7").foreach { n =>
+      spark.conf.set(key, n)
+      val res = SCTest.check(
+        SCTest.Parameters.default.withMinSuccessfulTests(25), prop)
+      assert(res.passed, s"shuffle partitions $n: ${res.status}")
+    } finally spark.conf.set(key, prev)
+  }
+
   test("llmExtract splats repaired fields, empty input short-circuits (X2)") {
     val df = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta iota"),
       (2L, ""), (3L, null.asInstanceOf[String])).toDF("id", "text")

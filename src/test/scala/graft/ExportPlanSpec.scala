@@ -7,6 +7,8 @@ import org.apache.spark.sql.execution.{ExternalRDDScanExec, FileSourceScanExec,
   QueryExecution, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.FileScanRDD
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -16,8 +18,9 @@ import graft.sources.BibSources
 
 /** Plan-shape guard for the export pipeline (combine → normalizeDoi →
   * priorityDedup → journalMetrics → llmExtract): the executed plan of its
-  * final action reads each source file at most twice and holds no
-  * RDD-backed scan, whose lineage Catalyst can neither see nor reuse. */
+  * final action reads each source file once, dedups in one window, joins
+  * no broadcast dimension and holds no RDD-backed scan, whose lineage
+  * Catalyst can neither see nor reuse. */
 class ExportPlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private val fx = java.nio.file.Paths.get("fixtures").toAbsolutePath.toString
@@ -43,8 +46,8 @@ class ExportPlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         "ExternalRDDScanExec" -> lineageReads(e.rdd)
     }
 
-  test("the export pipeline scans each source at most twice, with no " +
-    "RDD scan leaf") {
+  test("export pipeline: one scan per source, one window, no broadcast, " +
+    "no RDD leaf") {
     def f(name: String) = s"$fx/$name"
     val combined = BibSources.combine(Seq(
       BibSources.pubmed(spark, f("pubmed_sample.txt")),
@@ -82,11 +85,17 @@ class ExportPlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       assert(qe != null, "no QueryExecutionListener event for the collect")
       val leaves = scanLeaves(qe.executedPlan)
       val scans = files.map(n => n -> leaves.map(_._2.count(_.endsWith(n))).sum)
+      val windows = collectWithSubqueries(qe.executedPlan) { case w: WindowExec => w }
+      val broadcasts = collectWithSubqueries(qe.executedPlan) {
+        case b: BroadcastExchangeExec => b }
       info(s"scans per file: ${scans.mkString(", ")}; leaves: " +
-        leaves.map(_._1).groupBy(identity).view.mapValues(_.size).toMap)
+        leaves.map(_._1).groupBy(identity).view.mapValues(_.size).toMap +
+        s"; windows: ${windows.size}; broadcast exchanges: ${broadcasts.size}")
       scans.foreach { case (n, k) =>
-        assert(k >= 1 && k <= 2, s"$n is scanned $k times: ${scans.mkString(", ")}")
+        assert(k === 1, s"$n is scanned $k times: ${scans.mkString(", ")}")
       }
+      assert(windows.size === 1, s"${windows.size} WindowExec nodes")
+      assert(broadcasts.isEmpty, s"${broadcasts.size} BroadcastExchangeExec nodes")
       val rddLeaves = leaves.map(_._1).filter(_ != "FileSourceScanExec")
       assert(rddLeaves.isEmpty, s"RDD scan leaves in the plan: $rddLeaves")
       rs

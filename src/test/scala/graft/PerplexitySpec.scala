@@ -96,4 +96,34 @@ class PerplexitySpec extends SparkTestBase {
     }
     assert(e.getMessage.contains("committed model already exists"))
   }
+
+  test("persistModel refits over a meta/ torn by a killed meta job, and " +
+    "the gate reads the refit model") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_ppl_torn_meta").toString
+    Perplexity.persistModel(docs, col("doc_id"), col("text"),
+      col("src") === "ref", dir)
+    // a meta job killed mid-write leaves only its attempt directory
+    val fs = graft.exec.Artifact.fs(spark, dir)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/meta"), true)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/meta/_temporary/0"))
+    // refit on "c c c": (c,c) ×2, ctx(c) = 2, V = 2
+    val refit = Seq((1L, "c c c", "ref")).toDF("doc_id", "text", "src")
+    Perplexity.persistModel(refit, col("doc_id"), col("text"),
+      col("src") === "ref", dir)
+    val m = spark.read.parquet(s"$dir/model")
+      .as[(String, String, Long, Long)].collect().toSet
+    assert(m === Set(("c", "c", 2L, 2L)))
+    // new model: "c c" ppl 4/3, "a b" ppl 2 (unseen context, 1/V); the
+    // old one would score them 3 and 5/3 and admit neither
+    Perplexity.perplexityGateBatch(dir, s"$dir/out", maxPpl = 1.5)(
+      Seq((10L, "a b"), (11L, "c c")).toDF("doc_id", "text"), 0L)
+    assert(spark.read.parquet(s"$dir/out").select("doc_id").as[Long]
+      .collect().toSeq === Seq(11L))
+    val e = intercept[IllegalArgumentException] {
+      Perplexity.persistModel(refit, col("doc_id"), col("text"),
+        col("src") === "ref", dir)
+    }
+    assert(e.getMessage.contains("committed model already exists"))
+  }
 }

@@ -237,6 +237,35 @@ class WarehouseSpec extends SparkTestBase {
     assert(spark.read.parquet(path).collect().toSet === firstWrite)
   }
 
+  test("incrementalDailyRollup: the base carries its own commit marker, " +
+    "so it stays write-once without the committer's _SUCCESS") {
+    val orders = Seq(("1998-12-30", 10.5), ("1998-12-31", 2.25),
+      ("1999-01-02", 7.0)).toDF("o_orderdate", "o_totalprice")
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_wh_marker").toString + "/base"
+    val cutoff = to_date(lit("1999-01-01"))
+    def parts(): Set[(String, Long)] =
+      new java.io.File(path).listFiles().filter(_.getName.startsWith("part-"))
+        .map(f => f.getName -> f.lastModified()).toSet
+    val key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      Warehouse.incrementalDailyRollup(orders, col("o_orderdate"),
+        col("o_totalprice"), cutoff, path).count()
+      assert(!new java.io.File(path, "_SUCCESS").exists())
+      val first = parts()
+      assert(first.nonEmpty)
+      Thread.sleep(5)
+      Warehouse.incrementalDailyRollup(orders, col("o_orderdate"),
+        col("o_totalprice"), cutoff, path).count()
+      assert(parts() === first, "base was rewritten on the second call")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("dailySpikesFromDaily composes with gapfillDaily: explicit zero " +
     "days enter the trailing baseline as zeros") {
     // key k: 1 event/day on days 1-3, nothing on 4-6, 4 events day 7
