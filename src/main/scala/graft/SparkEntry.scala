@@ -546,8 +546,12 @@ object SparkEntry {
     * scan → normalize key → priority dedup (A3) → stub-metrics keyed-memo
     * enrichment (X1) → grouped aggregate (A2). */
   private def flagship(s: SparkSession, dir: String): DataFrame = {
+    // journalMetrics' typed mapPartitions consumes every input column, so
+    // project to the columns read here or `text` rides every exchange
+    val records = bibRecords(s, dir).select("doc_id", "n_chars", "lang",
+      "source_type", "key", "priority")
     val deduped = Dedup.priorityDedup(
-      bibRecords(s, dir), col("key"), col("priority"), col("doc_id"))
+      records, col("key"), col("priority"), col("doc_id"))
     val enriched =
       Enrich.journalMetrics(deduped, "lang", Enrich.StubMetricsClient)
     enriched.groupBy("source_type")

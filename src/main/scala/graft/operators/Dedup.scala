@@ -1328,8 +1328,8 @@ object Dedup {
   }
 
   /** One microbatch of the CONTINUOUS ingestion dedup gate — the shape a
-    * 100 TB pipeline actually runs, as a `foreachBatch` body (see
-    * `EventStreams.startIngestDedupGate` for the stream wiring):
+    * 100 TB pipeline actually runs, as a `foreachBatch` body (wire it
+    * with `EventStreams.startGate(stream, ckpt)(ingestGateBatch(...))`):
     *
     *   1. probe the persisted corpus index (`probePersistedIndex`) and
     *      drop batch docs near-duplicating the corpus — batch×corpus

@@ -12,7 +12,8 @@ import graft.functions.JsonRepair
   * reference whose values come from outside the data:
   *
   *   X1 journal-metrics enrichment (`journal_metrics.py`): one keyed
-  *      exchange on the journal, then a per-partition memo with throttle.
+  *      exchange on the journal, then a per-partition memo; the client's
+  *      own throttle and retry (`HttpClients.HttpConfig`) pace the fetches.
   *   X2 per-row LLM extraction (`llm_api.py`): per-abstract completion,
   *      bounded concurrency, retries, JSON-repair of the response.
   *
@@ -73,40 +74,6 @@ object Enrich {
           val (ifact, q) = client.fetch(j); Seq(ifact, q) })
     }
   }
-
-  /** Decorator adding the reference's production behaviors to any
-    * MetricsClient: a token bucket (metrics API budget: 2 req/s per
-    * client, `journal_metrics.py:83-90`) and exponential-backoff retries
-    * (`llm_api.py:178-201`). The bucket is @transient-lazy, so every
-    * deserialized task copy owns its own — cluster-wide rate =
-    * `workParallelism` × ratePerSec (`spark.sql.shuffle.partitions`
-    * sizes X1's fetch stage). */
-  class ThrottledRetryingClient(inner: MetricsClient,
-                                ratePerSec: Double = 2.0,
-                                maxRetries: Int = 3,
-                                clock: External.Clock = External.SystemClock)
-      extends MetricsClient {
-    @transient private lazy val bucket =
-      new External.TokenBucket(ratePerSec, burst = 1, clock)
-    def fetch(journal: String): (Double, String) =
-      // acquire INSIDE the retried thunk: a retry is a fresh request
-      // against the service budget, so it must pay for its own token
-      External.retryWithBackoff(maxRetries, baseMillis = 1000, clock) {
-        bucket.acquire()
-        inner.fetch(journal)
-      }
-  }
-
-  /** X1 with throttle + retry: `journalMetrics` with the client wrapped
-    * in the decorator — one code path for the join shape. */
-  def journalMetricsThrottled(df: DataFrame, journalCol: String,
-                              client: MetricsClient,
-                              ratePerSec: Double = 2.0,
-                              maxRetries: Int = 3,
-                              clock: External.Clock = External.SystemClock)
-      : DataFrame =
-    journalMetrics(df, journalCol,
-      new ThrottledRetryingClient(client, ratePerSec, maxRetries, clock))
 
   /** X2 client: prompt (built from an abstract) → raw LLM response text. */
   trait LlmClient extends Serializable {

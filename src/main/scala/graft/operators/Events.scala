@@ -7,9 +7,12 @@ import org.apache.spark.sql.functions._
 /** Event-time windowing over the `events` table (SURVEY.md §2.10).
   *
   * Batch-mode first (identical semantics, DuckDB-verifiable); the same
-  * expressions run unchanged under Structured Streaming with a watermark
-  * (see graft.streaming.EventStreams) — `window`/`session_window` are
-  * event-time functions, not streaming-only constructs.
+  * operators run unchanged on a stream with a watermark in front,
+  * `tumbling(stream.withWatermark("ts", "10 minutes"))` —
+  * `window`/`session_window` are event-time functions, not
+  * streaming-only constructs. In append mode a window (or session) is
+  * emitted once, when the watermark passes its end; the watermark bounds
+  * the live state per group.
   *
   * Scale: each is one shuffle keyed on (window, group) — high cardinality,
   * AQE-coalesced; partial aggregation happens map-side.

@@ -94,12 +94,12 @@ object HttpClients {
 
   private val mapper = new ObjectMapper()
 
-  /** Shared throttle + retry envelope (a retry is a fresh request
-    * against the service budget, so `acquire` runs INSIDE the retried
-    * thunk — same rule as ThrottledRetryingClient). Only transient
-    * failures retry: 5xx, 408 (timeout), 429 (throttled — the
-    * reference's RateLimitError path, exponential 2^attempt sleeps,
-    * `llm_api.py:348-357`), and transport errors. Other 4xx (bad key,
+  /** The one throttle + retry envelope of both clients (a retry is a
+    * fresh request against the service budget, so `acquire` runs INSIDE
+    * the retried thunk). Only transient failures retry: 5xx, 408
+    * (timeout), 429 (throttled — the reference's RateLimitError path,
+    * exponential 2^attempt sleeps, `llm_api.py:348-357`), and transport
+    * errors. Other 4xx (bad key,
     * bad request, not found) can never succeed on retry and fail fast
     * instead of burning the exponential-backoff budget per row. */
   private def request(transport: HttpTransport, acquire: () => Unit,

@@ -1581,8 +1581,7 @@ object Similarity {
 
   /** One microbatch of the CONTINUOUS semantic ingestion gate — the
     * embedding-side mirror of `Dedup.ingestGateBatch`, and the
-    * `foreachBatch` body `EventStreams.startSemanticIngestGate` wires
-    * to a stream:
+    * `foreachBatch` body `EventStreams.startGate` wires to a stream:
     *
     *   1. probe the persisted index (`probeSemanticIndex`) and drop
     *      batch vectors near-duplicating the corpus — batch×cluster

@@ -515,8 +515,8 @@ object Warehouse {
   }
 
   /** One microbatch of the CONTINUOUS CDC gate — [[applyCdc]] run as a
-    * `foreachBatch` body over a VERSIONED snapshot table (see
-    * `EventStreams.startCdcGate` for the stream wiring): plain parquet
+    * `foreachBatch` body over a VERSIONED snapshot table (wire it with
+    * `EventStreams.startGate(stream, ckpt)(cdcGateBatch(...))`): plain parquet
     * made safely replayable without a transactional table format.
     *
     * Layout: `tableDir/v=<epoch>/` holds the FULL snapshot as of that

@@ -107,20 +107,18 @@ object Excel {
     * separate_sheets mode), sheets sorted by name; otherwise a single
     * "data" sheet.
     *
-    * `styled = true` (the default — the reference's sink always styles,
-    * `excel_formatter.py:202-345`) adds the presentation layer on top of
-    * the identical data plane: bold-white-on-blue centered header with a
-    * frozen first row, per-column-name widths (default 20), thin borders
-    * and top-aligned wrapped data cells, content-derived row heights
-    * (15 per started 100 chars above the first, clamped to [20, 150];
-    * header fixed at 25), `doi_link` cells hyperlinked to their own
-    * value, and `title` cells hyperlinked by the PubMed > WOS >
-    * ScienceDirect > DOI priority — all emitted as plain OOXML
-    * (styles.xml + sheetViews/cols/hyperlinks + per-sheet rels), no
-    * spreadsheet library. `styled = false` writes the bare data plane. */
+    * Always styled, like the reference's sink (`excel_formatter.py:202-345`):
+    * a presentation layer on top of the data plane — bold-white-on-blue
+    * centered header with a frozen first row, per-column-name widths
+    * (default 20), thin borders and top-aligned wrapped data cells,
+    * content-derived row heights (15 per started 100 chars above the
+    * first, clamped to [20, 150]; header fixed at 25), `doi_link` cells
+    * hyperlinked to their own value, and `title` cells hyperlinked by
+    * the PubMed > WOS > ScienceDirect > DOI priority — all emitted as
+    * plain OOXML (styles.xml + sheetViews/cols/hyperlinks + per-sheet
+    * rels), no spreadsheet library. */
   def writeXlsx(df: DataFrame, path: String,
-                sheetBy: Option[String] = None,
-                styled: Boolean = true): Unit = {
+                sheetBy: Option[String] = None): Unit = {
     val cols = df.columns.filterNot(sheetBy.contains)
     val rows = df.limit(excelMaxRows + 1).collect()
     // the FORMAT's limit is per worksheet; this sink ADDITIONALLY caps
@@ -184,9 +182,7 @@ object Excel {
           """<Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/>""" +
           """<Default Extension="xml" ContentType="application/xml"/>""" +
           """<Override PartName="/xl/workbook.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>""" +
-          (if (styled)
-            """<Override PartName="/xl/styles.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.styles+xml"/>"""
-          else "") +
+          """<Override PartName="/xl/styles.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.styles+xml"/>""" +
           (1 to n).map(i =>
             s"""<Override PartName="/xl/worksheets/sheet$i.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>""")
             .mkString + "</Types>")
@@ -207,10 +203,9 @@ object Excel {
           (1 to n).map(i =>
             s"""<Relationship Id="rId$i" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet$i.xml"/>""")
             .mkString +
-          (if (styled)
-            s"""<Relationship Id="rId${n + 1}" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/styles" Target="styles.xml"/>"""
-          else "") + "</Relationships>")
-      if (styled) entry("xl/styles.xml", stylesXml)
+          s"""<Relationship Id="rId${n + 1}" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/styles" Target="styles.xml"/>""" +
+          "</Relationships>")
+      entry("xl/styles.xml", stylesXml)
       sheets.zipWithIndex.foreach { case ((_, sheetRows), si) =>
         // (cellRef, url) hyperlinks for this sheet, reference semantics:
         // doi_link → its own value; title → first non-empty of the
@@ -223,7 +218,7 @@ object Excel {
             if (r.isNullAt(src)) None
             else Some(r.get(src).toString).filter(_.nonEmpty)
           }
-        if (styled) sheetRows.zipWithIndex.foreach { case (r, ri) =>
+        sheetRows.zipWithIndex.foreach { case (r, ri) =>
           strAt(r, doiLinkPos).foreach(u =>
             links += s"${colRef(doiLinkPos)}${ri + 2}" -> u)
           // reference parity (excel_formatter.py:322-343): the title
@@ -237,47 +232,40 @@ object Excel {
         val sb = new StringBuilder
         sb ++= """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>"""
         sb ++= """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">"""
-        if (styled) {
-          // frozen header row (reference: ws.freeze_panes = "A2")
-          sb ++= """<sheetViews><sheetView workbookViewId="0"><pane ySplit="1" topLeftCell="A2" activePane="bottomLeft" state="frozen"/></sheetView></sheetViews>"""
-          sb ++= "<cols>"
-          cols.zipWithIndex.foreach { case (c, ci) =>
-            val w = columnWidths.getOrElse(c, 20)
-            sb ++= s"""<col min="${ci + 1}" max="${ci + 1}" width="$w" customWidth="1"/>"""
-          }
-          sb ++= "</cols>"
-        }
-        sb ++= "<sheetData>"
-        sb ++= (if (styled) """<row r="1" ht="25" customHeight="1">"""
-          else "<row r=\"1\">")
-        val hs = if (styled) s""" s="$headerStyle"""" else ""
+        // frozen header row (reference: ws.freeze_panes = "A2")
+        sb ++= """<sheetViews><sheetView workbookViewId="0"><pane ySplit="1" topLeftCell="A2" activePane="bottomLeft" state="frozen"/></sheetView></sheetViews>"""
+        sb ++= "<cols>"
         cols.zipWithIndex.foreach { case (c, ci) =>
-          sb ++= s"""<c r="${colRef(ci)}1"$hs t="inlineStr"><is><t>${xmlEscape(c)}</t></is></c>"""
+          val w = columnWidths.getOrElse(c, 20)
+          sb ++= s"""<col min="${ci + 1}" max="${ci + 1}" width="$w" customWidth="1"/>"""
+        }
+        sb ++= "</cols>"
+        sb ++= "<sheetData>"
+        sb ++= """<row r="1" ht="25" customHeight="1">"""
+        cols.zipWithIndex.foreach { case (c, ci) =>
+          sb ++= s"""<c r="${colRef(ci)}1" s="$headerStyle" t="inlineStr"><is><t>${xmlEscape(c)}</t></is></c>"""
         }
         sb ++= "</row>"
         sheetRows.zipWithIndex.foreach { case (r, ri) =>
-          if (styled) {
-            // reference row heights: 15 per started 100 chars beyond the
-            // first, capped at +100, clamped to [20, 150]; rows with no
-            // string content keep the default height
-            val contentH = colIdxs.map { src =>
-              if (r.isNullAt(src)) 0
-              else r.get(src) match {
-                case s: String =>
-                  15 + math.min(s.length / 100 * 15, 100)
-                case _ => 0
-              }
-            }.max
-            if (contentH > 0) {
-              val h = math.min(math.max(contentH, 20), 150)
-              sb ++= s"""<row r="${ri + 2}" ht="$h" customHeight="1">"""
-            } else sb ++= s"""<row r="${ri + 2}">"""
+          // reference row heights: 15 per started 100 chars beyond the
+          // first, capped at +100, clamped to [20, 150]; rows with no
+          // string content keep the default height
+          val contentH = colIdxs.map { src =>
+            if (r.isNullAt(src)) 0
+            else r.get(src) match {
+              case s: String =>
+                15 + math.min(s.length / 100 * 15, 100)
+              case _ => 0
+            }
+          }.max
+          if (contentH > 0) {
+            val h = math.min(math.max(contentH, 20), 150)
+            sb ++= s"""<row r="${ri + 2}" ht="$h" customHeight="1">"""
           } else sb ++= s"""<row r="${ri + 2}">"""
           colIdxs.zipWithIndex.foreach { case (src, ci) =>
             val ref = s"${colRef(ci)}${ri + 2}"
             val st =
-              if (!styled) ""
-              else if (linkedRefs(ref)) s""" s="$linkStyle""""
+              if (linkedRefs(ref)) s""" s="$linkStyle""""
               else s""" s="$dataStyle""""
             if (!r.isNullAt(src)) {
               // NaN/Infinity are not valid OOXML numerics (Excel would
@@ -294,7 +282,7 @@ object Excel {
                 case other =>
                   sb ++= s"""<c r="$ref"$st t="inlineStr"><is><t>${xmlEscape(other.toString)}</t></is></c>"""
               }
-            } else if (styled) {
+            } else {
               // the reference borders every cell in the used range, so
               // empty cells carry the style too (style-only, no value)
               sb ++= s"""<c r="$ref"$st/>"""

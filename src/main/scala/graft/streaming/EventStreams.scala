@@ -4,16 +4,20 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery}
 
 /** Structured Streaming forms of the event-time operators (SURVEY.md §2.10
   * ST1/ST4/ST5). The reference has no streaming (`app.py`'s poll loop is
   * the closest analogue); these are the BASELINE.json scale extensions.
   *
-  * The batch operators in graft.operators.Events use the same event-time
-  * `window`/`session_window` expressions — Structured Streaming just adds
-  * a watermark for state eviction. That is the point of the design: one
-  * expression vocabulary for both modes.
+  * One expression vocabulary for both modes: the batch window aggregates
+  * in graft.operators.Events ARE the streaming ones — a stream puts the
+  * watermark in front, `Events.tumbling(s.withWatermark("ts", "10
+  * minutes"))` (likewise `sliding` and `sessions`; key dedup is the
+  * built-in `withWatermark(...).dropDuplicatesWithinWatermark(key)`).
+  * This object holds only what streaming adds: operators with no batch
+  * twin, explicit state, and the exactly-once gate wiring (`startGate`).
   *
   * Scale: state is keyed on (window, group) — high cardinality, uniformly
   * distributed; the watermark bounds state size to (watermark horizon /
@@ -21,19 +25,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * exactly like the reference's batch semantics would never see them.
   */
 object EventStreams {
-
-  /** ST1 + ST4 — watermarked tumbling-window aggregate over a stream with
-    * the events schema (ts, event_type, value). Append-mode capable:
-    * windows finalize once the watermark passes their end. */
-  def tumblingCounts(stream: DataFrame, width: String = "1 hour",
-                     watermark: String = "10 minutes"): DataFrame =
-    stream
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), width).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("n_events"), col("sum_value"))
 
   /** Watermarked per-window DISTINCT sketches: the HLL aggregate run as
     * streaming state — `count(DISTINCT)` is unsupported in streaming
@@ -55,47 +46,16 @@ object EventStreams {
         graft.functions.SketchAggregates.hllEstimate(col("sk"), hexChars)
           .as("n_est"))
 
-  /** ST2 + ST4 — watermarked SLIDING-window aggregate: identical
-    * expression to the batch `Events.sliding`, plus the watermark. Each
-    * event lands in width/slide windows; state per group is bounded to
-    * (watermark horizon + width) / slide live windows. */
-  def slidingCounts(stream: DataFrame, width: String = "1 hour",
-                    slide: String = "15 minutes",
-                    watermark: String = "10 minutes"): DataFrame =
-    stream
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), width, slide).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("n_events"), col("sum_value"))
-
-  /** ST3 + ST4 — watermarked SESSION-window aggregate: the built-in
-    * `session_window` under streaming merges/extends open sessions in the
-    * state store as events arrive and finalizes a session once the
-    * watermark passes its end (last event + gap). Same expression as the
-    * batch `Events.sessions`; state is O(open sessions per user), evicted
-    * by the watermark. */
-  def sessionCounts(stream: DataFrame, gap: String = "30 minutes",
-                    watermark: String = "10 minutes"): DataFrame =
-    stream
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap).as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
-      .select(col("user_id"), col("w.start").as("session_start"),
-        col("w.end").as("session_end"), col("n_events"), col("sum_value"))
-
   /** Stream-STATIC enrichment join + windowed aggregate: the streaming
     * form of the J1 broadcast enrichment (reference `main.py:369-410`
     * joins fetched journal metrics onto the batch frame; a production
     * event stream joins its dimension tables the same way). The static
     * side is broadcast — no state, no stream-stream complexity — and the
     * downstream tumbling aggregate groups by the ENRICHED column, which
-    * is the part a plain `tumblingCounts` cannot express.
+    * is the part a plain watermarked `Events.tumbling` cannot express.
     *
     * Scale: stream-static BHJ re-broadcasts only on dim refresh; state is
-    * the same watermark-bounded window store as `tumblingCounts`. Events
+    * the same watermark-bounded window store as `Events.tumbling`. Events
     * whose key misses the dim keep flowing with a null category (left
     * join) — an inner join would silently drop them from the counts.
     *
@@ -193,15 +153,6 @@ object EventStreams {
         col("n_matched").cast("double") / col("n_sh").cast("double"))
   }
 
-  /** ST5 — stateful streaming dedup: at-most-once per event_id within the
-    * watermark horizon (the streaming form of the reference's batch DOI
-    * dedup, main.py:101-166 — state bounded instead of a global shuffle). */
-  def dedupByKey(stream: DataFrame, keyCol: String = "event_id",
-                 watermark: String = "10 minutes"): DataFrame =
-    stream
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(keyCol)
-
   // ---- exactly-once completion: idempotent foreachBatch sink ---------------
 
   /** The idempotent `foreachBatch` body completing the windowed
@@ -225,203 +176,24 @@ object EventStreams {
       graft.exec.Artifact.overwritePartitions(batch, "window_start", path)
   }
 
-  /** CONTINUOUS ingestion dedup: wire a document stream through
-    * `Dedup.ingestGateBatch` — every microbatch probes the persisted
-    * corpus index, drops corpus near-dups and batch-internal near-dups,
-    * and appends the survivors (docs + index frames) under its epoch's
-    * partition. The corpus/index at `corpusPath`/`indexPath` are plain
-    * partitioned parquet, readable mid-stream. This is the streaming
-    * closure of the incremental-dedup contract: detect → decide → admit,
-    * continuously, with exactly-once corpus state. */
-  def startIngestDedupGate(stream: DataFrame, indexPath: String,
-                           corpusPath: String, checkpoint: String,
-                           idCol: String = "doc_id",
-                           textCol: String = "text",
-                           threshold: Double = 0.6)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+  /** Start a continuous gate: run `body` — one of the operators'
+    * `*GateBatch` functions, applied to everything but the microbatch,
+    * e.g. `startGate(s, ckpt)(Dedup.ingestGateBatch(idx, corpus))` — on
+    * every microbatch of `stream`, with offsets tracked in `checkpoint`.
+    *
+    * Why the gate's table state is exactly-once: Structured Streaming runs
+    * a `foreachBatch` body AT-LEAST-once per epoch (a crash between the
+    * body's write and the offset commit replays the epoch), and every
+    * `*GateBatch` writes its epoch idempotently — under its own epoch
+    * partition, reading the index without that partition — so a replay
+    * rewrites what the first run wrote. At-least-once replay × idempotent
+    * epoch write = exactly-once table state. */
+  def startGate(stream: DataFrame, checkpoint: String)
+               (body: (DataFrame, Long) => Unit): StreamingQuery =
     stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch(graft.operators.Dedup.ingestGateBatch(
-        indexPath, corpusPath, idCol, textCol, threshold) _)
-      .start()
-
-  /** Continuous CDC snapshot maintenance — `Warehouse.cdcGateBatch` per
-    * microbatch: each epoch folds its I/U/D feed into the newest
-    * committed snapshot version and commits the next FULL version under
-    * `tableDir/v=<epoch>/` (marker-last, self-excluding base read →
-    * exactly-once even for post-commit replays). Readers use
-    * `Warehouse.readSnapshot` mid-stream; `Warehouse.compactSnapshots`
-    * bounds the version count. */
-  def startCdcGate(stream: DataFrame, tableDir: String, checkpoint: String,
-                   keyCols: Seq[String], payloadCols: Seq[String],
-                   ord: org.apache.spark.sql.Column,
-                   tiebreak: org.apache.spark.sql.Column,
-                   op: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(graft.operators.Warehouse.cdcGateBatch(
-        tableDir, keyCols, payloadCols, ord, tiebreak, op) _)
-      .start()
-
-  /** Continuous distinct counting — `Warehouse.uniquesGateBatch` per
-    * microbatch: each epoch max-merges its per-day HLL registers into
-    * the newest committed snapshot and commits the next full version
-    * (marker-last). The fold is IDEMPOTENT at the item level (max of a
-    * max), so at-least-once replay — even with source-duplicated rows —
-    * rewrites its version register-identically with no epoch
-    * bookkeeping. Readers answer any date range via
-    * `Warehouse.uniquesOverRange` with zero fact scans. */
-  def startUniquesGate(stream: DataFrame, tableDir: String,
-                       checkpoint: String, hexChars: Int,
-                       dayCol: String, itemCol: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(graft.operators.Warehouse.uniquesGateBatch(
-        tableDir, hexChars, dayCol, itemCol) _)
-      .start()
-
-  /** Continuous SEMANTIC ingestion gate — the embedding-side sibling of
-    * `startIngestDedupGate`: each microbatch of (id, embedding) rows
-    * probes the persisted k-means index (`Similarity.semanticGateBatch`
-    * — centroids trained once at bootstrap, never per-batch), drops
-    * vectors near-duplicating the corpus or each other, and appends the
-    * admitted ones to the cluster-keyed index. Exactly-once by the same
-    * argument as the text gate: at-least-once replay × dynamic
-    * partition overwrite × everything-self-matches. */
-  def startSemanticIngestGate(stream: DataFrame, indexPath: String,
-                              checkpoint: String,
-                              kClusters: Int, iters: Int,
-                              threshold: Double,
-                              idCol: String = "vec_id",
-                              embCol: String = "embedding")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(graft.operators.Similarity.semanticGateBatch(
-        indexPath, kClusters, iters, threshold, idCol, embCol) _)
-      .start()
-
-  /** Continuous CCNet-style quality gate: each microbatch of documents
-    * is scored against the FROZEN persisted bigram model
-    * (`Perplexity.persistModel` — fit once, never per batch) and rows
-    * with ppl ≤ `maxPpl` are appended under their epoch partition.
-    * Exactly-once by the `windowSinkBatch` argument. */
-  def startPerplexityGate(stream: DataFrame, modelPath: String,
-                          outPath: String, checkpoint: String,
-                          maxPpl: Double, idCol: String = "doc_id",
-                          textCol: String = "text")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(graft.operators.Perplexity.perplexityGateBatch(
-        modelPath, outPath, maxPpl, idCol, textCol) _)
-      .start()
-
-  /** Continuous DSIR-style importance gate: microbatches scored against
-    * the frozen LLR table (`Importance.persistLlrModel`; ≤ buckets rows,
-    * broadcast per batch), rows with logw ≥ `minLogw` admitted under
-    * their epoch partition. */
-  def startImportanceGate(stream: DataFrame, modelPath: String,
-                          outPath: String, checkpoint: String,
-                          minLogw: Double, idCol: String = "doc_id",
-                          textCol: String = "text")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(graft.operators.Importance.importanceGateBatch(
-        modelPath, outPath, minLogw, idCol, textCol) _)
-      .start()
-
-  /** Continuous curation gate: the stateless gopher rule pack plus
-    * persisted exact-fingerprint corpus dedup (`Dedup.curationGateBatch`)
-    * — `q_pipeline_curation`'s gate+dedup stages as a stream; the
-    * split/stat stages are projections a consumer runs over the corpus.
-    * The rule bounds pass through to the gate (and into its meta
-    * pinning): a stream meant to mirror a batch pipeline must be
-    * started with THAT pipeline's bounds — q_pipeline_curation, for
-    * example, pins minAvgWordLen = 4.0 over the synthetic corpus while
-    * the operator default stays at Gopher's published 3.0. */
-  def startCurationGate(stream: DataFrame, indexPath: String,
-                        corpusPath: String, checkpoint: String,
-                        idCol: String = "doc_id", textCol: String = "text",
-                        minWords: Int = 20, maxWords: Int = 90,
-                        minAvgWordLen: Double = 3.0,
-                        maxAvgWordLen: Double = 10.0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(graft.operators.Dedup.curationGateBatch(
-        indexPath, corpusPath, idCol, textCol, minWords, maxWords,
-        minAvgWordLen, maxAvgWordLen) _)
-      .start()
-
-  /** Continuous passage-dedup gate: every microbatch runs
-    * `Dedup.passageGateBatch` — corpus-covered and within-batch
-    * repeated passages are EXCISED from the arriving text (docs
-    * rewritten, not dropped), novel window hashes fold into the
-    * epoch-partitioned index, replay-safe per the self-excluding
-    * index read documented there. */
-  def startPassageGate(stream: DataFrame, indexPath: String,
-                       corpusPath: String, checkpoint: String,
-                       idCol: String = "doc_id", textCol: String = "text",
-                       windowWords: Int = 6, strideWords: Int = 1)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(graft.operators.Dedup.passageGateBatch(
-        indexPath, corpusPath, idCol, textCol, windowWords,
-        strideWords) _)
-      .start()
-
-  /** Continuous boilerplate-removal gate: every microbatch runs
-    * `Dedup.boilerplateGateBatch` — spans whose summed corpus+batch
-    * document frequency reaches the threshold are excised from the
-    * arriving text, the batch's per-span counts fold into the
-    * epoch-partitioned count index, replay-safe per the self-excluding
-    * summed index read documented there. */
-  def startBoilerplateGate(stream: DataFrame, indexPath: String,
-                           corpusPath: String, checkpoint: String,
-                           idCol: String = "doc_id",
-                           textCol: String = "text",
-                           chunkWords: Int = 8, minDocs: Int = 4)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(graft.operators.Dedup.boilerplateGateBatch(
-        indexPath, corpusPath, idCol, textCol, chunkWords,
-        minDocs) _)
-      .start()
-
-  /** Continuous entity resolution: every microbatch runs
-    * `EntityResolution.entityGateBatch` — new records adopt matched
-    * persisted entities or mint new ones, assignments land in the
-    * epoch-partitioned entity index, replay-safe per the
-    * self-excluding index read documented there. */
-  def startEntityGate(stream: DataFrame, indexPath: String,
-                      checkpoint: String,
-                      block: org.apache.spark.sql.Column =>
-                        org.apache.spark.sql.Column,
-                      idCol: String = "id", nameCol: String = "name",
-                      maxDistNum: Int = 1, maxDistDen: Int = 8,
-                      maxBlock: Int = 1000)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(graft.operators.EntityResolution.entityGateBatch(
-        indexPath, idCol, nameCol, block, maxDistNum, maxDistDen,
-        maxBlock) _)
+      .foreachBatch(body)
       .start()
 
   // ---- custom state: flatMapGroupsWithState sessionization -----------------

@@ -176,7 +176,7 @@ class BibSourcesSpec extends SparkTestBase {
       Seq(("T1", "Abs", "J", "10.1/x", "2024", "WOS:1", "A, B; C, D"))
         .toDF("Article Title", "Abstract", "Source Title", "DOI",
           "Publication Year", "UT (Unique WOS ID)", "Author Full Names"),
-      s"$dir/export.xlsx", styled = false)
+      s"$dir/export.xlsx")
     val df = BibSources.readAuto(spark, s"$dir/export.xlsx", "wos")
     val r = df.head()
     assert(r.getAs[String]("title") === "T1")

@@ -181,9 +181,10 @@ class EntityResolutionSpec extends SparkTestBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_er_stream").toString
     val mem = MemoryStream[(Long, String)]
-    val q = graft.streaming.EventStreams.startEntityGate(
-      mem.toDF.toDF("id", "name"), s"$dir/idx", s"$dir/ckpt",
-      oneBlock, maxDistNum = 1, maxDistDen = 4)
+    val q = graft.streaming.EventStreams.startGate(
+      mem.toDF.toDF("id", "name"), s"$dir/ckpt")(
+      EntityResolution.entityGateBatch(s"$dir/idx", "id", "name", oneBlock,
+        maxDistNum = 1, maxDistDen = 4))
     try {
       mem.addData(Seq(1L -> "jane doe", 3L -> "bob stone"): _*)
       q.processAllAvailable()

@@ -1,8 +1,9 @@
 package graft
 
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
-import graft.operators.{Enrich, Events}
+import graft.operators.{Enrich, Events, HttpClients}
 
 /** Singleton so executor-side deserialization lands on the same instance
   * (local mode = one JVM) and the call count is observable from the test. */
@@ -11,6 +12,27 @@ object CountingMetricsClient extends Enrich.MetricsClient {
   def fetch(j: String): (Double, String) = {
     calls.incrementAndGet()
     Enrich.StubMetricsClient.fetch(j)
+  }
+}
+
+/** Metrics endpoint stand-in: the first request for each journal answers
+  * 503, the second answers the stub's values. */
+object FlakyMetricsTransport extends HttpClients.HttpTransport {
+  val sends = new java.util.concurrent.atomic.AtomicInteger(0)
+  val attempts = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+  val served = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+  def reset(): Unit = { sends.set(0); attempts.clear(); served.clear() }
+  def send(method: String, url: String, headers: Map[String, String],
+           body: Option[String], timeoutMillis: Int): (Int, String) = {
+    sends.incrementAndGet()
+    val j = java.net.URLDecoder.decode(
+      url.substring(url.indexOf("publication=") + 12), "UTF-8")
+    if (attempts.merge(j, 1, _ + _) == 1) (503, "busy")
+    else {
+      served.merge(j, 1, _ + _)
+      val (ifact, q) = Enrich.StubMetricsClient.fetch(j)
+      (200, s"""{"impact_factor": $ifact, "quartile": "$q"}""")
+    }
   }
 }
 
@@ -177,13 +199,21 @@ class EventsEnrichSpec extends SparkTestBase {
   }
 
   test("journalMetricsThrottled: bucket + retry wrap the per-key fetch") {
-    CountingMetricsClient.calls.set(0)
+    // throttle + retry live in the HTTP client's config; the fake
+    // transport fails each key's first request with a 503
+    FlakyMetricsTransport.reset()
     val df = Seq(("a", "J One"), ("b", "J Two"), ("c", "J One"))
       .toDF("id", "journal")
-    val out = Enrich.journalMetricsThrottled(df, "journal",
-      CountingMetricsClient, ratePerSec = 1000.0)
+    val client = new HttpClients.HttpMetricsClient(
+      HttpClients.HttpConfig("http://metrics.invalid/m", ratePerSec = 1000.0,
+        retryBaseMillis = 1),
+      FlakyMetricsTransport)
+    val out = Enrich.journalMetrics(df, "journal", client)
     assert(out.count() === 3)
-    assert(CountingMetricsClient.calls.get() === 2) // distinct keys only
+    // distinct keys only: one successful fetch per key, after one retry
+    assert(FlakyMetricsTransport.served.asScala.toMap ===
+      Map("j one" -> 1, "j two" -> 1))
+    assert(FlakyMetricsTransport.sends.get() === 4)
     assert(out.where(col("impact_factor").isNotNull).count() === 3)
   }
 

@@ -271,12 +271,6 @@ class ExcelSpec extends SparkTestBase {
       .orderBy("title").collect() // nulls first
     assert(back.map(_.getString(0)).toSeq === Seq(null, "A", "B", "C"))
     assert(back(3).isNullAt(1) && back(3).isNullAt(2))
-    // unstyled: bare data plane, no styles part, no hyperlinks
-    Excel.writeXlsx(df, s"$dir/u.xlsx", styled = false)
-    val uparts = zipEntries(s"$dir/u.xlsx")
-    assert(!uparts.contains("xl/styles.xml"))
-    assert(!uparts.keys.exists(_.contains("sheet1.xml.rels")))
-    assert(!uparts("xl/worksheets/sheet1.xml").contains("hyperlink"))
   }
 
   test("readXlsx: a formula cell surfaces its CACHED <v> value, never " +

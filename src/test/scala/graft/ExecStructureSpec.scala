@@ -6,12 +6,14 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Checkpoint lifetimes and on-disk commits each have one owner: only
-  * `graft/exec/Exec.scala` may checkpoint a frame or release one, and
-  * only `graft/exec/Artifact.scala` may name a commit marker, a
+/** Checkpoint lifetimes, on-disk commits and stream wiring each have one
+  * owner: only `graft/exec/Exec.scala` may checkpoint a frame or release
+  * one, only `graft/exec/Artifact.scala` may name a commit marker, a
   * committer's success file, a dynamic-partition overwrite or a
-  * write-once meta mode, so an operator cannot hand-write either
-  * protocol again. Deleted options cannot return anywhere. */
+  * write-once meta mode, and only `graft/streaming/EventStreams.scala`
+  * may start a stream writer, so an operator cannot hand-write any of
+  * these protocols again. Deleted options and pass-through wrappers
+  * cannot return anywhere. */
 class ExecStructureSpec extends AnyFunSuite {
 
   /** owner file -> tokens no other main source may contain */
@@ -21,10 +23,18 @@ class ExecStructureSpec extends AnyFunSuite {
         "workTaskFactor"),
     "graft/exec/Artifact.scala" ->
       Seq("_GRAFT_COMMITTED", "_SUCCESS", "partitionOverwriteMode",
-        "errorifexists"))
+        "errorifexists"),
+    "graft/streaming/EventStreams.scala" ->
+      Seq("writeStream", "checkpointLocation"))
 
-  /** tokens of deleted options, forbidden in every main source */
-  private val deleted = Seq("broadcastBatch", "AdmittedPinning")
+  /** tokens of deleted options and wrappers, forbidden in every main
+    * source */
+  private val deleted = Seq("broadcastBatch", "AdmittedPinning",
+    "startIngestDedupGate", "startCdcGate", "startUniquesGate",
+    "startSemanticIngestGate", "startPerplexityGate", "startImportanceGate",
+    "startCurationGate", "startPassageGate", "startBoilerplateGate",
+    "startEntityGate", "tumblingCounts", "slidingCounts", "sessionCounts",
+    "dedupByKey", "journalMetricsThrottled", "ThrottledRetryingClient")
 
   test("checkpoint calls live only in graft.exec.Exec") {
     val root = Paths.get("src/main/scala")

@@ -231,9 +231,9 @@ class HllSpec extends SparkTestBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_hll_stream").toString
     val mem = MemoryStream[(String, String)]
-    val q = EventStreams.startUniquesGate(
-      mem.toDF.toDF("day", "user"),
-      s"$dir/table", s"$dir/ckpt", hex, "day", "user")
+    val q = EventStreams.startGate(mem.toDF.toDF("day", "user"),
+      s"$dir/ckpt")(Warehouse.uniquesGateBatch(s"$dir/table", hex, "day",
+      "user"))
     try {
       mem.addData(("2024-02-01", "u1"), ("2024-02-01", "u2"))
       q.processAllAvailable()

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.operators.{Classify, Importance, Perplexity}
+import graft.operators.{Classify, Dedup, Importance, Perplexity}
 import graft.streaming.EventStreams
 
 /** Streaming closure of the round-9 quality gates: the persisted
@@ -44,9 +44,9 @@ class QualityGateStreamSpec extends SparkTestBase {
     val maxPpl = (scores(1L) max scores(3L)) * 1.001
     val expected = scores.filter(_._2 <= maxPpl).keySet
     val mem = MemoryStream[(Long, String)]
-    val q = EventStreams.startPerplexityGate(
-      mem.toDF.toDF("doc_id", "text"), s"$dir/model", s"$dir/out",
-      s"$dir/ckpt", maxPpl = maxPpl)
+    val q = EventStreams.startGate(mem.toDF.toDF("doc_id", "text"),
+      s"$dir/ckpt")(Perplexity.perplexityGateBatch(s"$dir/model",
+      s"$dir/out", maxPpl = maxPpl))
     try {
       mem.addData(batch1: _*)
       q.processAllAvailable()
@@ -108,9 +108,9 @@ class QualityGateStreamSpec extends SparkTestBase {
     // stream docs are scored under it frozen — expected membership is
     // anything with positive target-affinity
     val mem = MemoryStream[(Long, String)]
-    val q = EventStreams.startImportanceGate(
-      mem.toDF.toDF("doc_id", "text"), s"$dir/model", s"$dir/out",
-      s"$dir/ckpt", minLogw = 0.0)
+    val q = EventStreams.startGate(mem.toDF.toDF("doc_id", "text"),
+      s"$dir/ckpt")(Importance.importanceGateBatch(s"$dir/model",
+      s"$dir/out", minLogw = 0.0))
     try {
       mem.addData(batch1: _*)
       q.processAllAvailable()
@@ -145,8 +145,8 @@ class QualityGateStreamSpec extends SparkTestBase {
     val b1 = Seq((1L, passA), (2L, "too few words"), (3L, passA))
     val b2 = Seq((4L, passA), (5L, passE))
     val mem = MemoryStream[(Long, String)]
-    val q = EventStreams.startCurationGate(mem.toDF.toDF("doc_id", "text"),
-      s"$dir/idx", s"$dir/corpus", s"$dir/ckpt")
+    val q = EventStreams.startGate(mem.toDF.toDF("doc_id", "text"),
+      s"$dir/ckpt")(Dedup.curationGateBatch(s"$dir/idx", s"$dir/corpus"))
     try {
       mem.addData(b1: _*)
       q.processAllAvailable()
@@ -188,8 +188,9 @@ class QualityGateStreamSpec extends SparkTestBase {
       (10L, "xx cc dd ee yy"),     // "cc dd ee" is an epoch-0 passage
       (11L, "pp qq rr ss"))        // novel
     val mem = MemoryStream[(Long, String)]
-    val q = EventStreams.startPassageGate(mem.toDF.toDF("doc_id", "text"),
-      s"$dir/idx", s"$dir/corpus", s"$dir/ckpt", windowWords = 3)
+    val q = EventStreams.startGate(mem.toDF.toDF("doc_id", "text"),
+      s"$dir/ckpt")(Dedup.passageGateBatch(s"$dir/idx", s"$dir/corpus",
+      windowWords = 3))
     try {
       mem.addData(b1: _*)
       q.processAllAvailable()
@@ -374,9 +375,9 @@ class QualityGateStreamSpec extends SparkTestBase {
       (10L, "hdr x gg hh"),   // 2 corpus + 1 batch = 3 -> chrome excised
       (11L, "ee ff"))         // 1 + 1 = 2 -> kept
     val mem = MemoryStream[(Long, String)]
-    val q = EventStreams.startBoilerplateGate(
-      mem.toDF.toDF("doc_id", "text"), s"$dir/idx", s"$dir/corpus",
-      s"$dir/ckpt", chunkWords = 2, minDocs = 3)
+    val q = EventStreams.startGate(mem.toDF.toDF("doc_id", "text"),
+      s"$dir/ckpt")(Dedup.boilerplateGateBatch(s"$dir/idx", s"$dir/corpus",
+      chunkWords = 2, minDocs = 3))
     try {
       mem.addData(b1: _*)
       q.processAllAvailable()

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.streaming.EventStreams
+import graft.operators.Events
 
 /** Scale-technique demonstrations: file-source Structured Streaming
   * (readStream → transform → writeStream over the real events parquet)
@@ -19,7 +19,8 @@ class ScaleTechniquesSpec extends SparkTestBase {
     val stream = spark.readStream
       .schema(batch.schema)
       .parquet(dir)
-    val q = EventStreams.tumblingCounts(stream, "1 hour", "10 minutes")
+    val q = Events.tumbling(stream.withWatermark("ts", "10 minutes"),
+        "1 hour")
       .writeStream.format("memory").queryName("file_stream_test")
       .outputMode("append").start()
     try {
@@ -87,7 +88,8 @@ class ScaleTechniquesSpec extends SparkTestBase {
       .where(col("event_id") % 2 === 0)
     batch.write.parquet(src)
     def start() = spark.readStream.schema(batch.schema).parquet(src)
-      .transform(EventStreams.tumblingCounts(_, "1 hour", "10 minutes"))
+      .withWatermark("ts", "10 minutes")
+      .transform(Events.tumbling(_, "1 hour"))
       .writeStream.format("parquet").option("path", sink)
       .option("checkpointLocation", ckpt).outputMode("append").start()
     val q1 = start()

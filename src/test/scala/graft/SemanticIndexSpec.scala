@@ -181,10 +181,10 @@ class SemanticIndexSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val dir = tmp("stream")
     val mem = MemoryStream[(Long, Array[Float])]
-    val q = graft.streaming.EventStreams.startSemanticIngestGate(
-      mem.toDF.toDF("vec_id", "embedding"),
-      s"$dir/idx", s"$dir/ckpt", kClusters = 2, iters = 2,
-      threshold = 0.95)
+    val q = graft.streaming.EventStreams.startGate(
+      mem.toDF.toDF("vec_id", "embedding"), s"$dir/ckpt")(
+      Similarity.semanticGateBatch(s"$dir/idx", kClusters = 2, iters = 2,
+        threshold = 0.95))
     try {
       mem.addData(semEpoch0: _*)
       q.processAllAvailable()

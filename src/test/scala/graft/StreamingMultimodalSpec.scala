@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.operators.Multimodal
+import graft.operators.{Dedup, Events, Multimodal}
 import graft.streaming.EventStreams
 
 class StreamingMultimodalSpec extends SparkTestBase {
@@ -15,7 +15,7 @@ class StreamingMultimodalSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Timestamp, String, Double)]
     val df = mem.toDF.toDF("ts", "event_type", "value")
-    val q = EventStreams.tumblingCounts(df, "1 hour", "10 minutes")
+    val q = Events.tumbling(df.withWatermark("ts", "10 minutes"), "1 hour")
       .writeStream.format("memory").queryName("tumbling_test")
       .outputMode("append").start()
     try {
@@ -39,8 +39,8 @@ class StreamingMultimodalSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
     val path = s"$dir/table"
     val mem = MemoryStream[(Timestamp, String, Double)]
-    val agg = EventStreams.tumblingCounts(
-      mem.toDF.toDF("ts", "event_type", "value"), "1 hour", "10 minutes")
+    val agg = Events.tumbling(mem.toDF.toDF("ts", "event_type", "value")
+      .withWatermark("ts", "10 minutes"), "1 hour")
     // wrap the sink body to capture each epoch's content for replay
     var captured: Option[(Array[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType)] = None
@@ -82,9 +82,9 @@ class StreamingMultimodalSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft_gate_e2e")
       .toString
     val mem = MemoryStream[(Long, String)]
-    val q = EventStreams.startIngestDedupGate(
-      mem.toDF.toDF("doc_id", "text"),
-      s"$dir/idx", s"$dir/corpus", s"$dir/ckpt", threshold = 0.5)
+    val q = EventStreams.startGate(mem.toDF.toDF("doc_id", "text"),
+      s"$dir/ckpt")(Dedup.ingestGateBatch(s"$dir/idx", s"$dir/corpus",
+      threshold = 0.5))
     try {
       mem.addData(
         (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
@@ -109,8 +109,8 @@ class StreamingMultimodalSpec extends SparkTestBase {
     val late = (ts("2024-01-01 13:00:00"), "view", 8.0)
     val mem = MemoryStream[(Timestamp, String, Double)]
     val df = mem.toDF.toDF("ts", "event_type", "value")
-    val q = EventStreams.slidingCounts(df, "1 hour", "15 minutes",
-        "10 minutes")
+    val q = Events.sliding(df.withWatermark("ts", "10 minutes"), "1 hour",
+        "15 minutes")
       .writeStream.format("memory").queryName("sliding_test")
       .outputMode("append").start()
     try {
@@ -143,7 +143,8 @@ class StreamingMultimodalSpec extends SparkTestBase {
     val late = (2L, ts("2024-01-01 14:00:00"), 5.0) // pushes watermark
     val mem = MemoryStream[(Long, Timestamp, Double)]
     val df = mem.toDF.toDF("user_id", "ts", "value")
-    val q = EventStreams.sessionCounts(df, "30 minutes", "10 minutes")
+    val q = Events.sessions(df.withWatermark("ts", "10 minutes"),
+        "30 minutes")
       .writeStream.format("memory").queryName("session_test")
       .outputMode("append").start()
     try {
@@ -228,7 +229,8 @@ class StreamingMultimodalSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Timestamp, Double)]
     val df = mem.toDF.toDF("event_id", "ts", "value")
-    val q = EventStreams.dedupByKey(df, "event_id", "10 minutes")
+    val q = df.withWatermark("ts", "10 minutes")
+      .dropDuplicatesWithinWatermark("event_id")
       .writeStream.format("memory").queryName("dedup_test")
       .outputMode("append").start()
     try {

@@ -541,10 +541,10 @@ class WarehouseSpec extends SparkTestBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_cdc_stream").toString
     val mem = MemoryStream[(Long, String, Int, Long, Long, String)]
-    val q = EventStreams.startCdcGate(
-      mem.toDF.toDF("k", "name", "v", "ordv", "tb", "op"),
-      s"$dir/table", s"$dir/ckpt", Seq("k"), Seq("k", "name", "v"),
-      col("ordv"), col("tb"), col("op"))
+    val q = EventStreams.startGate(
+      mem.toDF.toDF("k", "name", "v", "ordv", "tb", "op"), s"$dir/ckpt")(
+      Warehouse.cdcGateBatch(s"$dir/table", Seq("k"), Seq("k", "name", "v"),
+        col("ordv"), col("tb"), col("op")))
     try {
       mem.addData((1L, "a", 10, 1L, 1L, "I"), (2L, "b", 20, 1L, 1L, "I"))
       q.processAllAvailable()
