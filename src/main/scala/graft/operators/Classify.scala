@@ -327,7 +327,7 @@ object Classify {
       .groupBy("bucket")
       .agg(count(lit(1)).as("n"), sum(col("ip")).as("n_pos"))
     val spine = (0L until nBins.toLong).toDF("bucket")
-    broadcast(spine).join(bucketed, Seq("bucket"), "left")
+    spine.join(broadcast(bucketed), Seq("bucket"), "left")
       .crossJoin(broadcast(span))
       .select(col("bucket"),
         (col("lo") + col("bucket") * width).as("bucket_lo"),

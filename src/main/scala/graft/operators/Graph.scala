@@ -865,15 +865,10 @@ object Graph {
     * total` — a pure function of (corpus, seed).
     *
     * Scale shape: the noise table is vocab-sized (one groupBy over the
-    * walk corpus), and its cumulative intervals are built with the
-    * bucketed TWO-PHASE prefix sum (the [[Shard.systematicPps]]
-    * discipline): nodes bucket into 256 contiguous id ranges (a
-    * monotone shift of the driver-collected id span, so bucket order
-    * IS node order), each bucket runs its own running-sum window after
-    * one hash exchange, and the 256 bucket (total, count) rows collect
-    * as the exclusive-prefix frame that broadcasts back — integer
-    * sums, so the result is bit-identical to a global-window build
-    * while never funneling a web-scale vocabulary through one window
+    * walk corpus), and its cumulative intervals are
+    * [[Shard.twoPhasePrefix]] over 256 contiguous id ranges (see
+    * [[noiseTable]]) — bit-identical to a global-window build while
+    * never funneling a web-scale vocabulary through one window
     * partition. The draw→node lookup is the grid-bucketed
     * [[IntervalJoin.overlapJoin]] (point-in-interval), never a
     * nested-loop range join. Total weight rides the driver as ONE
@@ -922,20 +917,14 @@ object Graph {
 
   /** The UNMATERIALIZED noise-table build behind [[negativeSamples]]
     * (split out so specs can assert on its executed plan): cumulative
-    * [lo, hi_incl] intervals per node via the bucketed TWO-PHASE prefix
-    * sum (the [[Shard.systematicPps]] discipline) — bucket = top bits
-    * of the id offset from the collected min (MONOTONE in node, so
-    * buckets are contiguous id ranges and concatenating them in bucket
-    * order replays the exact node-ascending fold), one per-bucket
-    * running-sum window after a hash exchange, ≤256 bucket
-    * (weight, count) rows collected as the exclusive-prefix frame.
-    * Integer sums make lo/hi bit-identical to a global-window build.
-    * Returns (cum plan, total weight, vocab size); the plan reads a
-    * weight table materialized into the caller's scope. */
+    * [lo, hi_incl] intervals per node in ascending-id order, the
+    * running weight sum of [[Shard.twoPhasePrefix]]. Bucket = top bits
+    * of the id offset from the collected min — MONOTONE in node, so
+    * buckets are contiguous id ranges and ≤256 of them. Returns (cum
+    * plan, total weight, vocab size); the plan reads a weight table
+    * materialized into the caller's scope. */
   private[graft] def noiseTable(walks: DataFrame, maxFreq: Long)
       : (DataFrame, Long, Long) = {
-    val spark = walks.sparkSession
-    import spark.implicits._
     val f = least(col("freq"), lit(maxFreq)).cast("double")
     // the weight table materializes FIRST: the two-phase build reads it
     // three times (id span, bucket totals, cumulative pass) and each
@@ -946,7 +935,7 @@ object Graph {
       .select(col("node"),
         greatest(lit(1L), floor(sqrt(sqrt(f * f * f)))).as("w")))
     val mmRow = wt.agg(min(col("node").cast("long")),
-      max(col("node").cast("long"))).head()
+      max(col("node").cast("long")), count(lit(1))).head()
     require(!mmRow.isNullAt(0),
       "negativeSamples: empty walk corpus — no nodes to build a noise " +
         "table from (zero walk rows or all-null node ids)")
@@ -964,28 +953,10 @@ object Graph {
         "node ids in the walk corpus — filter null nodes upstream")))
       .otherwise(shiftright(col("node").cast("long") - lit(minNode), shift)
         .cast("int")))
-    val totals = bucketed.groupBy("__bucket")
-      .agg(sum(col("w")).as("bw"), count(lit(1)).as("bn"))
-      .orderBy("__bucket").collect() // ≤ 256 rows — the prefix frame
-    val total = totals.map(_.getLong(1)).foldLeft(0L)(Math.addExact)
-    val vocabN = totals.map(_.getLong(2)).sum
-    val offsets = {
-      var acc = 0L
-      totals.map { r =>
-        val off = acc; acc = Math.addExact(acc, r.getLong(1))
-        (r.getInt(0), off)
-      }.toSeq
-    }
-    val offDf = broadcast(offsets.toDF("__bucket", "__off"))
-    val inBucket = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__bucket")).orderBy(col("node"))
-    val cum = bucketed
-      .withColumn("__cum_in", sum(col("w")).over(inBucket))
-      .join(offDf, Seq("__bucket"))
-      .withColumn("hi", col("__cum_in") + col("__off"))
-      .select(col("node"), (col("hi") - col("w")).as("lo"),
-        (col("hi") - 1).as("hi_incl"))
-    (cum, total, vocabN)
+    val (cum, total) = Shard.twoPhasePrefix(bucketed, "__bucket",
+      Seq(col("node")), col("w"), "hi")
+    (cum.select(col("node"), (col("hi") - col("w")).as("lo"),
+        (col("hi") - 1).as("hi_incl")), total, mmRow.getLong(2))
   }
 
   /** A tiny (walk = 0..walksPerNode−1) frame for the walk fan-out —

@@ -35,7 +35,8 @@ import graft.exec.Exec.{materialize, scoped}
   */
 object Shard {
 
-  /** Default routing threshold for the `scalableNtile` family's adaptive
+  /** Default routing threshold for the NTILE family's
+    * ([[scalableNtileMulti]], [[scalableNtileByGroup]]) adaptive
     * small-frame dispatch. The bucketed two-phase forms pay a measured
     * 2-8× fixed per-pass job overhead at toy scale (BASELINE.md, r11
     * probes), while the plain window form is only a scale hazard once
@@ -64,10 +65,10 @@ object Shard {
     * big path's quantile sketch runs at call time), and pruning cannot
     * help an upstream whose rows are expensive to PRODUCE (a window or
     * join must still run; a limit cannot early-abort a sort). Chained
-    * cuts therefore re-execute lower cuts' windows in each layer's
-    * probe — for multi-cut frames use `scalableNtileMulti` (one
-    * materialization), or materialize the input / pass
-    * `windowFormMax = 0` when the upstream is the dominant cost. */
+    * calls therefore re-execute lower cuts' windows in each layer's
+    * probe — pass every cut of a frame to ONE `scalableNtileMulti`
+    * call, or materialize the input / pass `windowFormMax = 0` when the
+    * upstream is the dominant cost. */
   private def smallFrame(df: DataFrame, limit: Int): Boolean =
     limit > 0 && df.limit(limit + 1).count() <= limit
 
@@ -165,6 +166,106 @@ object Shard {
       .sortWithinPartitions(col("shard"), col("pos"))
   }
 
+  /** THE bucketed two-phase exact prefix behind every global running
+    * sum or rank in this package: `out` = Σ `value` over the rows up to
+    * and including this one in (`bucket`, `order`) order, without the
+    * `sum(x).over(Window.orderBy(…))` trap of funnelling the frame
+    * through ONE window partition. `bucket` names an INT column that is
+    * MONOTONE in `order` (every row of bucket i sorts before every row
+    * of bucket i+1), so the buckets in index order replay the global
+    * order. Four steps:
+    *
+    *   1. per-bucket totals, collected (one row per bucket: the
+    *      caller bounds the collected state by bounding the bucket
+    *      count), unless the caller already holds them as `totals`;
+    *   2. exclusive offsets, built with `Math.addExact` (an overflow
+    *      fails rather than wraps);
+    *   3. the offsets broadcast back;
+    *   4. a per-bucket `ROWS` running-sum window after ONE hash exchange
+    *      on `bucket`, plus the bucket's offset.
+    *
+    * With integral `value` every sum is exact under reordering, so the
+    * result is bit-identical to the global window on any placement.
+    * The `ROWS` frame gives every row its own prefix: a `RANGE` frame
+    * would hand order-peers one shared sum, so `order` must break ties
+    * wherever that matters. Users: [[systematicPps]] (hex-draw
+    * buckets), [[scalableNtileMulti]] (a running count is the rank),
+    * [[twoPhaseRunningSum]] (both over [[quantileBuckets]]) and
+    * `Graph.noiseTable` (id-range buckets).
+    *
+    * Returns the frame plus `out` (LONG) and the grand total. */
+  private[operators] def twoPhasePrefix(df: DataFrame, bucket: String,
+      order: Seq[Column], value: Column, out: String,
+      totals: Option[Seq[(Int, Long)]] = None): (DataFrame, Long) = {
+    val perBucket = totals.getOrElse(df.groupBy(bucket).agg(sum(value))
+      .collect().toSeq
+      .map(r => (r.getInt(0), if (r.isNullAt(1)) 0L else r.getLong(1))))
+    val (offsets, grand) = perBucket.sortBy(_._1)
+      .foldLeft((Vector.empty[(Int, Long)], 0L)) {
+        case ((offs, acc), (b, t)) =>
+          (offs :+ (b -> acc), Math.addExact(acc, t))
+      }
+    val spark = df.sparkSession
+    import spark.implicits._
+    val off = s"${bucket}_off"
+    val inBucket = Window.partitionBy(col(bucket)).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val prefixed = df.withColumn(out, sum(value).over(inBucket))
+      .join(broadcast(offsets.toDF(bucket, off)), Seq(bucket))
+      .withColumn(out, col(out) + col(off))
+      .drop(off)
+    (prefixed, grand)
+  }
+
+  /** Monotone [[twoPhasePrefix]] buckets for the guarded DOUBLE columns
+    * `ds`: a row's bucket is the count of its column's approximate
+    * quantile split points strictly below its value. Rows compare
+    * against the same split values their index derives from, so the
+    * buckets partition each column's order monotonically whatever the
+    * sketch's accuracy — accuracy moves only bucket BALANCE, never a
+    * prefix. ONE sketch pass serves every column; at `buckets` = 1 no
+    * sketch runs, but one aggregate still evaluates the columns so
+    * their null/NaN guards fire instead of being pruned away. */
+  private def quantileBuckets(df: DataFrame, ds: Seq[String],
+                              buckets: Int): Seq[Column] = {
+    val splits =
+      if (buckets == 1) {
+        df.select(ds.map(d => sum(col(d))): _*).head()
+        ds.map(_ => Array.empty[Double])
+      } else df.stat.approxQuantile(ds.toArray,
+          (1 until buckets).map(_.toDouble / buckets).toArray, 0.001)
+        .toSeq.map(_.distinct.sorted)
+    splits.zip(ds).map { case (s, d) =>
+      s.foldLeft(lit(0)) { (acc, x) =>
+        acc + when(lit(x) < col(d), 1).otherwise(0) }
+    }
+  }
+
+  /** The DOUBLE order image `x`, or a loud failure where it has no
+    * position: a null has none, and NaN would sort last under Spark's
+    * NaN-greatest rule while the quantile sketch gives it no bucket —
+    * filter or impute both upstream. */
+  private def guardedOrder(x: Column, who: String, what: String,
+                           nullAs: String = "null"): Column =
+    when(x.isNull, raise_error(lit(s"$who: $nullAs $what — it has no " +
+      "defined position in the order; filter or impute upstream")))
+      .when(isnan(x), raise_error(lit(s"$who: NaN $what — NaN has no " +
+        "defined quantile bucket; filter or impute upstream")))
+      .otherwise(x)
+
+  /** `weight` as a LONG, or a loud failure naming the row: a null or
+    * non-positive weight has no interval on the sampling line, and
+    * dropping or clamping it would change every other row's inclusion
+    * probability. */
+  private def positiveWeight(weight: Column, who: String,
+                             idCol: String): Column = {
+    val w = weight.cast("long")
+    when(w.isNull || w <= 0, raise_error(concat(
+        lit(s"$who: non-positive weight for $idCol="),
+        col(idCol).cast("string"))))
+      .otherwise(w)
+  }
+
   /** Systematic probability-proportional-to-size sampling WITHOUT
     * replacement (the survey-statistics workhorse — Madow 1949):
     * exactly `n` draws (counted with multiplicity) from a weighted
@@ -179,7 +280,9 @@ object Shard {
     * (corpus, seed) on any engine: rows are laid on a line in
     * seeded-hash order (`md5(seed:id)`, the trainingOrder draw —
     * systematic sampling needs a random order to decorrelate
-    * neighbors), each row occupying an interval of its integer weight
+    * neighbors; ties on a repeated id break by `w`, then arbitrarily
+    * among identical rows, each still taking its own interval), each
+    * row occupying an interval of its integer weight
     * `w`; a grid of `n` points at spacing `W/n`, shifted by the
     * seed-derived RANDOM START (`md5(seed) mod W + 1` in n-scaled
     * space — Madow's U ~ Unif(0, W/n], without which the row ending at
@@ -191,21 +294,15 @@ object Shard {
     * uniform start is exactly n·w/W; rows with w > W/n are "certainty
     * units" drawn ⌊w·n/W⌋ or ⌈w·n/W⌉ times.
     *
-    * Scale: the global running sum never funnels through one window
-    * partition — rows bucket by the leading hex pair of their order
-    * key (256 contiguous ranges of the line), each bucket runs its own
-    * running-sum window after ONE hash exchange, and the 256 bucket
-    * totals make an exclusive-prefix frame that broadcasts back (the
-    * two-phase scan prefix-sum; same discipline as Pack's bucketed
-    * running sums, plus the tiny offsets join exactness requires).
-    * Driver state: the 256-row totals collect (bounded), which also
-    * guards the `cum·n` long-overflow envelope loudly (ANSI mode would
-    * catch it anyway; the require names the fix — rescale weights).
+    * Scale: the running sum along the line is [[twoPhasePrefix]] over
+    * 256 buckets, the leading hex pair of the order key (256 contiguous
+    * ranges of the line). Its grand total also guards the `cum·n`
+    * long-overflow envelope loudly (ANSI mode would catch it anyway;
+    * the require names the fix — rescale weights).
     *
     * Weights must be POSITIVE integers (scale fractional scores to
     * fixed-point units upstream); a null/non-positive weight FAILS the
-    * job — silently dropping or clamping would change every other
-    * row's inclusion probability.
+    * job.
     *
     * Returns (id-named-as-input, w, mult) for rows with mult >= 1, in
     * no particular order.
@@ -216,19 +313,13 @@ object Shard {
     require(n >= 1, s"systematicPps: n=$n")
     val key = md5(concat(lit(seed), lit(":"), col(idCol).cast("string")))
     val keyed = docs
-      .select(col(idCol), weight.cast("long").as("w"), key.as("__key"))
-      .withColumn("w", when(col("w").isNull || col("w") <= 0,
-        raise_error(concat(lit("systematicPps: non-positive weight for " +
-          s"$idCol="), col(idCol).cast("string"))))
-        .otherwise(col("w")))
+      .select(col(idCol), positiveWeight(weight, "systematicPps", idCol)
+        .as("w"), key.as("__key"))
       .withColumn("__bucket",
         conv(substring(col("__key"), 1, 2), 16, 10).cast("int"))
-    val inBucket = Window.partitionBy(col("__bucket"))
-      .orderBy(col("__key"), col(idCol))
-    val totals = keyed.groupBy("__bucket").agg(sum(col("w")).as("bw"))
-      .orderBy("__bucket").collect() // <= 256 rows — the prefix frame
-    require(totals.nonEmpty, "systematicPps: empty corpus")
-    val grand = totals.map(_.getLong(1)).sum
+    val (line, grand) = twoPhasePrefix(keyed, "__bucket",
+      Seq(col("__key"), col(idCol), col("w")), col("w"), "__cum")
+    require(grand > 0, "systematicPps: empty corpus")
     // n+1 (not n): the grid arithmetic below adds one extra W to keep
     // every `div` numerator non-negative (truncating division only
     // equals floor there)
@@ -245,22 +336,10 @@ object Shard {
       java.security.MessageDigest.getInstance("MD5")
         .digest(seed.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         .map("%02x".format(_)).mkString.substring(0, 15), 16) % grand + 1
-    val offsets = {
-      var acc = 0L
-      totals.map { r =>
-        val off = acc; acc += r.getLong(1); (r.getInt(0), off)
-      }.toSeq
-    }
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val offDf = broadcast(offsets.toDF("__bucket", "__off"))
     // mult = #{grid points in (prev, cum]} = ⌊(cum·n − start + W)/W⌋ −
     // ⌊(prev·n − start + W)/W⌋ (the +W keeps numerators ≥ 0 and cancels
     // in the difference; start ≤ W guarantees prev·n − start + W ≥ 0)
-    keyed
-      .withColumn("__cum_in", sum(col("w")).over(inBucket))
-      .join(offDf, Seq("__bucket"))
-      .withColumn("__cum", col("__cum_in") + col("__off"))
+    line
       .select(col(idCol), col("w"),
         (expr(s"(__cum * ${n}L - ${start}L + ${grand}L) div ${grand}L") -
           expr(s"((__cum - w) * ${n}L - ${start}L + ${grand}L) " +
@@ -289,7 +368,7 @@ object Shard {
     * right when groups are many (the mixture-sampling shape: thousands
     * of sources); a corpus where ONE group dwarfs executor memory
     * routes through the global [[systematicPps]] per group instead
-    * (its bucketed two-phase prefix sum exists for exactly that).
+    * (its [[twoPhasePrefix]] exists for exactly that).
     * Overflow is guarded row-wise: W_g·(n_g+1) must fit in a long, and
     * the guard raises rather than wraps (ANSI would too; the error
     * names the fix).
@@ -314,15 +393,14 @@ object Shard {
       .where(col("__n") >= 1)
     val key = md5(concat(lit(seed), lit(":"), col(idCol).cast("string")))
     val keyed = docs
-      .select(col(idCol), col(grpCol), weight.cast("long").as("w"),
+      .select(col(idCol), col(grpCol),
+        positiveWeight(weight, "systematicPpsByGroup", idCol).as("w"),
         key.as("__key"))
-      .withColumn("w", when(col("w").isNull || col("w") <= 0,
-        raise_error(concat(lit("systematicPpsByGroup: non-positive " +
-          s"weight for $idCol="), col(idCol).cast("string"))))
-        .otherwise(col("w")))
       .join(broadcast(q), Seq(grpCol))
     val wg = Window.partitionBy(col(grpCol))
-    val inGrp = wg.orderBy(col("__key"), col(idCol))
+    // the global sampler's line order and ROWS frame, per group
+    val inGrp = wg.orderBy(col("__key"), col(idCol), col("w"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val graded = keyed
       .withColumn("__cum", sum(col("w")).over(inGrp))
       .withColumn("__W", sum(col("w")).over(wg))
@@ -346,132 +424,30 @@ object Shard {
       .where(col("mult") >= 1)
   }
 
-  /** EXACT global NTILE(k) without a single-partition window — the
-    * two-phase-prefix answer (same discipline as [[systematicPps]]) to
-    * the classic scale trap `ntile(k).over(Window.orderBy(...))`, which
-    * funnels the whole frame through ONE task. Semantics are identical
-    * to SQL NTILE over `(leading [DESC], tiebreak ASC)`: the first
-    * `n mod k` tiles get ⌈n/k⌉ rows, the rest ⌊n/k⌋.
-    *
-    * Why the result is EXACT even though the bucketing uses an
-    * approximate quantile sketch: the split points only have to be a
-    * MONOTONE partition of the order (every row in bucket i sorts no
-    * later than every row in bucket i+1 — guaranteed because rows
-    * compare against the same split values their bucket index is
-    * derived from). Each bucket then computes row_number after ONE
-    * hash exchange, the ≤`buckets` per-bucket counts collect as the
-    * exclusive-prefix frame (bounded driver state, the systematicPps
-    * pattern), and global_rank = bucket_offset + in_bucket_rank is
-    * exact integer arithmetic. Sketch quality affects only bucket
-    * BALANCE (a skew concern), never the tile numbers.
-    *
-    * The leading column is compared through `cast("double")` for the
-    * bucket draw only; within-bucket ordering uses the ORIGINAL column,
-    * so cast collisions (e.g. close timestamps) cannot reorder rows —
-    * colliding rows simply share a bucket. NULL and NaN leading values
-    * FAIL loudly: a null has no defined tile, and NaN would silently
-    * sort under Spark's NaN-greatest rule while the quantile sketch
-    * gives it no defined bucket — filter or impute both upstream.
-    *
-    * Returns the input columns plus `out` (INT, 1..k). */
-  def scalableNtile(df: DataFrame, k: Int, leading: Column,
-                    tiebreak: Column, out: String,
-                    descending: Boolean = false,
-                    buckets: Int = 64,
-                    windowFormMax: Int = defaultWindowFormMax): DataFrame = {
-    require(k >= 1, s"scalableNtile: k=$k must be >= 1")
-    require(buckets >= 1 && buckets <= 4096,
-      s"scalableNtile: buckets=$buckets out of [1, 4096]")
-    require(windowFormMax >= 0 && windowFormMax < Int.MaxValue,
-      s"scalableNtile: windowFormMax=$windowFormMax out of [0, 2^31-2]")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val signed = if (descending) -leading.cast("double")
-      else leading.cast("double")
-    val work = df.withColumn("__nt_d",
-      when(signed.isNull, raise_error(lit("scalableNtile: null leading " +
-        "value — a null has no defined tile; filter or impute upstream")))
-      .when(isnan(signed), raise_error(lit("scalableNtile: NaN leading " +
-        "value — NaN has no defined quantile bucket; filter or impute " +
-        "upstream")))
-      .otherwise(signed))
-    val ordCols: Seq[Column] =
-      if (descending) Seq(leading.desc, tiebreak.asc)
-      else Seq(leading.asc, tiebreak.asc)
-    if (smallFrame(df, windowFormMax)) {
-      // Adaptive dispatch: the two forms are bit-identical by
-      // construction (same order, same tile arithmetic — spec-pinned on
-      // both paths), so a sub-threshold frame takes the plain window and
-      // skips the sketch + count passes' fixed per-pass job overhead.
-      // The output references the guarded cast image (__nt_d is never
-      // null — the guard raises first — so the `when` is the identity),
-      // which makes the null/NaN guards fire INSIDE the window job: no
-      // guard pre-pass re-executes the upstream plan.
-      return work
-        .withColumn(out, when(col("__nt_d").isNotNull,
-          ntile(k).over(Window.orderBy(ordCols: _*))).cast("int"))
-        .drop("__nt_d")
-    }
-    val probs = (1 until buckets).map(_.toDouble / buckets).toArray
-    val splits =
-      if (buckets == 1) {
-        // no sketch pass at buckets=1 — force one evaluation of the
-        // guarded column anyway so null/NaN leading values still fail
-        // loudly instead of being pruned with the unused sketch input
-        work.agg(sum(col("__nt_d"))).head()
-        Array.empty[Double]
-      } else work.stat.approxQuantile("__nt_d", probs, 0.001)
-        .distinct.sorted
-    val bucketExpr = splits.foldLeft(lit(0)) { (acc, s) =>
-      acc + when(lit(s) < col("__nt_d"), 1).otherwise(0) }
-    val wb = work.withColumn("__nt_b", bucketExpr)
-    val counts = wb.groupBy("__nt_b").agg(count(lit(1)).as("c"))
-      .orderBy("__nt_b").collect() // ≤ buckets rows — the prefix frame
-    val n = counts.map(_.getLong(1)).foldLeft(0L)(Math.addExact)
-    val offsets = {
-      var acc = 0L
-      counts.map { r =>
-        val off = acc; acc += r.getLong(1); (r.getInt(0), off)
-      }.toSeq
-    }
-    val offDf = broadcast(offsets.toDF("__nt_b", "__nt_off"))
-    val inBucket = Window.partitionBy(col("__nt_b")).orderBy(ordCols: _*)
-    val withRank = wb
-      .withColumn("__nt_rank0",
-        row_number().over(inBucket).cast("long") - 1L)
-      .join(offDf, Seq("__nt_b"))
-      .withColumn("__nt_rank0", col("__nt_rank0") + col("__nt_off"))
-    withRank.withColumn(out, tileFromRank(n, k, "__nt_rank0").cast("int"))
-      .drop("__nt_d", "__nt_b", "__nt_off", "__nt_rank0")
-  }
-
-  /** The exact NTILE(k) index from a 0-based global rank over `n` rows
-    * (tile sizes: the first `n mod k` tiles take ⌈n/k⌉ rows, the rest
-    * ⌊n/k⌋; n < k degenerates to row i → tile i+1) — THE tile
-    * arithmetic, shared by [[scalableNtile]] and [[scalableNtileMulti]]
-    * so the single and multi forms are identical by construction.
-    * [[scalableNtileByGroup]] spells the same CASE over per-group n
-    * COLUMNS (its n varies by group and cannot be a literal here). */
-  private[graft] def tileFromRank(n: Long, k: Int, rank0: String): Column = {
-    val (tq, tr) = (n / k, n % k)
-    if (tq == 0L) col(rank0) + 1L
-    else expr(s"IF($rank0 < ${tr * (tq + 1L)}L, " +
-      s"$rank0 div ${tq + 1L}L + 1L, " +
-      s"($rank0 - ${tr * (tq + 1L)}L) div ${tq}L + ${tr + 1L}L)")
+  /** The exact NTILE(k) index from a 0-based rank `rank0` among `n`
+    * rows (both LONG; `n` a literal for a global cut, a per-group
+    * column for [[scalableNtileByGroup]]): the first `n mod k` tiles
+    * take ⌈n/k⌉ rows, the rest ⌊n/k⌋, and n < k degenerates to row i →
+    * tile i+1. THE tile arithmetic of the NTILE family, so its global
+    * and grouped forms agree by construction. */
+  private[graft] def tileFromRank(n: Column, k: Int,
+                                  rank0: Column): Column = {
+    def div(a: Column, b: Column) = call_function("div", a, b)
+    val (tq, tr) = (div(n, lit(k.toLong)), n % lit(k.toLong))
+    val wide = tr * (tq + 1L) // rows in the ⌈n/k⌉-sized tiles
+    when(tq === 0L, rank0 + 1L)
+      .when(rank0 < wide, div(rank0, tq + 1L) + 1L)
+      .otherwise(div(rank0 - wide, tq) + tr + 1L)
   }
 
   /** EXACT global running (inclusive-prefix) sum of `value` in `order`
-    * ascending, without a single-partition window — the companion of
-    * [[scalableNtile]] for the `sum(x).over(Window.orderBy(k))` trap.
-    * Same two-phase shape: monotone approx-quantile bucketing (split
-    * quality affects only balance, never the result), one per-bucket
-    * running-sum window after a hash exchange, ≤`buckets` bucket totals
-    * collected as the exclusive-prefix frame and broadcast back. The
-    * sums must be exact under reordering for the result to be
-    * bit-identical to the global window — `value` must be INTEGRAL
-    * (sums ride as LONG, overflow raises); float sums do NOT qualify
-    * (their fold order would change), so pre-scale floats to fixed
-    * point upstream.
+    * ascending, without a single-partition window:
+    * [[twoPhasePrefix]] over [[quantileBuckets]] of the order, for the
+    * `sum(x).over(Window.orderBy(k))` trap. The sums must be exact
+    * under reordering for the result to be bit-identical to the global
+    * window — `value` must be INTEGRAL (sums ride as LONG, overflow
+    * raises); float sums do NOT qualify (their fold order would
+    * change), so pre-scale floats to fixed point upstream.
     *
     * The order is `order`'s NUMERIC value (both the bucket draw and
     * the in-bucket window run over the `cast("double")` image, so they
@@ -490,55 +466,16 @@ object Shard {
                          out: String, buckets: Int = 64): DataFrame = {
     require(buckets >= 1 && buckets <= 4096,
       s"twoPhaseRunningSum: buckets=$buckets out of [1, 4096]")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val cast = order.cast("double")
-    val work = df.withColumn("__ps_d",
-      when(cast.isNull, raise_error(lit("twoPhaseRunningSum: null or " +
-        "non-numeric order value — it has no defined prefix position; " +
-        "filter or fix upstream")))
-      .when(isnan(cast), raise_error(lit("twoPhaseRunningSum: NaN " +
-        "order value — NaN has no defined quantile bucket; filter " +
-        "upstream")))
-      .otherwise(cast))
-    val probs = (1 until buckets).map(_.toDouble / buckets).toArray
-    val splits =
-      if (buckets == 1) {
-        // no sketch pass at buckets=1 — force one evaluation of the
-        // guarded column anyway so null/NaN keys still fail loudly
-        // instead of being pruned away with the unused quantile input
-        work.agg(sum(col("__ps_d"))).head()
-        Array.empty[Double]
-      } else work.stat.approxQuantile("__ps_d", probs, 0.001)
-        .distinct.sorted
-    val bucketExpr = splits.foldLeft(lit(0)) { (acc, s) =>
-      acc + when(lit(s) < col("__ps_d"), 1).otherwise(0) }
-    val wb = work.withColumn("__ps_b", bucketExpr)
-    val totals = wb.groupBy("__ps_b").agg(sum(value).as("t"))
-      .orderBy("__ps_b").collect() // ≤ buckets rows — the prefix frame
-    val offsets = {
-      var acc = 0L
-      totals.map { r =>
-        val off = acc
-        acc = Math.addExact(acc, if (r.isNullAt(1)) 0L else r.getLong(1))
-        (r.getInt(0), off)
-      }.toSeq
-    }
-    val offDf = broadcast(offsets.toDF("__ps_b", "__ps_off"))
-    // order by the SAME cast image the buckets were drawn from — a
-    // string key ordered lexicographically here could disagree with
-    // its numeric bucket and make the result splits-dependent
-    val inBucket = Window.partitionBy(col("__ps_b"))
-      .orderBy(col("__ps_d").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wb.withColumn("__ps_in", sum(value).over(inBucket))
-      .join(offDf, Seq("__ps_b"))
-      .withColumn(out, col("__ps_in") + col("__ps_off"))
-      .drop("__ps_d", "__ps_b", "__ps_in", "__ps_off")
+    val work = df.withColumn("__ps_d", guardedOrder(order.cast("double"),
+      "twoPhaseRunningSum", "order value", nullAs = "null or non-numeric"))
+    val bucket = quantileBuckets(work, Seq("__ps_d"), buckets).head
+    twoPhasePrefix(work.withColumn("__ps_b", bucket), "__ps_b",
+        Seq(col("__ps_d").asc), value, out)._1
+      .drop("__ps_d", "__ps_b")
   }
 
   /** EXACT per-group NTILE(k) without a hot-key single-task window —
-    * the grouped companion of [[scalableNtile]], for the
+    * the grouped companion of [[scalableNtileMulti]], for the
     * `ntile(k).over(Window.partitionBy(g).orderBy(...))` trap where one
     * group holds most of the frame (a pretraining corpus is majority
     * one language, so CCNet-style per-language buckets funnel the
@@ -546,19 +483,17 @@ object Shard {
     * identical to SQL NTILE over `(PARTITION BY group, ORDER BY
     * leading [DESC], tiebreak ASC)`.
     *
-    * Same two-phase construction as [[scalableNtile]], keyed one level
-    * down: per-group monotone split points (one `percentile_approx`
-    * aggregation — sketch quality affects only bucket BALANCE inside a
-    * group, never the tile numbers), bucket draw against the own
-    * group's splits via a broadcast join, ONE hash exchange on
-    * `(group, bucket)` for the per-bucket `row_number`, and a
-    * ≤groups×buckets prefix frame (per-(group,bucket) exclusive
-    * offsets + per-group total, built with windows over the
-    * counts frame itself — ≤`buckets` rows per group, so those windows
-    * are trivially bounded) broadcast back. global-in-group rank =
-    * bucket_offset + in_bucket_rank is exact integer arithmetic;
-    * per-group tile sizes (first `n_g mod k` tiles get ⌈n_g/k⌉ rows)
-    * come from the same frame.
+    * The [[twoPhasePrefix]] construction keyed one level down, as one
+    * relational plan: per-group monotone split points (one
+    * `percentile_approx` aggregation — sketch quality affects only
+    * bucket BALANCE inside a group, never the tile numbers), bucket
+    * draw against the own group's splits via a broadcast join, ONE
+    * hash exchange on `(group, bucket)` for the per-bucket
+    * `row_number`, and a ≤groups×buckets prefix frame (per-(group,
+    * bucket) exclusive offsets + per-group total, built with windows
+    * over the counts frame itself — ≤`buckets` rows per group, so
+    * those windows are trivially bounded) broadcast back; the tile is
+    * [[tileFromRank]] of the per-group rank and total.
     *
     * Scale shape: the hot group's rows spread over `buckets` tasks
     * instead of one; the prefix frame is ≤`maxGroups`×`buckets` rows
@@ -566,10 +501,9 @@ object Shard {
     * cardinality like languages or sources, not a per-entity one; for
     * millions of groups the plain window is already parallel enough).
     *
-    * NULL groups, and NULL or NaN leading values, FAIL loudly (same
-    * policy as [[scalableNtile]]). The input is scanned three times
-    * (splits, counts, final) — [[Exec.materialize]] expensive
-    * upstream frames first.
+    * NULL groups, and NULL or NaN leading values, FAIL loudly. The
+    * input is scanned three times (splits, counts, final) —
+    * [[Exec.materialize]] expensive upstream frames first.
     *
     * Returns the input columns plus `out` (INT, 1..k). */
   def scalableNtileByGroup(df: DataFrame, k: Int, group: Column,
@@ -583,28 +517,18 @@ object Shard {
       s"scalableNtileByGroup: buckets=$buckets out of [1, 4096]")
     require(windowFormMax >= 0 && windowFormMax < Int.MaxValue,
       s"scalableNtileByGroup: windowFormMax=$windowFormMax out of range")
-    val signed = if (descending) -leading.cast("double")
-      else leading.cast("double")
+    val sp = NtileSpec(k, leading, tiebreak, out, descending)
     val work = df
       .withColumn("__nt_g",
         when(group.isNull, raise_error(lit("scalableNtileByGroup: null " +
           "group value — a null belongs to no partition; filter or " +
           "impute upstream"))).otherwise(group))
       .withColumn("__nt_d",
-        when(signed.isNull, raise_error(lit("scalableNtileByGroup: null " +
-          "leading value — a null has no defined tile; filter or " +
-          "impute upstream")))
-        .when(isnan(signed), raise_error(lit("scalableNtileByGroup: " +
-          "NaN leading value — NaN has no defined quantile bucket; " +
-          "filter or impute upstream")))
-        .otherwise(signed))
-    val ordCols: Seq[Column] =
-      if (descending) Seq(leading.desc, tiebreak.asc)
-      else Seq(leading.asc, tiebreak.asc)
+        guardedOrder(sp.image, "scalableNtileByGroup", "leading value"))
     if (smallFrame(df, windowFormMax)) {
-      // Adaptive dispatch (see scalableNtile): sub-threshold frames —
-      // where even the HOTTEST group fits one task by definition — take
-      // the plain grouped window. Partitioning by the guarded group
+      // Adaptive dispatch (see scalableNtileMulti): sub-threshold frames
+      // — where even the HOTTEST group fits one task by definition —
+      // take the plain grouped window. Partitioning by the guarded group
       // image (identical values — null raises) and referencing the
       // guarded leading image in the output makes ALL guards fire
       // inside the window job itself. The maxGroups guard deliberately
@@ -615,7 +539,7 @@ object Shard {
       return work
         .withColumn(out, when(col("__nt_d").isNotNull,
           ntile(k).over(Window.partitionBy(col("__nt_g"))
-            .orderBy(ordCols: _*))).cast("int"))
+            .orderBy(sp.order: _*))).cast("int"))
         .drop("__nt_g", "__nt_d")
     }
     val probs = (1 until buckets).map(_.toDouble / buckets)
@@ -632,7 +556,7 @@ object Shard {
           .withColumn("__nt_splits", typedLit(Seq.empty[Double]))
       } else
         work.groupBy(col("__nt_g"))
-          // accuracy 1000 ≙ the 0.001 relative error scalableNtile
+          // accuracy 1000 ≙ the 0.001 relative error quantileBuckets
           // uses — split precision affects only bucket balance
           .agg(percentile_approx(col("__nt_d"), typedLit(probs),
             lit(1000)).as("__nt_splits")))
@@ -664,63 +588,65 @@ object Shard {
       .drop("__nt_c"))
     // pass 3: per-(group,bucket) rank + exact per-group tile arithmetic
     val inBucket = Window.partitionBy(col("__nt_g"), col("__nt_b"))
-      .orderBy(ordCols: _*)
+      .orderBy(sp.order: _*)
     wb.withColumn("__nt_rank0",
         row_number().over(inBucket).cast("long") - 1L)
       .join(broadcast(offDf), Seq("__nt_g", "__nt_b"))
-      .withColumn("__nt_r0", col("__nt_rank0") + col("__nt_off"))
-      .withColumn("__nt_tq", expr(s"__nt_n div ${k}L"))
-      .withColumn("__nt_tr", expr(s"__nt_n % ${k}L"))
-      .withColumn(out, expr(
-        """CAST(CASE
-          |  WHEN __nt_tq = 0L THEN __nt_r0 + 1L
-          |  WHEN __nt_r0 < __nt_tr * (__nt_tq + 1L)
-          |    THEN __nt_r0 DIV (__nt_tq + 1L) + 1L
-          |  ELSE (__nt_r0 - __nt_tr * (__nt_tq + 1L)) DIV __nt_tq
-          |    + __nt_tr + 1L
-          |END AS INT)""".stripMargin))
-      .drop("__nt_g", "__nt_d", "__nt_b", "__nt_rank0", "__nt_r0",
-        "__nt_off", "__nt_n", "__nt_tq", "__nt_tr")
+      .withColumn(out, tileFromRank(col("__nt_n"), k,
+        col("__nt_rank0") + col("__nt_off")).cast("int"))
+      .drop("__nt_g", "__nt_d", "__nt_b", "__nt_rank0", "__nt_off",
+        "__nt_n")
   }
 
-  /** One cut specification for [[scalableNtileMulti]] — the arguments
-    * of a single [[scalableNtile]] call. */
+  /** One cut of [[scalableNtileMulti]]: NTILE(`k`) over (`leading`
+    * [DESC], `tiebreak` ASC) into the INT column `out`. */
   final case class NtileSpec(k: Int, leading: Column, tiebreak: Column,
-                             out: String, descending: Boolean = false)
+                             out: String, descending: Boolean = false) {
+    /** THE order of the cut — one definition shared by the window and
+      * bucketed paths, so dispatch can never drift on a one-sided
+      * ordering tweak. */
+    private[Shard] def order: Seq[Column] =
+      if (descending) Seq(leading.desc, tiebreak.asc)
+      else Seq(leading.asc, tiebreak.asc)
 
-  /** THE order of one cut — a single definition shared by the window
-    * and bucketed paths so the dispatch bit-identity can never drift
-    * on a one-sided ordering tweak. */
-  private def specOrd(sp: NtileSpec): Seq[Column] =
-    if (sp.descending) Seq(sp.leading.desc, sp.tiebreak.asc)
-    else Seq(sp.leading.asc, sp.tiebreak.asc)
+    /** The leading value's DOUBLE image, negated for a descending cut
+      * so the bucket draw always ascends. */
+    private[Shard] def image: Column =
+      if (descending) -leading.cast("double") else leading.cast("double")
+  }
 
-  /** Several [[scalableNtile]] cuts over ONE materialized frame —
-    * the multi-metric form (RFM-style segmentations cut the same
-    * per-entity frame by several metrics). Chaining single cuts
-    * re-executes the upstream plan per phase of every later cut
-    * (cut 3's sketch pass re-runs cut 1's window+join); this instead:
+  /** EXACT global NTILE cuts without a single-partition window — the
+    * answer to the scale trap `ntile(k).over(Window.orderBy(...))`,
+    * which funnels the whole frame through ONE task. Each [[NtileSpec]]
+    * is one cut with SQL NTILE semantics over `(leading [DESC],
+    * tiebreak ASC)`: the first `n mod k` tiles get ⌈n/k⌉ rows, the rest
+    * ⌊n/k⌋. A single cut is a one-spec call; several cuts of one frame
+    * (RFM-style segmentations cut a per-entity frame by several
+    * metrics) share every pass.
     *
-    *   1. materializes the guarded input ONCE ([[Exec.materialize]]);
-    *   2. draws ALL split sets in ONE multi-column `approxQuantile`
-    *      pass;
-    *   3. collects each cut's ≤`buckets`-row prefix frame from the
-    *      checkpoint BEFORE any window is attached — so no count pass
-    *      ever re-executes another cut's window;
-    *   4. chains the per-bucket rank windows + broadcast offset joins
-    *      into one final plan, executed once.
+    * A cut's 0-based rank is [[twoPhasePrefix]]'s running count over
+    * [[quantileBuckets]] of the leading value, minus one, and its tile
+    * is [[tileFromRank]] of that rank — exact integer arithmetic, so
+    * the approximate sketch affects only bucket balance. The leading
+    * column is compared through its `cast("double")` image for the
+    * bucket draw only; within-bucket ordering uses the ORIGINAL column,
+    * so cast collisions (e.g. close timestamps) cannot reorder rows —
+    * colliding rows simply share a bucket. NULL and NaN leading values
+    * FAIL loudly.
     *
-    * Tile numbers are bit-identical to applying [[scalableNtile]] per
-    * spec (same splits discipline, same integer arithmetic); each
-    * spec's null/NaN policy is the same loud failure.
+    * Passes, none of which re-executes another cut's window:
     *
-    * Sizing note: the checkpoint is of the WHOLE input frame — this is
-    * the right shape for dimension-sized per-entity frames (an RFM
-    * user table, a per-source rollup), where it converts per-cut
-    * re-aggregation into one cheap materialization. For a genuinely
-    * corpus-scale frame, checkpointing the corpus costs corpus-sized
-    * disk; apply independent [[scalableNtile]] cuts (each re-reading
-    * the columnar source, which prunes to the cut's columns) instead.
+    *   1. the guarded input materializes ONCE ([[Exec.materialize]]);
+    *   2. ONE multi-column sketch pass draws all split sets;
+    *   3. ONE count pass collects every cut's ≤`buckets` bucket totals;
+    *   4. the per-cut rank windows + broadcast offset joins chain into
+    *      one final plan, executed once.
+    *
+    * Sizing note: the checkpoint is of the WHOLE input frame — the
+    * right shape for dimension-sized per-entity frames (an RFM user
+    * table, a per-source rollup). For a corpus-scale frame it costs
+    * corpus-sized disk, so select only the columns the cuts and the
+    * caller need first.
     *
     * Returns the input columns plus one `spec.out` INT column per
     * spec. */
@@ -737,83 +663,49 @@ object Shard {
       s"scalableNtileMulti: windowFormMax=$windowFormMax out of range")
     specs.foreach(sp => require(sp.k >= 1,
       s"scalableNtileMulti: k=${sp.k} must be >= 1 (${sp.out})"))
-    val spark = df.sparkSession
-    import spark.implicits._
     val dCols = specs.indices.map(i => s"__nt_d$i")
-    val work = specs.zipWithIndex.foldLeft(df) { case (acc, (sp, i)) =>
-      val signed = if (sp.descending) -sp.leading.cast("double")
-        else sp.leading.cast("double")
-      acc.withColumn(dCols(i),
-        when(signed.isNull, raise_error(lit("scalableNtileMulti: null " +
-          s"leading value (${sp.out}) — a null has no defined tile; " +
-          "filter or impute upstream")))
-        .when(isnan(signed), raise_error(lit("scalableNtileMulti: NaN " +
-          s"leading value (${sp.out}) — NaN has no defined quantile " +
-          "bucket; filter or impute upstream")))
-        .otherwise(signed))
+    val work = specs.zip(dCols).foldLeft(df) { case (acc, (sp, d)) =>
+      acc.withColumn(d, guardedOrder(sp.image, "scalableNtileMulti",
+        s"leading value (${sp.out})"))
     }
     if (smallFrame(df, windowFormMax)) {
-      // Adaptive dispatch (see scalableNtile): sub-threshold frames take
-      // chained plain windows in ONE plan — no checkpoint, no sketch
-      // pass, no grouping-sets count pass. Each output references its
-      // spec's guarded cast image, so every guard fires inside the
-      // window job.
-      specs.zipWithIndex.foldLeft(work) { case (acc, (sp, i)) =>
-        acc.withColumn(sp.out, when(col(dCols(i)).isNotNull,
-          ntile(sp.k).over(Window.orderBy(specOrd(sp): _*))).cast("int"))
+      // Adaptive dispatch: the two forms are bit-identical by
+      // construction (same order, same tile numbers — spec-pinned on
+      // both paths), so sub-threshold frames take chained plain windows
+      // in ONE plan — no checkpoint, no sketch pass, no count pass.
+      // Each output references its spec's guarded cast image (never
+      // null — the guard raises first — so the `when` is the identity),
+      // so every guard fires inside the window job.
+      specs.zip(dCols).foldLeft(work) { case (acc, (sp, d)) =>
+        acc.withColumn(sp.out, when(col(d).isNotNull,
+          ntile(sp.k).over(Window.orderBy(sp.order: _*))).cast("int"))
       }.drop(dCols: _*)
     } else {
       val mat = materialize(work)
-      val probs = (1 until buckets).map(_.toDouble / buckets).toArray
-      // one sketch pass for ALL metrics
-      val allSplits: Array[Array[Double]] =
-        if (buckets == 1) Array.fill(specs.size)(Array.empty[Double])
-        else mat.stat.approxQuantile(dCols.toArray, probs, 0.001)
-          .map(_.distinct.sorted)
-      val bucketExprs = specs.indices.map { i =>
-        allSplits(i).foldLeft(lit(0)) { (acc, s) =>
-          acc + when(lit(s) < col(dCols(i)), 1).otherwise(0) }
-      }
-      // all prefix frames in ONE scan of the checkpoint, BEFORE any
+      val bCols = specs.indices.map(i => s"__nt_b$i")
+      val bucketExprs = quantileBuckets(mat, dCols, buckets)
+      // all bucket totals in ONE scan of the checkpoint, BEFORE any
       // window exists: GROUPING SETS ((b0),(b1),(b2),…) expands each row
       // once per cut and partial aggregation collapses to ≤specs×buckets
-      // rows — at corpus scale this replaces one full scan PER CUT with
-      // a single one. Bucket columns are never null, so in the output a
-      // null b_j simply marks "this row counts cut i≠j".
-      val bCols = specs.indices.map(i => s"__nt_cb$i")
-      val withB = mat.select(bucketExprs.zipWithIndex.map {
-        case (e, i) => e.as(bCols(i)) }: _*)
-      val allCounts = withB.groupingSets(
-          specs.indices.map(i => Seq(col(bCols(i)))),
-          bCols.map(col): _*)
-        .agg(count(lit(1)).as("c"))
-        .collect() // ≤ specs × buckets rows — the prefix frames
-      val cuts = specs.zipWithIndex.map { case (sp, i) =>
-        val counts = allCounts
-          .filter(r => !r.isNullAt(i))
-          .map(r => (r.getInt(i), r.getLong(specs.size)))
-          .sortBy(_._1)
-        val n = counts.map(_._2).foldLeft(0L)(Math.addExact)
-        val offsets = {
-          var acc = 0L
-          counts.map { case (b, c) =>
-            val off = acc; acc += c; (b, off)
-          }.toSeq
-        }
-        (sp, i, n, offsets)
-      }
-      val withTiles = cuts.foldLeft(mat) { case (acc, (sp, i, n, offsets)) =>
-        val b = s"__nt_b$i"; val off = s"__nt_off$i"; val r0 = s"__nt_r0$i"
-        val offDf = broadcast(offsets.toDF(b, off))
-        val inBucket = Window.partitionBy(col(b)).orderBy(specOrd(sp): _*)
-        acc.withColumn(b, bucketExprs(i))
-          .withColumn(r0, row_number().over(inBucket).cast("long") - 1L)
-          .join(offDf, Seq(b))
-          .withColumn(r0, col(r0) + col(off))
-          .withColumn(sp.out, tileFromRank(n, sp.k, r0).cast("int"))
-          .drop(b, off, r0)
-      }
-      withTiles.drop(dCols: _*)
+      // rows. Bucket columns are never null, so in the output a null b_j
+      // simply marks "this row counts cut i≠j".
+      val allCounts = mat
+        .select(bucketExprs.zip(bCols).map { case (e, b) => e.as(b) }: _*)
+        .groupingSets(bCols.map(b => Seq(col(b))), bCols.map(col): _*)
+        .agg(count(lit(1)))
+        .collect() // ≤ specs × buckets rows
+      specs.zip(bCols).zipWithIndex.foldLeft(mat) {
+        case (acc, ((sp, b), i)) =>
+          val counts = allCounts.toSeq.collect {
+            case r if !r.isNullAt(i) => (r.getInt(i), r.getLong(specs.size))
+          }
+          val (ranked, n) = twoPhasePrefix(acc.withColumn(b, bucketExprs(i)),
+            b, sp.order, lit(1L), "__nt_r", Some(counts))
+          ranked
+            .withColumn(sp.out,
+              tileFromRank(lit(n), sp.k, col("__nt_r") - 1L).cast("int"))
+            .drop(b, "__nt_r")
+      }.drop(dCols: _*)
     }
   }
 }

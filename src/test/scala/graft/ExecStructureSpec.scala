@@ -6,14 +6,16 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Checkpoint lifetimes, on-disk commits and stream wiring each have one
-  * owner: only `graft/exec/Exec.scala` may checkpoint a frame or release
-  * one, only `graft/exec/Artifact.scala` may name a commit marker, a
-  * committer's success file, a dynamic-partition overwrite or a
-  * write-once meta mode, and only `graft/streaming/EventStreams.scala`
-  * may start a stream writer, so an operator cannot hand-write any of
-  * these protocols again. Deleted options and pass-through wrappers
-  * cannot return anywhere. */
+/** Checkpoint lifetimes, on-disk commits, stream wiring and quantile
+  * bucketing each have one owner: only `graft/exec/Exec.scala` may
+  * checkpoint a frame or release one, only `graft/exec/Artifact.scala`
+  * may name a commit marker, a committer's success file, a
+  * dynamic-partition overwrite or a write-once meta mode, only
+  * `graft/streaming/EventStreams.scala` may start a stream writer, and
+  * only `graft/operators/Shard.scala` may draw approximate quantile
+  * buckets (for its two-phase prefix), so an operator cannot
+  * hand-write any of these again. Deleted options and pass-through
+  * wrappers cannot return anywhere. */
 class ExecStructureSpec extends AnyFunSuite {
 
   /** owner file -> tokens no other main source may contain */
@@ -25,7 +27,8 @@ class ExecStructureSpec extends AnyFunSuite {
       Seq("_GRAFT_COMMITTED", "_SUCCESS", "partitionOverwriteMode",
         "errorifexists"),
     "graft/streaming/EventStreams.scala" ->
-      Seq("writeStream", "checkpointLocation"))
+      Seq("writeStream", "checkpointLocation"),
+    "graft/operators/Shard.scala" -> Seq("approxQuantile"))
 
   /** tokens of deleted options and wrappers, forbidden in every main
     * source */
@@ -34,7 +37,8 @@ class ExecStructureSpec extends AnyFunSuite {
     "startSemanticIngestGate", "startPerplexityGate", "startImportanceGate",
     "startCurationGate", "startPassageGate", "startBoilerplateGate",
     "startEntityGate", "tumblingCounts", "slidingCounts", "sessionCounts",
-    "dedupByKey", "journalMetricsThrottled", "ThrottledRetryingClient")
+    "dedupByKey", "journalMetricsThrottled", "ThrottledRetryingClient",
+    "scalableNtile(")
 
   test("checkpoint calls live only in graft.exec.Exec") {
     val root = Paths.get("src/main/scala")

@@ -423,6 +423,26 @@ class GraphSpec extends SparkTestBase {
     val plan = cumPlan.queryExecution.executedPlan.toString
     assert(!plan.contains("SinglePartition"),
       s"found a single-partition exchange:\n$plan")
+    // placement: 300 nodes spread over the id buckets give the global
+    // running-sum window's intervals under 1 and 7 shuffle partitions
+    import org.apache.spark.sql.expressions.Window
+    val many = (1L to 300L)
+      .flatMap(i => (0 to (i % 5).toInt).map(s => (1L, 0, s, i * i * 1009L)))
+      .toDF("start", "walk", "step", "node")
+    val f = col("freq").cast("double")
+    val want = many.groupBy("node").agg(count(lit(1)).as("freq"))
+      .withColumn("w", greatest(lit(1L), floor(sqrt(sqrt(f * f * f)))))
+      .withColumn("hi", sum("w").over(Window.orderBy("node")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .select(col("node"), (col("hi") - col("w")).as("lo"),
+        (col("hi") - 1).as("hi_incl"))
+      .as[(Long, Long, Long)].collect().toSet
+    for (p <- Seq(1, 7)) withShufflePartitions(p) {
+      val (manyCum, _, manyN) = Graph.noiseTable(many, 100000L)
+      assert(manyN === 300L)
+      assert(manyCum.as[(Long, Long, Long)].collect().toSet === want,
+        s"partitions=$p")
+    }
     // ids spread over a 2^40 span: the shift-bucketing must stay
     // monotone and the cumulative intervals exact — same replay as the
     // dense-id spec (w(hi)=2 from freq 3, w(lo)=1, total 3)

@@ -9,25 +9,55 @@ class ShardSpec extends SparkTestBase {
   private lazy val docs = (1L to 400L).map(i => (i, s"text$i"))
     .toDF("doc_id", "text")
 
+  /** [[Shard.systematicPps]] by its global-window formula: the Madow
+    * grid over ONE running-sum window along the sampler's line. */
+  private def ppsByGlobalWindow(df: org.apache.spark.sql.DataFrame, n: Int,
+                                seed: String = "pps0") = {
+    import org.apache.spark.sql.expressions.Window
+    val bigW = df.agg(sum("w")).head().getLong(0)
+    val start = java.lang.Long.parseLong(
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(seed.getBytes("UTF-8")).map("%02x".format(_)).mkString
+        .substring(0, 15), 16) % bigW + 1
+    val key = md5(concat(lit(seed), lit(":"), col("doc_id").cast("string")))
+    df.withColumn("cum", sum("w").over(
+        Window.orderBy(key, col("doc_id"), col("w"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .select(col("doc_id"), col("w"),
+        (expr(s"(cum * ${n}L - ${start}L + ${bigW}L) div ${bigW}L") -
+          expr(s"((cum - w) * ${n}L - ${start}L + ${bigW}L) div ${bigW}L"))
+          .as("mult"))
+      .where(col("mult") >= 1)
+      .as[(Long, Long, Long)].collect().toSeq.sorted
+  }
+
   test("systematicPps: exactly n draws with multiplicity, expected " +
     "count floor/ceil of n·w/W, partition-layout-free") {
-    val weighted = (1L to 300L).map(i => (i, 1L + i % 7)).toDF("doc_id", "w")
-    val n = 40
-    val got = Shard.systematicPps(weighted, n, col("w"))
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(got.map(_._3).sum === n)
-    // every draw count is within 1 of the exact expectation n·w/W
-    val bigW = (1L to 300L).map(i => 1L + i % 7).sum
-    got.foreach { case (_, w, m) =>
-      val expect = n.toDouble * w / bigW
-      assert(m >= math.floor(expect) - 1 && m <= math.ceil(expect) + 1)
+    val unique = (1L to 300L).map(i => (i, 1L + i % 7))
+    // repeated ids share one order key: three more rows on ids 5 and 17
+    val repeated = (1L to 200L).map(i => (i, 1L + i % 7)) ++
+      Seq((5L, 3L), (17L, 2L), (17L, 4L))
+    for ((rows, n) <- Seq((unique, 40), (repeated, 37), (repeated, 101))) {
+      val weighted = rows.toDF("doc_id", "w")
+      def draws(df: org.apache.spark.sql.DataFrame) =
+        Shard.systematicPps(df, n, col("w"))
+          .as[(Long, Long, Long)].collect().toSeq.sorted
+      val got = draws(weighted)
+      assert(got.map(_._3).sum === n, s"rows=${rows.size} n=$n")
+      // every draw count is within 1 of the exact expectation n·w/W
+      val bigW = rows.map(_._2).sum
+      got.foreach { case (_, w, m) =>
+        val expect = n.toDouble * w / bigW
+        assert(m >= math.floor(expect) - 1 && m <= math.ceil(expect) + 1)
+      }
+      // layout independence: same draws from a different partitioning,
+      // and the global window's draws under 1 and 7 shuffle partitions
+      assert(draws(weighted.repartition(13)) === got)
+      for (p <- Seq(1, 7)) withShufflePartitions(p) {
+        assert(draws(weighted) === ppsByGlobalWindow(weighted, n),
+          s"rows=${rows.size} n=$n partitions=$p")
+      }
     }
-    // layout independence: same draws from a different partitioning
-    val re = Shard.systematicPps(weighted.repartition(13), n, col("w"))
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(re.toSeq === got.toSeq)
   }
 
   test("systematicPps: a certainty unit (w > W/n) is drawn ~n·w/W " +
@@ -78,20 +108,23 @@ class ShardSpec extends SparkTestBase {
 
   test("systematicPpsByGroup: exactly n_g draws per group, omitted " +
     "groups unsampled, layout-free, overflow guard fires") {
-    val rows = (1L to 600L)
-      .map(i => (i, s"s${i % 3}", 1L + i % 5)).toDF("doc_id", "source", "w")
-    val quotas = Seq(("s0", 10L), ("s1", 25L), ("zz", 7L))
-      .toDF("source", "n") // s2 omitted → unsampled; zz absent → ignored
-    val got = Shard.systematicPpsByGroup(rows, quotas, col("w"))
-      .collect().map(r => (r.getString(1), r.getLong(3)))
-    val perGroup = got.groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-    assert(perGroup === Map("s0" -> 10L, "s1" -> 25L))
-    val re = Shard.systematicPpsByGroup(rows.repartition(11), quotas,
-        col("w"))
-      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(3)))
-    val base = Shard.systematicPpsByGroup(rows, quotas, col("w"))
-      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(3)))
-    assert(re.toSeq === base.toSeq)
+    val unique = (1L to 600L).map(i => (i, s"s${i % 3}", 1L + i % 5))
+    // repeated ids share one order key: three more rows on ids 3 and 4
+    val repeated = unique ++
+      Seq((3L, "s0", 2L), (4L, "s1", 4L), (4L, "s1", 1L))
+    for ((input, q0, q1) <- Seq((unique, 10L, 25L), (repeated, 37L, 101L))) {
+      val rows = input.toDF("doc_id", "source", "w")
+      val quotas = Seq(("s0", q0), ("s1", q1), ("zz", 7L))
+        .toDF("source", "n") // s2 omitted → unsampled; zz absent → ignored
+      val got = Shard.systematicPpsByGroup(rows, quotas, col("w"))
+        .collect().map(r => (r.getString(1), r.getLong(3)))
+      val perGroup = got.groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
+      assert(perGroup === Map("s0" -> q0, "s1" -> q1))
+      def draws(df: org.apache.spark.sql.DataFrame) =
+        Shard.systematicPpsByGroup(df, quotas, col("w"))
+          .collect().map(r => (r.getLong(0), r.getLong(3))).toSeq.sorted
+      assert(draws(rows.repartition(11)) === draws(rows))
+    }
     val huge = Seq((1L, "a", Long.MaxValue / 3), (2L, "a", Long.MaxValue / 3))
       .toDF("doc_id", "source", "w")
     val e = intercept[Exception] {
@@ -168,7 +201,7 @@ class ShardSpec extends SparkTestBase {
     assert(e.getMessage.contains("out of [1,4096]"))
   }
 
-  // -- scalableNtile: the two-phase exact NTILE ------------------------------
+  // -- scalableNtileMulti, one cut: the two-phase exact NTILE ---------------
 
   private def ntileFixture = {
     // deliberately collision-heavy metric (19 distinct values over 237
@@ -182,16 +215,18 @@ class ShardSpec extends SparkTestBase {
     "desc, over tie-heavy data and across bucket counts") {
     import org.apache.spark.sql.expressions.Window
     val df = ntileFixture
-    for (desc <- Seq(false, true); buckets <- Seq(1, 4, 64)) {
+    for (desc <- Seq(false, true); buckets <- Seq(1, 4, 64);
+         p <- Seq(1, 7)) withShufflePartitions(p) {
       val ord = if (desc) Seq(col("metric").desc, col("id").asc)
         else Seq(col("metric").asc, col("id").asc)
       val want = df.withColumn("t",
           ntile(5).over(Window.orderBy(ord: _*)))
         .select("id", "t").as[(Long, Int)].collect().toMap
-      val got = Shard.scalableNtile(df, 5, col("metric"), col("id"),
-          "t", descending = desc, buckets = buckets, windowFormMax = 0)
+      val got = Shard.scalableNtileMulti(df, Seq(Shard.NtileSpec(5,
+          col("metric"), col("id"), "t", descending = desc)),
+          buckets = buckets, windowFormMax = 0)
         .select("id", "t").as[(Long, Int)].collect().toMap
-      assert(got === want, s"desc=$desc buckets=$buckets")
+      assert(got === want, s"desc=$desc buckets=$buckets partitions=$p")
     }
   }
 
@@ -202,31 +237,34 @@ class ShardSpec extends SparkTestBase {
     val want = small.withColumn("t",
         ntile(7).over(Window.orderBy(col("m").asc, col("id").asc)))
       .select("id", "t").as[(Long, Int)].collect().toMap
-    val got = Shard.scalableNtile(small, 7, col("m"), col("id"), "t",
-      windowFormMax = 0)
+    val got = Shard.scalableNtileMulti(small,
+      Seq(Shard.NtileSpec(7, col("m"), col("id"), "t")), windowFormMax = 0)
       .select("id", "t").as[(Long, Int)].collect().toMap
     assert(got === want)
-    val re = Shard.scalableNtile(ntileFixture.repartition(13), 5,
-        col("metric"), col("id"), "t", descending = true,
-        windowFormMax = 0)
+    val re = Shard.scalableNtileMulti(ntileFixture.repartition(13),
+        Seq(Shard.NtileSpec(5, col("metric"), col("id"), "t",
+          descending = true)), windowFormMax = 0)
       .select("id", "t").as[(Long, Int)].collect().toMap
-    val base = Shard.scalableNtile(ntileFixture, 5, col("metric"),
-        col("id"), "t", descending = true, windowFormMax = 0)
+    val base = Shard.scalableNtileMulti(ntileFixture,
+        Seq(Shard.NtileSpec(5, col("metric"), col("id"), "t",
+          descending = true)), windowFormMax = 0)
       .select("id", "t").as[(Long, Int)].collect().toMap
     assert(re === base)
   }
 
   test("scalableNtile: no single-partition exchange in the plan; null " +
     "leading value fails loudly") {
-    val plan = Shard.scalableNtile(ntileFixture, 5, col("metric"),
-      col("id"), "t", windowFormMax = 0)
+    val plan = Shard.scalableNtileMulti(ntileFixture,
+      Seq(Shard.NtileSpec(5, col("metric"), col("id"), "t")),
+      windowFormMax = 0)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("SinglePartition"),
       s"found a single-partition exchange:\n$plan")
     val withNull = ntileFixture.withColumn("metric",
       when(col("id") === 3L, lit(null)).otherwise(col("metric")))
     val e = intercept[Exception] {
-      Shard.scalableNtile(withNull, 5, col("metric"), col("id"), "t",
+      Shard.scalableNtileMulti(withNull,
+          Seq(Shard.NtileSpec(5, col("metric"), col("id"), "t")),
           windowFormMax = 0)
         .collect()
     }
@@ -245,12 +283,13 @@ class ShardSpec extends SparkTestBase {
         Window.orderBy(col("k"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select("k", "cs").as[(Long, Long)].collect().toMap
-    for (buckets <- Seq(1, 8, 64)) {
-      val got = Shard.twoPhaseRunningSum(df, col("k"), col("v"), "cs",
-          buckets = buckets)
-        .select("k", "cs").as[(Long, Long)].collect().toMap
-      assert(got === want, s"buckets=$buckets")
-    }
+    for (buckets <- Seq(1, 8, 64); p <- Seq(1, 7))
+      withShufflePartitions(p) {
+        val got = Shard.twoPhaseRunningSum(df, col("k"), col("v"), "cs",
+            buckets = buckets)
+          .select("k", "cs").as[(Long, Long)].collect().toMap
+        assert(got === want, s"buckets=$buckets partitions=$p")
+      }
     val plan = Shard.twoPhaseRunningSum(df, col("k"), col("v"), "cs")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("SinglePartition"),
@@ -291,7 +330,8 @@ class ShardSpec extends SparkTestBase {
       when(col("id") === 3L, lit(Double.NaN))
         .otherwise(col("metric").cast("double")))
     val e1 = intercept[Exception] {
-      Shard.scalableNtile(withNaN, 5, col("metric"), col("id"), "t",
+      Shard.scalableNtileMulti(withNaN,
+        Seq(Shard.NtileSpec(5, col("metric"), col("id"), "t")),
         buckets = 1, windowFormMax = 0).collect()
     }
     assert(e1.getMessage.contains("NaN leading value"))
@@ -317,7 +357,8 @@ class ShardSpec extends SparkTestBase {
       when(col("id") === 3L, lit(Double.NaN))
         .otherwise(col("metric").cast("double")))
     val e1 = intercept[Exception] {
-      Shard.scalableNtile(withNaN, 5, col("metric"), col("id"), "t",
+      Shard.scalableNtileMulti(withNaN,
+          Seq(Shard.NtileSpec(5, col("metric"), col("id"), "t")),
           windowFormMax = 0)
         .collect()
     }
@@ -347,7 +388,7 @@ class ShardSpec extends SparkTestBase {
     import org.apache.spark.sql.expressions.Window
     val df = groupedFixture
     for (desc <- Seq(false, true); buckets <- Seq(1, 4, 64);
-         k <- Seq(3, 5)) {
+         k <- Seq(3, 5); p <- Seq(1, 7)) withShufflePartitions(p) {
       val ord = if (desc) Seq(col("metric").desc, col("id").asc)
         else Seq(col("metric").asc, col("id").asc)
       val want = df.withColumn("t",
@@ -357,7 +398,7 @@ class ShardSpec extends SparkTestBase {
           col("metric"), col("id"), "t", descending = desc,
           buckets = buckets, windowFormMax = 0)
         .select("id", "t").as[(Long, Int)].collect().toMap
-      assert(got === want, s"desc=$desc buckets=$buckets k=$k")
+      assert(got === want, s"desc=$desc buckets=$buckets k=$k partitions=$p")
     }
   }
 
@@ -445,7 +486,7 @@ class ShardSpec extends SparkTestBase {
     val gen = Gen.zip(Gen.chooseNum(1L, 5000L), Gen.chooseNum(1, 97))
     val prop = Prop.forAll(gen) { case (n, k) =>
       val got = spark.range(n)
-        .select(Shard.tileFromRank(n, k, "id").as("t"))
+        .select(Shard.tileFromRank(lit(n), k, col("id")).as("t"))
         .groupBy("t").count().collect()
         .map(r => (r.getLong(0), r.getLong(1))).toMap
       val want = (0L until n).groupBy(refTile(n, k, _))
@@ -468,13 +509,12 @@ class ShardSpec extends SparkTestBase {
     val df = (1L to 237L)
       .map(i => (i, (i * 7919) % 19, (i * 31) % 7, i % 13))
       .toDF("id", "r", "f", "m")
-    val nested = Shard.scalableNtile(
-      Shard.scalableNtile(
-        Shard.scalableNtile(df, 5, col("r"), col("id"), "rq",
-          descending = true, windowFormMax = 0),
-        5, col("f"), col("id"), "fq", descending = true,
-        windowFormMax = 0),
-      4, col("m"), col("id"), "mq", windowFormMax = 0)
+    def cut(d: org.apache.spark.sql.DataFrame, sp: Shard.NtileSpec) =
+      Shard.scalableNtileMulti(d, Seq(sp), windowFormMax = 0)
+    val nested = cut(cut(cut(df,
+        Shard.NtileSpec(5, col("r"), col("id"), "rq", descending = true)),
+        Shard.NtileSpec(5, col("f"), col("id"), "fq", descending = true)),
+      Shard.NtileSpec(4, col("m"), col("id"), "mq"))
       .select("id", "rq", "fq", "mq")
       .as[(Long, Int, Int, Int)].collect()
       .map { case (i, a, b, c) => i -> ((a, b, c)) }.toMap
@@ -504,13 +544,15 @@ class ShardSpec extends SparkTestBase {
     val df = ntileFixture
     // the DEFAULT threshold routes this toy frame to the window form:
     // no bucket machinery in the plan, an ntile window instead
-    val small = Shard.scalableNtile(df, 5, col("metric"), col("id"), "t")
+    val small = Shard.scalableNtileMulti(df,
+      Seq(Shard.NtileSpec(5, col("metric"), col("id"), "t")))
     val smallPlan = small.queryExecution.executedPlan.toString
     assert(!smallPlan.contains("__nt_b"), smallPlan.take(2000))
     assert(smallPlan.toLowerCase.contains("ntile"), smallPlan.take(2000))
     // ... and windowFormMax = 0 forces the bucketed machinery
-    val forced = Shard.scalableNtile(df, 5, col("metric"), col("id"),
-      "t", windowFormMax = 0)
+    val forced = Shard.scalableNtileMulti(df,
+      Seq(Shard.NtileSpec(5, col("metric"), col("id"), "t")),
+      windowFormMax = 0)
     assert(forced.queryExecution.executedPlan.toString.contains("__nt_b"))
     // both paths bit-identical, for all three forms
     def m(d: org.apache.spark.sql.DataFrame, cols: String*) =
@@ -530,15 +572,18 @@ class ShardSpec extends SparkTestBase {
       Shard.NtileSpec(5, col("r"), col("id"), "rq", descending = true),
       Shard.NtileSpec(5, col("f"), col("id"), "fq", descending = true),
       Shard.NtileSpec(4, col("m"), col("id"), "mq"))
-    assert(m(Shard.scalableNtileMulti(rfm, specs), "rq", "fq", "mq") ===
-      m(Shard.scalableNtileMulti(rfm, specs, windowFormMax = 0),
-        "rq", "fq", "mq"))
+    for (p <- Seq(1, 7)) withShufflePartitions(p) {
+      assert(m(Shard.scalableNtileMulti(rfm, specs), "rq", "fq", "mq") ===
+        m(Shard.scalableNtileMulti(rfm, specs, windowFormMax = 0),
+          "rq", "fq", "mq"), s"partitions=$p")
+    }
     // guards are NOT lost on the window path: the window sorts by the
     // original column, so the guarded cast image must be forced
     val withNull = df.withColumn("metric",
       when(col("id") === 3L, lit(null)).otherwise(col("metric")))
     val e1 = intercept[Exception] {
-      Shard.scalableNtile(withNull, 5, col("metric"), col("id"), "t")
+      Shard.scalableNtileMulti(withNull,
+          Seq(Shard.NtileSpec(5, col("metric"), col("id"), "t")))
         .collect()
     }
     assert(e1.getMessage.contains("null leading value"))

@@ -9,6 +9,15 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
 
   override def afterAll(): Unit = () // shared session — never stop it
+
+  /** `body` with `spark.sql.shuffle.partitions` at `n`, restoring the
+    * session's value afterwards — for placement-independence checks. */
+  def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, prev)
+  }
 }
 
 object SparkTestBase {

@@ -2115,8 +2115,9 @@ object ScaleProbe {
       t("twophase_2m_rows")(df.count())
       var two: DataFrame = null
       t("twophase_ntile_bucketed") {
-        two = graft.operators.Shard.scalableNtile(df, 5, col("metric"),
-          col("id"), "t", descending = true, windowFormMax = 0).localCheckpoint(true)
+        two = graft.operators.Shard.scalableNtileMulti(df,
+          Seq(graft.operators.Shard.NtileSpec(5, col("metric"), col("id"),
+            "t", descending = true)), windowFormMax = 0).localCheckpoint(true)
         two.count()
       }
       var glob: DataFrame = null
