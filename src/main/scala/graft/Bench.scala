@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val reps = Session.positiveIntEnv("SPARK_GRAFT_BENCH_REPS", 3)
+    val spark = Session.local(Session.positiveIntEnv("SPARK_GRAFT_CPUS", 4))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warmup so the first timed queries don't absorb JIT cost:

@@ -14,4 +14,13 @@ object Session {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.extensions", "graft.GraftExtensions")
     .config("spark.ui.enabled", "false")
+
+  /** The positive integer in environment variable `key`, `default` when
+    * it is unset. Anything else fails and names the key: a zero rep
+    * count would bench nothing and report success. */
+  def positiveIntEnv(key: String, default: Int,
+                     env: Map[String, String] = sys.env): Int =
+    env.get(key).fold(default)(v => v.trim.toIntOption.filter(_ > 0)
+      .getOrElse(throw new IllegalArgumentException(
+        s"$key must be a positive integer, got '$v'")))
 }

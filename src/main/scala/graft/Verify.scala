@@ -6,7 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet // optional query-name filter (local use)
-    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val spark = Session.local(Session.positiveIntEnv("SPARK_GRAFT_CPUS", 4))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

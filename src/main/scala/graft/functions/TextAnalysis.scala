@@ -286,16 +286,6 @@ object TextAnalysis {
     * (md5 hex output is identical across Spark and the DuckDB oracle.) */
   def fingerprint(c: Column): Column = md5(normText(c))
 
-  /** 64-bit rolling fingerprint over tokens (Karp-Rabin role): the
-    * accumulator is chained through xxhash64(acc, token) instead of a
-    * polynomial multiply — order-sensitive like Karp-Rabin, but overflow-
-    * free, so it cannot hit ANSI ARITHMETIC_OVERFLOW (Long multiply wraps
-    * only with ANSI off; xxhash64 never overflows). Spark-side only
-    * (paired with a Spark-side spec, not the SQL oracle). */
-  def rollingFingerprint(c: Column): Column =
-    aggregate(split(normText(c), " "), lit(0L),
-      (acc, t) => xxhash64(acc, t))
-
   /** Overlapping fixed-size character chunking (RAG / context-window shard
     * prep): chunks of `chunkChars` starting every `strideChars` (overlap =
     * chunkChars − strideChars), last chunks run short rather than padding.

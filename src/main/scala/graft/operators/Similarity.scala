@@ -277,14 +277,6 @@ object Similarity {
     mineRanks(scored, kPos, kNeg, posThreshold)
   }
 
-  /** Random-hyperplane LSH bucketing: `nBits` signed projections against
-    * deterministic pseudo-random hyperplanes. Returns the input with an
-    * integer `bucket` column.
-    *
-    * Scale path for ANN: shuffle corpus once on bucket (and probe into the
-    * same buckets ± multi-probe), search only within matching buckets —
-    * turns O(N·Q) into O(N·Q / 2^nBits) expected.
-    */
   /** All-tables banding column: `graft.functions.HyperplaneBuckets` —
     * ONE codegen'd expression computing every (table, bucket) value from
     * a driver-precomputed ±1 sign matrix (splitmix64-derived, stateless,
@@ -298,17 +290,6 @@ object Similarity {
                           seedBase: Int): Column =
     graft.functions.VectorExpressions.lshBuckets(emb, dim, nBits, nTables,
       seedBase)
-
-  def lshBucket(df: DataFrame, embCol: String, nBits: Int,
-                seed: Int = 42): DataFrame =
-    probeDimOpt(df, embCol) match {
-      case Some(dim) => df.withColumn("bucket",
-        element_at(bucketsExpr(col(embCol), dim, nBits, nTables = 1,
-          seed), 1))
-      // no vector anywhere (empty frame / all-null column): no bucket to
-      // compute — keep the schema, null buckets
-      case None => df.withColumn("bucket", lit(null).cast("long"))
-    }
 
   /** LSH-bucketed approximate top-k: candidates = corpus vectors sharing
     * the probe's bucket in ANY of `nTables` independent hash tables, then

@@ -15,7 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * only `graft/operators/Shard.scala` may draw approximate quantile
   * buckets (for its two-phase prefix), so an operator cannot
   * hand-write any of these again. Deleted options and pass-through
-  * wrappers cannot return anywhere. */
+  * wrappers cannot return anywhere, and no query-family registry
+  * grows back into one oversized file. */
 class ExecStructureSpec extends AnyFunSuite {
 
   /** owner file -> tokens no other main source may contain */
@@ -38,7 +39,7 @@ class ExecStructureSpec extends AnyFunSuite {
     "startCurationGate", "startPassageGate", "startBoilerplateGate",
     "startEntityGate", "tumblingCounts", "slidingCounts", "sessionCounts",
     "dedupByKey", "journalMetricsThrottled", "ThrottledRetryingClient",
-    "scalableNtile(")
+    "scalableNtile(", "rollingFingerprint", "lshBucket(")
 
   test("checkpoint calls live only in graft.exec.Exec") {
     val root = Paths.get("src/main/scala")
@@ -60,5 +61,19 @@ class ExecStructureSpec extends AnyFunSuite {
         }.toList
       finally stream.close()
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("SparkEntry and each query-family registry stay within 1,500 lines") {
+    val battery = Paths.get("src/main/scala/graft/battery")
+    assert(Files.isDirectory(battery), s"run from the repo root: $battery")
+    val stream = Files.list(battery)
+    val files =
+      try Paths.get("src/main/scala/graft/SparkEntry.scala") +:
+        stream.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally stream.close()
+    assert(files.size > 1, "no family registries found")
+    val over = files.map(p => p -> Files.readAllLines(p).size)
+      .filter(_._2 > 1500)
+    assert(over.isEmpty, over.mkString("\n", "\n", ""))
   }
 }

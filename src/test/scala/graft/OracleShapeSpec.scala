@@ -18,7 +18,7 @@ class OracleShapeSpec extends AnyFunSuite {
 
   test("kmeans oracle SQL is well-formed at iters = 0, 1, 2") {
     for (iters <- 0 to 2) {
-      val sql = SparkEntry.kmeansOracleSql(4, iters)
+      val sql = battery.EmbedQueries.kmeansOracleSql(4, iters)
       finalSelectFollowsCleanly(sql)
       assert(sql.contains(s"FROM a$iters"), s"iters=$iters reads wrong CTE")
       // round CTEs exist exactly up to iters
@@ -29,7 +29,7 @@ class OracleShapeSpec extends AnyFunSuite {
 
   test("text perceptron oracle SQL is well-formed at epochs = 0, 1, 2") {
     for (e <- 0 to 2) {
-      val sql = SparkEntry.textPerceptronOracleSql(e)
+      val sql = battery.ClassifyQueries.textPerceptronOracleSql(e)
       // the final score joins the LAST epoch's weight table (w0 = the
       // empty seed table at epochs = 0 — margins all zero, a supported
       // mode textPerceptronTrain's spec pins)
@@ -52,5 +52,12 @@ class OracleShapeSpec extends AnyFunSuite {
       === rowsOnly)
     // and no oracle may exist without its query
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+  }
+
+  test("the registry union rejects a query name two families define") {
+    val e = intercept[IllegalArgumentException](SparkEntry.union(Seq(
+      Map("q_a" -> 1, "q_shared" -> 2), Map("q_b" -> 3, "q_shared" -> 4))))
+    assert(e.getMessage.contains("q_shared"))
+    assert(!e.getMessage.contains("q_a") && !e.getMessage.contains("q_b"))
   }
 }

@@ -633,11 +633,8 @@ class SimilaritySpec extends SparkTestBase {
     val empty = vecs.limit(0)
     assert(Similarity.lshNearDupPairs(empty, 0.9).count() === 0)
     assert(Similarity.lshTopK(empty, dup, k = 1).count() === 0)
-    assert(Similarity.lshBucket(empty, "embedding", 4).count() === 0)
     val allNull = withNull.where(col("vec_id") === 0)
     assert(Similarity.lshNearDupPairs(allNull, 0.9).count() === 0)
-    assert(Similarity.lshBucket(allNull, "embedding", 4)
-      .select("bucket").as[Option[Long]].collect() === Array(None))
   }
 
   test("NearestCentroidScore is the max of the composed cosines and the " +

@@ -86,14 +86,6 @@ class TextAnalysisSpec extends SparkTestBase {
     assert(r(0) === r(1))
   }
 
-  test("rollingFingerprint is order-sensitive and total on empty") {
-    val r = Seq("a b c", "c b a", "a b c", "")
-      .toDF("t").select(TextAnalysis.rollingFingerprint(col("t")))
-      .as[Long].collect()
-    assert(r(0) === r(2))
-    assert(r(0) !== r(1))
-  }
-
   test("SQL surface: registered graft_* functions equal the Column API") {
     val row = spark.sql(
       """SELECT graft_fingerprint(' A   b ') AS fp,
