@@ -7,43 +7,55 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
-/** Custom Catalyst expression for the embedding hot path (SURVEY.md §2.11
-  * upgrade path): a whole-stage-codegen'd float-array dot product.
+/** The one codegen'd dot product of the embedding operators (SURVEY.md
+  * §2.11 upgrade path): `ARRAY<FLOAT>` × `ARRAY<FLOAT|DOUBLE>`, in double.
   *
-  * Why an Expression and not composition:
-  *   - `aggregate(zip_with(...))` HOFs are evaluated interpreted (lambda
-  *     dispatch + an intermediate array allocation per row);
-  *   - a statically-unrolled element_at chain (Similarity.staticDot) is
-  *     codegen'd but emits `dim` array accesses inline — fine at dim=64,
-  *     but real embedding dims (768-4096) blow past JVM/codegen method
-  *     sizes. `doGenCode` here emits ONE tight loop regardless of dim.
+  * Why an Expression and not composition: `aggregate(zip_with(...))` HOFs
+  * are evaluated interpreted (lambda dispatch + an intermediate array
+  * allocation per row), while `doGenCode` here emits ONE tight loop inside
+  * whole-stage codegen regardless of dim.
   *
-  * Semantics: ascending-index sequential double sum — bit-identical to
-  * the HOF fold, staticDot, and DuckDB's list_transform/list_sum oracle.
-  * Array elements are assumed non-null (embedding vectors); the shorter
-  * length wins if dims differ. Null input array → null result.
+  * The right side's element type is read when the code is generated: an
+  * `ARRAY<DOUBLE>` right side is the perceptron margin against weights
+  * that ride as DATA (a broadcast one-row column) or as a typed literal.
+  * As data, the trainer's epoch plan and its generated source are
+  * epoch-invariant, so the codegen cache hits every epoch after the first.
+  *
+  * Semantics: ascending-index, left-associated double sum starting at
+  * 0.0 — bit-identical to the HOF `Similarity.dot` fold and DuckDB's
+  * list_transform/list_sum oracle (spec-pinned). Array elements are
+  * assumed non-null (embedding vectors); the shorter length wins if dims
+  * differ. Null input array → null result.
   */
 case class DotProductF32(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
+      case (ArrayType(FloatType, _), ArrayType(FloatType | DoubleType, _)) =>
         TypeCheckResult.TypeCheckSuccess
       case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_dot_f32 requires two ARRAY<FLOAT> inputs, got $l and $r")
+        s"graft_dot_f32 requires ARRAY<FLOAT> and ARRAY<FLOAT> or " +
+          s"ARRAY<DOUBLE> inputs, got $l and $r")
     }
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_dot_f32"
+
+  private def rightDouble: Boolean = right.dataType match {
+    case ArrayType(DoubleType, _) => true
+    case _ => false
+  }
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val n = math.min(x.numElements(), y.numElements())
+    val dbl = rightDouble
     var s = 0.0
     var i = 0
     while (i < n) {
-      s += x.getFloat(i).toDouble * y.getFloat(i).toDouble
+      s += x.getFloat(i).toDouble *
+        (if (dbl) y.getDouble(i) else y.getFloat(i).toDouble)
       i += 1
     }
     s
@@ -55,11 +67,13 @@ case class DotProductF32(left: Expression, right: Expression)
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")
       val s = ctx.freshName("s")
+      val y = if (rightDouble) s"$b.getDouble($i)"
+        else s"((double) $b.getFloat($i))"
       s"""
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $s = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
-         |  $s += ((double) $a.getFloat($i)) * ((double) $b.getFloat($i));
+         |  $s += ((double) $a.getFloat($i)) * $y;
          |}
          |${ev.value} = $s;
        """.stripMargin
@@ -67,70 +81,6 @@ case class DotProductF32(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProductF32 =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Dot product of an ARRAY<FLOAT> row vector against an ARRAY<DOUBLE>
-  * weight vector — the perceptron margin against DATA-borne weights.
-  *
-  * Why this next to [[DotProductF32]]: the trainer's epoch loop needs the
-  * CURRENT weights in the margin expression, and embedding them as a
-  * typed literal (`staticDot(a, typedlit(w))`) changes the generated
-  * code every epoch — a fresh whole-stage-codegen compile per epoch per
-  * training call (measured ~60-150 ms each at dim 65, r12). With the
-  * weights riding a broadcast one-row column, the plan and its generated
-  * source are epoch-invariant (compiled once, cached) while the loop
-  * stays whole-stage-codegen'd — the scale-right margin pass.
-  *
-  * Semantics: ascending-index, left-associated double sum starting at
-  * 0.0 — the exact IEEE sequence of `staticDot`, the HOF fold, and
-  * DuckDB's list_sum (spec-pinned). Shorter length wins; elements
-  * assumed non-null; null input array → null. */
-case class DotProductF32F64(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_dot_f32f64 requires ARRAY<FLOAT>, ARRAY<DOUBLE> inputs, " +
-          s"got $l and $r")
-    }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_dot_f32f64"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      s += x.getFloat(i).toDouble * y.getDouble(i)
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += ((double) $a.getFloat($i)) * $b.getDouble($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProductF32F64 =
     copy(left = newLeft, right = newRight)
 }
 
@@ -891,16 +841,10 @@ object VectorExpressions {
     GraftBridge.column(
       HammingWords(GraftBridge.expression(a), GraftBridge.expression(b)))
 
-  /** Column form of the codegen'd dot product. */
+  /** Column form of the codegen'd dot product (see [[DotProductF32]]). */
   def dotF32(a: Column, b: Column): Column =
     GraftBridge.column(
       DotProductF32(GraftBridge.expression(a), GraftBridge.expression(b)))
-
-  /** Column form of the float-row x double-weights dot product (see
-    * [[DotProductF32F64]]). */
-  def dotF32F64(a: Column, w: Column): Column =
-    GraftBridge.column(
-      DotProductF32F64(GraftBridge.expression(a), GraftBridge.expression(w)))
 
   /** Column form of the nearest-centroid assignment (see
     * [[NearestCentroid]]). */

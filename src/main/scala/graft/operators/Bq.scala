@@ -32,9 +32,6 @@ object Bq {
 
   private def nWords(dim: Int): Int = (dim + 31) / 32
 
-  private def wellFormedDim(emb: Column, dim: Int): Column =
-    Similarity.wellFormed(emb) && size(emb) === dim
-
   /** Packed sign-bit words for one embedding column. */
   private[operators] def wordsExpr(emb: Column, dim: Int): Column = {
     val bits = transform(emb, x => when(x >= 0, 1L).otherwise(0L))
@@ -50,7 +47,7 @@ object Bq {
   /** `(idCol, words)` — the 32×-compressed form a pipeline persists. */
   def encoded(corpus: DataFrame, dim: Int, idCol: String = "vec_id",
               embCol: String = "embedding"): DataFrame =
-    corpus.where(wellFormedDim(col(embCol), dim))
+    corpus.where(Similarity.wellFormed(col(embCol), dim))
       .select(col(idCol), wordsExpr(col(embCol), dim).as("words"))
 
   /** Hamming distance between two packed-word arrays (long) — the
@@ -79,7 +76,7 @@ object Bq {
     require(k > 0 && rerank >= k, s"hammingTopK: k=$k rerank=$rerank")
     val dim = Similarity.probeDim(corpus, embCol)
     val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val well = corpus.where(wellFormedDim(col(embCol), dim))
+    val well = corpus.where(Similarity.wellFormed(col(embCol), dim))
     val cWords = well.repartition(par)
       .select(col(idCol).as("nbr_id"),
         wordsExpr(col(embCol), dim).as("c_words"))
@@ -89,7 +86,7 @@ object Bq {
 
   private def probeSide(probes: DataFrame, dim: Int, idCol: String,
                         embCol: String): DataFrame =
-    probes.where(wellFormedDim(col(embCol), dim))
+    probes.where(Similarity.wellFormed(col(embCol), dim))
       .select(col(idCol).as("probe_id"), col(embCol).as("p_emb"),
         wordsExpr(col(embCol), dim).as("p_words"),
         Similarity.norm(col(embCol)).as("p_nrm"))
@@ -116,21 +113,14 @@ object Bq {
       .withColumn("crank", row_number().over(Window.partitionBy("probe_id")
         .orderBy(col("hamming").asc, col("nbr_id").asc)))
       .where(col("crank") <= rerank)
-    cand
+    val scored = cand
       .join(cVecs, Seq("nbr_id"))
       .withColumn("c_nrm", Similarity.norm(col("c_emb")))
       .join(broadcast(pFull.select("probe_id", "p_emb", "p_nrm")),
         Seq("probe_id"))
-      .withColumn("cos",
-        graft.functions.VectorExpressions.dotF32(col("c_emb"),
-          col("p_emb")) /
-          nullif(col("c_nrm") * col("p_nrm"), lit(0.0)))
-      .where(Similarity.notNaN(col("cos")))
-      .withColumn("rank", row_number().over(Window.partitionBy("probe_id")
-        .orderBy(col("cos").desc, col("nbr_id").asc)))
-      .where(col("rank") <= k)
-      .select(col("probe_id"), col("rank"), col("nbr_id"), col("hamming"),
-        col("cos"))
+      .withColumn("cos", Similarity.normedCosine(col("c_emb"),
+        col("p_emb"), col("c_nrm"), col("p_nrm")))
+    Similarity.cosTopK(scored, k, "hamming", "cos")
   }
 
   /** Persist the BQ serving index: the packed words plus a dim meta row,

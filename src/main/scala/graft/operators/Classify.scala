@@ -47,13 +47,11 @@ object Classify {
     val dim = Similarity.probeDim(
       df.where(Similarity.wellFormed(col(embCol))), embCol) + 1
     // the augmented array is bound behind the spread exchange BEFORE the
-    // margin filter references it: the statically-unrolled margin reads
-    // `a` once per element, and a filter over an inline concat would
-    // re-build the (dim+1)-array per reference after predicate pushdown
-    // (FilterExec does no subexpression elimination). Rows whose
-    // dimension differs from the probed one are excluded like degenerate
-    // vectors — the unrolled dot would otherwise silently truncate them
-    // where the HOF form nulls them.
+    // margin filter references it, so the (dim+1)-array is built once per
+    // row, not once per epoch. Rows whose dimension differs from the
+    // probed one are excluded like degenerate vectors — the dot kernel
+    // would otherwise silently truncate them where the HOF form nulls
+    // them.
     // materialized ONCE: every epoch is its own action (the updated
     // weights are a driver-side literal in the next epoch's margin), so
     // a lazy frame would re-run the scan + well-formed filter + augment
@@ -61,8 +59,7 @@ object Classify {
     // as ~2-3 s of the classify-tier queries at sf0.1); the epoch loop
     // reads the checkpointed training slice instead
     val base = materialize(
-      spread(df.where(Similarity.wellFormed(col(embCol)) &&
-        size(col(embCol)) === dim - 1)
+      spread(df.where(Similarity.wellFormed(col(embCol), dim - 1))
       .select(col(idCol).as("id"),
         concat(col(embCol), array(lit(1.0f))).as("a"),
         when(positive, 1.0d).otherwise(-1.0d).as("y"))))
@@ -74,12 +71,13 @@ object Classify {
       // literal form re-generated (and re-compiled) the epoch stage's
       // whole-stage code every epoch because the constants are baked into
       // the source; as data, the plan and generated code are
-      // epoch-invariant and the codegen cache hits. DotProductF32F64 is
-      // the same ascending left-associated IEEE sum as staticDot/the HOF
-      // fold (spec-pinned), so margins are bit-identical.
+      // epoch-invariant and the codegen cache hits. The dot kernel takes
+      // the ARRAY<DOUBLE> weights as its right side and runs the HOF
+      // fold's ascending left-associated IEEE sum (spec-pinned), so
+      // margins are bit-identical.
       val wDf = broadcast(Seq(Tuple1(w.toSeq)).toDF("__w"))
       val margin = col("y") *
-        graft.functions.VectorExpressions.dotF32F64(col("a"), col("__w"))
+        graft.functions.VectorExpressions.dotF32(col("a"), col("__w"))
       val cells = base.crossJoin(wDf).where(margin <= 0)
         .select(col("id"), col("y"), posexplode(col("a")).as(Seq("i", "x")))
         .select(col("id"), col("i"),
@@ -95,30 +93,20 @@ object Classify {
     w
   }
 
-  /** Score every row with trained weights: margin = w · (x ++ 1.0).
-    * One projection pass — the shape that scores 100 TB. Returns
-    * (id-named-as-input, margin, predicted = margin > 0). */
+  /** Score every row with trained weights: margin = w · (x ++ 1.0), the
+    * codegen'd dot kernel against the weights as an `ARRAY<DOUBLE>`
+    * literal at every dim. One projection pass — the shape that scores
+    * 100 TB. Returns (id-named-as-input, margin, predicted = margin > 0). */
   def perceptronScore(df: DataFrame, idCol: String, embCol: String,
                       weights: Array[Double]): DataFrame =
     // same dimension contract as training: rows that don't match the
     // trained weights' dimension are excluded, not silently truncated
-    df.where(Similarity.wellFormed(col(embCol)) &&
-        size(col(embCol)) === weights.length - 1)
+    df.where(Similarity.wellFormed(col(embCol), weights.length - 1))
       .select(col(idCol),
-        weightDot(concat(col(embCol), array(lit(1.0f))), weights)
+        graft.functions.VectorExpressions.dotF32(
+          concat(col(embCol), array(lit(1.0f))), typedlit(weights))
           .as("margin"))
       .withColumn("predicted", col("margin") > 0)
-
-  /** w · x for the full-corpus margin/scoring passes: the statically
-    * unrolled form stays inside whole-stage codegen (HOF lambdas are
-    * evaluated interpreted with a per-row zip_with allocation — see the
-    * Similarity header) and is spec-pinned bit-identical; fall back to
-    * the HOF past the dim where unrolling would blow codegen method
-    * limits (Similarity.staticDot scaladoc). Callers enforce the
-    * dimension contract, so both branches see equal-length inputs. */
-  private def weightDot(a: Column, w: Array[Double]): Column =
-    if (w.length <= 128) Similarity.staticDot(a, typedlit(w), w.length)
-    else Similarity.dot(a, typedlit(w))
 
   // ---- sparse text perceptron (hashed n-gram features) ----------------
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.exec.Artifact
@@ -75,7 +75,7 @@ object Pq {
             "long) — map string ids to longs first")))
         .otherwise(col(idCol).cast("long")).as("id"),
         col(embCol).as("emb"))
-      .where(wellFormedDim(col("emb"), dim))
+      .where(Similarity.wellFormed(col("emb"), dim))
       .orderBy(md5(col("id").cast("string")), col("id"))
       .limit(sampleN)
       .collect()
@@ -122,13 +122,6 @@ object Pq {
     graft.functions.PqEncodeL2.nearestCode(sub, cs)
   }
 
-  /** Non-null, no null elements, exactly `dim` long — the rows PQ can
-    * code. (`Similarity.wellFormed` without the length pin would let a
-    * wrong-length vector through to the all-zero-codes degenerate
-    * path.) */
-  private def wellFormedDim(emb: Column, dim: Int): Column =
-    Similarity.wellFormed(emb) && size(emb) === dim
-
   /** The corpus with its PQ code array: `(idCol, codes)` — one codegen'd
     * projection pass, the form a pipeline persists.
     *
@@ -145,7 +138,7 @@ object Pq {
               idCol: String = "vec_id",
               embCol: String = "embedding"): DataFrame =
     corpus
-      .where(wellFormedDim(col(embCol), cb.dim))
+      .where(Similarity.wellFormed(col(embCol), cb.dim))
       .select(col(idCol),
         graft.functions.VectorExpressions.pqEncode(col(embCol), cb.cents)
           .as("codes"))
@@ -171,7 +164,7 @@ object Pq {
              idCol: String = "vec_id",
              embCol: String = "embedding"): DataFrame = {
     val rec = corpus
-      .where(wellFormedDim(col(embCol), cb.dim))
+      .where(Similarity.wellFormed(col(embCol), cb.dim))
       .select(col(idCol),
         graft.functions.VectorExpressions.pqDecode(
           graft.functions.VectorExpressions.pqEncode(col(embCol), cb.cents),
@@ -245,7 +238,7 @@ object Pq {
     // encode pass (resid, cluster) reads it.
     val assigned = materialize(corpus
       .select(col(idCol).as("id"), col(embCol).as("emb"))
-      .where(wellFormedDim(col("emb"), dim))
+      .where(Similarity.wellFormed(col("emb"), dim))
       .select(col("id"), col("emb"),
         graft.functions.VectorExpressions
           .nearestCentroid(col("emb"), cents).as("cluster"))
@@ -267,7 +260,6 @@ object Pq {
                         nProbe: Int, cents: Array[Array[Double]],
                         cb: Codebook, idCol: String, embCol: String)
       : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val centLit = typedlit(cents.map(_.map(_.toFloat).toSeq).toSeq)
     // ADC reconstruction at scan time: centroid + decoded residual
     val recon = zip_with(element_at(centLit, col("cluster") + 1),
@@ -285,14 +277,9 @@ object Pq {
         Similarity.norm(col(embCol)).as("p_nrm"), col("cluster"))
     val scored = cSide.join(broadcast(pSide), Seq("cluster"))
       .where(col("nbr_id") =!= col("probe_id"))
-      .withColumn("cos",
-        graft.functions.VectorExpressions.dotF32(col("c_emb"), col("p_emb")) /
-          nullif(col("c_nrm") * col("p_nrm"), lit(0.0)))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("nbr_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("probe_id"), col("rank"), col("nbr_id"))
+      .withColumn("cos", Similarity.normedCosine(col("c_emb"),
+        col("p_emb"), col("c_nrm"), col("p_nrm")))
+    Similarity.cosTopK(scored, k)
   }
 
   // ---- persisted IVF-PQ index (ANN serving tier) -----------------------

@@ -10,16 +10,22 @@ import graft.exec.Exec.{materialize, scoped, sequentialSumByKey,
 
 /** Embedding similarity search over `ARRAY<FLOAT>` columns.
   *
-  * All arithmetic is done in double precision via higher-order functions
-  * (`zip_with` + `aggregate`), which fold over the array IN INDEX ORDER —
-  * so the dot product is a deterministic sequential sum, bit-identical to
-  * a sequential fold in any other engine (the DuckDB oracle computes it
-  * the same way). No UDFs — but note HOF LAMBDAS are evaluated
-  * interpreted (per-row lambda dispatch + a zip_with intermediate array),
-  * so full-corpus hot paths use the bit-identical `staticDot` (known
-  * small dim) or the codegen'd `DotProductF32` expression instead; the
-  * HOF forms remain the readable default for probe-sized inputs and the
-  * reference the others are spec-pinned against.
+  * All arithmetic is done in double precision and folds over the array
+  * IN INDEX ORDER — so a dot product is a deterministic sequential sum,
+  * bit-identical to a sequential fold in any other engine (the DuckDB
+  * oracle computes it the same way). A dot product between two vector
+  * columns is the one codegen'd kernel, `VectorExpressions.dotF32`
+  * (`DotProductF32`), and a pairwise cosine is `normedCosine` over norms
+  * computed once per vector; the fused centroid and bucket expressions
+  * and the broadcast-array kernels run the same fold in their own loops.
+  * The higher-order-function forms `dot`, `norm` and `cosine`
+  * (`zip_with` + `aggregate`, evaluated interpreted: per-row lambda
+  * dispatch + a zip_with intermediate array) remain the general numeric
+  * API and the reference the kernel is spec-pinned against.
+  *
+  * Three ranking decisions live here once: a zero-norm cosine is NULL
+  * (`normedCosine`), a NaN cosine never ranks or pairs (`notNaN`), and
+  * ties rank by ascending neighbor id (`rankByCos`).
   */
 object Similarity {
 
@@ -39,18 +45,14 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / nullif(norm(a) * norm(b), lit(0.0))
 
-  /** Statically-unrolled dot product for a KNOWN dimension: a left-fold of
-    * `dim` element_at products — plain arithmetic that stays inside
-    * whole-stage codegen, unlike higher-order-function lambdas (evaluated
-    * interpreted, with a per-row intermediate array from zip_with). The
-    * addition order (ascending index, left-associated) is identical to the
-    * sequential HOF fold and to DuckDB's list_sum, so results stay
-    * bit-identical. Used on all-pairs hot paths where the O(n²) row count
-    * makes interpreted evaluation the bottleneck. */
-  def staticDot(a: Column, b: Column, dim: Int): Column =
-    (1 to dim).map(i =>
-      element_at(a, i).cast("double") * element_at(b, i).cast("double"))
-      .reduce(_ + _)
+  /** Cosine of two `ARRAY<FLOAT>` vectors from their precomputed norms:
+    * the codegen'd dot over the norm product, NULL (not an ANSI
+    * DIVIDE_BY_ZERO) when either norm is zero — `cosine`'s arithmetic
+    * with each norm computed once per vector instead of once per pair. */
+  private[operators] def normedCosine(a: Column, b: Column, na: Column,
+                                      nb: Column): Column =
+    graft.functions.VectorExpressions.dotF32(a, b) /
+      nullif(na * nb, lit(0.0))
 
   /** A usable embedding: non-null array with no null elements. Degenerate
     * vectors are excluded from the trainers (kMeans, the perceptron) and
@@ -62,6 +64,12 @@ object Similarity {
   private[graft] def wellFormed(emb: Column): Column =
     emb.isNotNull && !exists(emb, _.isNull)
 
+  /** `wellFormed` and exactly `dim` long — the rows an operator pinned
+    * to one dimension can use (a wrong-length vector has no meaningful
+    * projection, code or centroid cosine). */
+  private[graft] def wellFormed(emb: Column, dim: Int): Column =
+    wellFormed(emb) && size(emb) === dim
+
   /** TRUE unless the cosine is NaN (a NaN-poisoned embedding): Spark
     * orders NaN GREATER than every double and its comparisons agree, so
     * an unguarded NaN cosine ranks 1 for every probe and passes every
@@ -71,6 +79,38 @@ object Similarity {
     * rank-last / fail-gate semantics. */
   private[graft] def notNaN(cos: Column): Column =
     !coalesce(isnan(cos), lit(false))
+
+  /** `scored` (probe_id, nbr_id, cos, ...) ranked by cosine within
+    * `probe_id` and the `by` columns: NaN cosines dropped first, then
+    * `rank` = row_number by descending cosine, ties to the lower
+    * `nbr_id` (NULL cosines rank last). */
+  private def rankByCos(scored: DataFrame, by: Column*): DataFrame =
+    scored.where(notNaN(col("cos")))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("probe_id") +: by: _*)
+          .orderBy(col("cos").desc, col("nbr_id").asc)))
+
+  /** The per-probe top-k tail of every cosine ANN operator: `rankByCos`
+    * cut at `k`, projected to (probe_id, rank, nbr_id, `keep`...). */
+  private[operators] def cosTopK(scored: DataFrame, k: Int,
+                                 keep: String*): DataFrame =
+    rankByCos(scored).where(col("rank") <= k)
+      .select((Seq("probe_id", "rank", "nbr_id") ++ keep).map(col): _*)
+
+  /** Candidate pairs (id_a, id_b) verified by exact cosine: both sides'
+    * vectors and norms fetched from `vecs` (id, emb, nrm), pairs kept at
+    * `cos >= threshold` unless the cosine is NaN. Output (id_a, id_b,
+    * cos). */
+  private def verifiedPairs(cand: DataFrame, vecs: DataFrame,
+                            threshold: Double): DataFrame = {
+    def side(s: String): DataFrame = vecs.select(col("id").as(s"id_$s"),
+      col("emb").as(s"emb_$s"), col("nrm").as(s"nrm_$s"))
+    cand.join(side("a"), Seq("id_a")).join(side("b"), Seq("id_b"))
+      .withColumn("cos", normedCosine(col("emb_a"), col("emb_b"),
+        col("nrm_a"), col("nrm_b")))
+      .where(col("cos") >= threshold && notNaN(col("cos")))
+      .select(col("id_a"), col("id_b"), col("cos"))
+  }
 
   /** Vector dimension probed from the first row WITH a vector (driver-
     * side, one tiny job) — lets all-pairs operators unroll arithmetic
@@ -98,15 +138,8 @@ object Similarity {
     */
   def bruteForceTopK(corpus: DataFrame, probes: DataFrame, k: Int,
                      idCol: String = "vec_id",
-                     embCol: String = "embedding"): DataFrame = {
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("nbr_id").asc)
-    scoredAgainstProbes(corpus, probes, idCol, embCol)
-      .where(notNaN(col("cos")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("probe_id"), col("rank"), col("nbr_id"), col("cos"))
-  }
+                     embCol: String = "embedding"): DataFrame =
+    cosTopK(scoredAgainstProbes(corpus, probes, idCol, embCol), k, "cos")
 
   /** Recall@k evaluation of an ANN ranking against the exact one — the
     * readout that turns "we swapped brute force for IVF/LSH/PQ" into a
@@ -151,9 +184,8 @@ object Similarity {
     val p = probes.select(col(idCol).as("probe_id"), col(embCol).as("p_emb"),
       norm(col(embCol)).as("p_nrm"))
     c.join(broadcast(p), col("nbr_id") =!= col("probe_id"))
-      .withColumn("cos",
-        graft.functions.VectorExpressions.dotF32(col("c_emb"), col("p_emb")) /
-          nullif(col("c_nrm") * col("p_nrm"), lit(0.0)))
+      .withColumn("cos", normedCosine(col("c_emb"), col("p_emb"),
+        col("c_nrm"), col("p_nrm")))
   }
 
   /** Contrastive training-pair mining (DPR / SimCSE-style): for each
@@ -191,19 +223,14 @@ object Similarity {
     * within (probe, kind) by descending cosine (nbr id tiebreak), keep
     * the per-kind caps. Filter-before-rank is the whole contract. */
   private def mineRanks(scored: DataFrame, kPos: Int, kNeg: Int,
-                        posThreshold: Double): DataFrame = {
-    val w = Window.partitionBy(col("probe_id"), col("kind"))
-      .orderBy(col("cos").desc, col("nbr_id").asc)
-    scored
-      .where(notNaN(col("cos")))
-      .withColumn("kind",
-        when(col("cos") >= posThreshold, lit("pos")).otherwise(lit("neg")))
-      .withColumn("rank", row_number().over(w))
+                        posThreshold: Double): DataFrame =
+    rankByCos(scored.withColumn("kind",
+        when(col("cos") >= posThreshold, lit("pos")).otherwise(lit("neg"))),
+        col("kind"))
       .where((col("kind") === "pos" && col("rank") <= kPos) ||
         (col("kind") === "neg" && col("rank") <= kNeg))
       .select(col("probe_id"), col("kind"), col("rank"), col("nbr_id"),
         col("cos"))
-  }
 
   /** Cluster-restricted contrastive mining — `contrastiveMine`'s
     * full-corpus scale path, where EVERY vector is an anchor: candidates
@@ -268,10 +295,8 @@ object Similarity {
     val scored = assigned.as("a").join(assigned.as("b"),
         col("a.cluster") === col("b.cluster") &&
           col("a.id") =!= col("b.id"))
-      .withColumn("cos",
-        graft.functions.VectorExpressions.dotF32(col("a.emb"),
-          col("b.emb")) /
-          nullif(col("a.nrm") * col("b.nrm"), lit(0.0)))
+      .withColumn("cos", normedCosine(col("a.emb"), col("b.emb"),
+        col("a.nrm"), col("b.nrm")))
       .select(col("a.id").as("probe_id"), col("b.id").as("nbr_id"),
         col("cos"))
     mineRanks(scored, kPos, kNeg, posThreshold)
@@ -314,24 +339,21 @@ object Similarity {
                           embCol: String, dim: Int): DataFrame = {
     // all tables' buckets in one projection + posexplode (single corpus
     // scan/bucket pass; see lshNearDupPairs) — the probe side stays tiny
-    // and is broadcast
-    def banded(df: DataFrame, outId: String, outEmb: String): DataFrame =
-      df.select(col(idCol).as(outId), col(embCol).as(outEmb),
+    // and is broadcast; norms computed once per vector, before the fan-out
+    def banded(df: DataFrame, side: String, outId: String): DataFrame =
+      df.select(col(idCol).as(outId), col(embCol).as(s"${side}_emb"),
+        norm(col(embCol)).as(s"${side}_nrm"),
         posexplode(bucketsExpr(col(embCol), dim, nBits, nTables,
           seedBase = 1000)).as(Seq("table", "bucket")))
-    val cand = banded(corpus, "nbr_id", "c_emb")
-      .join(broadcast(banded(probes, "probe_id", "p_emb")),
+    val cand = banded(corpus, "c", "nbr_id")
+      .join(broadcast(banded(probes, "p", "probe_id")),
         Seq("table", "bucket"))
       .drop("table", "bucket")
       .where(col("nbr_id") =!= col("probe_id"))
       .dropDuplicates("probe_id", "nbr_id")
-      .withColumn("cos", cosine(col("c_emb"), col("p_emb")))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("nbr_id").asc)
-    cand.where(notNaN(col("cos")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("probe_id"), col("rank"), col("nbr_id"), col("cos"))
+      .withColumn("cos", normedCosine(col("c_emb"), col("p_emb"),
+        col("c_nrm"), col("p_nrm")))
+    cosTopK(cand, k, "cos")
   }
 
   /** LSH-bucketed near-duplicate pairs — the beyond-broadcast scale path
@@ -386,17 +408,9 @@ object Similarity {
         col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-    val withVecs = cand
-      .join(slim.select(col("id").as("id_a"), col("emb").as("emb_a"),
-        norm(col("emb")).as("nrm_a")), Seq("id_a"))
-      .join(slim.select(col("id").as("id_b"), col("emb").as("emb_b"),
-        norm(col("emb")).as("nrm_b")), Seq("id_b"))
-    withVecs
-      .withColumn("cos",
-        graft.functions.VectorExpressions.dotF32(col("emb_a"), col("emb_b")) /
-          nullif(col("nrm_a") * col("nrm_b"), lit(0.0)))
-      .where(col("cos") >= threshold && notNaN(col("cos")))
-      .select(col("id_a"), col("id_b"), col("cos"))
+    verifiedPairs(cand,
+      slim.select(col("id"), col("emb"), norm(col("emb")).as("nrm")),
+      threshold)
   }
 
   /** Johnson-Lindenstrauss random sign projection (Achlioptas 2003's
@@ -436,7 +450,7 @@ object Similarity {
     val projected = array((0 until outDim).map(j =>
       (graft.functions.VectorExpressions.dotF32(col(embCol),
         typedlit(rows(j).toSeq)) / lit(scale)).as(s"p$j")): _*)
-    emb.where(wellFormed(col(embCol)) && size(col(embCol)) === dim)
+    emb.where(wellFormed(col(embCol), dim))
       .select(col(idCol), projected.as("proj"))
   }
 
@@ -503,7 +517,7 @@ object Similarity {
     val dim = probeDim(emb.where(wellFormed(col(embCol))), embCol)
     require(k <= dim, s"pcaTrain: k=$k > dim=$dim")
     val slim = emb
-      .where(wellFormed(col(embCol)) && size(col(embCol)) === dim)
+      .where(wellFormed(col(embCol), dim))
       .select(col(idCol).cast("long").as("id"), col(embCol).as("e"))
     val nPairs = dim * (dim + 1) / 2
     // (n, mean sums, upper-triangle moment sums) — two strategies with
@@ -663,8 +677,7 @@ object Similarity {
       (if (whiten) raw / lit(math.sqrt(model.eigenvalues(ci))) else raw)
         .as(s"proj_${ci + 1}")
     }
-    emb.where(wellFormed(col(embCol)) &&
-        size(col(embCol)) === model.dim)
+    emb.where(wellFormed(col(embCol), model.dim))
       .select(col(idCol) +: projs.toSeq: _*)
   }
 
@@ -739,7 +752,7 @@ object Similarity {
     val dim = probeDim(chunks.where(wellFormed(col(embCol))), embCol)
     val gname = chunks.select(group).columns.head
     val cells = chunks
-      .where(wellFormed(col(embCol)) && size(col(embCol)) === dim)
+      .where(wellFormed(col(embCol), dim))
       .select(group.as("__g"), col(idCol).cast("long").as("id"),
         posexplode(col(embCol)).as(Seq("pos", "xf")))
       .select(col("__g"), col("id"), col("pos"),
@@ -801,7 +814,7 @@ object Similarity {
     import spark.implicits._
     val dim = probeDim(corpus.where(wellFormed(col(embCol))), embCol)
     val sample = corpus
-      .where(wellFormed(col(embCol)) && size(col(embCol)) === dim)
+      .where(wellFormed(col(embCol), dim))
       .select(col(idCol).cast("long"), col(embCol))
       .as[(Long, Array[Float])]
       .sort(xxhash64(col(idCol)), col(idCol)).limit(4096).collect()
@@ -866,16 +879,9 @@ object Similarity {
         norm(col(embCol)).as("p_nrm"), col("cid"))
     val scored = cAssigned.join(broadcast(pAssigned), Seq("cid"))
       .where(col("nbr_id") =!= col("probe_id"))
-      .withColumn("cos",
-        graft.functions.VectorExpressions.dotF32(col("c_emb"), col("p_emb")) /
-          nullif(col("c_nrm") * col("p_nrm"), lit(0.0)))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("nbr_id").asc)
-    scored
-      .where(notNaN(col("cos")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("probe_id"), col("rank"), col("nbr_id"), col("cos"))
+      .withColumn("cos", normedCosine(col("c_emb"), col("p_emb"),
+        col("c_nrm"), col("p_nrm")))
+    cosTopK(scored, k, "cos")
   }
 
   /** Full centroid ranking per row as a sorted struct array
@@ -1043,7 +1049,7 @@ object Similarity {
     // arrays leave this method.
     val slim = materialize(
       emb.select(col(idCol).as("id"), col(embCol).as("emb"))
-        .where(wellFormed(col("emb")) && size(col("emb")) === dim))
+        .where(wellFormed(col("emb"), dim)))
     val seeds = seeding match {
       case KMeansSeeding.HashOrder =>
         slim.orderBy(md5(col("id").cast("string")), col("id")).limit(k)
@@ -1279,7 +1285,7 @@ object Similarity {
       deterministic)
     val dim = probeDim(emb.where(wellFormed(col(embCol))), embCol)
     val asg = emb
-      .where(wellFormed(col(embCol)) && size(col(embCol)) === dim)
+      .where(wellFormed(col(embCol), dim))
       .select(col(idCol), assignExpr(col(embCol), cents).as("cluster"),
         graft.functions.VectorExpressions
           .nearestCentroidScore(col(embCol), cents).as("centroid_cos"))
@@ -1369,10 +1375,8 @@ object Similarity {
     assigned.as("a").join(assigned.as("b"),
         col("a.cluster") === col("b.cluster") &&
           col("a.id") < col("b.id"))
-      .withColumn("cos",
-        graft.functions.VectorExpressions.dotF32(col("a.emb"),
-          col("b.emb")) /
-          nullif(col("a.nrm") * col("b.nrm"), lit(0.0)))
+      .withColumn("cos", normedCosine(col("a.emb"), col("b.emb"),
+        col("a.nrm"), col("b.nrm")))
       .where(col("cos") >= threshold && notNaN(col("cos")))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("cos"))
 
@@ -1408,18 +1412,8 @@ object Similarity {
           col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-    val slim = fat.select(col("id"), col("emb"), col("nrm"))
-    cand
-      .join(slim.select(col("id").as("id_a"), col("emb").as("emb_a"),
-        col("nrm").as("nrm_a")), Seq("id_a"))
-      .join(slim.select(col("id").as("id_b"), col("emb").as("emb_b"),
-        col("nrm").as("nrm_b")), Seq("id_b"))
-      .withColumn("cos",
-        graft.functions.VectorExpressions.dotF32(col("emb_a"),
-          col("emb_b")) /
-          nullif(col("nrm_a") * col("nrm_b"), lit(0.0)))
-      .where(col("cos") >= threshold && notNaN(col("cos")))
-      .select(col("id_a"), col("id_b"), col("cos"))
+    verifiedPairs(cand, fat.select(col("id"), col("emb"), col("nrm")),
+      threshold)
   }
 
   /** Nearest-centroid id for a vector: ONE codegen'd
@@ -1553,9 +1547,8 @@ object Similarity {
         col("nrm").as("b_nrm"), col("cluster"))
     spark.read.parquet(s"$path/vectors")
       .join(broadcast(basn), Seq("cluster"))
-      .withColumn("cos",
-        graft.functions.VectorExpressions.dotF32(col("emb"), col("b_emb")) /
-          nullif(col("nrm") * col("b_nrm"), lit(0.0)))
+      .withColumn("cos", normedCosine(col("emb"), col("b_emb"),
+        col("nrm"), col("b_nrm")))
       .where(col("cos") >= threshold && notNaN(col("cos")))
       .select(col("batch_id"), col("id").as("corpus_id"), col("cos"))
   }
@@ -1688,8 +1681,7 @@ object Similarity {
     // same degenerate-row policy as the rest of the family (kMeans,
     // pcaTrain): null/null-element/dim-mismatched embeddings are
     // excluded, not allowed to NPE the norm loop or AIOOBE the kernel
-    val e = emb.where(wellFormed(col(embCol)) &&
-        size(col(embCol)) === dim)
+    val e = emb.where(wellFormed(col(embCol), dim))
       .select(col(idCol).cast("long").as("id"),
         col(embCol).as("emb")).as[(Long, Array[Float])]
     val all = e.collect().sortBy(_._1)

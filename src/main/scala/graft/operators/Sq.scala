@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scalar (int8) quantization — the NEAR-LOSSLESS compression tier below
@@ -37,15 +37,12 @@ object Sq {
     def dim: Int = mins.length
   }
 
-  private def wellFormedDim(emb: Column, dim: Int): Column =
-    Similarity.wellFormed(emb) && size(emb) === dim
-
   /** Per-dimension min/max over the corpus — dim rows to the driver,
     * order-independent, so exact on any engine/partitioning. */
   def sqTrain(emb: DataFrame, embCol: String = "embedding"): SqParams = {
     val dim = Similarity.probeDim(emb, embCol)
     val rows = emb.select(col(embCol).as("emb"))
-      .where(wellFormedDim(col("emb"), dim))
+      .where(Similarity.wellFormed(col("emb"), dim))
       .select(posexplode(col("emb")).as(Seq("i", "x")))
       .groupBy("i")
       .agg(min(col("x").cast("double")).as("mn"),
@@ -63,7 +60,7 @@ object Sq {
     val minsLit = typedlit(p.mins.toSeq)
     val maxsLit = typedlit(p.maxs.toSeq)
     corpus
-      .where(wellFormedDim(col(embCol), p.dim))
+      .where(Similarity.wellFormed(col(embCol), p.dim))
       .select(col(idCol),
         transform(col(embCol), (x, i) => {
           val mn = element_at(minsLit, i + 1)

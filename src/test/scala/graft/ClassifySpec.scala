@@ -51,6 +51,24 @@ class ClassifySpec extends SparkTestBase {
     assert(w10.toSeq === w11.toSeq)
   }
 
+  test("perceptronScore at dim 200 equals the HOF dot margin exactly") {
+    // above the dim where scoring once switched from an unrolled dot to
+    // the HOF fold; the kernel runs at every dim and must not move a bit
+    val rnd = new scala.util.Random(7)
+    val emb = (1 to 30).map(i =>
+      (i.toLong, Array.fill(200)(rnd.nextFloat() * 2f - 1f)))
+      .toDF("vec_id", "embedding")
+    val w = Array.fill(201)(rnd.nextDouble() * 2.0 - 1.0)
+    val scored = Classify.perceptronScore(emb, "vec_id", "embedding", w)
+      .select("vec_id", "margin").as[(Long, Double)].collect().toMap
+    val hof = emb.select(col("vec_id"),
+        graft.operators.Similarity.dot(
+          concat(col("embedding"), array(lit(1f))), typedlit(w)))
+      .as[(Long, Double)].collect().toMap
+    assert(scored.size === 30)
+    assert(scored === hof)
+  }
+
   test("text perceptron separates a vocabulary-disjoint corpus and " +
     "predicts its training labels") {
     val docs = (0 until 20).map { i =>

@@ -39,7 +39,9 @@ class ExecStructureSpec extends AnyFunSuite {
     "startCurationGate", "startPassageGate", "startBoilerplateGate",
     "startEntityGate", "tumblingCounts", "slidingCounts", "sessionCounts",
     "dedupByKey", "journalMetricsThrottled", "ThrottledRetryingClient",
-    "scalableNtile(", "rollingFingerprint", "lshBucket(")
+    "scalableNtile(", "rollingFingerprint", "lshBucket(", "staticDot",
+    "DotProductF32F64", "dotF32F64", "graft_dot_f32f64", "weightDot",
+    "wellFormedDim")
 
   test("checkpoint calls live only in graft.exec.Exec") {
     val root = Paths.get("src/main/scala")

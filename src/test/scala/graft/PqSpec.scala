@@ -158,6 +158,19 @@ class PqSpec extends SparkTestBase {
     }
   }
 
+  test("a NaN-poisoned probe gets no ivfPqTopK neighbours under full " +
+    "routing, like every other cosine top-k") {
+    val probes = cellCorpus.unionByName(
+      Seq((99L, Array(Float.NaN, 0f, 0f, 0f, 0f, 0f, 0f, 0f)))
+        .toDF("vec_id", "embedding"))
+    val top = Pq.ivfPqTopK(cellCorpus, probes, k = 3,
+        nCentroids = 2, nProbe = 2, coarseIters = 2,
+        m = 2, ksub = 4, pqIters = 3)
+      .select("probe_id").as[Long].collect()
+    assert(!top.contains(99L))
+    assert(top.toSet === (1L to 6L).toSet)
+  }
+
   test("persisted IVF-PQ index: cluster-partitioned list layout, and " +
     "exact-copy probes find their source at rank 1 with no re-training") {
     val path = java.nio.file.Files

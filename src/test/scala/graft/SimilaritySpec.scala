@@ -27,21 +27,32 @@ class SimilaritySpec extends SparkTestBase {
     assert(r(4).isEmpty) // zero norm -> null, no ANSI crash
   }
 
-  test("staticDot, codegen DotProductF32, and SQL graft_dot_f32 all equal " +
-    "the HOF dot bit-for-bit") {
+  test("DotProductF32 (float or double right side) and graft_dot_f32 " +
+    "equal the HOF dot") {
     import graft.functions.VectorExpressions
     val both = vecs.as("a").crossJoin(vecs.as("b"))
       .select(Similarity.dot(col("a.embedding"), col("b.embedding")).as("hof"),
-        Similarity.staticDot(col("a.embedding"), col("b.embedding"), 3)
-          .as("static"),
         VectorExpressions.dotF32(col("a.embedding"), col("b.embedding"))
           .as("codegen"),
         call_function("graft_dot_f32", col("a.embedding"),
-          col("b.embedding")).as("sqlfn"))
+          col("b.embedding")).as("sqlfn"),
+        VectorExpressions.dotF32(col("a.embedding"),
+          col("b.embedding").cast("array<double>")).as("f32f64"))
       .as[(Double, Double, Double, Double)].collect()
-    both.foreach { case (h, s, c, q) =>
-      assert(h === s); assert(h === c); assert(h === q)
+    assert(both.length === 25)
+    both.foreach { case (h, c, q, d) =>
+      assert(h === c); assert(h === q); assert(h === d)
     }
+  }
+
+  test("graft_dot_f32 rejects an ARRAY<DOUBLE> left side at analysis, " +
+    "naming the function") {
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Seq((Array(1.0, 2.0), Array(1f, 2f))).toDF("a", "b")
+        .select(call_function("graft_dot_f32", col("a"), col("b")))
+        .collect()
+    }
+    assert(e.getMessage.contains("graft_dot_f32"))
   }
 
   test("DotProductF32 nulls: null array -> null; length mismatch -> min dim") {
