@@ -252,6 +252,17 @@ private[functions] object CentroidScan {
     out
   }
 
+  /** Plan text for a driver-side matrix argument: its `shape` and a
+    * CRC32 of its `values`, so `explain` names the matrix an expression
+    * holds instead of a JVM identity hash that changes every run. */
+  def describe(shape: String, values: Array[Double]): String = {
+    val bytes = java.nio.ByteBuffer.allocate(values.length * 8)
+    values.foreach(bytes.putDouble)
+    val crc = new java.util.zip.CRC32
+    crc.update(bytes.array())
+    f"$shape #${crc.getValue}%08x"
+  }
+
   /** Centroid L2 norms, ascending-index driver sum (same order as the
     * SQL oracle's list_sum). */
   def norms(cents: Array[Array[Double]]): Array[Double] = cents.map { c =>
@@ -361,6 +372,8 @@ case class NearestCentroid(child: Expression, cents: Array[Array[Double]])
   private lazy val flat: Array[Double] =
     CentroidScan.flatten(cents, "NearestCentroid")
   private lazy val cNorms: Array[Double] = CentroidScan.norms(cents)
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, CentroidScan.describe(s"k=$k×dim=$dim", flat))
 
   override protected def nullSafeEval(v: Any): Any = {
     val x = v.asInstanceOf[ArrayData]
@@ -424,6 +437,8 @@ case class NearestCentroidScore(child: Expression,
   private lazy val flat: Array[Double] =
     CentroidScan.flatten(cents, "NearestCentroidScore")
   private lazy val cNorms: Array[Double] = CentroidScan.norms(cents)
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, CentroidScan.describe(s"k=$k×dim=$dim", flat))
 
   override protected def nullSafeEval(v: Any): Any = {
     val x = v.asInstanceOf[ArrayData]
@@ -502,6 +517,10 @@ case class PqEncodeL2(child: Expression, codebook: Array[Array[Array[Double]]])
     }
     out
   }
+
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child,
+      CentroidScan.describe(s"m=$m×ksub=$ksub×dsub=$dsub", flat))
 
   override protected def nullSafeEval(v: Any): Any = {
     val x = v.asInstanceOf[ArrayData]
@@ -642,6 +661,10 @@ case class PqDecodeF32(child: Expression, codebook: Array[Array[Array[Double]]])
     }
     out
   }
+
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, CentroidScan.describe(s"m=$m×ksub=$ksub×dsub=$dsub",
+      codebook.flatten.flatten))
 
   override protected def nullSafeEval(v: Any): Any = {
     val x = v.asInstanceOf[ArrayData]

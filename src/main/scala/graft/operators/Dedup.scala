@@ -307,16 +307,14 @@ object Dedup {
   }
 
   /** One microbatch of the continuous BOILERPLATE gate — the
-    * df-threshold sibling of [[passageGateBatch]] (same epoch
-    * partitioning, marker-last bootstrap, self-excluding replay read),
-    * with one structural difference: the index is a COUNT store, not a
-    * set. Each epoch appends its batch's per-span distinct-doc counts
-    * as partition `ingest_batch = N`; a probe SUMS counts across
-    * committed epochs (minus its own — the self-exclusion), so hotness
-    * reflects every document ever ingested, INCLUDING chrome already
-    * excised from earlier batches' rewritten text (the raw batch is
-    * counted, which is exactly what a full recompute over the raw
-    * union would see).
+    * df-threshold sibling of [[passageGateBatch]], with one structural
+    * difference: the index (`spans/`) is a COUNT store, not a set. Each
+    * epoch appends its batch's per-span distinct-doc counts and its
+    * rewritten docs (chrome excised, empty docs dropped); a probe SUMS
+    * counts across earlier epochs, so hotness reflects every document
+    * ever ingested, INCLUDING chrome already excised from earlier
+    * batches' rewritten text (the raw batch is counted, which is exactly
+    * what a full recompute over the raw union would see).
     *
     * Because the index is consulted by SUMMING, [[compactSetIndex]]'s
     * duplicate-tolerance argument does NOT apply — transient duplicate
@@ -324,49 +322,35 @@ object Dedup {
     * summing, and is deliberately not provided until needed; refuse the
     * temptation to point compactSetIndex here.
     *
-    * Replay idempotence: the probe reads only STRICTLY-EARLIER epochs
-    * (`ingest_batch < batchId`, not the passage gate's `!=` — counts
-    * are raw frequencies, so a later epoch can carry this batch's own
-    * spans and `!=` would inflate a bootstrap replay's view), so any
-    * replayed epoch recomputes EXACTLY the original rewritten batch and
-    * per-span counts, and rewrites its own partitions identically
-    * (dynamic overwrite). At-least-once × idempotent = exactly-once. */
+    * Writes, bootstrap and replay follow [[graft.exec.Artifact.gateEpoch]].
+    * Index view: STRICTLY-EARLIER epochs (`ingest_batch < batchId`, not
+    * the passage gate's `!=`): counts are raw batch frequencies, so a
+    * later epoch's partition can carry the spans this batch contributed,
+    * and a bootstrap replay reading it under `!=` would excise spans the
+    * original run admitted. Under `<` every replay recomputes against
+    * exactly the view its original run saw. A
+    * [[persistBoilerplateIndex]] artifact is probe-only and refused. */
   def boilerplateGateBatch(indexPath: String, corpusPath: String,
                            idCol: String = "doc_id",
                            textCol: String = "text",
                            chunkWords: Int = 8, minDocs: Int = 4)
                           (batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
     import spark.implicits._
-    val bootstrap = !Artifact.committed(spark, s"$indexPath/meta")
-    if (!bootstrap)
-      Artifact.requireMeta(spark, indexPath, "boilerplate index",
-        "gate requested")("chunkWords" -> chunkWords, "minDocs" -> minDocs)
-    Artifact.requireEpochLayout(spark, s"$indexPath/spans",
-      "boilerplate gate", "probeBoilerplateIndex")
     val id = col(idCol)
-    val text = col(textCol)
-    // the index view, SUMMED over the STRICTLY-EARLIER epochs only —
-    // stronger than the passage gate's `!= batchId` self-exclusion,
-    // and necessary here: counts are RAW batch frequencies (not
-    // novel-only sets), so a later epoch's partition can carry the
-    // same spans this batch contributed; a bootstrap replay reading it
-    // under `!=` would see inflated frequencies and excise spans the
-    // original run admitted. Under `<` every replay recomputes against
-    // exactly the view its original run saw. Bootstrap runs the same
-    // code path against an empty count frame.
-    val idxCounts =
-      if (bootstrap)
-        Seq.empty[(String, Long)].toDF("span", "n_docs")
-      else
-        spark.read.parquet(s"$indexPath/spans")
+    Artifact.gateEpoch(batch, batchId, "boilerplateGateBatch",
+        "probeBoilerplateIndex", indexPath, Seq("spans"))(
+        "chunkWords" -> chunkWords, "minDocs" -> minDocs)(
+        Seq((chunkWords, minDocs)).toDF("chunk_words", "min_docs")) {
+        bootstrap =>
+      val idxCounts =
+        if (bootstrap) Seq.empty[(String, Long)].toDF("span", "n_docs")
+        else spark.read.parquet(s"$indexPath/spans")
           .where(col("ingest_batch") < lit(batchId))
           .groupBy("span").agg(sum(col("n_docs")).as("n_docs"))
-    // ONE batch span-count pass feeds the probe and the index write
-    scoped {
+      // ONE batch span-count pass feeds the probe and the index write
       val spans = materialize(
-        spanGrid(batch.where(id.isNotNull), id, text, chunkWords))
+        spanGrid(batch.where(id.isNotNull), id, col(textCol), chunkWords))
       val batchCounts = materialize(spans
         .select(col("span"), col("doc_id"))
         .dropDuplicates("span", "doc_id")
@@ -384,16 +368,7 @@ object Dedup {
           .select(col("doc_id"),
             coalesce(col("text_deduped"), lit("")).as("text_deduped"))
           .where(col("text_deduped") =!= ""))
-      if (!admitted.isEmpty || !batchCounts.isEmpty) {
-        Artifact.writeEpoch(admitted, batchId, corpusPath)
-        // never create a schema-less empty spans/ dir (the passage
-        // gate's bootstrap-deferral argument)
-        if (!batchCounts.isEmpty)
-          Artifact.writeEpoch(batchCounts, batchId, s"$indexPath/spans")
-        if (bootstrap && !batchCounts.isEmpty)
-          Artifact.bootstrap(indexPath,
-            Seq((chunkWords, minDocs)).toDF("chunk_words", "min_docs"))
-      }
+      Seq(corpusPath -> admitted, s"$indexPath/spans" -> batchCounts)
     }
   }
 
@@ -669,9 +644,10 @@ object Dedup {
       .distinct()
   }
 
-  /** The batch window hashes NOT yet in `indexH` — the shared novelty
-    * core of [[appendToPassageIndex]] and [[passageGateBatch]]. Both
-    * joins are batch-bounded on the build side. */
+  /** The batch window hashes NOT yet in `indexH` — the novelty core of
+    * [[appendToPassageIndex]] ([[passageGateBatch]] runs the same
+    * anti-join against the hit set its probe already built). Both joins
+    * are batch-bounded on the build side. */
   private def novelWindows(batchH: DataFrame,
                            indexH: DataFrame): DataFrame = {
     val hitH = indexH.join(broadcast(batchH), Seq("h"), "left_semi")
@@ -703,97 +679,54 @@ object Dedup {
 
   /** One microbatch of the continuous PASSAGE gate — the ExactSubstr
     * sibling of [[curationGateBatch]], except batch text is REWRITTEN
-    * (covered passages excised) rather than whole docs dropped:
+    * (covered passages excised) rather than whole docs dropped: batch
+    * passages already in the index (`windows/`), plus within-batch
+    * re-quotes, are excised exactly as [[probePassageIndex]] does, and
+    * the epoch appends its admitted docs (non-empty deduped text) to the
+    * corpus and its NOVEL window hashes to the index. The whole epoch
+    * shares ONE pinned batch posting pass; bootstrap is the same code
+    * path against an empty index frame.
     *
-    *   1. probe the epoch-partitioned window index — batch passages
-    *      already in the corpus, plus within-batch re-quotes, are
-    *      excised exactly as [[probePassageIndex]] does (bootstrap is
-    *      the SAME code path against an empty index frame, and the
-    *      whole epoch shares ONE pinned batch posting pass);
-    *   2. write admitted docs (non-empty deduped text) to the corpus
-    *      and the batch's NOVEL window hashes to the index, both
-    *      partitioned by `ingest_batch = batchId` with dynamic
-    *      overwrite;
-    *   3. bootstrap commits `meta/` (window/stride params) LAST through
-    *      [[graft.exec.Artifact.bootstrap]] — the [[ingestGateBatch]]
-    *      contract; params are validated on every later epoch. A
-    *      bootstrap batch yielding NO windows (all docs sub-window)
-    *      defers the commit: the index must never be born as an empty,
-    *      schema-less windows/ dir, so its corpus partition lands but
-    *      bootstrap re-runs on the next batch (replay-safe — the
-    *      partition rewrites identically).
-    *
-    * Replay idempotence is STRICTER here than in the sibling gates:
-    * the index read EXCLUDES the replaying epoch's own partition, so a
-    * crash after the index write cannot make the replay probe against
-    * its own half-written (or fully written) windows. The sibling
-    * gates' "replay rejects everything ⇒ writes skipped" argument does
-    * not carry over to passage dedup — sub-window docs pass through on
-    * every attempt, so a self-probing replay would rewrite the corpus
+    * Writes, bootstrap and replay follow [[graft.exec.Artifact.gateEpoch]].
+    * A bootstrap batch yielding NO windows (all docs sub-window) lands
+    * its corpus partition and bootstraps again on the next batch.
+    * Index view: every epoch EXCEPT this one (`ingest_batch !=
+    * batchId`). The sibling gates' "a replay rejects everything" argument
+    * does not carry over to passage dedup — sub-window docs pass through
+    * on every attempt, so a self-probing replay would rewrite the corpus
     * partition with only those — hence the exclusion: a replayed epoch
-    * recomputes EXACTLY the original admitted set and rewrites its own
-    * partitions identically. At-least-once × idempotent = exactly-once.
-    *
-    * The gate requires its own epoch-partitioned windows layout; a
-    * [[persistPassageIndex]] artifact (flat windows/) is probe-only and
-    * is refused loudly in BOTH the bootstrap and committed paths
-    * (mixing the two layouts in one directory would break partition
-    * discovery).
-    */
+    * recomputes EXACTLY the original admitted set. A
+    * [[persistPassageIndex]] artifact is probe-only and refused. */
   def passageGateBatch(indexPath: String, corpusPath: String,
                        idCol: String = "doc_id", textCol: String = "text",
                        windowWords: Int = 6, strideWords: Int = 1)
                       (batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
     import spark.implicits._
-    val bootstrap = !Artifact.committedOrLegacy(spark, s"$indexPath/meta")
-    if (!bootstrap)
-      requirePassageMeta(spark, indexPath, windowWords, strideWords,
-        "gate requested")
-    // a flat windows/ layout would break the non-bootstrap read on the
-    // missing partition column, and a bootstrap would destroy it
-    Artifact.requireEpochLayout(spark, s"$indexPath/windows",
-      "passage gate", "probePassageIndex")
     val id = col(idCol)
-    val text = col(textCol)
-    // the self-excluded index view: every committed epoch EXCEPT this
-    // one's own (possibly crashed, half-written) partition. Bootstrap
-    // runs the SAME code path against an empty index frame.
-    val idxH =
-      if (bootstrap)
-        Seq.empty[String].toDF("h")
-      else
-        spark.read.parquet(s"$indexPath/windows")
+    Artifact.gateEpoch(batch, batchId, "passageGateBatch",
+        "probePassageIndex", indexPath, Seq("windows"))(
+        "windowWords" -> windowWords, "strideWords" -> strideWords)(
+        Seq((windowWords, strideWords)).toDF("window_words", "stride_words")) {
+        bootstrap =>
+      val idxH =
+        if (bootstrap) Seq.empty[String].toDF("h")
+        else spark.read.parquet(s"$indexPath/windows")
           .where(col("ingest_batch") =!= lit(batchId)).select("h")
-    // ONE batch posting pass feeds the probe, the admitted set, and the
-    // novelty check — pinned so the three consumers (and the writes,
-    // whose lineage reads the windows/ parquet being overwritten) never
-    // recompute it (the [[curationGateBatch]] pinning argument)
-    scoped {
+      // ONE batch posting pass feeds the probe, the admitted set, and the
+      // novelty check
       val withH = materialize(
-        passagePostings(batch, id, text, windowWords, strideWords))
+        passagePostings(batch, id, col(textCol), windowWords, strideWords))
       val wins = withH.where(col("h").isNotNull)
         .select(col("doc_id"), col("pos").as("st"), col("h"))
       val batchH = wins.select("h").distinct()
       val hitH = idxH.join(broadcast(batchH), Seq("h"), "left_semi")
       val deduped = passageReassemble(batch, id, withH,
         coveredPositions(wins, hitH, windowWords))
-      val admitted = materialize(deduped.where(col("text_deduped") =!= ""))
-      val novel =
-        materialize(batchH.join(broadcast(hitH), Seq("h"), "left_anti"))
-      if (!admitted.isEmpty || !novel.isEmpty) {
-        Artifact.writeEpoch(admitted, batchId, corpusPath)
-        // an empty write would create a windows/ dir with no data files
-        // — unreadable by every later epoch (schema inference fails), so
-        // the dir is only ever created WITH its first novel partition,
-        // and meta only commits once that exists
-        if (!novel.isEmpty)
-          Artifact.writeEpoch(novel, batchId, s"$indexPath/windows")
-        if (bootstrap && !novel.isEmpty)
-          Artifact.bootstrap(indexPath, Seq((windowWords, strideWords))
-            .toDF("window_words", "stride_words"))
-      }
+      Seq(corpusPath ->
+          materialize(deduped.where(col("text_deduped") =!= "")),
+        s"$indexPath/windows" ->
+          materialize(batchH.join(broadcast(hitH), Seq("h"), "left_anti")))
     }
   }
 
@@ -1291,8 +1224,9 @@ object Dedup {
     * `meta/` (w, k, bands: the signature parameters baked into the
     * data; probes validate against it, because probing k=128 bands with
     * a k=64 index would silently return garbage recall), committed by
-    * [[graft.exec.Artifact.persist]]. Appending a new ingest batch to the
-    * index is `mode("append")` on the same layout. */
+    * [[graft.exec.Artifact.persist]]. The layout is flat and the index
+    * probe-only: [[ingestGateBatch]] grows its own epoch-partitioned
+    * index and refuses this one. */
   def persistIndex(corpus: DataFrame, id: Column, text: Column,
                    path: String, w: Int = 3, k: Int = 128,
                    bands: Int = 32): Unit = {
@@ -1331,84 +1265,57 @@ object Dedup {
     * 100 TB pipeline actually runs, as a `foreachBatch` body (wire it
     * with `EventStreams.startGate(stream, ckpt)(ingestGateBatch(...))`):
     *
-    *   1. probe the persisted corpus index (`probePersistedIndex`) and
-    *      drop batch docs near-duplicating the corpus — batch×corpus
+    *   1. probe the gate's corpus index (the `probePersistedIndex` core)
+    *      and drop batch docs near-duplicating the corpus — batch×corpus
     *      only, the corpus never self-joins and never recomputes;
     *   2. dedup the batch INTERNALLY (minhash pairs → min-id survivor)
     *      — without this, two near-identical docs arriving in the same
     *      batch would both pass the corpus probe and poison the index;
-    *   3. append the admitted docs to the corpus table and their
-    *      band/shingle frames to the index, all partitioned by
-    *      `ingest_batch = batchId` with DYNAMIC partition overwrite —
-    *      so a replayed epoch (crash between write and offset commit)
-    *      rewrites its own partitions instead of appending duplicates:
-    *      at-least-once delivery × idempotent write = exactly-once
-    *      corpus/index state, the same argument as
-    *      `EventStreams.windowSinkBatch`.
+    *   3. append the admitted docs to the corpus and their band/shingle
+    *      frames to the index (`bands/`, `shingles/`).
     *
-    * Batch N+1 probes a corpus that already contains batch N's
-    * survivors (the index read is partition-discovered fresh each
-    * epoch). First batch bootstraps the index (no probe).
-    *
-    * Crash safety is keyed on `meta/`: it is written ONCE, at bootstrap,
-    * and LAST (after corpus → bands → shingles), through
-    * [[graft.exec.Artifact.bootstrap]], and bootstrap detection is
-    * [[graft.exec.Artifact.committedOrLegacy]] (the marker, or a
-    * pre-marker index's committer success file). A crash BEFORE the meta
-    * parquet job commits makes the replay re-run the full bootstrap and
-    * dynamic overwrite rewrites the partial partitions; a crash after
-    * the meta job commits but before the marker reads as committed under
-    * the default committer (safe: every data write precedes the meta
-    * write, so a committed meta implies a complete bootstrap). A crash in
-    * any later epoch never touches meta at all, and a replay of a FULLY
-    * committed epoch admits nothing (every batch doc self-matches the
-    * corpus), so no write path runs. */
+    * Writes, bootstrap and replay follow [[graft.exec.Artifact.gateEpoch]].
+    * Index view: a FULL read, so batch N+1 probes a corpus that already
+    * holds batch N's survivors, and a replay of a committed epoch admits
+    * nothing (every admitted doc self-matches the corpus). A
+    * [[persistIndex]] artifact is probe-only and refused. */
   def ingestGateBatch(indexPath: String, corpusPath: String,
                       idCol: String = "doc_id", textCol: String = "text",
                       threshold: Double = 0.6, w: Int = 3, k: Int = 128,
                       bands: Int = 32)
                      (batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
     import spark.implicits._
     val id = col(idCol)
     val text = col(textCol)
-    val bootstrap = !Artifact.committedOrLegacy(spark, s"$indexPath/meta")
-    val afterCorpus =
-      if (bootstrap) batch
-      else {
-        val matched = probePersistedIndex(batch, id, text, indexPath,
-            threshold, w, k, bands)
-          .select(col("batch_id")).distinct()
-        batch.join(matched, id === col("batch_id"), "left_anti")
-      }
-    val pairs = minhashLshPairs(afterCorpus, id, text, threshold, w, k,
-      bands)
-    scoped {
-      val keep = nearDupSurvivors(afterCorpus, id, pairs)
+    Artifact.gateEpoch(batch, batchId, "ingestGateBatch",
+        "probePersistedIndex", indexPath, Seq("bands", "shingles"))(
+        "w" -> w, "k" -> k, "bands" -> bands)(
+        Seq((w, k, bands)).toDF("w", "k", "bands")) { bootstrap =>
+      val afterCorpus =
+        if (bootstrap) batch
+        else {
+          val matched = probeCorpus(
+              minhashBands(batch, id, text, w, k, bands),
+              spark.read.parquet(s"$indexPath/bands"),
+              shingleFrame(batch, id, text, w),
+              spark.read.parquet(s"$indexPath/shingles"), threshold)
+            .select(col("batch_id")).distinct()
+          batch.join(matched, id === col("batch_id"), "left_anti")
+        }
+      val keep = nearDupSurvivors(afterCorpus, id,
+          minhashLshPairs(afterCorpus, id, text, threshold, w, k, bands))
         .where(col("survivor_id") === col("doc_id"))
         .select(col("doc_id").as("__keep_id"))
-      // Pin the admitted set before writing it three times: its lineage
-      // reads the very bands/shingles parquet the writes below overwrite,
-      // so an unpinned recompute could see mutated input. The pin is a
-      // reliable checkpoint when the session has a checkpoint dir (it
-      // survives executor loss), else a localCheckpoint; it and the
-      // components behind `keep` are released when the scope ends —
-      // localCheckpoint blocks otherwise leak per microbatch for the
-      // stream's lifetime, and reliable checkpoint files for the
-      // application's.
+      // the admitted set's lineage reads the bands/shingles the epoch
+      // overwrites on replay: pinned, by a reliable checkpoint when the
+      // session has a checkpoint dir (it survives executor loss), else a
+      // localCheckpoint
       val admitted = materialize(
         afterCorpus.join(keep, id === col("__keep_id"), "left_semi"))
-      if (!admitted.isEmpty) {
-        Artifact.writeEpoch(admitted, batchId, corpusPath)
-        Artifact.writeEpoch(minhashBands(admitted, id, text, w, k, bands),
-          batchId, s"$indexPath/bands")
-        Artifact.writeEpoch(shingleFrame(admitted, id, text, w),
-          batchId, s"$indexPath/shingles")
-        if (bootstrap)
-          Artifact.bootstrap(indexPath,
-            Seq((w, k, bands)).toDF("w", "k", "bands"))
-      }
+      Seq(corpusPath -> admitted,
+        s"$indexPath/bands" -> minhashBands(admitted, id, text, w, k, bands),
+        s"$indexPath/shingles" -> shingleFrame(admitted, id, text, w))
     }
   }
 
@@ -1420,64 +1327,51 @@ object Dedup {
     *   1. gate the batch on the conjunctive gopher rule pack
     *      (`TextAnalysis.gopherFlags`);
     *   2. drop batch docs whose content fingerprint already exists in
-    *      the persisted index — exact corpus dedup as ONE skinny md5
+    *      the index (`fps/`) — exact corpus dedup as ONE skinny md5
     *      anti-join, no signatures;
     *   3. dedup the batch internally (first id per fingerprint), without
     *      which two copies arriving in one batch would both pass the
     *      corpus probe and poison the index;
-    *   4. write admitted docs to the corpus and their fingerprints to
-    *      the index, partitioned by `ingest_batch` with dynamic
-    *      overwrite — at-least-once replay × idempotent write =
-    *      exactly-once corpus/index state, the `ingestGateBatch`
-    *      argument verbatim, including its [[graft.exec.Artifact]]
-    *      bootstrap contract. Meta records the rule bounds, so a gate
-    *      restarted with different bounds fails loudly instead of
-    *      silently mixing two curation policies in one corpus.
+    *   4. append admitted docs to the corpus and their fingerprints to
+    *      the index.
     *
-    * The admitted frame's lineage reads the fingerprint index the
-    * writes mutate, so it is pinned (`materialize`) across the write
-    * pair and released when its scope ends, as in `ingestGateBatch`. */
+    * Writes, bootstrap and replay follow [[graft.exec.Artifact.gateEpoch]];
+    * meta records the rule bounds, so a gate restarted with different
+    * bounds fails loudly instead of silently mixing two curation
+    * policies in one corpus. Index view: a FULL read — a replay of a
+    * committed epoch admits nothing. */
   def curationGateBatch(indexPath: String, corpusPath: String,
                         idCol: String = "doc_id", textCol: String = "text",
                         minWords: Int = 20, maxWords: Int = 90,
                         minAvgWordLen: Double = 3.0,
                         maxAvgWordLen: Double = 10.0)
                        (batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
     import spark.implicits._
-    val bootstrap = !Artifact.committedOrLegacy(spark, s"$indexPath/meta")
-    // 1-row driver read per microbatch — the same per-epoch cost
-    // probePersistedIndex pays for its parameter check
-    if (!bootstrap)
-      Artifact.requireMeta(spark, indexPath, "persisted curation index",
-        "the gate requested")("minWords" -> minWords,
-        "maxWords" -> maxWords, "minAvgWordLen" -> minAvgWordLen,
-        "maxAvgWordLen" -> maxAvgWordLen)
-    val ok = graft.functions.TextAnalysis.gopherFlags(col(textCol),
-      minWords, maxWords, minAvgWordLen, maxAvgWordLen)
-      .map(_._2).reduce(_ && _)
-    val gated = batch.where(ok).withColumn("__fp",
-      graft.functions.TextAnalysis.fingerprint(col(textCol)))
-    val fresh =
-      if (bootstrap) gated
-      else gated.join(
-        spark.read.parquet(s"$indexPath/fps").select(col("fp").as("__seen")),
-        col("__fp") === col("__seen"), "left_anti")
-    scoped {
+    Artifact.gateEpoch(batch, batchId, "curationGateBatch",
+        "an anti-join on TextAnalysis.fingerprint", indexPath, Seq("fps"))(
+        "minWords" -> minWords, "maxWords" -> maxWords,
+        "minAvgWordLen" -> minAvgWordLen, "maxAvgWordLen" -> maxAvgWordLen)(
+        Seq((minWords, maxWords, minAvgWordLen, maxAvgWordLen))
+          .toDF("min_words", "max_words", "min_awl", "max_awl")) {
+        bootstrap =>
+      val ok = graft.functions.TextAnalysis.gopherFlags(col(textCol),
+        minWords, maxWords, minAvgWordLen, maxAvgWordLen)
+        .map(_._2).reduce(_ && _)
+      val gated = batch.where(ok).withColumn("__fp",
+        graft.functions.TextAnalysis.fingerprint(col(textCol)))
+      val fresh =
+        if (bootstrap) gated
+        else gated.join(
+          spark.read.parquet(s"$indexPath/fps").select(col("fp").as("__seen")),
+          col("__fp") === col("__seen"), "left_anti")
+      // the admitted set's lineage reads the fps/ the epoch writes
       val admitted = materialize(fresh
         .withColumn("__rn", row_number().over(
           Window.partitionBy("__fp").orderBy(col(idCol))))
         .where(col("__rn") === 1).drop("__rn"))
-      if (!admitted.isEmpty) {
-        Artifact.writeEpoch(admitted.drop("__fp"), batchId, corpusPath)
-        Artifact.writeEpoch(admitted.select(col("__fp").as("fp")), batchId,
-          s"$indexPath/fps")
-        if (bootstrap)
-          Artifact.bootstrap(indexPath,
-            Seq((minWords, maxWords, minAvgWordLen, maxAvgWordLen))
-              .toDF("min_words", "max_words", "min_awl", "max_awl"))
-      }
+      Seq(corpusPath -> admitted.drop("__fp"),
+        s"$indexPath/fps" -> admitted.select(col("__fp").as("fp")))
     }
   }
 

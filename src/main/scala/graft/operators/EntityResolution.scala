@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.exec.Artifact
-import graft.exec.Exec.{materialize, scoped, workParallelism}
+import graft.exec.Exec.{materialize, workParallelism}
 
 /** Fuzzy record linkage / entity resolution: collapse name VARIANTS
   * ("Dr. Jane Doe" / "jane doe" / a typo'd form) of the same real-world
@@ -272,7 +272,8 @@ object EntityResolution {
     }
     Artifact.persist(spark, path, metaRow(spark, maxDistNum, maxDistDen,
         maxBlock, maxLen)) {
-      writeRecordsPartition(linkable.join(resolved, Seq("id")), -1L, path)
+      Artifact.writeEpoch(recordsFrame(linkable.join(resolved, Seq("id"))),
+        -1L, s"$path/records")
     }
   }
 
@@ -284,14 +285,10 @@ object EntityResolution {
       .toDF("max_dist_num", "max_dist_den", "max_block", "max_norm_len")
   }
 
-  /** The records/ partition write shared by build and gate: dynamic
-    * partition overwrite, so an epoch replay rewrites ITS OWN partition
-    * byte-identically and never touches committed ones. */
-  private def writeRecordsPartition(assigned: DataFrame, epoch: Long,
-                                    path: String): Unit =
-    Artifact.writeEpoch(assigned
-      .select(col("id"), col("norm"), length(col("norm")).as("norm_len"),
-        col("blk"), col("entity_id")), epoch, s"$path/records")
+  /** The records/ rows, shared by build and gate. */
+  private def recordsFrame(assigned: DataFrame): DataFrame =
+    assigned.select(col("id"), col("norm"), length(col("norm")).as("norm_len"),
+      col("blk"), col("entity_id"))
 
   /** Probe a [[persistEntityIndex]] artifact with a new record batch:
     * assign every batch record an entity WITHOUT re-resolving the
@@ -381,24 +378,19 @@ object EntityResolution {
 
   /** Continuous entity resolution — the record-linkage member of the
     * ingest-gate family (minhash / semantic / passage / curation), as a
-    * `foreachBatch((batch, epochId) => ...)` body:
+    * `foreachBatch((batch, epochId) => ...)` body. The bootstrap epoch
+    * full-resolves the batch among itself; later epochs probe the index
+    * ([[probeEntityIndex]] semantics): new records ADOPT matched
+    * persisted entities (one-hop) or mint their batch component min as
+    * a new entity id. Entities only ever grow, and accumulated deferred
+    * merges resolve on the periodic re-bootstrap, the cadence the whole
+    * gate family shares. Each epoch appends its linkable records to
+    * `records/`.
     *
-    *  - BOOTSTRAP (no commit marker): the first batch full-resolves
-    *    among itself, lands under `records/ingest_batch=<epoch>`, then
-    *    meta and marker ([[graft.exec.Artifact.bootstrap]]) — data
-    *    before meta, so a committed meta implies complete data, and a
-    *    crash anywhere before the marker re-bootstraps idempotently
-    *    (dynamic partition overwrite rewrites the same partition
-    *    byte-identically).
-    *  - EPOCHS: probe with the SELF-EXCLUDING index read
-    *    (`excludeEpoch = epochId`) so a post-commit replay of epoch k
-    *    assigns against exactly the pre-k index state and rewrites its
-    *    partition identically — exactly-once in row terms without any
-    *    write-ahead log. New records ADOPT matched persisted entities
-    *    (one-hop, [[probeEntityIndex]] semantics) or mint their batch
-    *    component min as a new entity id; entities only ever grow, and
-    *    accumulated deferred merges resolve on the periodic
-    *    re-bootstrap, the cadence the whole gate family shares.
+    * Writes, bootstrap and replay follow [[graft.exec.Artifact.gateEpoch]].
+    * Index view: every epoch EXCEPT this one (`excludeEpoch = epochId`),
+    * so a post-commit replay of epoch k assigns against exactly the
+    * pre-k index state and rewrites its partition identically.
     *
     * Per-epoch cost tracks the batch: one batch resolution + one
     * blocked probe join; the only index-wide reads are the blk
@@ -409,40 +401,30 @@ object EntityResolution {
                       maxDistNum: Int = 1, maxDistDen: Int = 8,
                       maxBlock: Int = 1000)
                      (batch: DataFrame, epochId: Long): Unit = {
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
-    val bootstrap = !Artifact.committedOrLegacy(spark, s"$indexPath/meta")
-    if (!bootstrap)
-      Artifact.requireMeta(spark, indexPath, "persisted entity index",
-        "the gate requested")("maxDistNum" -> maxDistNum,
-        "maxDistDen" -> maxDistDen, "maxBlock" -> maxBlock)
-    // ONE baseFrames + ONE maxNormLen probe for the whole epoch: the
-    // bootstrap path previously ran the normalize+max scan twice
-    // (inside resolveEntities, then again for the meta row) over what
-    // is typically the largest batch the gate ever sees — the initial
-    // backfill corpus (the persistEntityIndex single-scan discipline,
-    // commit 2a02427)
+    // ONE baseFrames + ONE maxNormLen probe for the whole bootstrap
+    // epoch (the resolution and the meta row share it): the initial
+    // backfill is typically the largest batch the gate ever sees
     val (base, linkable) =
       baseFrames(batch, col(idCol), col(nameCol), block)
-    val bootMaxLen = if (bootstrap) maxNormLen(linkable) else None
-    val assigned =
-      if (bootstrap)
-        resolveCore(base, linkable, bootMaxLen,
-          maxDistNum, maxDistDen, maxBlock)
-      else
-        probeEntityIndex(batch, col(idCol), col(nameCol), block,
-          indexPath, excludeEpoch = Some(epochId))
-    // only linkable records are indexed (same as the batch build); the
-    // lineage reads the partition tree the write below mutates, so the
-    // frame is pinned across the write, and released after it
-    scoped {
-      val admitted = materialize(linkable.join(assigned, Seq("id")))
-      if (!admitted.isEmpty) {
-        writeRecordsPartition(admitted, epochId, indexPath)
+    lazy val bootMaxLen = maxNormLen(linkable)
+    Artifact.gateEpoch(batch, epochId, "entityGateBatch",
+        "probeEntityIndex", indexPath, Seq("records"))(
+        "maxDistNum" -> maxDistNum, "maxDistDen" -> maxDistDen,
+        "maxBlock" -> maxBlock)(
+        metaRow(spark, maxDistNum, maxDistDen, maxBlock,
+          bootMaxLen.getOrElse(0))) { bootstrap =>
+      val assigned =
         if (bootstrap)
-          Artifact.bootstrap(indexPath, metaRow(spark, maxDistNum,
-            maxDistDen, maxBlock, bootMaxLen.getOrElse(0)))
-      }
+          resolveCore(base, linkable, bootMaxLen,
+            maxDistNum, maxDistDen, maxBlock)
+        else
+          probeEntityIndex(batch, col(idCol), col(nameCol), block,
+            indexPath, excludeEpoch = Some(epochId))
+      // only linkable records are indexed (same as the batch build);
+      // the lineage reads the records/ the epoch writes
+      Seq(s"$indexPath/records" ->
+        materialize(recordsFrame(linkable.join(assigned, Seq("id")))))
     }
   }
 }

@@ -1557,36 +1557,28 @@ object Similarity {
     * embedding-side mirror of `Dedup.ingestGateBatch`, and the
     * `foreachBatch` body `EventStreams.startGate` wires to a stream:
     *
-    *   1. probe the persisted index (`probeSemanticIndex`) and drop
-    *      batch vectors near-duplicating the corpus — batch×cluster
-    *      only, the corpus never self-joins and is never re-trained;
+    *   1. probe the index (`probeSemanticIndex`) and drop batch vectors
+    *      near-duplicating the corpus — batch×cluster only, the corpus
+    *      never self-joins and is never re-trained;
     *   2. dedup the batch INTERNALLY (same-cluster exact pairs under
     *      the PERSISTED centroids → min-id survivor) — without this,
     *      two near-identical vectors arriving together would both pass
     *      the corpus probe and poison the index;
-    *   3. append the admitted vectors to `vectors/`, partitioned by
-    *      `ingest_batch = batchId` with dynamic partition overwrite —
-    *      a replayed epoch rewrites its own partitions, and a replay
-    *      of a fully committed epoch admits nothing (every admitted
-    *      vector self-matches at cos = 1.0 ≥ threshold; within-batch
-    *      losers match their survivor), so at-least-once delivery ×
-    *      idempotent write = exactly-once index state.
+    *   3. append the admitted vectors to `vectors/`.
     *
-    * Bootstrap (no committed `meta/`): train k-means ON the first
-    * batch, self-dedup it, write vectors → centroids → meta and marker
-    * ([[graft.exec.Artifact.bootstrap]]), exactly the
-    * `Dedup.ingestGateBatch` crash contract: a crash before the meta job
-    * commits re-bootstraps on replay (partial `meta/` deleted, partial
-    * partitions dynamically overwritten); a crash after meta commit
-    * reads as committed ([[graft.exec.Artifact.committedOrLegacy]]).
+    * Writes, bootstrap and replay follow [[graft.exec.Artifact.gateEpoch]].
+    * Bootstrap trains k-means ON the first batch and writes `centroids/`
+    * after the vectors, before meta. Index view: a FULL read — a replay
+    * of a committed epoch admits nothing (every admitted vector
+    * self-matches at cos = 1.0 ≥ threshold; within-batch losers match
+    * their survivor), which is why `threshold <= 1.0` is required. A
+    * `persistSemanticIndex` base is gate-compatible.
     *
     * Centroids are write-once: later epochs assign against the
     * bootstrap quantizer and never retrain — the production answer to
     * distribution drift is a periodic re-bootstrap into a fresh index
     * path, not silent in-place centroid movement (which would
-    * invalidate every persisted assignment). `requires threshold <=
-    * 1.0` — above it nothing self-matches and replay idempotence is
-    * lost. */
+    * invalidate every persisted assignment). */
   def semanticGateBatch(indexPath: String, kClusters: Int, iters: Int,
                         threshold: Double, idCol: String = "vec_id",
                         embCol: String = "embedding")
@@ -1594,41 +1586,35 @@ object Similarity {
     require(threshold <= 1.0,
       s"semanticGateBatch: threshold=$threshold > 1.0 breaks replay " +
         "idempotence (nothing self-matches)")
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
     import spark.implicits._
-    val bootstrap = !Artifact.committedOrLegacy(spark, s"$indexPath/meta")
-    val cents =
-      if (bootstrap) kMeansCentroids(batch, kClusters, iters, idCol, embCol)
-      else readSemanticCentroids(spark, indexPath)
-    val afterCorpus =
-      if (bootstrap) batch
-      else {
-        val matched = probeSemanticIndex(batch, indexPath, threshold,
-          idCol, embCol).select(col("batch_id")).distinct()
-        batch.join(matched, col(idCol) === col("batch_id"), "left_anti")
-      }
-    val assigned = assignedFrame(afterCorpus, idCol, embCol, cents)
-    val pairs = exactWithinClusterPairs(assigned, threshold)
-    scoped {
+    lazy val trained = kMeansCentroids(batch, kClusters, iters, idCol, embCol)
+    // k and dim are checked by probeSemanticIndex, against centroids/
+    // and the batch
+    Artifact.gateEpoch(batch, batchId, "semanticGateBatch",
+        "probeSemanticIndex", indexPath, Seq("vectors"))()({
+        writeCentroids(spark, trained, indexPath)
+        Seq((trained.length, trained.head.length)).toDF("k", "dim")
+      }) { bootstrap =>
+      val cents =
+        if (bootstrap) trained else readSemanticCentroids(spark, indexPath)
+      val afterCorpus =
+        if (bootstrap) batch
+        else {
+          val matched = probeSemanticIndex(batch, indexPath, threshold,
+            idCol, embCol).select(col("batch_id")).distinct()
+          batch.join(matched, col(idCol) === col("batch_id"), "left_anti")
+        }
+      val assigned = assignedFrame(afterCorpus, idCol, embCol, cents)
       val keep = Dedup.nearDupSurvivors(
-          afterCorpus.select(col(idCol)), col(idCol), pairs,
+          afterCorpus.select(col(idCol)), col(idCol),
+          exactWithinClusterPairs(assigned, threshold),
           Dedup.connectedComponentsStar(_))
         .where(col("survivor_id") === col("doc_id"))
         .select(col("doc_id").as("__keep_id"))
-      // pin the admitted set before the write: its lineage reads the very
-      // vectors/ parquet the write below appends partitions to (same
-      // hazard and same scoped release as Dedup.ingestGateBatch)
-      val admitted = materialize(
-        assigned.join(keep, col("id") === col("__keep_id"), "left_semi"))
-      if (!admitted.isEmpty) {
-        Artifact.writeEpoch(admitted, batchId, s"$indexPath/vectors")
-        if (bootstrap) {
-          writeCentroids(spark, cents, indexPath)
-          Artifact.bootstrap(indexPath,
-            Seq((cents.length, cents.head.length)).toDF("k", "dim"))
-        }
-      }
+      // the admitted set's lineage reads the vectors/ the epoch writes
+      Seq(s"$indexPath/vectors" -> materialize(
+        assigned.join(keep, col("id") === col("__keep_id"), "left_semi")))
     }
   }
 

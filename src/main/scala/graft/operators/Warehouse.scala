@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DateType, NumericType, StringType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, DateType, IntegerType, NumericType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 
 import graft.exec.Artifact
 
@@ -519,26 +519,13 @@ object Warehouse {
     * `EventStreams.startGate(stream, ckpt)(cdcGateBatch(...))`): plain parquet
     * made safely replayable without a transactional table format.
     *
-    * Layout: `tableDir/v=<epoch>/` holds the FULL snapshot as of that
-    * epoch, committed by a marker inside the version directory
-    * ([[graft.exec.Artifact.commit]]), written LAST; `tableDir/meta/`
-    * records the key and payload columns once, at bootstrap, under the
-    * same write-once contract as the index gates
-    * ([[graft.exec.Artifact.bootstrap]]) — later epochs READ the
-    * contract from meta and refuse a drifted caller, so two epochs can
-    * never fold with different keys.
-    *
-    * Exactly-once: the base of epoch N is the newest COMMITTED version
-    * with v < N — a SELF-EXCLUDING read, so a replayed epoch (crash
-    * after data write, before the streaming offset commit) re-folds the
-    * SAME base with the SAME at-least-once batch and rewrites
-    * `v=N` byte-identically (mode overwrite clears the partial or
-    * committed previous attempt, marker re-created after). A crash
-    * mid-write leaves `v=N` without a marker — invisible to readers
-    * ([[readSnapshot]]) and replaced wholesale on replay. Unlike the
-    * append-only gates, nothing is partition-appended: a snapshot epoch
-    * REPLACES state, so versioning (not dynamic partition overwrite) is
-    * what makes at-least-once replay idempotent.
+    * Layout, bootstrap and replay follow
+    * [[graft.exec.Artifact.snapshotEpoch]]: `tableDir/v=<epoch>/` holds
+    * the FULL snapshot as of that epoch, folded from the newest committed
+    * version before it; `tableDir/meta/` pins the key and payload
+    * columns, so two epochs can never fold with different keys. A torn
+    * version is invisible to [[readSnapshot]] and replaced wholesale on
+    * replay.
     *
     * Scale: each epoch costs one [[applyCdc]] fold (feed-keyed window +
     * full-outer join) plus a full snapshot rewrite — the plain-parquet
@@ -551,39 +538,18 @@ object Warehouse {
                    payloadCols: Seq[String], ord: Column,
                    tiebreak: Column, op: Column)
                   (batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
     import spark.implicits._
     require(keyCols.nonEmpty && keyCols.forall(payloadCols.contains),
       s"cdcGateBatch: keyCols ${keyCols.mkString(",")} must be a subset " +
         s"of payloadCols ${payloadCols.mkString(",")}")
-    val bootstrap = !Artifact.committed(spark, s"$tableDir/meta")
-    // the fold contract comes FROM meta: a caller whose keys/payload
-    // drifted from the bootstrap's fails loudly instead of silently
-    // merging a different table
-    val bootstrapEpoch = if (bootstrap) None else Some(metaBootstrapEpoch(
-      Artifact.requireMeta(spark, tableDir,
-        "cdcGateBatch: the persisted contract of the table",
-        "the caller gives")("keys" -> keyCols.mkString(","),
-        "payload" -> payloadCols.mkString(","))))
-    val baseV = replayBaseVersion(committedVersions(spark, tableDir),
-      batchId, bootstrapEpoch, "cdcGateBatch")
-    val base = baseV match {
-      case Some(v) => spark.read.parquet(s"$tableDir/v=$v")
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          payloadCols.map(c => batch.schema(c))))
-    }
-    val next = applyCdc(base, batch, keyCols, ord, tiebreak, op)
-    val vDir = s"$tableDir/v=$batchId"
-    next.write.mode("overwrite").parquet(vDir)
-    if (bootstrap)
-      Artifact.bootstrap(tableDir,
-        Seq((keyCols.mkString(","), payloadCols.mkString(","), batchId))
-          .toDF("key_cols", "payload_cols", "bootstrap_epoch"))
-    // marker LAST: the version is invisible until the snapshot is whole
-    Artifact.commit(spark, vDir)
+    val keys = keyCols.mkString(",")
+    val payload = payloadCols.mkString(",")
+    Artifact.snapshotEpoch(batch, batchId, tableDir, "cdcGateBatch",
+        StructType(payloadCols.map(c => batch.schema(c))))(
+        "keys" -> keys, "payload" -> payload)(
+        Seq((keys, payload)).toDF("key_cols", "payload_cols"))(
+      applyCdc(_, batch, keyCols, ord, tiebreak, op))
   }
 
   /** The newest committed snapshot under a [[cdcGateBatch]] table — the
@@ -591,7 +557,7 @@ object Warehouse {
     * invisible). */
   def readSnapshot(spark: org.apache.spark.sql.SparkSession,
                    tableDir: String): DataFrame = {
-    val vs = committedVersions(spark, tableDir)
+    val vs = Artifact.committedVersions(spark, tableDir)
     require(vs.nonEmpty, s"readSnapshot: no committed version in $tableDir")
     spark.read.parquet(s"$tableDir/v=${vs.max}")
   }
@@ -611,7 +577,7 @@ object Warehouse {
     require(keep >= 1, s"compactSnapshots: keep=$keep")
     val dir = new org.apache.hadoop.fs.Path(tableDir)
     val fs = Artifact.fs(spark, tableDir)
-    val committed = committedVersions(spark, tableDir).sorted
+    val committed = Artifact.committedVersions(spark, tableDir).sorted
     if (committed.isEmpty) return Nil
     val cutoff = committed.takeRight(keep).head
     val all = fs.listStatus(dir).toSeq.map(_.getPath)
@@ -624,57 +590,10 @@ object Warehouse {
     drop
   }
 
-  private def committedVersions(spark: org.apache.spark.sql.SparkSession,
-                                tableDir: String): Seq[Long] = {
-    val fs = Artifact.fs(spark, tableDir)
-    val dir = new org.apache.hadoop.fs.Path(tableDir)
-    if (!fs.exists(dir)) return Nil
-    fs.listStatus(dir).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("v="))
-      .filter(p => Artifact.committed(spark, p.toString))
-      .map(_.getName.stripPrefix("v=").toLong)
-  }
-
-  /** `bootstrap_epoch` off a gate's meta row, defaulting to 0 for
-    * tables persisted before the column existed (their bootstrap was
-    * epoch 0 in every real stream). The column is appended LAST so
-    * positional reads of the older columns stay valid. */
-  private def metaBootstrapEpoch(row: org.apache.spark.sql.Row): Long =
-    row.schema.fieldNames.indexOf("bootstrap_epoch") match {
-      case -1 => 0L
-      case i => row.getLong(i)
-    }
-
-  /** THE replay-base resolution shared by the versioned-snapshot gates
-    * (one definition — the refusal semantics must never diverge): the
-    * self-excluding base of epoch N is the newest committed version
-    * < N. An EMPTY base is legitimate only when nothing is committed
-    * yet (bootstrap, or a bootstrap-crash replay) or when the epoch is
-    * at or before the recorded bootstrap epoch (the bootstrap epoch's
-    * own at-least-once replay — no earlier version ever existed, and
-    * leading EMPTY stream batches can push the bootstrap past epoch
-    * 0, which is why the epoch is recorded in meta instead of assuming
-    * 0). Any other empty base means compaction removed the replay's
-    * base version, and folding the batch alone would silently drop all
-    * accumulated state — refused loudly (review r9s4). */
-  private def replayBaseVersion(committed: Seq[Long], batchId: Long,
-                                bootstrapEpoch: Option[Long],
-                                gate: String): Option[Long] = {
-    val baseV = committed.filter(_ < batchId).sorted.lastOption
-    require(baseV.nonEmpty || committed.isEmpty ||
-        bootstrapEpoch.exists(batchId <= _),
-      s"$gate: replay of epoch $batchId has no committed base version " +
-        s"(surviving: ${committed.sorted.mkString(",")}) — compaction " +
-        "removed the replay base; restore an older version or advance " +
-        "the stream checkpoint past this epoch")
-    baseV
-  }
-
   /** Continuous DISTINCT counting — daily HLL registers maintained as a
-    * versioned snapshot table (the [[cdcGateBatch]] layout: full
-    * snapshot per epoch under `v=<epoch>/`, marker-last, self-excluding
-    * base read), folded by per-day elementwise MAX of the batch's
-    * sketches into the newest committed version.
+    * versioned snapshot table ([[graft.exec.Artifact.snapshotEpoch]],
+    * the [[cdcGateBatch]] layout), folded by per-day elementwise MAX of
+    * the batch's sketches into the newest committed version.
     *
     * Why a sketch gate and not a distinct-user table: the state is
     * m ints per DAY — bytes, not users — and the fold is idempotent at
@@ -694,48 +613,29 @@ object Warehouse {
   def uniquesGateBatch(tableDir: String, hexChars: Int,
                        dayCol: String, itemCol: String)
                       (batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
     import spark.implicits._
     require(hexChars >= 2 && hexChars <= 3,
       s"uniquesGateBatch: hexChars=$hexChars out of [2, 3]")
-    val m = 1 << (4 * hexChars)
-    val bootstrap = !Artifact.committed(spark, s"$tableDir/meta")
-    // registers of different widths cannot merge
-    val bootstrapEpoch = if (bootstrap) None else Some(metaBootstrapEpoch(
-      Artifact.requireMeta(spark, tableDir, "uniquesGateBatch: table",
-        "the caller gives")("hexChars" -> hexChars)))
-    val baseV = replayBaseVersion(committedVersions(spark, tableDir),
-      batchId, bootstrapEpoch, "uniquesGateBatch")
-    val base = baseV match {
-      case Some(v) => spark.read.parquet(s"$tableDir/v=$v")
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("day", DateType),
-          org.apache.spark.sql.types.StructField("sk",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.IntegerType, false)))))
+    val zeros = typedlit(Array.fill(1 << (4 * hexChars))(0))
+    // registers of different widths cannot merge: the width is pinned
+    Artifact.snapshotEpoch(batch, batchId, tableDir, "uniquesGateBatch",
+        StructType(Seq(StructField("day", DateType),
+          StructField("sk", ArrayType(IntegerType, false)))))(
+        "hexChars" -> hexChars)(Seq(hexChars).toDF("hex_chars")) { base =>
+      val batchSk = batch
+        .select(col(dayCol).cast("date").as("day"),
+          col(itemCol).cast("string").as("item"))
+        .groupBy("day")
+        .agg(graft.functions.SketchAggregates.hllSketch(col("item"),
+          hexChars).as("sk"))
+      base.select(col("day"), col("sk").as("a"))
+        .join(batchSk.select(col("day"), col("sk").as("b")),
+          Seq("day"), "full_outer")
+        .select(col("day"),
+          zip_with(coalesce(col("a"), zeros), coalesce(col("b"), zeros),
+            (x, y) => greatest(x, y)).as("sk"))
     }
-    val batchSk = batch
-      .select(col(dayCol).cast("date").as("day"),
-        col(itemCol).cast("string").as("item"))
-      .groupBy("day")
-      .agg(graft.functions.SketchAggregates.hllSketch(col("item"),
-        hexChars).as("sk"))
-    val zeros = typedlit(Array.fill(m)(0))
-    val next = base.select(col("day"), col("sk").as("a"))
-      .join(batchSk.select(col("day"), col("sk").as("b")),
-        Seq("day"), "full_outer")
-      .select(col("day"),
-        zip_with(coalesce(col("a"), zeros), coalesce(col("b"), zeros),
-          (x, y) => greatest(x, y)).as("sk"))
-    val vDir = s"$tableDir/v=$batchId"
-    next.write.mode("overwrite").parquet(vDir)
-    if (bootstrap)
-      Artifact.bootstrap(tableDir,
-        Seq((hexChars, batchId)).toDF("hex_chars", "bootstrap_epoch"))
-    Artifact.commit(spark, vDir)
   }
 
   /** Estimated distinct items over an inclusive [from, to] date range,

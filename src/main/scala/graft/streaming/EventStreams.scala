@@ -184,10 +184,11 @@ object EventStreams {
     * Why the gate's table state is exactly-once: Structured Streaming runs
     * a `foreachBatch` body AT-LEAST-once per epoch (a crash between the
     * body's write and the offset commit replays the epoch), and every
-    * `*GateBatch` writes its epoch idempotently — under its own epoch
-    * partition, reading the index without that partition — so a replay
-    * rewrites what the first run wrote. At-least-once replay × idempotent
-    * epoch write = exactly-once table state. */
+    * `*GateBatch` writes its epoch idempotently, so a replay rewrites
+    * what the first run wrote — the index gates through
+    * [[graft.exec.Artifact.gateEpoch]] or
+    * [[graft.exec.Artifact.snapshotEpoch]], which state the argument,
+    * the frozen-model gates by rewriting their own epoch partition. */
   def startGate(stream: DataFrame, checkpoint: String)
                (body: (DataFrame, Long) => Unit): StreamingQuery =
     stream.writeStream

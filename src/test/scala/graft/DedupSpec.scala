@@ -396,6 +396,45 @@ class DedupSpec extends SparkTestBase {
       "a post-bootstrap epoch rewrote meta/ — write-once contract broken")
   }
 
+  test("the minhash, passage and boilerplate gates refuse a flat " +
+    "persisted index, naming the dir and its one-shot probe, and write " +
+    "nothing") {
+    import org.apache.hadoop.fs.Path
+    val corpus = gateEpoch0.toDF("doc_id", "text")
+    // doc 20 is a verbatim copy of persisted doc 1
+    val batch = Seq((20L, gateEpoch0.head._2)).toDF("doc_id", "text")
+    val id = col("doc_id")
+    val text = col("text")
+    // (persisted dir, one-shot probe, persist with the gate's defaults,
+    // the gate at its defaults)
+    val cases = Seq[(String, String, String => Unit, (String, String) => Unit)](
+      ("bands", "probePersistedIndex",
+        Dedup.persistIndex(corpus, id, text, _),
+        Dedup.ingestGateBatch(_, _)(batch, 0L)),
+      ("windows", "probePassageIndex",
+        Dedup.persistPassageIndex(corpus, id, text, _, windowWords = 6),
+        Dedup.passageGateBatch(_, _)(batch, 0L)),
+      ("spans", "probeBoilerplateIndex",
+        Dedup.persistBoilerplateIndex(corpus, id, text, _, chunkWords = 8,
+          minDocs = 4),
+        Dedup.boilerplateGateBatch(_, _)(batch, 0L)))
+    val dirs = for ((sub, probe, persist, gate) <- cases) yield {
+      val d = java.nio.file.Files.createTempDirectory("graft_flat").toString
+      persist(s"$d/idx")
+      val ex = intercept[IllegalArgumentException](
+        gate(s"$d/idx", s"$d/corpus"))
+      assert(ex.getMessage.contains(s"$d/idx/$sub") &&
+        ex.getMessage.contains(probe), ex.getMessage)
+      assert(!hadoopFs.exists(new Path(s"$d/corpus")))
+      assert(!hadoopFs.listStatus(new Path(s"$d/idx/$sub"))
+        .exists(_.getPath.getName.startsWith("ingest_batch=")))
+      d
+    }
+    // the persisted minhash index still finds the copy of doc 1
+    assert(Dedup.probePersistedIndex(batch, id, text, s"${dirs.head}/idx",
+      0.6).select("corpus_id").as[Long].collect().toSet === Set(1L))
+  }
+
   test("ingest gate: admits the same set with and without a session " +
     "checkpoint dir, and reliable checkpoint storage is released") {
     import org.apache.hadoop.fs.Path

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * bucketing each have one owner: only `graft/exec/Exec.scala` may
   * checkpoint a frame or release one, only `graft/exec/Artifact.scala`
   * may name a commit marker, a committer's success file, a
-  * dynamic-partition overwrite or a write-once meta mode, only
+  * dynamic-partition overwrite or a write-once meta mode, or commit a
+  * gate's bootstrap or check its epoch layout, only
   * `graft/streaming/EventStreams.scala` may start a stream writer, and
   * only `graft/operators/Shard.scala` may draw approximate quantile
   * buckets (for its two-phase prefix), so an operator cannot
@@ -26,7 +27,7 @@ class ExecStructureSpec extends AnyFunSuite {
         "workTaskFactor"),
     "graft/exec/Artifact.scala" ->
       Seq("_GRAFT_COMMITTED", "_SUCCESS", "partitionOverwriteMode",
-        "errorifexists"),
+        "errorifexists", "Artifact.bootstrap(", "requireEpochLayout("),
     "graft/streaming/EventStreams.scala" ->
       Seq("writeStream", "checkpointLocation"),
     "graft/operators/Shard.scala" -> Seq("approxQuantile"))

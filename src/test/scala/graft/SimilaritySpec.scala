@@ -692,6 +692,30 @@ class SimilaritySpec extends SparkTestBase {
       .as[Option[Double]].head().isEmpty)
   }
 
+  test("centroid and codebook expressions explain as shape + content " +
+    "digest: equal arrays print identically, different ones differ") {
+    import graft.functions.VectorExpressions._
+    // a range, not a local relation the optimizer folds the projection into
+    val emb = spark.range(2)
+      .select(array(lit(1f), col("id").cast("float"), lit(0f)).as("embedding"))
+    def plan(cents: Array[Array[Double]]): String = {
+      val cb = Array(cents)
+      emb.select(nearestCentroid(col("embedding"), cents).as("c"),
+          nearestCentroidScore(col("embedding"), cents).as("s"),
+          pqDecode(pqEncode(col("embedding"), cb), cb).as("d"))
+        .queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        .replaceAll("(?<=\\w)#\\d+", "#N") // expression ids
+    }
+    val c1 = Array(Array(1.0, 0.0, 0.0), Array(0.0, 1.0, 0.0))
+    val p1 = plan(c1)
+    assert(!p1.contains("[[D@"), p1)
+    assert(p1.contains("k=2×dim=3 #") && p1.contains("m=1×ksub=2×dsub=3 #"),
+      p1)
+    assert(plan(c1.map(_.clone)) === p1)
+    assert(plan(Array(Array(1.0, 0.0, 0.0), Array(0.0, 0.0, 1.0))) !== p1)
+  }
+
   test("kMeans parallel (k-means‖) seeding: deterministic, one-round " +
     "recovery on separated clusters, candidate shrink mirrors the other " +
     "seedings") {
