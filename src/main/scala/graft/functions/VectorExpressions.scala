@@ -206,37 +206,43 @@ case class HyperplaneBuckets(child: Expression, dim: Int, nBits: Int,
       newChild: Expression): HyperplaneBuckets = copy(child = newChild)
 }
 
-/** Nearest-centroid assignment for k-means in ONE codegen'd pass: the
-  * index of the centroid with the highest cosine against the input
-  * vector, ties to the lower index, zero-norm denominators scored -2
-  * (below any real cosine).
-  *
-  * Why an Expression: the composed form — k parallel
-  * aggregate(zip_with(...))-against-literal cosines sorted in a struct
-  * array — rebuilds a plan tree LINEAR in k×dim, and Lloyd's algorithm
-  * re-plans it every round with fresh centroid literals; at k=64/dim=64
-  * the analyzer/optimizer fixed cost alone dominated the actual 20k-row
-  * assignment work (same failure mode as the pre-HyperplaneBuckets LSH
-  * literals above). One expression node holds the centroid matrix as a
-  * codegen reference object and the plan stays constant-size in k.
-  *
-  * Arithmetic is bit-identical to the composed HOF form (and the DuckDB
-  * oracle): ascending-index sequential double folds for the dot and the
-  * row norm; centroid norms are driver-precomputed with the same
-  * ascending sum. Null vector → null; a vector whose length differs
-  * from the centroid dim, or that carries a null element, resolves to
-  * cluster 0, exactly like the composed form (zip_with's null pad / the
-  * null product poison the fold → null cosine → coalesce(-2) for every
-  * centroid) and the SQL oracle's CASE guard.
-  */
-/** THE centroid-scan arithmetic shared by [[NearestCentroid]] and
-  * [[NearestCentroidScore]] — one definition of the flattened matrix,
-  * the driver-side norms, the degenerate test, the interpreted scan,
-  * and the codegen template. The two expressions are spec-pinned to be
-  * the argmax/max pair of ONE scan; a tie-break or norm-order change
-  * applied to a private copy of either would silently break that
-  * pairing, so no private copies exist. */
-private[functions] object CentroidScan {
+/** THE host-side vector arithmetic of the embedding family, serving both
+  * the codegen'd expressions and driver-side training. For
+  * [[NearestCentroid]] and [[NearestCentroidScore]] it is one definition
+  * of the flattened matrix, the driver-side norms, the degenerate test,
+  * the interpreted scan, and the codegen template; the two expressions
+  * are spec-pinned to be the argmax/max pair of ONE scan. The trainers
+  * (`Similarity.ivfSampleCentroids`, `Pq.pqTrain`, the k-means seeding)
+  * and the broadcast all-pairs scans (`Similarity.cosineNearDupPairs`,
+  * `semanticContaminationScores`) call the same `dot`, `norm`, `scan`,
+  * `greedy` and `lloyd`. One contract throughout: ascending-index
+  * sequential double folds, a zero-norm denominator never winning
+  * (scored -2, at distance 0, or the pair skipped), ties to the lower
+  * index. A tie-break or fold-order
+  * change applied to a private copy would silently break the pairing
+  * and the SQL oracles, so no private copies exist. */
+private[graft] object CentroidScan {
+
+  /** Ascending-index double fold of `a(i) * b(i)` over the shorter
+    * length — [[DotProductF32]]'s loop on JVM arrays. */
+  def dot(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var s = 0.0; var i = 0
+    while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+    s
+  }
+
+  def dot(a: Array[Double], b: Array[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var s = 0.0; var i = 0
+    while (i < n) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
+  /** L2 norm: the square root of `dot(v, v)`. */
+  def norm(v: Array[Float]): Double = math.sqrt(dot(v, v))
+
+  def norm(v: Array[Double]): Double = math.sqrt(dot(v, v))
 
   def flatten(cents: Array[Array[Double]], owner: String): Array[Double] = {
     val k = cents.length
@@ -265,11 +271,8 @@ private[functions] object CentroidScan {
 
   /** Centroid L2 norms, ascending-index driver sum (same order as the
     * SQL oracle's list_sum). */
-  def norms(cents: Array[Array[Double]]): Array[Double] = cents.map { c =>
-    var s = 0.0; var i = 0
-    while (i < c.length) { s += c(i) * c(i); i += 1 }
-    math.sqrt(s)
-  }
+  def norms(cents: Array[Array[Double]]): Array[Double] =
+    cents.map(c => norm(c))
 
   /** Dim mismatch or a null ELEMENT — the inputs the composed HOF form
     * scores -2 everywhere (each expression maps them to its own
@@ -281,32 +284,103 @@ private[functions] object CentroidScan {
     false
   }
 
-  /** (argmax, max cosine) over a WELL-FORMED input: ascending-index
-    * sequential double folds, zero-norm scored -2.0, ties to the lower
-    * centroid index. */
-  def scan(x: ArrayData, flat: Array[Double], cNorms: Array[Double],
+  /** (argmax, max cosine) over a WELL-FORMED input (`dim` long, no
+    * null element): ascending-index sequential double folds, zero-norm
+    * scored -2.0, ties to the lower centroid index. */
+  def scan(x: Array[Float], flat: Array[Double], cNorms: Array[Double],
            k: Int, dim: Int): (Int, Double) = {
-    var nrm = 0.0
-    var i = 0
-    while (i < dim) {
-      val e = x.getFloat(i).toDouble; nrm += e * e; i += 1
-    }
-    nrm = math.sqrt(nrm)
+    val nrm = norm(x)
     var best = 0
     var bestScore = java.lang.Double.NEGATIVE_INFINITY
     var j = 0
     while (j < k) {
       var dot = 0.0
-      i = 0
-      while (i < dim) {
-        dot += x.getFloat(i).toDouble * flat(j * dim + i); i += 1
-      }
+      var i = 0
+      while (i < dim) { dot += x(i).toDouble * flat(j * dim + i); i += 1 }
       val den = nrm * cNorms(j)
       val score = if (den == 0.0) -2.0 else dot / den
       if (score > bestScore) { bestScore = score; best = j }
       j += 1
     }
     (best, bestScore)
+  }
+
+  /** Weighted farthest-first greedy (Gonzalez 1985; the argmax cousin of
+    * weighted k-means++): the first pick is the argmax weight, each
+    * later pick the untaken row with the largest `weight · minDist`,
+    * where `minDist` is the cosine distance (1 - cos) to the nearest pick
+    * so far and a zero-norm row is at distance 0 from everything. Ties
+    * go to the lower index; `min(k, n)` rows come back in pick order.
+    * Unit weights give plain farthest-first from row 0. */
+  def greedy(vecs: Array[Array[Double]], weights: Array[Double],
+             k: Int): Array[Array[Double]] = {
+    val n = vecs.length
+    if (n == 0) return Array.empty
+    val norms = vecs.map(v => norm(v))
+    def dist(i: Int, j: Int): Double = {
+      val den = norms(i) * norms(j)
+      if (den == 0.0) 0.0 else 1.0 - dot(vecs(i), vecs(j)) / den
+    }
+    var first = 0
+    var i = 1
+    while (i < n) { if (weights(i) > weights(first)) first = i; i += 1 }
+    val taken = new Array[Boolean](n)
+    taken(first) = true
+    val chosen = scala.collection.mutable.ArrayBuffer(first)
+    val minDist = Array.tabulate(n)(dist(_, first))
+    while (chosen.length < math.min(k, n)) {
+      var best = -1
+      var bestS = -1.0
+      i = 0
+      while (i < n) {
+        if (!taken(i)) {
+          val s = weights(i) * minDist(i)
+          if (s > bestS) { bestS = s; best = i }
+        }
+        i += 1
+      }
+      taken(best) = true
+      chosen += best
+      i = 0
+      while (i < n) {
+        val d = dist(i, best)
+        if (d < minDist(i)) minDist(i) = d
+        i += 1
+      }
+    }
+    chosen.map(vecs(_)).toArray
+  }
+
+  /** `iters` host Lloyd rounds over the `[off, off + len)` slice of
+    * `points`, taken in the caller's order: `assignFor(cs)` maps a point
+    * index to its cluster under centroids `cs`, and each new centroid is
+    * the ascending-order mean of its points' slices. An empty cluster
+    * keeps its previous centroid. */
+  def lloyd(points: Array[Array[Float]], off: Int, len: Int,
+            seeds: Array[Array[Double]], iters: Int)
+           (assignFor: Array[Array[Double]] => Int => Int)
+      : Array[Array[Double]] = {
+    var cs = seeds
+    var r = 0
+    while (r < iters) {
+      val prev = cs
+      val assign = assignFor(prev)
+      val sums = Array.fill(prev.length, len)(0.0)
+      val counts = new Array[Long](prev.length)
+      var p = 0
+      while (p < points.length) {
+        val c = assign(p)
+        counts(c) += 1
+        var i = 0
+        while (i < len) { sums(c)(i) += points(p)(off + i).toDouble; i += 1 }
+        p += 1
+      }
+      cs = Array.tabulate(prev.length) { c =>
+        if (counts(c) == 0) prev(c) else sums(c).map(_ / counts(c))
+      }
+      r += 1
+    }
+    cs
   }
 
   /** Codegen template computing BOTH the argmax (`best`, 0 on a
@@ -354,6 +428,29 @@ private[functions] object CentroidScan {
   }
 }
 
+/** Nearest-centroid assignment for k-means in ONE codegen'd pass: the
+  * index of the centroid with the highest cosine against the input
+  * vector, ties to the lower index, zero-norm denominators scored -2
+  * (below any real cosine).
+  *
+  * Why an Expression: the composed form — k parallel
+  * aggregate(zip_with(...))-against-literal cosines sorted in a struct
+  * array — rebuilds a plan tree LINEAR in k×dim, and Lloyd's algorithm
+  * re-plans it every round with fresh centroid literals; at k=64/dim=64
+  * the analyzer/optimizer fixed cost alone dominated the actual 20k-row
+  * assignment work (same failure mode as the pre-HyperplaneBuckets LSH
+  * literals above). One expression node holds the centroid matrix as a
+  * codegen reference object and the plan stays constant-size in k.
+  *
+  * Arithmetic is bit-identical to the composed HOF form (and the DuckDB
+  * oracle): ascending-index sequential double folds for the dot and the
+  * row norm; centroid norms are driver-precomputed with the same
+  * ascending sum. Null vector → null; a vector whose length differs
+  * from the centroid dim, or that carries a null element, resolves to
+  * cluster 0, exactly like the composed form (zip_with's null pad / the
+  * null product poison the fold → null cosine → coalesce(-2) for every
+  * centroid) and the SQL oracle's CASE guard.
+  */
 case class NearestCentroid(child: Expression, cents: Array[Array[Double]])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
 
@@ -383,7 +480,7 @@ case class NearestCentroid(child: Expression, cents: Array[Array[Double]])
     // null cosine → coalesce(-2)) and in the SQL oracle's CASE guard —
     // all-equal scores resolve to cluster 0
     if (CentroidScan.degenerate(x, dim)) return 0
-    CentroidScan.scan(x, flat, cNorms, k, dim)._1
+    CentroidScan.scan(x.toFloatArray(), flat, cNorms, k, dim)._1
   }
 
   override protected def doGenCode(ctx: CodegenContext,
@@ -443,7 +540,7 @@ case class NearestCentroidScore(child: Expression,
   override protected def nullSafeEval(v: Any): Any = {
     val x = v.asInstanceOf[ArrayData]
     if (CentroidScan.degenerate(x, dim)) return 1.0
-    CentroidScan.scan(x, flat, cNorms, k, dim)._2
+    CentroidScan.scan(x.toFloatArray(), flat, cNorms, k, dim)._2
   }
 
   override protected def doGenCode(ctx: CodegenContext,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.exec.Artifact
 import graft.exec.Exec.{materialize, scoped}
+import graft.functions.CentroidScan
 
 /** Product quantization (Jégou, Douze, Schmid 2011: "Product quantization
   * for nearest neighbor search") — the COMPRESSION tier of the ANN ladder
@@ -85,28 +86,14 @@ object Pq {
       s"pqTrain: sample has ${sample.length} rows < ksub=$ksub")
     // update folds run in ascending id order (the SQL oracle's
     // `list_sum(list(x ORDER BY vec_id))`); seeds use the hash order
-    val byId = sample.sortBy(_._1)
+    val byId = sample.sortBy(_._1).map(_._2)
     val cents = Array.tabulate(m) { s =>
       val off = s * dsub
-      var cs: Array[Array[Double]] = sample.take(ksub)
+      val seeds = sample.take(ksub)
         .map(_._2.slice(off, off + dsub).map(_.toDouble))
-      var r = 0
-      while (r < iters) {
-        val sums = Array.fill(ksub, dsub)(0.0)
-        val counts = Array.fill(ksub)(0L)
-        byId.foreach { case (_, v) =>
-          val c = nearestCode(v, off, dsub, cs)
-          counts(c) += 1
-          var i = 0
-          while (i < dsub) { sums(c)(i) += v(off + i).toDouble; i += 1 }
-        }
-        cs = cs.zipWithIndex.map { case (old, c) =>
-          if (counts(c) == 0) old
-          else sums(c).map(_ / counts(c))
-        }
-        r += 1
+      CentroidScan.lloyd(byId, off, dsub, seeds, iters) { cs =>
+        p => nearestCode(byId(p), off, dsub, cs)
       }
-      cs
     }
     Codebook(cents)
   }

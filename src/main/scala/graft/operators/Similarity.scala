@@ -1,12 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.exec.Artifact
 import graft.exec.Exec.{materialize, scoped, sequentialSumByKey,
   workParallelism}
+import graft.functions.CentroidScan
 
 /** Embedding similarity search over `ARRAY<FLOAT>` columns.
   *
@@ -787,7 +789,10 @@ object Similarity {
     * degenerates to exact brute force (the property the spec pins).
     */
   /** ivfTopK's built-in coarse quantizer: Lloyd's algorithm run
-    * driver-side on a deterministic 4096-row sample.
+    * driver-side on a deterministic 4096-row sample —
+    * `CentroidScan.lloyd` over the sample in hash order, each point
+    * assigned by `CentroidScan.scan`, the argmax `NearestCentroid` runs
+    * per corpus row.
     *
     * Sample ordered by xxhash64(id), NOT by id: the id-prefix is a biased
     * sample whenever content correlates with ingest order (it always does
@@ -820,38 +825,15 @@ object Similarity {
       .sort(xxhash64(col(idCol)), col(idCol)).limit(4096).collect()
     require(sample.nonEmpty, "empty corpus")
     val step = math.max(1, sample.length / nCentroids)
-    var cs: Array[Array[Double]] =
-      (0 until math.min(nCentroids, sample.length))
-        .map(i => sample((i * step) % sample.length)._2.map(_.toDouble))
-        .toArray
-    def cosD(a: Array[Double], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < dim) {
-        dot += a(i) * b(i); na += a(i) * a(i); nb += b(i).toDouble * b(i)
-        i += 1
-      }
-      val den = math.sqrt(na) * math.sqrt(nb)
-      if (den == 0.0) -2.0 else dot / den
+    val seeds = (0 until math.min(nCentroids, sample.length))
+      .map(i => sample((i * step) % sample.length)._2.map(_.toDouble))
+      .toArray
+    val vecs = sample.map(_._2)
+    CentroidScan.lloyd(vecs, 0, dim, seeds, iters) { cs =>
+      val flat = CentroidScan.flatten(cs, "ivfSampleCentroids")
+      val cNorms = CentroidScan.norms(cs)
+      p => CentroidScan.scan(vecs(p), flat, cNorms, cs.length, dim)._1
     }
-    for (_ <- 0 until iters) {
-      val sums = Array.fill(cs.length, dim)(0.0)
-      val counts = Array.fill(cs.length)(0L)
-      sample.foreach { case (_, v) =>
-        var best = 0; var bestC = -3.0; var c = 0
-        while (c < cs.length) {
-          val s = cosD(cs(c), v)
-          if (s > bestC) { bestC = s; best = c }
-          c += 1
-        }
-        counts(best) += 1
-        var i = 0
-        while (i < dim) { sums(best)(i) += v(i); i += 1 }
-      }
-      cs = cs.zipWithIndex.map { case (old, c) =>
-        if (counts(c) == 0) old else sums(c).map(_ / counts(c))
-      }
-    }
-    cs
   }
 
   def ivfTopK(corpus: DataFrame, probes: DataFrame, k: Int,
@@ -895,7 +877,7 @@ object Similarity {
                                          cents: Array[Array[Double]])
       : Column =
     array_sort(array(cents.zipWithIndex.map { case (cv, ci) =>
-      val cNorm = math.sqrt(cv.map(x => x * x).sum)
+      val cNorm = CentroidScan.norm(cv)
       val score = graft.functions.VectorExpressions.dotF32(
         emb, typedlit(cv.map(_.toFloat))) /
         lit(if (cNorm == 0.0) 1.0 else cNorm)
@@ -956,15 +938,13 @@ object Similarity {
     *    `(md5(id), id)` order — a uniform engine-reproducible draw, but
     *    seeds can land arbitrarily close together, and close seeds are
     *    what Lloyd then spends rounds pulling apart.
-    *  - `FarthestPoint`: greedy farthest-first traversal (Gonzalez 1985
-    *    — the deterministic k-center cousin of k-means++: the ++ D²
-    *    SAMPLING step is replaced by an argmax so no RNG enters the
-    *    result) over a 4096-row hash-ordered sample: seed 0 is the
-    *    sample's first row in `(md5(id), id)` order, each next seed the
-    *    sample point with maximal min cosine distance to those chosen,
-    *    ties to the earlier sample position. Spread seeds converge in
-    *    fewer Lloyd rounds (the BASELINE 100k probe measures it) —
-    *    at 100× scale wasted rounds ARE the k-means cost.
+    *  - `FarthestPoint`: `CentroidScan.greedy` with unit weights
+    *    (farthest-first traversal, the deterministic k-center cousin of
+    *    k-means++: the ++ D² SAMPLING step is replaced by an argmax so
+    *    no RNG enters the result) over the first 4096 rows in
+    *    `(md5(id), id)` order; seed 0 is that order's first row. Spread
+    *    seeds converge in fewer Lloyd rounds (the BASELINE 100k probe
+    *    measures it) — at 100× scale wasted rounds ARE the k-means cost.
     *  - `Parallel(l, rounds)`: k-means‖ (Bahmani et al., "Scalable
     *    K-Means++", VLDB 2012) — the DISTRIBUTED seeding for k beyond
     *    what a driver sample can carry. FarthestPoint picks from a
@@ -975,15 +955,15 @@ object Similarity {
     *    `rounds` passes oversamples ~`l` candidates (default 2k)
     *    cost-weighted by `1 - bestCos` against the candidates so far —
     *    poorly-covered regions draw more seeds — then one assignment
-    *    pass weights every candidate by its covered-point count and a
-    *    deterministic weighted greedy (argmax weight × min-distance,
-    *    the argmax cousin of weighted k-means++, same RNG-free move as
-    *    FarthestPoint) reduces the ~`rounds·l` candidates to `k` on the
-    *    driver. All randomness is the engine-standard hash draw
-    *    (`md5(id:round)` mapped to [0,1)), so the result is a pure
-    *    function of the corpus — reproducible across runs and cluster
-    *    layouts. Driver state is O(rounds·l·dim), the same envelope as
-    *    the k×dim centroid matrix it exists to initialize.
+    *    pass weights every candidate by its covered-point count and
+    *    `CentroidScan.greedy` with those weights (the argmax cousin of
+    *    weighted k-means++, the same greedy as FarthestPoint) reduces
+    *    the ~`rounds·l` candidates to `k` on the driver. All randomness
+    *    is the engine-standard hash draw (`md5(id:round)` mapped to
+    *    [0,1)), so the result is a pure function of the corpus —
+    *    reproducible across runs and cluster layouts. Driver state is
+    *    O(rounds·l·dim), the same envelope as the k×dim centroid matrix
+    *    it exists to initialize.
     */
   sealed trait KMeansSeeding
   object KMeansSeeding {
@@ -1051,11 +1031,10 @@ object Similarity {
       emb.select(col(idCol).as("id"), col(embCol).as("emb"))
         .where(wellFormed(col("emb"), dim)))
     val seeds = seeding match {
-      case KMeansSeeding.HashOrder =>
-        slim.orderBy(md5(col("id").cast("string")), col("id")).limit(k)
-          .select(col("emb")).collect()
-          .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-      case KMeansSeeding.FarthestPoint => farthestPointSeeds(slim, k)
+      case KMeansSeeding.HashOrder => hashOrderHead(slim, k)
+      case KMeansSeeding.FarthestPoint =>
+        val sample = hashOrderHead(slim, 4096)
+        CentroidScan.greedy(sample, Array.fill(sample.length)(1.0), k)
       case p: KMeansSeeding.Parallel => parallelSeeds(slim, k, p)
     }
     require(seeds.nonEmpty, "kMeans: no non-null embedding rows")
@@ -1101,55 +1080,13 @@ object Similarity {
     KMeansResult(cents, r)
   }
 
-  /** Greedy farthest-first seeds over a 4096-row hash-ordered sample
-    * (see `KMeansSeeding.FarthestPoint`). Distance is cosine distance
-    * (1 - cos); zero-norm vectors score distance 0 to everything so
-    * they are never picked as a spread-out seed. Fully deterministic:
-    * the sample order is `(md5(id), id)` and ties go to the earlier
-    * sample position. */
-  private def farthestPointSeeds(slim: DataFrame, k: Int)
-      : Array[Array[Double]] = {
-    val sample = slim
-      .orderBy(md5(col("id").cast("string")), col("id")).limit(4096)
+  /** The first `n` embeddings of `slim` (id, emb) in `(md5(id), id)`
+    * order, as doubles — the engine-reproducible uniform draw every
+    * seeding mode starts from. */
+  private def hashOrderHead(slim: DataFrame, n: Int): Array[Array[Double]] =
+    slim.orderBy(md5(col("id").cast("string")), col("id")).limit(n)
       .select(col("emb")).collect()
       .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-    if (sample.isEmpty) return Array.empty
-    val norms = sample.map(v => math.sqrt(v.map(x => x * x).sum))
-    def cosDist(i: Int, j: Int): Double = {
-      val den = norms(i) * norms(j)
-      if (den == 0.0) 0.0
-      else {
-        var d = 0.0; var t = 0
-        val a = sample(i); val b = sample(j)
-        while (t < a.length) { d += a(t) * b(t); t += 1 }
-        1.0 - d / den
-      }
-    }
-    val n = sample.length
-    val taken = new Array[Boolean](n)
-    taken(0) = true
-    val chosen = scala.collection.mutable.ArrayBuffer(0)
-    val minDist = Array.tabulate(n)(i => cosDist(i, 0))
-    while (chosen.length < math.min(k, n)) {
-      var best = -1; var bestD = -1.0
-      var i = 0
-      while (i < n) {
-        if (!taken(i) && minDist(i) > bestD) {
-          bestD = minDist(i); best = i
-        }
-        i += 1
-      }
-      taken(best) = true
-      chosen += best
-      var j = 0
-      while (j < n) {
-        val d = cosDist(j, best)
-        if (d < minDist(j)) minDist(j) = d
-        j += 1
-      }
-    }
-    chosen.map(sample(_)).toArray
-  }
 
   /** k-means‖ candidate oversampling + weighted driver reduction (see
     * `KMeansSeeding.Parallel`). Reference shape: Bahmani et al. 2012
@@ -1174,11 +1111,9 @@ object Similarity {
     require(cfg.rounds > 0, s"kMeans‖: rounds=${cfg.rounds}")
     require(cfg.l >= 0, s"kMeans‖: l=${cfg.l}")
     val l = if (cfg.l > 0) cfg.l else 2 * k
-    val first = slim.orderBy(md5(col("id").cast("string")), col("id"))
-      .limit(1).select(col("emb")).collect()
+    val first = hashOrderHead(slim, 1)
     if (first.isEmpty) return Array.empty
-    val cands = scala.collection.mutable.ArrayBuffer(
-      first.head.getSeq[Float](0).toArray.map(_.toDouble))
+    val cands = scala.collection.mutable.ArrayBuffer(first.head)
     var r = 0
     var covered = false
     while (r < cfg.rounds && !covered) {
@@ -1192,13 +1127,8 @@ object Similarity {
         val u = conv(substring(md5(concat_ws(":",
           col("id").cast("string"), lit(r.toString))), 1, 15), 16, 10)
           .cast("long") / lit(1.152921504606846976e18)
-        val drawn = slim
-          .where(u < lit(l.toDouble) * cost / lit(phi))
-          .orderBy(md5(col("id").cast("string")), col("id"))
-          .limit(8 * l)
-          .select(col("emb")).collect()
-          .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-        cands ++= drawn
+        cands ++= hashOrderHead(
+          slim.where(u < lit(l.toDouble) * cost / lit(phi)), 8 * l)
         r += 1
       }
     }
@@ -1212,45 +1142,7 @@ object Similarity {
     val w = new Array[Double](candArr.length)
     weightRows.foreach(row => w(row.getInt(0)) = row.getLong(1).toDouble)
     // deterministic weighted greedy reduction to k seeds
-    val norms = candArr.map(v => math.sqrt(v.map(x => x * x).sum))
-    def cosDist(i: Int, j: Int): Double = {
-      val den = norms(i) * norms(j)
-      if (den == 0.0) 0.0
-      else {
-        var d = 0.0; var t = 0
-        val a = candArr(i); val b = candArr(j)
-        while (t < a.length) { d += a(t) * b(t); t += 1 }
-        1.0 - d / den
-      }
-    }
-    val n = candArr.length
-    val taken = new Array[Boolean](n)
-    var h = 0
-    var i = 1
-    while (i < n) { if (w(i) > w(h)) h = i; i += 1 }
-    taken(h) = true
-    val chosen = scala.collection.mutable.ArrayBuffer(h)
-    val minDist = Array.tabulate(n)(j => cosDist(j, h))
-    while (chosen.length < k) {
-      var best = -1; var bestS = -1.0
-      var j = 0
-      while (j < n) {
-        if (!taken(j)) {
-          val s = w(j) * minDist(j)
-          if (s > bestS) { bestS = s; best = j }
-        }
-        j += 1
-      }
-      taken(best) = true
-      chosen += best
-      var t = 0
-      while (t < n) {
-        val d = cosDist(t, best)
-        if (d < minDist(t)) minDist(t) = d
-        t += 1
-      }
-    }
-    chosen.map(candArr(_)).toArray
+    CentroidScan.greedy(candArr, w, k)
   }
 
   /** Per-cluster embedding OUTLIER flags — the OOD-pruning readout of
@@ -1533,9 +1425,17 @@ object Similarity {
     * exactly the operator's batch-mode behavior. */
   def probeSemanticIndex(batch: DataFrame, path: String, threshold: Double,
                          idCol: String = "vec_id",
-                         embCol: String = "embedding"): DataFrame = {
+                         embCol: String = "embedding"): DataFrame =
+    probeWithCentroids(batch, path, readSemanticCentroids(
+      batch.sparkSession, path), threshold, idCol, embCol)
+
+  /** `probeSemanticIndex` against centroids the caller already read from
+    * `path`'s `centroids/`. */
+  private def probeWithCentroids(batch: DataFrame, path: String,
+                                 cents: Array[Array[Double]],
+                                 threshold: Double, idCol: String,
+                                 embCol: String): DataFrame = {
     val spark = batch.sparkSession
-    val cents = readSemanticCentroids(spark, path)
     // meta's k against the centroids/ rows (a mismatch is a torn
     // index), its dim against the batch's
     Artifact.requireMeta(spark, path, "semantic index",
@@ -1589,7 +1489,7 @@ object Similarity {
     val spark = batch.sparkSession
     import spark.implicits._
     lazy val trained = kMeansCentroids(batch, kClusters, iters, idCol, embCol)
-    // k and dim are checked by probeSemanticIndex, against centroids/
+    // k and dim are checked by probeWithCentroids, against centroids/
     // and the batch
     Artifact.gateEpoch(batch, batchId, "semanticGateBatch",
         "probeSemanticIndex", indexPath, Seq("vectors"))()({
@@ -1601,8 +1501,8 @@ object Similarity {
       val afterCorpus =
         if (bootstrap) batch
         else {
-          val matched = probeSemanticIndex(batch, indexPath, threshold,
-            idCol, embCol).select(col("batch_id")).distinct()
+          val matched = probeWithCentroids(batch, indexPath, cents,
+            threshold, idCol, embCol).select(col("batch_id")).distinct()
           batch.join(matched, col(idCol) === col("batch_id"), "left_anti")
         }
       val assigned = assignedFrame(afterCorpus, idCol, embCol, cents)
@@ -1634,70 +1534,95 @@ object Similarity {
     * `lshNearDupPairs` below — exact all-pairs at 100 TB does not exist
     * on any engine.
     *
-    * Bit-exactness with the DuckDB oracle: dot and norms are ascending-
-    * index sequential double sums, identical to the SQL list_transform/
-    * list_sum formulation.
+    * Bit-exactness with the DuckDB oracle: dot and norms are the host
+    * kernel's (`CentroidScan.dot`/`norm`), whose folds are the SQL
+    * list_transform/list_sum formulation's. The build side is
+    * `broadcastBuildSide`'s, shared with `semanticContaminationScores`.
     */
   def cosineNearDupPairs(emb: DataFrame, threshold: Double,
                          idCol: String = "vec_id",
                          embCol: String = "embedding"): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val par = spark.sparkContext.defaultParallelism
-    require(emb.schema(idCol).dataType.isInstanceOf[
-      org.apache.spark.sql.types.NumericType],
-      s"cosineNearDupPairs: id column '$idCol' must be numeric " +
-        s"(got ${emb.schema(idCol).dataType.simpleString}); " +
-        "map string ids to longs first (e.g. xxhash64)")
-    // the build side is collected to the driver (broadcast-join constraint);
-    // refuse corpora past the broadcastable range instead of OOMing silently.
-    // The bound is BYTES (rows × dim × 4 + per-row overhead), not rows — 5M
-    // rows of 768-dim float32 would be ~15 GB. Probing is cheap: dim from a
-    // 1-row job, the row count from a column-pruned limit(cap+1) scan that
-    // short-circuits instead of re-running the full upstream plan to count.
-    val maxBuildBytes = 2L << 30
+    requireNumericId(emb, idCol, "cosineNearDupPairs")
     val dim = probeDim(emb, embCol)
-    val rowCap = math.min(Int.MaxValue - 1L, maxBuildBytes / (4L * dim + 64L))
-    val n = emb.select(col(idCol)).limit(rowCap.toInt + 1).count()
-    require(n <= rowCap,
-      s"cosineNearDupPairs: corpus exceeds $rowCap rows of dim-$dim vectors " +
-        s"(~${maxBuildBytes >> 30} GiB build side); exact all-pairs needs a " +
-        "driver-broadcastable build side — use lshNearDupPairs for large " +
-        "corpora")
     // same degenerate-row policy as the rest of the family (kMeans,
     // pcaTrain): null/null-element/dim-mismatched embeddings are
     // excluded, not allowed to NPE the norm loop or AIOOBE the kernel
     val e = emb.where(wellFormed(col(embCol), dim))
       .select(col(idCol).cast("long").as("id"),
         col(embCol).as("emb")).as[(Long, Array[Float])]
-    val all = e.collect().sortBy(_._1)
-    val norms = all.map { case (_, v) =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      math.sqrt(s)
-    }
-    val bc = spark.sparkContext.broadcast((all, norms))
-    e.repartition(par).flatMap { case (idA, va) =>
-      val (vecs, nrms) = bc.value
-      var na = 0.0; var i = 0
-      while (i < va.length) { na += va(i).toDouble * va(i).toDouble; i += 1 }
-      na = math.sqrt(na)
-      val out = Seq.newBuilder[(Long, Long, Double)]
-      var j = 0
+    val bc = broadcastBuildSide(e, Some(dim), "cosineNearDupPairs",
+      "corpus", "exact all-pairs needs a driver-broadcastable build side " +
+        "— use lshNearDupPairs for large corpora")
+    e.repartition(spark.sparkContext.defaultParallelism)
+      .flatMap { case (idA, va) =>
+        val build = bc.value
+        val out = Seq.newBuilder[(Long, Long, Double)]
+        // ids ascend: pairs (a, b) with b > a are a suffix of the build side
+        val from = build.ids.indexWhere(_ > idA)
+        if (from >= 0) build.matches(va, threshold, from) { (j, cos) =>
+          out += ((idA, build.ids(j), cos))
+        }
+        out.result()
+      }.toDF("id_a", "id_b", "cos")
+      .orderBy("id_a", "id_b")
+  }
+
+  /** The id-ascending, driver-collected build side of the broadcast
+    * all-pairs scans, with its host norms. */
+  private final case class BuildSide(ids: Array[Long],
+                                     vecs: Array[Array[Float]],
+                                     norms: Array[Double]) {
+    /** `f(j, cos)` for every build row `j >= from`, ascending, of `va`'s
+      * length whose cosine against `va` is `>= threshold`; a zero-norm
+      * pair is skipped. */
+    def matches(va: Array[Float], threshold: Double, from: Int)
+               (f: (Int, Double) => Unit): Unit = {
+      val na = CentroidScan.norm(va)
+      var j = from
       while (j < vecs.length) {
-        val (idB, vb) = vecs(j)
-        if (idB > idA) {
-          var dot = 0.0; var d = 0
-          while (d < va.length) { dot += va(d).toDouble * vb(d).toDouble; d += 1 }
-          val den = na * nrms(j)
-          if (den != 0.0 && dot / den >= threshold)
-            out += ((idA, idB, dot / den))
+        val den = na * norms(j)
+        if (vecs(j).length == va.length && den != 0.0) {
+          val cos = CentroidScan.dot(va, vecs(j)) / den
+          if (cos >= threshold) f(j, cos)
         }
         j += 1
       }
-      out.result()
-    }.toDF("id_a", "id_b", "cos")
-      .orderBy("id_a", "id_b")
+    }
+  }
+
+  private def requireNumericId(df: DataFrame, idCol: String,
+                               owner: String): Unit =
+    require(df.schema(idCol).dataType.isInstanceOf[
+      org.apache.spark.sql.types.NumericType],
+      s"$owner: id column '$idCol' must be numeric " +
+        s"(got ${df.schema(idCol).dataType.simpleString}); " +
+        "map string ids to longs first (e.g. xxhash64)")
+
+  /** Collect `rows` (id, emb) to the driver as a [[BuildSide]] and
+    * broadcast it — the data path of any broadcast join's build side.
+    * Given the rows' `dim`, a build side past ~2 GiB (rows × dim × 4 +
+    * per-row overhead) is refused first, naming `owner`'s `alternative`,
+    * instead of OOMing the driver: the row count is a `limit(cap + 1)`
+    * scan that short-circuits instead of counting the whole input. */
+  private def broadcastBuildSide(rows: Dataset[(Long, Array[Float])],
+                                 dim: Option[Int], owner: String,
+                                 what: String, alternative: String)
+      : Broadcast[BuildSide] = {
+    val maxBuildBytes = 2L << 30
+    dim.foreach { d =>
+      val rowCap = math.min(Int.MaxValue - 1L, maxBuildBytes / (4L * d + 64L))
+      val n = rows.select(col("id")).limit(rowCap.toInt + 1).count()
+      require(n <= rowCap,
+        s"$owner: $what exceeds $rowCap rows of dim-$d vectors " +
+          s"(~${maxBuildBytes >> 30} GiB build side); $alternative")
+    }
+    // id-ascending: cosineNearDupPairs pairs each id with the suffix
+    // above it, and partial-failure reruns scan identically
+    val all = rows.collect().sortBy(_._1)
+    rows.sparkSession.sparkContext.broadcast(BuildSide(all.map(_._1),
+      all.map(_._2), all.map(r => CentroidScan.norm(r._2))))
   }
 
   /** SEMANTIC benchmark decontamination — the embedding-side mirror of
@@ -1714,9 +1639,9 @@ object Similarity {
     * numeric scan beats a BroadcastNestedLoopJoin's per-row array
     * copies), and the corpus STREAMS through one mapPartitions pass:
     * no shuffle anywhere, cost = |corpus| × |bench| fused dot products,
-    * embarrassingly parallel at any corpus scale. The same bytes guard
-    * as `cosineNearDupPairs` refuses a non-broadcastable benchmark and
-    * names the alternative: persist the corpus as a semantic index and
+    * embarrassingly parallel at any corpus scale. The build side is
+    * `broadcastBuildSide`'s, whose bytes guard refuses a
+    * non-broadcastable benchmark and names the alternative: persist the corpus as a semantic index and
     * probe it with the benchmark (`persistSemanticIndex` /
     * `probeSemanticIndex` — cluster-routed, both sides unbounded).
     *
@@ -1726,9 +1651,8 @@ object Similarity {
     * null-element) and zero-norm vectors can never match: n_matched =
     * 0, max_cos null. Benchmark rows of a different dimension than a
     * corpus row are skipped for that row (they have no defined cosine).
-    * Arithmetic is the oracle contract: ascending-index sequential
-    * double folds for dot and norms, so a DuckDB oracle hashes the
-    * max_cos value itself. */
+    * Dot and norms are the host kernel's (`CentroidScan.dot`/`norm`),
+    * so a DuckDB oracle hashes the max_cos value itself. */
   def semanticContaminationScores(corpus: DataFrame, bench: DataFrame,
                                   threshold: Double,
                                   idCol: String = "vec_id",
@@ -1736,70 +1660,28 @@ object Similarity {
       : DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    require(corpus.schema(idCol).dataType.isInstanceOf[
-      org.apache.spark.sql.types.NumericType],
-      s"semanticContaminationScores: id column '$idCol' must be numeric")
-    val maxBuildBytes = 2L << 30
+    requireNumericId(corpus, idCol, "semanticContaminationScores")
     val bwf = bench
       .select(col(idCol).cast("long").as("id"), col(embCol).as("emb"))
-      .where(wellFormed(col("emb")))
-    probeDimOpt(bench, embCol).foreach { dim =>
-      val rowCap =
-        math.min(Int.MaxValue - 1L, maxBuildBytes / (4L * dim + 64L))
-      val n = bwf.select(col("id")).limit(rowCap.toInt + 1).count()
-      require(n <= rowCap,
-        s"semanticContaminationScores: benchmark exceeds $rowCap rows of " +
-          s"dim-$dim vectors (~${maxBuildBytes >> 30} GiB build side); " +
-          "persist the corpus with persistSemanticIndex and probe it " +
-          "with the benchmark instead")
-    }
-    // benchmark order is irrelevant to the aggregate (count + max), but
-    // sort anyway so partial-failure reruns scan identically
-    val ball = bwf.as[(Long, Array[Float])].collect().sortBy(_._1)
-    val bvecs = ball.map(_._2)
-    val bnorms = bvecs.map { v =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      math.sqrt(s)
-    }
-    val bc = spark.sparkContext.broadcast((bvecs, bnorms))
+      .where(wellFormed(col("emb"))).as[(Long, Array[Float])]
+    val bc = broadcastBuildSide(bwf, probeDimOpt(bench, embCol),
+      "semanticContaminationScores", "benchmark",
+      "persist the corpus with persistSemanticIndex and probe it with the " +
+        "benchmark instead")
     corpus
       .select(col(idCol).cast("long").as("id"),
         when(wellFormed(col(embCol)), col(embCol)).as("emb"))
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
-        val (vecs, nrms) = bc.value
+        val build = bc.value
         it.map { case (id, va) =>
-          if (va == null || vecs.isEmpty) (id, 0L, None: Option[Double])
-          else {
-            var na = 0.0; var i = 0
-            while (i < va.length) {
-              na += va(i).toDouble * va(i).toDouble; i += 1
-            }
-            na = math.sqrt(na)
-            var n = 0L
-            var best = Double.NegativeInfinity
-            var j = 0
-            while (j < vecs.length) {
-              val vb = vecs(j)
-              if (vb.length == va.length) {
-                var dot = 0.0; var d = 0
-                while (d < va.length) {
-                  dot += va(d).toDouble * vb(d).toDouble; d += 1
-                }
-                val den = na * nrms(j)
-                if (den != 0.0) {
-                  val cos = dot / den
-                  if (cos >= threshold) {
-                    n += 1
-                    if (cos > best) best = cos
-                  }
-                }
-              }
-              j += 1
-            }
-            (id, n, if (n > 0) Some(best) else None)
+          var n = 0L
+          var best = Double.NegativeInfinity
+          if (va != null) build.matches(va, threshold, 0) { (_, cos) =>
+            n += 1
+            if (cos > best) best = cos
           }
+          (id, n, if (n > 0) Some(best) else None)
         }
       }
       .toDF(idCol, "n_matched", "max_cos")

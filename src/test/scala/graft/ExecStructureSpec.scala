@@ -42,7 +42,7 @@ class ExecStructureSpec extends AnyFunSuite {
     "dedupByKey", "journalMetricsThrottled", "ThrottledRetryingClient",
     "scalableNtile(", "rollingFingerprint", "lshBucket(", "staticDot",
     "DotProductF32F64", "dotF32F64", "graft_dot_f32f64", "weightDot",
-    "wellFormedDim")
+    "wellFormedDim", "farthestPointSeeds", "cosDist(", "cosD(")
 
   test("checkpoint calls live only in graft.exec.Exec") {
     val root = Paths.get("src/main/scala")

@@ -213,4 +213,54 @@ class SemanticIndexSpec extends SparkTestBase {
     assert(indexIds(idx) === sem,
       "bootstrap self-dedup diverged from the batch semanticDedup")
   }
+
+  test("semanticGateBatch reads centroids/ in one action per " +
+    "post-bootstrap epoch") {
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val idx = tmp("reads")
+    val gate = Similarity.semanticGateBatch(idx, kClusters = 2, iters = 2,
+      threshold = 0.95) _
+    gate(semEpoch0.toDF("vec_id", "embedding"), 0L)
+    val seen = new LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        seen.put(qe)
+      def onFailure(funcName: String, qe: QueryExecution,
+                    e: Exception): Unit = seen.put(qe)
+    }
+    spark.listenerManager.register(listener)
+    val actions = try {
+      gate(semEpoch1.toDF("vec_id", "embedding"), 1L)
+      // events arrive in order on one queue: once the fence action's
+      // event is in, every action of the epoch has been seen
+      val fence = spark.range(1).toDF("fence")
+      fence.collect()
+      val out = Seq.newBuilder[QueryExecution]
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
+      var fenced = false
+      while (!fenced && System.nanoTime() < deadline) {
+        val next = seen.poll(1, TimeUnit.SECONDS)
+        if (next eq fence.queryExecution) fenced = true
+        else if (next != null) out += next
+      }
+      assert(fenced, "no QueryExecutionListener event for the fence")
+      out.result()
+    } finally spark.listenerManager.unregister(listener)
+    def scansCentroids(qe: QueryExecution): Boolean =
+      qe.optimizedPlan.collectWithSubqueries {
+        case l: LogicalRelation => l.relation
+      }.exists {
+        case h: HadoopFsRelation =>
+          h.location.rootPaths.exists(_.getName == "centroids")
+        case _ => false
+      }
+    assert(indexIds(idx) === Set(1L, 2L, 11L, 12L))
+    assert(actions.count(scansCentroids) === 1,
+      s"${actions.count(scansCentroids)} of ${actions.size} actions scan " +
+        "centroids/")
+  }
 }

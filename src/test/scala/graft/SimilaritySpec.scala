@@ -551,6 +551,53 @@ class SimilaritySpec extends SparkTestBase {
       s"farthest-point took ${fp.rounds} rounds vs hash-order ${ho.rounds}")
   }
 
+  test("kMeans farthest-point seeds are the farthest-first picks in " +
+    "hand-derived order: hash-order head first, ties to the earlier " +
+    "sample row, a zero vector last, min(k, n) seeds") {
+    // (md5(id), id) order of ids 1..5 and 8: 4, 1, 2, 8, 5, 3
+    val pts = Seq(1L -> Array(1f, 1f), 2L -> Array(0f, 1f),
+      3L -> Array(1f, -1f), 4L -> Array(1f, 0f), 5L -> Array(-1f, 0f),
+      8L -> Array(0f, 0f))
+    val df = pts.toDF("vec_id", "embedding")
+    def seeds(k: Int) = {
+      // iters = 0: the result is the seed set itself
+      val r = Similarity.kMeansTrain(df, k = k, iters = 0,
+        seeding = Similarity.KMeansSeeding.FarthestPoint)
+      assert(r.rounds === 0)
+      r.centroids.map(_.toSeq).toSeq
+    }
+    val v = pts.toMap.map { case (id, a) => id -> a.map(_.toDouble).toSeq }
+    // 4 heads the sample; 5 is opposite it (distance 2); 2 is at 1 from
+    // both; 1 and 3 then tie at 1 - 1/√2 and 1 comes first in the
+    // sample; the zero vector is at 0 from everything, so it comes last
+    assert(seeds(4) === Seq(v(4L), v(5L), v(2L), v(1L)))
+    assert(seeds(7) === Seq(v(4L), v(5L), v(2L), v(1L), v(3L), v(8L)))
+  }
+
+  test("semanticContaminationScores(X, X) counts each row's " +
+    "cosineNearDupPairs degree plus its self-match") {
+    val bases = Seq(Array(1f, 0f, 0f, 0f, 0f, 0f),
+      Array(0f, 1f, 0f, 0f, 0f, 0f), Array(0.7f, 0.7f, 0f, 0f, 0f, 0f),
+      Array(0f, 0f, 1f, 1f, 0f, 0f))
+    // four perturbed directions, no zero or degenerate vector: 210 pairs
+    // at 0.45, degrees 4 to 16
+    val x = (0 until 40).map { i =>
+      ((7 * i + 3).toLong, Array.tabulate(6) { d =>
+        bases(i % 4)(d) + ((i * 31 + d * 17) % 11 - 5) / 6f })
+    }.toDF("vec_id", "embedding")
+    val pairs = Similarity.cosineNearDupPairs(x, 0.45)
+      .select("id_a", "id_b").as[(Long, Long)].collect()
+    assert(pairs.length === 210)
+    val degree = pairs.flatMap { case (a, b) => Seq(a, b) }
+      .groupBy(identity).map { case (id, ids) => id -> ids.length.toLong }
+    val matched = Similarity.semanticContaminationScores(x, x, 0.45)
+      .select("vec_id", "n_matched").as[(Long, Long)].collect().toMap
+    assert(matched.size === 40)
+    matched.foreach { case (id, n) =>
+      assert(n === 1L + degree.getOrElse(id, 0L), s"id $id")
+    }
+  }
+
   test("ivfTopK accepts external kMeans centroids and stays exact at " +
     "nProbe = nCentroids") {
     val emb = spark.read
