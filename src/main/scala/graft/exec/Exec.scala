@@ -1,6 +1,7 @@
 package graft.exec
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation,
+  SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
@@ -68,6 +69,19 @@ object Exec {
     val scope = innermost.get
     if (scope != null) checkpointId(m).foreach(scope.frames(_) = m)
     m
+  }
+
+  /** [[materialize]] `df` and evaluate the aggregate `metrics` over the
+    * rows that same checkpoint action writes: a scalar the next step
+    * needs (a count, a mass) comes back without a job of its own. The
+    * observation name is fixed because it is part of the plan's
+    * generated code: a per-call name would compile new classes on
+    * every call. */
+  private[graft] def materializeObserved(df: DataFrame, metrics: Column*)
+      : (DataFrame, Map[String, Any]) = {
+    val o = new Observation("graft_observed")
+    val m = materialize(df.observe(o, metrics.head, metrics.tail: _*))
+    (m, o.get)
   }
 
   /** Release the storage behind a `materialize`d frame once a later round
@@ -197,9 +211,15 @@ object Exec {
     val extraNames = agged.columns
       .filterNot(c => keys.contains(c) || c == "__xs" || c == "__count")
     agged.select(keys.map(col) ++ extraNames.map(col) :+
-      aggregate(array_sort(col("__xs")), lit(0.0),
-        (acc, s) => acc + s.getField(valCol).cast("double"))
-        .as("__sum") :+
+      orderedSum(col("__xs"), valCol).as("__sum") :+
       col("__count"): _*)
   }
+
+  /** The one ordered fold: Σ of field `valField` over the struct array
+    * `xs`, sorted ascending (struct order: first field first) and added
+    * left to right from 0.0 — a sequential engine's
+    * `list_sum(list(v ORDER BY ...))` bit-for-bit. */
+  private[graft] def orderedSum(xs: Column, valField: String): Column =
+    aggregate(array_sort(xs), lit(0.0),
+      (acc, s) => acc + s.getField(valField).cast("double"))
 }

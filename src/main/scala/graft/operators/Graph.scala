@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.exec.Exec.{advance, materialize, scoped, sequentialSumByKey,
-  workParallelism}
+import graft.exec.Exec.{advance, materialize, materializeObserved, orderedSum,
+  release, scoped, workParallelism}
 
 /** Entity-importance over an interaction graph: fixed-iteration PageRank
   * (Page, Brin, Motwani, Winograd 1999) with uniform teleport and full
@@ -17,23 +17,27 @@ import graft.exec.Exec.{advance, materialize, scoped, sequentialSumByKey,
   * where D = Σ_{outdeg(u)=0} r(u) (dangling mass, redistributed
   * uniformly). Multi-edges collapse to simple edges first.
   *
-  * Scale shape: each round is ONE edges⋈ranks hash join keyed on src
-  * (high-cardinality) + one per-dst aggregate; the rank frame is
-  * materialized per round and the superseded round's storage is released
-  * (never a growing lineage, never a driver-side node table — the driver
-  * holds two scalars: N and the dangling mass). Rounds are FIXED count,
-  * not convergence-probed: PageRank work per round is constant, and the
-  * caller picks the depth/cost trade.
+  * Scale shape: set-up is ONE aggregate into a materialized vertex
+  * frame (id, outdeg, nbrs[, is_source]) whose checkpoint also counts
+  * N; each round is then ONE AQE-sized message exchange (see `walk`)
+  * whose checkpoint observes the next round's dangling mass D, and the
+  * last round is returned lazily — 2 Spark jobs a round, two scalars on
+  * the driver, never a node table. The trade: a vertex's out-list
+  * crosses the exchange every round (shuffle bytes grow with the edge
+  * count), and D is a literal of the generated code, so a repeat on the
+  * same graph reuses the compiled rounds while a new graph compiles its
+  * own. Rounds are FIXED count, not convergence-probed: PageRank work
+  * per round is constant, and the caller picks the depth/cost trade.
   *
   * `deterministic = true` is the cross-engine REPRO mode (the k-means /
   * BM25 pattern): per-dst contributions fold in ascending-src order via
   * sorted-array aggregate, and the dangling mass folds in ascending-id
   * order — bit-identical to the generated SQL oracle's
   * `list_sum(list(x ORDER BY ...))`. The dangling fold routes every
-  * dangling rank through one sorted list (single-reducer — the documented
-  * cost of bit-exactness, repro mode only). The production default sums
-  * with ordinary partial aggregates: order-free merge, last-ULP
-  * nondeterministic, linear-scalable.
+  * dangling rank through one sorted list in the checkpoint's observed
+  * metric (the documented cost of bit-exactness, repro mode only). The
+  * production default sums with ordinary partial aggregates: order-free
+  * merge, last-ULP nondeterministic, linear-scalable.
   */
 object Graph {
 
@@ -46,40 +50,15 @@ object Graph {
     require(iters >= 1, s"pageRank: iters=$iters must be >= 1")
     require(damping > 0 && damping < 1,
       s"pageRank: damping=$damping must be in (0, 1)")
-    // simple directed edges; materialized — iterated over every round.
-    // Null endpoints are DROPPED (the alsRank/evalRanking convention): a
-    // malformed edge must not mint a phantom node that inflates N and
-    // siphons teleport + dangling mass from every real node's rank.
-    val e = materialize(
-      edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
-        .where(col("src").isNotNull && col("dst").isNotNull)
-        .distinct())
-    val outdeg = e.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("outdeg"))
-    // materialized: joined against every round's summed contributions
-    val nodes = materialize(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .join(outdeg, Seq("id"), "left")
-      .select(col("id"), coalesce(col("outdeg"), lit(0L)).as("outdeg")))
-    val n = nodes.count()
+    val (v, n, dm0) = vertexFrame(edges, src, dst, None)
     require(n > 0, "pageRank: empty graph")
     val nD = n.toDouble // exact below 2^53
-    // `ranks` is always THE materialized frame (release must hit its
-    // actual blocks); seeded uniform
-    var ranks = materialize(
-      nodes.withColumn("rank", lit(1.0 / nD)))
-    for (_ <- 1 to iters) {
-      val dmDf = danglingMass(ranks, deterministic)
-      val summed = dstContributions(ranks, e, deterministic)
-      // mirror the oracle's expression tree EXACTLY:
-      // (1 - d)/n + d * (ct + dm/n)
-      ranks = advance(ranks, nodes.join(summed, Seq("id"), "left")
-        .crossJoin(broadcast(dmDf))
-        .select(col("id"), col("outdeg"),
-          (lit(1.0d - damping) / nD + lit(damping) *
-            (coalesce(col("ct"), lit(0.0d)) + col("dm") / nD)).as("rank")))
-    }
-    ranks
+    // seeded uniform; mirror the oracle's expression tree EXACTLY:
+    // (1 - d)/n + d * (ct + dm/n)
+    walk(v, iters, deterministic, lit(1.0 / nD), dm0) { (ct, dm) =>
+      lit(1.0d - damping) / nD + lit(damping) *
+        (coalesce(ct, lit(0.0d)) + lit(dm) / nD)
+    }.select("id", "outdeg", "rank")
   }
 
   /** PERSONALIZED PageRank (Haveliwala 2002): the teleport mass lands
@@ -93,10 +72,9 @@ object Graph {
     * redistributes to the source set, so total mass stays 1.
     *
     * Shape, cost, and the `deterministic` repro contract are exactly
-    * `pageRank`'s (one edges⋈ranks join + one per-dst aggregate per
-    * round, materialize/release, fixed rounds); the teleport column
-    * rides the materialized node frame, and the driver holds one extra
-    * scalar (|S∩V|). Kept as its own method rather than a teleport
+    * `pageRank`'s (one message exchange per round, fixed rounds); the
+    * `is_source` flag rides the vertex frame, and its checkpoint counts
+    * |S∩V| instead of N. Kept as its own method rather than a teleport
     * parameter on `pageRank`: the uniform path's `(1−d)/N` expression
     * tree is hash-pinned by its oracle, and rewriting it as
     * `(1−d)·t(v)` would round differently in the last ulp.
@@ -113,73 +91,95 @@ object Graph {
     require(sources.columns.length == 1,
       "personalizedPageRank: sources must be a single vertex-id column, " +
         s"got ${sources.columns.mkString(", ")}")
-    val e = materialize(
-      edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
-        .where(col("src").isNotNull && col("dst").isNotNull) // pageRank rule
-        .distinct())
-    val outdeg = e.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("outdeg"))
-    val srcSet = sources.toDF("id")
-      .select(col("id").cast("long").as("id")).distinct()
-    val nodes = materialize(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .join(outdeg, Seq("id"), "left")
-      .join(srcSet.withColumn("__s", lit(1)), Seq("id"), "left")
-      .select(col("id"), coalesce(col("outdeg"), lit(0L)).as("outdeg"),
-        (coalesce(col("__s"), lit(0)) === 1).as("is_source")))
-    val nS = nodes.where(col("is_source")).count()
+    val (v, nS, dm0) = vertexFrame(edges, src, dst, Some(sources))
     require(nS > 0,
       "personalizedPageRank: no source id appears in the graph")
     val teleVal = 1.0 / nS.toDouble
     def tele: Column =
       when(col("is_source"), lit(teleVal)).otherwise(lit(0.0d))
-    var ranks = materialize(nodes.withColumn("rank", tele))
-    for (_ <- 1 to iters) {
-      val dmDf = danglingMass(ranks, deterministic)
-      val summed = dstContributions(ranks, e, deterministic)
-      // mirrored by the oracle: (1 - d) * t + d * (ct + dm * t)
-      ranks = advance(ranks, nodes.join(summed, Seq("id"), "left")
-        .crossJoin(broadcast(dmDf))
-        .select(col("id"), col("outdeg"), col("is_source"),
-          (lit(1.0d - damping) * tele + lit(damping) *
-            (coalesce(col("ct"), lit(0.0d)) + col("dm") * tele))
-            .as("rank")))
+    // mirrored by the oracle: (1 - d) * t + d * (ct + dm * t)
+    walk(v, iters, deterministic, tele, dm0) { (ct, dm) =>
+      lit(1.0d - damping) * tele + lit(damping) *
+        (coalesce(ct, lit(0.0d)) + lit(dm) * tele)
+    }.select("id", "outdeg", "is_source", "rank")
+  }
+
+  /** The materialized vertex frame (id, outdeg, nbrs[, is_source]) of
+    * the simple directed graph on `edges`, from one aggregate: each edge
+    * names its src with the neighbour and its dst without; a `sources`
+    * id names itself flagged and counts only if an edge names it too.
+    * Null endpoints are DROPPED (the alsRank/evalRanking convention): a
+    * phantom node would inflate N and siphon mass from every real node.
+    * Returns the frame, the size of the teleport set T (every vertex, or
+    * the sources) and the round-0 dangling mass: |T∩dangling| copies of
+    * 1/|T| added in sequence, the id-ordered fold of the round-0 ranks
+    * (every other rank is 0.0, which adds nothing). */
+  private def vertexFrame(edges: DataFrame, src: Column, dst: Column,
+      sources: Option[DataFrame]): (DataFrame, Long, Double) = {
+    def end(id: Column, nbr: Column, s: Boolean) =
+      struct(id.cast("long").as("id"), nbr.as("nbr"), lit(s).as("s"))
+    val ends = edges.select(src.cast("long").as("src"),
+        dst.cast("long").as("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull)
+      .select(explode(array(end(col("src"), col("dst"), false),
+        end(col("dst"), lit(null).cast("long"), false))).as("p"))
+    val tagged = sources.fold(ends)(s => ends.union(
+      s.select(end(col(s.columns.head), lit(null).cast("long"), true).as("p"))))
+    val tp = if (sources.isDefined) col("is_source") else lit(true)
+    val (v, m) = materializeObserved(tagged
+        .groupBy(col("p.id").as("id"))
+        .agg(collect_set(col("p.nbr")).as("nbrs"),
+          bool_or(col("p.s")).as("is_source"),
+          bool_and(col("p.s")).as("only_source"))
+        .where(!col("only_source"))
+        .select(Seq(col("id"), size(col("nbrs")).cast("long").as("outdeg"),
+          col("nbrs")) ++ sources.map(_ => col("is_source")): _*),
+      count(when(tp, 1)).as("t"),
+      count(when(tp && col("outdeg") === 0, 1)).as("td"))
+    val (t, td) = (m("t").asInstanceOf[Long], m("td").asInstanceOf[Long])
+    (v, t, (0L until td).foldLeft(0.0)((acc, _) => acc + 1.0 / t))
+  }
+
+  /** The round core of both walkers: `iters` rounds over a
+    * [[vertexFrame]] from rank `r0` and dangling mass `dm0`, `rank(ct,
+    * dm)` the walker's own expression. A round is one `groupBy`
+    * exchange: the explode emits a self row (`__to` null) carrying the
+    * vertex's columns and one r/outdeg row per out-neighbour; the
+    * aggregate folds those (ascending src in repro mode, `sum` in
+    * production) and carries the columns on. Each checkpoint but the
+    * last observes the dangling mass the next round reads. */
+  private def walk(vertices: DataFrame, iters: Int, deterministic: Boolean,
+                   r0: Column, dm0: Double)
+                  (rank: (Column, Double) => Column): DataFrame = {
+    val carried = vertices.columns.toSeq.filterNot(_ == "id")
+    val self = col("__to").isNull
+    val share = col("__r") / col("outdeg")
+    def round(cur: DataFrame, r: Column, dm: Double): DataFrame = {
+      val aggs = carried.map(k => first(col(k), ignoreNulls = true).as(k)) :+
+        (if (deterministic) collect_list(col("m")) else sum(col("m"))).as("ct")
+      cur.select(col("id") +: carried.map(col) :+ r.as("__r") :+
+          explode(concat(array(lit(null).cast("long")), col("nbrs")))
+            .as("__to"): _*)
+        .select(coalesce(col("__to"), col("id")).as("id") +:
+          carried.map(k => when(self, col(k)).as(k)) :+
+          when(!self, if (deterministic)
+            struct(col("id").as("src"), share.as("c")) else share).as("m"): _*)
+        .groupBy("id").agg(aggs.head, aggs.tail: _*)
+        .select(col("id") +: carried.map(col) :+ rank(
+          if (deterministic) orderedSum(col("ct"), "c") else col("ct"), dm)
+          .as("rank"): _*)
     }
-    ranks
-  }
-
-  /** The per-round dangling-mass 1-row frame shared by both walkers —
-    * a broadcast aggregate, never a driver collect (an extra per-round
-    * head() measured ~1s/round of fixed overhead at local scale). Repro
-    * mode pays the single-reducer id-ordered fold for bit-exactness;
-    * ONE definition so the two hash-pinned walkers can never diverge on
-    * the fold. */
-  private def danglingMass(ranks: DataFrame,
-                           deterministic: Boolean): DataFrame = {
-    val d = ranks.where(col("outdeg") === 0)
-    if (deterministic)
-      d.agg(aggregate(array_sort(collect_list(struct(col("id"),
-        col("rank")))), lit(0.0d),
-        (acc, x) => acc + x.getField("rank")).as("dm"))
-    else d.agg(coalesce(sum(col("rank")), lit(0.0d)).as("dm"))
-  }
-
-  /** Per-destination contribution sums Σ r(u)/outdeg(u), src-ordered
-    * fold in repro mode — the other shared half of the walk round. The
-    * repro fold routes through [[Exec.sequentialSumByKey]] (same
-    * struct-sort-fold, value-identical) for its pinned keyed spread:
-    * inlined here the interpreted fold sat on an AQE-coalesced
-    * single-task stage every round (byte-blind sizing, guide §2.5). */
-  private def dstContributions(ranks: DataFrame, e: DataFrame,
-                               deterministic: Boolean): DataFrame = {
-    val contribs = ranks.where(col("outdeg") > 0)
-      .join(e, col("id") === col("src"))
-      .select(col("dst"), col("src"),
-        (col("rank") / col("outdeg")).as("c"))
-    if (deterministic)
-      sequentialSumByKey(contribs, Seq("dst"), "src", "c")
-        .select(col("dst").as("id"), col("__sum").as("ct"))
-    else contribs.groupBy(col("dst").as("id")).agg(sum(col("c")).as("ct"))
+    val dangling = col("outdeg") === 0
+    val dm = (if (deterministic) orderedSum(collect_list(
+        when(dangling, struct(col("id"), col("rank")))), "rank")
+      else coalesce(sum(when(dangling, col("rank"))), lit(0.0d))).as("dm")
+    var (cur, r, d) = (vertices, r0, dm0)
+    for (_ <- 1 until iters) {
+      val (next, m) = materializeObserved(round(cur, r, d), dm)
+      release(cur)
+      cur = next; r = col("rank"); d = m("dm").asInstanceOf[Double]
+    }
+    round(cur, r, d)
   }
 
   /** Co-citation counts (Small 1973): how many sources point at BOTH d1

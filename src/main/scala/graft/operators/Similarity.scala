@@ -963,7 +963,10 @@ object Similarity {
     *    [0,1)), so the result is a pure function of the corpus —
     *    reproducible across runs and cluster layouts. Driver state is
     *    O(rounds·l·dim), the same envelope as the k×dim centroid matrix
-    *    it exists to initialize.
+    *    it exists to initialize. Fewer than `k` candidates train fewer
+    *    clusters only when the draw covered every point or the corpus
+    *    has fewer than `k` rows; otherwise it fails naming `l`, `rounds`
+    *    and `k` (raise `l` or `rounds`).
     */
   sealed trait KMeansSeeding
   object KMeansSeeding {
@@ -1133,6 +1136,11 @@ object Similarity {
       }
     }
     val candArr = cands.toArray
+    // fewer candidates than k is a result only when nothing is left to
+    // draw: every point covered, or a corpus of fewer than k rows
+    if (candArr.length < k) require(covered || slim.count() < k,
+      s"kMeans‖: l=$l over rounds=${cfg.rounds} drew ${candArr.length} " +
+        s"candidates, fewer than k=$k; raise l or rounds")
     if (candArr.length <= k) return candArr
     // weight = covered-point count under the full candidate set: one
     // assignment pass, ≤ |cands| rows back to the driver

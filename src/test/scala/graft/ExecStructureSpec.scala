@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Checkpoint lifetimes, on-disk commits, stream wiring and quantile
   * bucketing each have one owner: only `graft/exec/Exec.scala` may
-  * checkpoint a frame or release one, only `graft/exec/Artifact.scala`
+  * checkpoint a frame, observe metrics on one or release one, only `graft/exec/Artifact.scala`
   * may name a commit marker, a committer's success file, a
   * dynamic-partition overwrite or a write-once meta mode, or commit a
   * gate's bootstrap or check its epoch layout, only
@@ -23,8 +23,8 @@ class ExecStructureSpec extends AnyFunSuite {
   /** owner file -> tokens no other main source may contain */
   private val owned = Seq(
     "graft/exec/Exec.scala" ->
-      Seq("localCheckpoint(", ".checkpoint(", "releaseMaterialized",
-        "workTaskFactor"),
+      Seq("localCheckpoint(", ".checkpoint(", ".observe(",
+        "releaseMaterialized", "workTaskFactor"),
     "graft/exec/Artifact.scala" ->
       Seq("_GRAFT_COMMITTED", "_SUCCESS", "partitionOverwriteMode",
         "errorifexists", "Artifact.bootstrap(", "requireEpochLayout("),
@@ -42,7 +42,8 @@ class ExecStructureSpec extends AnyFunSuite {
     "dedupByKey", "journalMetricsThrottled", "ThrottledRetryingClient",
     "scalableNtile(", "rollingFingerprint", "lshBucket(", "staticDot",
     "DotProductF32F64", "dotF32F64", "graft_dot_f32f64", "weightDot",
-    "wellFormedDim", "farthestPointSeeds", "cosDist(", "cosD(")
+    "wellFormedDim", "farthestPointSeeds", "cosDist(", "cosD(",
+    "danglingMass", "dstContributions")
 
   test("checkpoint calls live only in graft.exec.Exec") {
     val root = Paths.get("src/main/scala")

@@ -1,6 +1,15 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.Random
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.exec.Exec
 import graft.operators.Graph
 
 class GraphSpec extends SparkTestBase {
@@ -501,5 +510,103 @@ class GraphSpec extends SparkTestBase {
         col("w"), walkLen = 2)
     }
     assert(e.getMessage.contains("no usable edges"))
+  }
+
+  /** Spark jobs started by `body`. Listener events arrive
+    * asynchronously but in order, so a marker job before and after
+    * fences the count. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    @volatile var marker = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty(
+            "spark.job.description") == "graph-spec-marker"))
+          marker.countDown()
+        else jobs.incrementAndGet()
+    }
+    def fence(): Unit = {
+      marker = new CountDownLatch(1)
+      sc.setJobDescription("graph-spec-marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      assert(marker.await(60, TimeUnit.SECONDS), "marker job not seen")
+    }
+    sc.addSparkListener(l)
+    try { fence(); jobs.set(0); body; fence(); jobs.get }
+    finally sc.removeSparkListener(l)
+  }
+
+  test("pageRank and personalizedPageRank: each extra round costs at " +
+    "most 2 Spark jobs (one message exchange, one checkpoint)") {
+    val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (5L, 4L))
+      .toDF("src", "dst")
+    val sources = Seq(1L).toDF("id")
+    def pr(iters: Int): Unit = Exec.scoped(Graph.pageRank(e, col("src"),
+      col("dst"), iters = iters, deterministic = true).collect())
+    def ppr(iters: Int): Unit = Exec.scoped(Graph.personalizedPageRank(e,
+      col("src"), col("dst"), sources, iters = iters,
+      deterministic = true).collect())
+    for ((name, walk) <- Seq("pageRank" -> (pr _), "ppr" -> (ppr _))) {
+      walk(1); walk(4) // compile outside the count
+      val (one, four) = (jobsOf(walk(1)), jobsOf(walk(4)))
+      assert(four - one <= 6, s"$name: $one jobs at 1 round, $four at 4")
+    }
+  }
+
+  test("pageRank and personalizedPageRank on a messy random graph: " +
+    "repro mode is placement-independent, matches a driver-side power " +
+    "iteration, and production mode agrees with it") {
+    // 240 draws over 60 nodes, 40..59 only ever a dst (dangling):
+    // duplicates, self-loops, null endpoints; source 40 dangles and
+    // source 999 is absent from the graph
+    val r = new Random(1501)
+    val drawn = Seq.fill(240)((r.nextInt(40).toLong, r.nextInt(60).toLong))
+    val raw: Seq[(java.lang.Long, java.lang.Long)] = drawn.map {
+      case (s, d) => (java.lang.Long.valueOf(s), java.lang.Long.valueOf(d))
+    } ++ Seq((null, java.lang.Long.valueOf(3L)),
+      (java.lang.Long.valueOf(4L), null))
+    val edges = raw.toDF("src", "dst")
+    val srcIds = Seq(2L, 17L, 17L, 40L, 999L)
+    val iters = 4
+    // power iteration over the simple edges with the operators' rules
+    def truth(teleport: Option[Set[Long]]): Map[Long, Double] = {
+      val simple = drawn.distinct
+      val nodes = simple.flatMap(e => Seq(e._1, e._2)).distinct
+      val out = simple.groupBy(_._1).view.mapValues(_.size).toMap
+      val t = teleport.map(_.intersect(nodes.toSet)).getOrElse(nodes.toSet)
+      val tele = nodes.map(v => v -> (if (t(v)) 1.0 / t.size else 0.0)).toMap
+      (1 to iters).foldLeft(tele) { (rank, _) =>
+        val dm = nodes.filterNot(out.contains).map(rank).sum
+        val ct = simple.groupBy(_._2).view.mapValues(_.map(e =>
+          rank(e._1) / out(e._1)).sum).toMap
+        nodes.map(v => v -> ((1 - 0.85) * tele(v) +
+          0.85 * (ct.getOrElse(v, 0.0) + dm * tele(v)))).toMap
+      }
+    }
+    def ranks(df: DataFrame): Map[Long, Double] = Exec.scoped(
+      df.select("id", "rank").as[(Long, Double)].collect().toMap)
+    def pr(det: Boolean) = ranks(Graph.pageRank(edges, col("src"),
+      col("dst"), iters = iters, deterministic = det))
+    def ppr(det: Boolean) = ranks(Graph.personalizedPageRank(edges,
+      col("src"), col("dst"), srcIds.toDF("id"), iters = iters,
+      deterministic = det))
+    for ((name, walk, want) <- Seq(("pageRank", pr _, truth(None)),
+        ("ppr", ppr _, truth(Some(srcIds.toSet))))) {
+      val one = withShufflePartitions(1)(walk(true))
+      val seven = withShufflePartitions(7)(walk(true))
+      assert(one.keySet === want.keySet, name)
+      one.foreach { case (id, v) =>
+        assert(java.lang.Double.doubleToRawLongBits(v) ===
+          java.lang.Double.doubleToRawLongBits(seven(id)),
+          s"$name: $id at 1 vs 7 partitions: $v vs ${seven(id)}")
+        assert(math.abs(v - want(id)) <= 1e-12, s"$name: $id vs truth")
+      }
+      val prod = withShufflePartitions(7)(walk(false))
+      one.foreach { case (id, v) =>
+        assert(math.abs(v - prod(id)) <= 1e-12, s"$name: $id prod vs repro")
+      }
+    }
   }
 }

@@ -811,6 +811,26 @@ class SimilaritySpec extends SparkTestBase {
     assert(sameCents.length === 1) // phi=0 after candidate 0: no more draws
   }
 
+  test("kMeans parallel (k-means‖) seeding refuses to train fewer " +
+    "clusters than asked when the draw falls short of k") {
+    // 40 distinct points on a circle, k = 16: l = 1 over 2 rounds draws
+    // at most 1 + 2·8 candidates, φ stays > 0, and 40 rows >= k
+    val circle = (0 until 40).map { i =>
+      val a = 2 * math.Pi * i / 40
+      (i.toLong, Array(math.cos(a).toFloat, math.sin(a).toFloat))
+    }.toDF("vec_id", "embedding")
+    val short = Similarity.KMeansSeeding.Parallel(l = 1, rounds = 2)
+    val e = intercept[IllegalArgumentException] {
+      Similarity.kMeansCentroids(circle, k = 16, iters = 1, seeding = short)
+    }
+    for (part <- Seq("l=1", "rounds=2", "k=16", "drew "))
+      assert(e.getMessage.contains(part), e.getMessage)
+    // enough draws: exactly k centroids
+    assert(Similarity.kMeansCentroids(circle, k = 16, iters = 1,
+      seeding = Similarity.KMeansSeeding.Parallel(l = 32, rounds = 3))
+      .length === 16)
+  }
+
   test("annRecall: hand-computed hit counts — a probe the ANN route " +
     "missed entirely scores 0 (not a dropped row), a probe absent from " +
     "exact is ignored, short exact lists set the denominator") {
