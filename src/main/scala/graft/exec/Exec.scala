@@ -3,6 +3,7 @@ package graft.exec
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation,
   SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Execution primitives shared by every operator family, and the one
@@ -56,6 +57,82 @@ object Exec {
   private[graft] def spreadBy(df: DataFrame, key: Column): DataFrame =
     df.repartition(workParallelism(df.sparkSession), key)
 
+  /** The size column [[keyGroups]] adds when it caps: the number of
+    * distinct rows of the key group. */
+  private[graft] val KeySize = "key_size"
+
+  /** The input side of the one pair generator behind every "members
+    * sharing a key" self-join (co-citation sources, link-prediction
+    * wedge centres, item-item baskets, inverted-index postings, LSH
+    * bands, clusters): the distinct rows of `rows`, hash-spread on `key`.
+    * [[keyPairs]] pairs them.
+    *
+    * One explicit-count exchange on the key (`workParallelism`) feeds
+    * the distinct, the size window and both sides of the self-join, so
+    * no second exchange appears. The count is explicit because the pair
+    * fan-out is quadratic per key AFTER this exchange, while AQE sizes a
+    * stage by its input bytes: left to AQE, the skinny (key, member)
+    * stage coalesced to one task that generated every pair serially
+    * (4.7 s of a 5.0 s LSH query, 1.5 s of a 2.3 s tf-idf query, both at
+    * sf0.1; guide §2.5 — size on output work, not input bytes).
+    *
+    * With `maxSize`, a window count over the key adds [[KeySize]] and
+    * only groups of at most `maxSize` rows are kept — the hub cap of the
+    * pair operators: a key shared by everything asserts no pairwise
+    * association and would fan out quadratically. [[cappedKeyGroups]]
+    * also counts the groups it drops. A null key or member counts toward
+    * its group's size but never pairs. */
+  private[graft] def keyGroups(rows: DataFrame, key: Seq[String],
+                               member: String, maxSize: Option[Long] = None,
+                               observe: DataFrame => DataFrame = identity)
+      : DataFrame = {
+    val spread = rows
+      .repartition(workParallelism(rows.sparkSession), key.map(col): _*)
+      .distinct()
+    maxSize.fold(spread) { cap =>
+      val byKey = Window.partitionBy(key.map(col): _*).orderBy(col(member))
+      // `observe` (see cappedKeyGroups) sits before the cap, so that it
+      // sees the groups the cap drops
+      observe(spread
+          .withColumn(KeySize, count(lit(1)).over(byKey.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing)))
+          .withColumn("__rank", row_number().over(byKey)))
+        .where(col(KeySize) <= cap)
+        .drop("__rank")
+    }
+  }
+
+  /** [[keyGroups]] capped at `maxSize` and materialized, with the number
+    * of key groups the cap dropped (a null-key group included), observed
+    * on the same checkpoint action as the first row of each over-size
+    * group: the count costs no job and no broadcast of its own. */
+  private[graft] def cappedKeyGroups(rows: DataFrame, key: Seq[String],
+                                     member: String, maxSize: Long)
+      : (DataFrame, Long) = {
+    val o = new Observation(observationName)
+    val kept = materialize(keyGroups(rows, key, member, Some(maxSize),
+      _.observe(o, count(when(col(KeySize) > maxSize &&
+        col("__rank") === 1, 1)).as("dropped"))))
+    (kept, o.get("dropped").asInstanceOf[Long])
+  }
+
+  /** The self-join of [[keyGroups]] output: every two rows that share
+    * `key`, `member` ascending from side `a` to side `b` (callers read
+    * `a.<col>` and `b.<col>` and keep their own aggregate). The join
+    * reads the explicit-count key exchange: over a lazy [[keyGroups]]
+    * frame the planner drops this repartition as the one already in
+    * place; over a checkpoint, which forgets its partitioning, it is the
+    * exchange. Both sides are the identical subtree, so it is computed
+    * once and reused. */
+  private[graft] def keyPairs(groups: DataFrame, key: Seq[String],
+                              member: String): DataFrame = {
+    val spread = groups.repartition(workParallelism(groups.sparkSession),
+      key.map(col): _*)
+    spread.as("a").join(spread.as("b"),
+      key.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+        col(s"a.$member") < col(s"b.$member"))
+  }
+
   /** Materialize an iteration frontier, cutting lineage. Uses a RELIABLE
     * checkpoint when the session has a checkpoint dir (executor loss
     * replays from storage — required on a real cluster, where a lost
@@ -71,6 +148,8 @@ object Exec {
     m
   }
 
+  private val observationName = "graft_observed"
+
   /** [[materialize]] `df` and evaluate the aggregate `metrics` over the
     * rows that same checkpoint action writes: a scalar the next step
     * needs (a count, a mass) comes back without a job of its own. The
@@ -79,7 +158,7 @@ object Exec {
     * every call. */
   private[graft] def materializeObserved(df: DataFrame, metrics: Column*)
       : (DataFrame, Map[String, Any]) = {
-    val o = new Observation("graft_observed")
+    val o = new Observation(observationName)
     val m = materialize(df.observe(o, metrics.head, metrics.tail: _*))
     (m, o.get)
   }

@@ -3,8 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.exec.Exec.{materialize, scoped, sequentialSumByKey,
-  workParallelism}
+import graft.exec.Exec.{KeySize, keyGroups, keyPairs, materialize, scoped,
+  sequentialSumByKey}
 
 /** Text-analysis functions for training-data pipelines (BASELINE.json
   * extensions): token counting, quality scoring, language-ID heuristic,
@@ -71,9 +71,10 @@ object TextAnalysis {
     * division; cosine is invariant to classic idf's global N factor
     * mathematically, and this form needs no log). Terms with
     * df > maxDf are EXCLUDED from similarity — the deterministic
-    * stopword cap, the same hub discipline as `Dedup.jaccardPairs`'
-    * inverted-index maxDf: candidate volume is Σ df² over kept terms,
-    * so the cap is what bounds the posting self-join at corpus scale
+    * stopword cap of the [[graft.exec.Exec.keyGroups]] pair generator
+    * keyed on the term, as in `Dedup.jaccardPairs`: candidate volume
+    * is Σ df² over kept terms, so the cap is what bounds the posting
+    * self-join at corpus scale
     * (a term in every document is the classic quadratic bomb AND
     * carries no similarity signal). Dot products and norms are
     * term-ordered folds (`aggregate(array_sort(...))` ≙ DuckDB
@@ -93,36 +94,27 @@ object TextAnalysis {
       .select(id.as("doc_id"), explode(split(normText(text), " ")).as("tok"))
       .where(length(col("tok")) > 0)
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-    // materialized: the weighted-postings frame feeds norms AND both
-    // sides of the posting self-join — unmaterialized, the corpus
-    // scan + tokenize + df-window subtree runs once per consumer (the
-    // windowCooccur lesson; it escapes with the lazy result)
-    val w = materialize(tf
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("tok")))
-      .where(col("df") <= maxDf)
-      .withColumn("w", col("tf").cast("double") / col("df"))
-      .select("doc_id", "tok", "w"))
+    // the postings through the pair generator keyed on tok: its capped
+    // group size is df. Materialized: the weighted postings feed the
+    // norms AND both sides of the posting self-join — unmaterialized,
+    // the corpus scan + tokenize + df-window subtree runs once per
+    // consumer (it escapes with the lazy result)
+    val w = materialize(keyGroups(tf, Seq("tok"), "doc_id", Some(maxDf))
+      .select(col("doc_id"), col("tok"),
+        (col("tf").cast("double") / col(KeySize)).as("w")))
     // both deterministic tok-ordered folds route through
     // sequentialSumByKey (identical struct-sort-fold, value-identical)
-    // for its pinned keyed spread, and the posting self-join's exchange
-    // pins an explicit count: its input is postings-sized but its output
-    // fans out per shared token, which AQE's byte-based sizing cannot
-    // see — the pair generation and fold ran on ONE coalesced task
-    // (1.5 s of q_text_simdocs' 2.3 s at sf0.1, r12; guide §2.5)
+    // for its pinned keyed spread
     val norms = sequentialSumByKey(
         w.select(col("doc_id"), col("tok"),
           (col("w") * col("w")).as("w2")),
         Seq("doc_id"), "tok", "w2")
       .select(col("doc_id"), sqrt(col("__sum")).as("nrm"))
-    val wp = w.repartition(
-      workParallelism(w.sparkSession), col("tok"))
     val dots = sequentialSumByKey(
-        wp.as("tx")
-          .join(wp.as("ty"), col("tx.tok") === col("ty.tok")
-            && col("tx.doc_id") < col("ty.doc_id"))
-          .select(col("tx.doc_id").as("a"), col("ty.doc_id").as("b"),
-            col("tx.tok").as("tok"),
-            (col("tx.w") * col("ty.w")).as("p")),
+        keyPairs(w, Seq("tok"), "doc_id")
+          .select(col("a.doc_id").as("a"), col("b.doc_id").as("b"),
+            col("a.tok").as("tok"),
+            (col("a.w") * col("b.w")).as("p")),
         Seq("a", "b"), "tok", "p")
       .select(col("a"), col("b"), col("__sum").as("dot"))
     val cos = dots

@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.exec.Artifact
-import graft.exec.Exec.{advance, materialize, release, scoped, spread,
-  spreadBy, workParallelism}
+import graft.exec.Exec.{advance, keyGroups, keyPairs, materialize, release,
+  scoped, spread, spreadBy, workParallelism}
 import graft.functions.Normalize
 
 /** Deduplication operators.
@@ -922,9 +922,10 @@ object Dedup {
       "containment", threshold)
 
   /** Shared inverted-index candidate/score plan for the set-overlap pair
-    * detectors (`jaccardPairs`, `containmentPairs`): explode shingles
-    * into an inverted index, self-join on shingle to generate candidate
-    * pairs, count |A∩B| per pair, apply `score(inter, na, nb)`.
+    * detectors (`jaccardPairs`, `containmentPairs`): the shingle
+    * postings go through the [[graft.exec.Exec.keyGroups]] pair
+    * generator keyed on shingle (`maxDf` is its size cap), then |A∩B| is
+    * counted per pair and `score(inter, na, nb)` applied.
     *
     * Scale: never materializes the O(N²) pair space — only pairs sharing
     * at least one shingle are generated, and the shuffle key is the
@@ -937,19 +938,9 @@ object Dedup {
                                  w: Int, maxDf: Option[Int])(
       score: (Column, Column, Column) => Column, scoreName: String,
       threshold: Double): DataFrame = {
-    val inv0 = shinglePostings(docs, id, text, w)
-    val inv = maxDf match {
-      case Some(cap) =>
-        val dfc = inv0.groupBy("shingle").agg(count(lit(1)).as("df"))
-          .where(col("df") <= cap)
-        inv0.join(dfc.select("shingle"), Seq("shingle"))
-      case None => inv0
-    }
-    // self-join on the IDENTICAL subtree (aliases, not divergent selects):
-    // both sides shuffle the same plan on `shingle`, so the exchange is
-    // computed once and reused (ReusedExchange) instead of twice
-    inv.as("a").join(inv.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
+    val inv = keyGroups(shinglePostings(docs, id, text, w), Seq("shingle"),
+      "id", maxDf.map(_.toLong))
+    keyPairs(inv, Seq("shingle"), "id")
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("a.n_sh").as("na"), col("b.n_sh").as("nb"))
       .agg(count(lit(1)).as("inter"))
@@ -1075,9 +1066,11 @@ object Dedup {
     * shingle Jaccard → threshold filter.
     *
     * Scale: the only all-to-all operation keys on band hashes (uniform by
-    * construction); candidate verification joins back the (small) shingle
-    * sets only for candidate ids — a semi-join reduction exactly like the
-    * reference's distinct-before-API-call trick.
+    * construction) — the [[graft.exec.Exec.keyGroups]] pair generator
+    * keyed on (band_idx, band_hash); candidate verification joins back
+    * the (small) shingle sets only for candidate ids — a semi-join
+    * reduction exactly like the reference's distinct-before-API-call
+    * trick.
     *
     * Recall bound at the DEFAULTS (k=128, bands=32, r=4): P[miss] =
     * (1-J^4)^32 — ≈1.5e-15 at J=0.9, but ≈1.2% for a pair sitting AT a
@@ -1097,11 +1090,10 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, id: Column, text: Column,
                       threshold: Double, w: Int = 3,
                       k: Int = 128, bands: Int = 32): DataFrame = {
-    val banded = minhashBands(docs, id, text, w, k, bands)
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_hash") === col("b.band_hash") &&
-        col("a.id") < col("b.id"))
+    val band = Seq("band_idx", "band_hash")
+    val cand = keyPairs(
+        keyGroups(minhashBands(docs, id, text, w, k, bands), band, "id"),
+        band, "id")
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
     verifyWithShingles(cand, shingleFrame(docs, id, text, w), threshold)

@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.exec.Exec.{advance, materialize, materializeObserved, orderedSum,
-  release, scoped, workParallelism}
+import graft.exec.Exec.{KeySize, advance, cappedKeyGroups, keyPairs,
+  materialize, materializeObserved, orderedSum, release, scoped}
 
 /** Entity-importance over an interaction graph: fixed-iteration PageRank
   * (Page, Brin, Motwani, Winograd 1999) with uniform teleport and full
@@ -197,34 +197,22 @@ object Graph {
     * excluded sources are counted loudly in the `n_dropped_sources`
     * column of EVERY output row rather than logged-and-lost.
     *
-    * Shape: one grouped out-degree pass, one self-join keyed on src
-    * (bounded fan-out after the cap), one (d1, d2) hash aggregate with
-    * map-side combine. Multi-edges collapse first.
+    * Shape: the [[graft.exec.Exec.keyGroups]] pair generator keyed on
+    * src (multi-edges collapse in its distinct; the cap and the dropped
+    * count are its own), then one (d1, d2) hash aggregate with map-side
+    * combine.
     */
   def coCitation(edges: DataFrame, src: Column, dst: Column,
                  maxSrcOutDegree: Long = 10000L): DataFrame = scoped {
     require(maxSrcOutDegree >= 2,
       s"coCitation: maxSrcOutDegree=$maxSrcOutDegree must be >= 2")
-    // simple edges, materialized once: degree pass + both join sides
-    val e = materialize(
-      edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
-        .distinct())
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    // explicit-count src exchange: the pair join's output fans out
-    // quadratically per source AFTER this exchange, which AQE's
-    // byte-based sizing cannot see (the lsh-band/entity-blk lesson,
-    // guide §2.5) — both self-join sides stay the identical subtree,
-    // so the exchange computes once and is reused
-    val kept = e.join(deg.where(col("outdeg") <= maxSrcOutDegree), "src")
-      .select("src", "dst")
-      .repartition(workParallelism(edges.sparkSession), col("src"))
-    val dropped = deg.where(col("outdeg") > maxSrcOutDegree)
-      .agg(coalesce(count(lit(1)), lit(0L)).as("n_dropped_sources"))
-    val pairs = kept.as("a").join(kept.as("b"),
-        col("a.src") === col("b.src") && col("a.dst") < col("b.dst"))
+    val (kept, dropped) = cappedKeyGroups(
+      edges.select(src.cast("long").as("src"), dst.cast("long").as("dst")),
+      Seq("src"), "dst", maxSrcOutDegree)
+    keyPairs(kept, Seq("src"), "dst")
       .groupBy(col("a.dst").as("d1"), col("b.dst").as("d2"))
       .agg(count(lit(1)).as("n_common"))
-    pairs.crossJoin(broadcast(dropped))
+      .withColumn("n_dropped_sources", lit(dropped))
   }
 
   /** Community detection by SYNCHRONOUS label propagation (Raghavan,
@@ -566,11 +554,12 @@ object Graph {
     * exact degrees.
     *
     * Shape: one canonical-edge distinct (materialized: feeds the
-    * symmetric adjacency, the anti-join, and degrees), one vertex-keyed
-    * degree aggregate, one center-keyed self-join bounded by the cap,
-    * one (a, b) hash aggregate with map-side combine, the anti-join, and
-    * two vertex-keyed degree joins (vertex tables at graph scale are NOT
-    * assumed broadcastable).
+    * symmetric adjacency, the anti-join, and degrees), the
+    * [[graft.exec.Exec.keyGroups]] pair generator keyed on the wedge
+    * centre (its capped size is the centre degree the weighted scores
+    * fold), one (a, b) hash aggregate with map-side combine, the
+    * anti-join, and two vertex-keyed degree joins (vertex tables at
+    * graph scale are NOT assumed broadcastable).
     *
     * Output: a, b, n_common, deg_a, deg_b, jaccard, adamic_adar,
     * resource_alloc, n_dropped_centers (a < b, (a,b) ∉ edges).
@@ -584,20 +573,12 @@ object Graph {
       canonicalUndirected(edges, src, dst, castLong = true))
     val sym = bothDirections(e, "w", "n")
     val deg = sym.groupBy("w").agg(count(lit(1)).as("deg"))
-    val keptCenters = deg.where(col("deg") <= maxCenterDegree)
-    val dropped = deg.where(col("deg") > maxCenterDegree)
-      .agg(coalesce(count(lit(1)), lit(0L)).as("n_dropped_centers"))
-    // wedge adjacency carries the CENTER's degree so the weighted
-    // scores fold without a per-wedge re-join against `deg`; the
-    // explicit-count exchange pins the quadratic-per-center pair stage
-    // AQE would otherwise size by input bytes (the coCitation fix, r13)
-    val wedgeAdj = sym.join(keptCenters, Seq("w"))
-      .repartition(workParallelism(edges.sparkSession), col("w"))
-    val cand = wedgeAdj.as("l").join(wedgeAdj.as("r"),
-        col("l.w") === col("r.w") && col("l.n") < col("r.n"))
-      .groupBy(col("l.n").as("a"), col("r.n").as("b"))
+    val (wedges, dropped) = cappedKeyGroups(sym, Seq("w"), "n",
+      maxCenterDegree)
+    val cand = keyPairs(wedges, Seq("w"), "n")
+      .groupBy(col("a.n").as("a"), col("b.n").as("b"))
       .agg(count(lit(1)).as("n_common"),
-        sort_array(collect_list(col("l.deg"))).as("cdegs"))
+        sort_array(collect_list(col(s"a.$KeySize"))).as("cdegs"))
       .join(e, Seq("a", "b"), "left_anti")
     cand
       .join(deg.select(col("w").as("a"), col("deg").as("deg_a")), Seq("a"))
@@ -610,7 +591,7 @@ object Graph {
         (acc, d) => acc + lit(1.0d) / d.cast("double")))
       .select("a", "b", "n_common", "deg_a", "deg_b", "jaccard",
         "adamic_adar", "resource_alloc")
-      .crossJoin(broadcast(dropped))
+      .withColumn("n_dropped_centers", lit(dropped))
   }
 
   /** DeepWalk-style random-walk corpus generation (Perozzi et al. 2014):

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec.{keyGroups, keyPairs}
+
 /** K-minimum-values signatures (Bar-Yossef et al. 2002; Beyer et al.
   * 2007's distinct-estimate form) for CROSS-SOURCE set comparison — the
   * corpus-audit question "how much vocabulary do these ingest sources
@@ -36,14 +38,8 @@ object Kmv {
   def sourceSignatures(docs: DataFrame, source: Column, text: Column,
                        k: Int): DataFrame = {
     require(k >= 2, s"sourceSignatures: k=$k must be >= 2")
-    val toks = docs
-      .select(source.cast("string").as("source"),
-        explode(split(graft.functions.TextAnalysis.normText(text), " "))
-          .as("tok"))
-      .where(length(col("tok")) > 0)
-      .distinct()
     val w = Window.partitionBy("source").orderBy(col("h"), col("tok"))
-    toks.withColumn("h", md5(col("tok")))
+    sourceTokens(docs, source, text).withColumn("h", md5(col("tok")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select(col("source"), col("tok"), col("h"))
@@ -55,7 +51,8 @@ object Kmv {
     * union), k_used = its size (min(k, |union sketch|)), and
     * n_inter = members present in BOTH signatures; jaccard_est =
     * n_inter / k_used is the one IEEE division. Exact columns come from
-    * the full distinct token sets. */
+    * the full distinct token sets, paired by the
+    * [[graft.exec.Exec.keyGroups]] pair generator keyed on the token. */
   def sourceOverlap(docs: DataFrame, source: Column, text: Column,
                     k: Int): DataFrame = {
     require(k >= 2, s"sourceOverlap: k=$k must be >= 2")
@@ -84,17 +81,11 @@ object Kmv {
       .withColumn("jaccard_est",
         col("n_inter").cast("double") / col("k_used").cast("double"))
     // exact honesty columns from the full distinct token sets
-    val toks = docs
-      .select(source.cast("string").as("source"),
-        explode(split(graft.functions.TextAnalysis.normText(text), " "))
-          .as("tok"))
-      .where(length(col("tok")) > 0)
-      .distinct()
+    val toks = sourceTokens(docs, source, text)
     val counts = toks.groupBy("source").agg(count(lit(1)).as("n"))
-    val inter = toks.as("ta")
-      .join(toks.as("tb"), col("ta.tok") === col("tb.tok") &&
-        col("ta.source") < col("tb.source"))
-      .groupBy(col("ta.source").as("src_a"), col("tb.source").as("src_b"))
+    val inter = keyPairs(keyGroups(toks, Seq("tok"), "source"),
+        Seq("tok"), "source")
+      .groupBy(col("a.source").as("src_a"), col("b.source").as("src_b"))
       .agg(count(lit(1)).as("n_inter_exact"))
     est
       .join(counts.select(col("source").as("src_a"), col("n").as("na")),
@@ -113,4 +104,13 @@ object Kmv {
             coalesce(col("n_inter_exact"), lit(0L))).cast("double"))
           .as("jaccard_exact"))
   }
+
+  /** Distinct (source, tok) rows over the normalized token stream. */
+  private def sourceTokens(docs: DataFrame, source: Column,
+                           text: Column): DataFrame =
+    docs.select(source.cast("string").as("source"),
+        explode(split(graft.functions.TextAnalysis.normText(text), " "))
+          .as("tok"))
+      .where(length(col("tok")) > 0)
+      .distinct()
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.exec.Exec.{advance, materialize, release, scoped,
-  workParallelism}
+import graft.exec.Exec.{advance, cappedKeyGroups, keyPairs, materialize,
+  release, scoped, workParallelism}
 
 /** Item-item collaborative filtering over basket memberships — the
   * "customers who bought X also bought Y" tier (Linden, Smith & York 2003,
@@ -49,22 +49,14 @@ object Recommend {
     * pairs. Exclusion is exact, mirrored by the oracle, and counted
     * loudly in `n_dropped_baskets` on every output row.
     *
-    * Shape (r12): the distinct (basket, item) projection flows INTO the
-    * size gate lazily — the gate is a basket-partitioned window count
-    * (one exchange, no size join), and only its OUTPUT (`kept`, the
-    * pairing corpus) is materialized, because it feeds the marginals and
-    * both self-join sides. The former shape also checkpointed the
-    * pre-gate distinct; that bought nothing — within the single gate
-    * action the distinct is computed once, and the only other consumer
-    * (the dropped-basket count on the final action) re-runs one
-    * scan+distinct, cheaper at every scale than writing and re-reading a
-    * corpus-sized checkpoint (measured steady-state 2.5 -> 1.8 s at
-    * sf0.1, one fewer action). Then one self-join keyed on basket
-    * (fan-out bounded by the cap), one (i1, i2) hash aggregate with
-    * map-side combine collapsing hot pairs before the shuffle, and two
-    * item-keyed marginal joins (item tables at catalog scale are NOT
-    * assumed broadcastable — they shuffle; AQE may still elect broadcast
-    * when small).
+    * Shape: the [[graft.exec.Exec.keyGroups]] pair generator keyed on
+    * basket (the distinct, the size cap and the dropped count are its
+    * own); its materialized output is the pairing corpus and feeds the
+    * marginals and both self-join sides. Then one (i1, i2) hash
+    * aggregate with map-side combine collapsing hot pairs before the
+    * shuffle, and two item-keyed marginal joins (item tables at catalog
+    * scale are NOT assumed broadcastable — they shuffle; AQE may still
+    * elect broadcast when small).
     *
     * Output: i1, i2, n_cooc, n_i1, n_i2, cosine, n_dropped_baskets
     * (i1 < i2).
@@ -75,20 +67,13 @@ object Recommend {
     require(maxBasketSize >= 2,
       s"itemSimilarity: maxBasketSize=$maxBasketSize must be >= 2")
     require(minCooc >= 1, s"itemSimilarity: minCooc=$minCooc must be >= 1")
-    val m = memberships.select(basket.cast("long").as("b"),
-      item.cast("long").as("i")).distinct()
-    val kept = materialize(
-      m.withColumn("__sz", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("b")))
-        .where(col("__sz") <= maxBasketSize)
-        .select("b", "i"))
-    val dropped = m.groupBy("b").agg(count(lit(1)).as("sz"))
-      .where(col("sz") > maxBasketSize)
-      .agg(coalesce(count(lit(1)), lit(0L)).as("n_dropped_baskets"))
+    val (kept, dropped) = cappedKeyGroups(
+      memberships.select(basket.cast("long").as("b"),
+        item.cast("long").as("i")),
+      Seq("b"), "i", maxBasketSize)
     val marg = kept.groupBy("i").agg(count(lit(1)).as("n_i"))
-    val pairs = kept.as("a").join(kept.as("c"),
-        col("a.b") === col("c.b") && col("a.i") < col("c.i"))
-      .groupBy(col("a.i").as("i1"), col("c.i").as("i2"))
+    val pairs = keyPairs(kept, Seq("b"), "i")
+      .groupBy(col("a.i").as("i1"), col("b.i").as("i2"))
       .agg(count(lit(1)).as("n_cooc"))
       .where(col("n_cooc") >= minCooc)
     pairs
@@ -105,7 +90,7 @@ object Recommend {
             lit(" >= 2^53 — the exact-double cosine contract breaks; " +
               "cap item frequencies upstream")))).cast("double")))
       .select("i1", "i2", "n_cooc", "n_i1", "n_i2", "cosine")
-      .crossJoin(broadcast(dropped))
+      .withColumn("n_dropped_baskets", lit(dropped))
   }
 
   /** Per-item top-k neighbor model from [[itemSimilarity]] output: pairs

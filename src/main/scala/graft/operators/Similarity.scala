@@ -6,8 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.exec.Artifact
-import graft.exec.Exec.{materialize, scoped, sequentialSumByKey,
-  workParallelism}
+import graft.exec.Exec.{keyGroups, keyPairs, materialize, scoped,
+  sequentialSumByKey}
 import graft.functions.CentroidScan
 
 /** Embedding similarity search over `ARRAY<FLOAT>` columns.
@@ -361,7 +361,8 @@ object Similarity {
   /** LSH-bucketed near-duplicate pairs — the beyond-broadcast scale path
     * for `cosineNearDupPairs`: candidates are pairs sharing a bucket in
     * ANY of `nTables` independent random-hyperplane bucketings (skinny
-    * (id, bucket) rows through the shuffles), verified with an exact
+    * (id, bucket) rows through the [[graft.exec.Exec.keyGroups]] pair
+    * generator keyed on (table, bucket)), verified with an exact
     * cosine at the end. Precision is exact; recall grows with nTables and
     * shrinks with nBits (higher-cosine pairs collide with probability
     * (1 - θ/π)^nBits per table, θ the angle).
@@ -390,24 +391,14 @@ object Similarity {
     // (id, table, bucket) rows — a per-table union of self-joins re-scans
     // and re-buckets the corpus 2*nTables times (measured 34 scans in the
     // executed plan at nTables=16); the generator form pays one scan and
-    // one bucket evaluation per row, and the banded self-join keys on
-    // (table, bucket) with both sides the identical subtree (exchange
-    // reuse) — the same shape as simhash banding.
-    // the band self-join's input is SKINNY (ids × tables) but its output
-    // fans out quadratically within each (table, bucket) group — AQE's
-    // byte-based sizing coalesced the exchange to ONE task and generated
-    // every candidate pair serially (4.7 s of a 5.0 s query at sf0.1,
-    // r12); the explicit count pins the session's shuffle parallelism
-    // (guide §2.5 — size on output work, not input bytes). Both sides
-    // stay the identical subtree, so exchange reuse still holds.
+    // one bucket evaluation per row, and the pair generator keys the
+    // band self-join on (table, bucket) — the same shape as simhash
+    // banding.
+    val band = Seq("table", "bucket")
     val banded = slim.select(col("id"),
-        posexplode(bucketsExpr(col("emb"), dim, nBits, nTables,
-          seedBase = 2000)).as(Seq("table", "bucket")))
-      .repartition(workParallelism(slim.sparkSession),
-        col("table"), col("bucket"))
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.table") === col("b.table") &&
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
+      posexplode(bucketsExpr(col("emb"), dim, nBits, nTables,
+        seedBase = 2000)).as(band))
+    val cand = keyPairs(keyGroups(banded, band, "id"), band, "id")
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
     verifiedPairs(cand,
@@ -1267,14 +1258,16 @@ object Similarity {
       Dedup.connectedComponentsStar(_))
   }
 
-  /** The exact within-cluster pair kernel of `semanticDedup`: self-join
-    * keyed on the cluster id, fused-codegen cosine, O(m²) in the
-    * cluster size m — correct and fastest below `maxClusterSize`. */
+  /** The exact within-cluster pair kernel of `semanticDedup`: the
+    * [[graft.exec.Exec.keyPairs]] self-join keyed on the cluster id,
+    * fused-codegen cosine, O(m²) in the cluster size m — correct and
+    * fastest below `maxClusterSize`. Its rows carry the vector, so they
+    * skip the generator's distinct (hashing every embedding cost ~10 % of
+    * q_embed_semdedup at sf0.1); a repeated row only repeats pairs, which
+    * the survivor components absorb. */
   private def exactWithinClusterPairs(assigned: DataFrame,
                                       threshold: Double): DataFrame =
-    assigned.as("a").join(assigned.as("b"),
-        col("a.cluster") === col("b.cluster") &&
-          col("a.id") < col("b.id"))
+    keyPairs(assigned, Seq("cluster"), "id")
       .withColumn("cos", normedCosine(col("a.emb"), col("b.emb"),
         col("a.nrm"), col("b.nrm")))
       .where(col("cos") >= threshold && notNaN(col("cos")))
@@ -1284,8 +1277,8 @@ object Similarity {
     * each oversized cluster — candidates share (cluster, table, bucket),
     * so the self-join's quadratic is per-bucket (expected m/2^guardBits
     * rows), then the exact fused cosine verifies every candidate. Same
-    * banding expression and join shape as `lshNearDupPairs`, with the
-    * cluster id prepended to the key — EXCEPT the hyperplanes hash the
+    * banding expression and pair generator as `lshNearDupPairs`, with
+    * the cluster id prepended to the key — EXCEPT the hyperplanes hash the
     * RESIDUAL (member − cluster centroid), not the raw vector: inside a
     * fat cluster every member shares the centroid direction by
     * construction, and that common component biases every hyperplane
@@ -1303,13 +1296,11 @@ object Similarity {
     val centLit = typedlit(cents.map(_.map(_.toFloat).toSeq).toSeq)
     val resid = zip_with(col("emb"),
       element_at(centLit, col("cluster") + 1), (x, c) => x - c)
+    val band = Seq("cluster", "table", "bucket")
     val banded = fat.select(col("id"), col("cluster"),
       posexplode(bucketsExpr(resid, dim, nBits, nTables,
         seedBase = 3000)).as(Seq("table", "bucket")))
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.cluster") === col("b.cluster") &&
-          col("a.table") === col("b.table") &&
-          col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
+    val cand = keyPairs(keyGroups(banded, band, "id"), band, "id")
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
     verifiedPairs(cand, fat.select(col("id"), col("emb"), col("nrm")),

@@ -10,7 +10,7 @@ import scala.collection.mutable
 import javax.xml.parsers.DocumentBuilderFactory
 import org.w3c.dom.Element
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -116,11 +116,18 @@ object Excel {
     * hyperlinked to their own value, and `title` cells hyperlinked by
     * the PubMed > WOS > ScienceDirect > DOI priority — all emitted as
     * plain OOXML (styles.xml + sheetViews/cols/hyperlinks + per-sheet
-    * rels), no spreadsheet library. */
+    * rels), no spreadsheet library.
+    *
+    * The rows are collected in ONE job in which each partition returns at
+    * most `cap + 1` rows (the per-partition bound Spark's incremental
+    * `take` applies in its later waves, without its extra waves), so the
+    * driver holds at most partitions × (cap + 1) rows before the cap
+    * check refuses an oversized frame. */
   def writeXlsx(df: DataFrame, path: String,
                 sheetBy: Option[String] = None): Unit = {
     val cols = df.columns.filterNot(sheetBy.contains)
-    val rows = df.limit(excelMaxRows + 1).collect()
+    val rows = df.mapPartitions(_.take(excelMaxRows + 1))(
+      Encoders.row(df.schema)).collect()
     // the FORMAT's limit is per worksheet; this sink ADDITIONALLY caps
     // the total collect at the same figure as a driver-memory valve —
     // a multi-sheet workbook bigger than that belongs in parquet

@@ -187,6 +187,13 @@ class ExcelSpec extends SparkTestBase {
     assert(Excel.readXlsx(spark, path).count() === 10)
   }
 
+  test("writeXlsx collects a many-partition frame in one job") {
+    val df = spark.range(0, 40, 1, numPartitions = 4).toDF("id")
+    val path = Files.createTempDirectory("graft_xlsx").toString + "/j.xlsx"
+    assert(jobsOf(Excel.writeXlsx(df, path)) === 1)
+    assert(Excel.readXlsx(spark, path).count() === 40)
+  }
+
   private def zipEntries(path: String): Map[String, String] = {
     val zin = new java.util.zip.ZipInputStream(
       new java.io.BufferedInputStream(new java.io.FileInputStream(path)))

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Checkpoint lifetimes, on-disk commits, stream wiring and quantile
   * bucketing each have one owner: only `graft/exec/Exec.scala` may
-  * checkpoint a frame, observe metrics on one or release one, only `graft/exec/Artifact.scala`
+  * checkpoint a frame, observe metrics on one or release one (the pair
+  * generator's dropped-key count included), only `graft/exec/Artifact.scala`
   * may name a commit marker, a committer's success file, a
   * dynamic-partition overwrite or a write-once meta mode, or commit a
   * gate's bootstrap or check its epoch layout, only
@@ -24,7 +25,10 @@ class ExecStructureSpec extends AnyFunSuite {
   private val owned = Seq(
     "graft/exec/Exec.scala" ->
       Seq("localCheckpoint(", ".checkpoint(", ".observe(",
-        "releaseMaterialized", "workTaskFactor"),
+        "releaseMaterialized", "workTaskFactor",
+        // the pair generator's dropped-key count is observed on its
+        // checkpoint, never re-aggregated and broadcast into the output
+        "coalesce(count(lit(1)), lit(0L))", "crossJoin(broadcast(dropped))"),
     "graft/exec/Artifact.scala" ->
       Seq("_GRAFT_COMMITTED", "_SUCCESS", "partitionOverwriteMode",
         "errorifexists", "Artifact.bootstrap(", "requireEpochLayout("),

@@ -1,11 +1,7 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.util.Random
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -510,32 +506,6 @@ class GraphSpec extends SparkTestBase {
         col("w"), walkLen = 2)
     }
     assert(e.getMessage.contains("no usable edges"))
-  }
-
-  /** Spark jobs started by `body`. Listener events arrive
-    * asynchronously but in order, so a marker job before and after
-    * fences the count. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    @volatile var marker = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty(
-            "spark.job.description") == "graph-spec-marker"))
-          marker.countDown()
-        else jobs.incrementAndGet()
-    }
-    def fence(): Unit = {
-      marker = new CountDownLatch(1)
-      sc.setJobDescription("graph-spec-marker")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      assert(marker.await(60, TimeUnit.SECONDS), "marker job not seen")
-    }
-    sc.addSparkListener(l)
-    try { fence(); jobs.set(0); body; fence(); jobs.get }
-    finally sc.removeSparkListener(l)
   }
 
   test("pageRank and personalizedPageRank: each extra round costs at " +

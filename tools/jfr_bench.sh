@@ -7,7 +7,9 @@
 # built the benchmark (that writes .bench_build/launch.txt, the classpath and
 # JVM options this script launches with). Writes to out_dir (default
 # .bench_build/jfr/<workload>-<seed>): bench.jfr (the recording, `profile`
-# settings), bench.log (the run's progress lines, first line
+# settings, stacks up to 512 frames deep: at JFR's default of 64 a Spark
+# task's stack is cut off before the operator frames that name its work),
+# bench.log (the run's progress lines, first line
 # `launch_ms=<epoch ms>`) and result.json (its JSON result). Then summarise:
 #
 #   python3 tools/jfr_top.py <out_dir>
@@ -39,7 +41,7 @@ mkdir -p "$out" .bench_build/perfbench/tmp
 java=${JAVA_HOME:+$JAVA_HOME/bin/}java
 launch_ms=$(date +%s%3N)
 echo "launch_ms=$launch_ms" >"$out/bench.log"
-"$java" "${opts[@]}" \
+"$java" "${opts[@]}" -XX:FlightRecorderOptions:stackdepth=512 \
   "-XX:StartFlightRecording=filename=$out/bench.jfr,settings=profile,dumponexit=true" \
   -Djava.io.tmpdir=.bench_build/perfbench/tmp -cp "$cp" perfbench.Main \
   --workload "$workload" --seed "$seed" --seconds "$seconds" --trace 0 \

@@ -7,8 +7,11 @@ passes, by thread and by a fixed list of categories.
 <out_dir> holds bench.jfr and bench.log as tools/jfr_bench.sh writes them.
 Only samples taken after the run's "set-up took" progress line count, so
 session start, input generation and warm-up are left out. Stacks are read
-with `jfr print --stack-depth 300`: at jfr's default depth of 5 frames every
-caller is cut off and most samples would land in "other".
+with `jfr print --stack-depth 600`: at jfr's default depth of 5 frames every
+caller is cut off and most samples would land in "other". The share of
+samples whose stack the recorder itself truncated is printed too: a high share
+means the recording needs a deeper `stackdepth` (tools/jfr_bench.sh records
+512 frames).
 
 A sample goes to the first category, in list order, any of whose patterns
 occurs in any frame of its stack.
@@ -36,6 +39,9 @@ CATEGORIES = [
     ("http client", ["graft.operators.HttpClients", "jdk.internal.net.http.", "java.net.http."]),
     ("mock service", ["perfbench.MockServer", "sun.net.httpserver."]),
     ("xlsx", ["org.apache.poi.", "graft.sources.Excel"]),
+    ("object hash aggregate", ["ObjectHashAggregateExec", "ObjectAggregationIterator"]),
+    ("window", ["org.apache.spark.sql.execution.window."]),
+    ("checkpoint store", ["MemoryStore.putIterator", "org.apache.spark.util.SizeEstimator"]),
     ("shuffle", ["org.apache.spark.shuffle.", "ShuffleExternalSorter.",
                  "ShuffleBlockFetcherIterator.", "UnsafeShuffleWriter."]),
     ("generated code", ["GeneratedClass$", "GeneratedIteratorForCodegenStage"]),
@@ -100,23 +106,27 @@ def main(argv):
     jfr_file, log = os.path.join(out, "bench.jfr"), os.path.join(out, "bench.log")
     start = cutoff_ns(log)
     dump = subprocess.run(
-        ["jfr", "print", "--json", "--stack-depth", "300", "--events",
+        ["jfr", "print", "--json", "--stack-depth", "600", "--events",
          "jdk.ExecutionSample", jfr_file],
         capture_output=True, text=True, check=True).stdout
     events = json.loads(dump)["recording"]["events"]
     by_thread, by_cat = collections.Counter(), collections.Counter()
+    truncated = 0
     for e in events:
         v = e["values"]
         if epoch_ns(v["startTime"]) < start:
             continue
         thread = (v.get("sampledThread") or {}).get("javaName") or "?"
-        frames = [frame_text(f) for f in (v.get("stackTrace") or {}).get("frames", [])]
+        stack = v.get("stackTrace") or {}
+        frames = [frame_text(f) for f in stack.get("frames", [])]
+        truncated += bool(stack.get("truncated"))
         by_thread[thread_group(thread)] += 1
         by_cat[category(frames)] += 1
     total = sum(by_cat.values())
     if total == 0:
         die("no CPU samples after set-up")
-    print("%d CPU samples after set-up" % total)
+    print("%d CPU samples after set-up; %.1f%% of their stacks truncated by the recorder"
+          % (total, 100.0 * truncated / total))
     for title, counts, n in (("by thread", by_thread, 12), ("by category", by_cat, None)):
         print("\n" + title)
         for name, k in counts.most_common(n):
